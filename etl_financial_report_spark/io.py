@@ -237,24 +237,6 @@ def _persistent_rdd_ids(spark: SparkSession) -> frozenset:
         return frozenset()
 
 
-def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, frozenset]:
-    """localCheckpoint ``df`` and return (checkpointed frame, the set of
-    persistent-RDD ids the checkpoint pinned). The ids are what
-    ``unpersist_tracked`` needs to actually FREE the executor blocks on
-    cache eviction — ``DataFrame.unpersist()`` only talks to the cache
-    manager and is a no-op for checkpoint RDDs (ADVICE r11: FIFO
-    eviction was dropping the dict reference and leaving the blocks to
-    JVM GC). Snapshot-diff is sound here because the engine drives
-    queries sequentially from one driver thread; a concurrent builder
-    could attribute a neighbor's RDD, which at worst frees a block the
-    neighbor would lazily recompute-from-checkpoint-error — so keep
-    builds single-threaded (they are: registry + pytest)."""
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    ck = df.localCheckpoint()
-    return ck, _persistent_rdd_ids(spark) - before
-
-
 def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` plus a fresh-stats rebuild, for ITERATIVE loops.
 
@@ -287,10 +269,11 @@ def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
 def unpersist_tracked(spark: SparkSession, rdd_ids) -> None:
     """Free the blocks of the given persistent-RDD ids (best-effort:
     a gone session or already-unpersisted id is a no-op). Only call on
-    frames evicted from a memo cache — a localCheckpoint CANNOT be
-    recomputed (lineage is truncated), so any still-live plan reading
-    the frame would fail; eviction order (FIFO, oldest corpus first)
-    guarantees the engine's sequential consumers are done with it."""
+    ids no live plan reads (an evicted memo entry's, or a build's whose
+    publish replaced them) — a localCheckpoint CANNOT be recomputed
+    (lineage is truncated), so any still-live plan reading the frame
+    would fail; eviction order (FIFO, oldest corpus first) guarantees the
+    engine's sequential consumers are done with it."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for i in rdd_ids:
@@ -301,11 +284,89 @@ def unpersist_tracked(spark: SparkSession, rdd_ids) -> None:
         pass
 
 
+# ------------------------------------------------------------ session memo
+#
+# The persisted-index pattern, in-session tier: a production pipeline
+# builds signatures, certificates and trained state ONCE per corpus
+# snapshot and every consumer reads that table; the per-query registry
+# shape would otherwise rebuild the shared subtree per query. Every
+# corpus-level artifact a session reuses lives in the one dict below.
+
+#: (session app id, sf_dir, corpus content fingerprint, family, *policy
+#: key) -> (value, owned persistent-RDD ids). The value is a frame, a
+#: tuple or a dict of them; a regenerated corpus, a new session or a
+#: monkeypatched policy constant can never hit a stale entry. FIFO-capped
+#: so long sessions over many corpora don't pin unbounded executor memory.
+_MEMO_FRAMES: dict[tuple, tuple] = {}
+_MEMO_FRAMES_MAX = 24
+
+#: plan-audit escape hatch: when False, every memo site builds the pure
+#: un-checkpointed frame so the plan nets and tools/dump_plans.py audit
+#: the REAL build plan — a checkpoint scan would hide the band self-join
+#: or signature aggregation the audits exist to inspect.
+MEMO_ENABLED = True
+
+
+def protected_rdd_ids() -> set:
+    """Persistent-RDD ids owned by a live memo entry. A build that frees
+    its own pins (a publish replaced them) must subtract these: it may
+    have nested another memoized build whose entry still reads them."""
+    out: set = set()
+    for _v, ids in _MEMO_FRAMES.values():
+        out |= ids
+    return out
+
+
+def unpersist_since(spark: SparkSession, before: frozenset) -> None:
+    """Free every RDD pinned since the ``before`` snapshot that no live
+    memo entry owns — for a build whose disk-backed publish replaced the
+    checkpoints it made."""
+    unpersist_tracked(spark, (_persistent_rdd_ids(spark) - before) - protected_rdd_ids())
+
+
+def session_memo(
+    spark: SparkSession, sf_dir: str, table: str, family: str, key: tuple, build
+):
+    """``build()`` once per (session, corpus snapshot of ``table``,
+    ``family``, ``key``), then the same value for every later call.
+
+    The entry OWNS every persistent-RDD id ``build()`` leaves pinned — a
+    snapshot-diff around the build, so a builder's internal checkpoints
+    and a nested memo entry built inside it are both attributed. Eviction
+    frees only the ids no remaining entry owns: a nested entry and its
+    parent share the nested checkpoint, and a localCheckpoint CANNOT be
+    recomputed, so freeing it while either lives would break the other.
+    Ids are freed through ``unpersist_tracked`` because
+    ``DataFrame.unpersist()`` only talks to the cache manager and is a
+    no-op for checkpoint RDDs. The snapshot-diff is sound because the
+    engine drives queries sequentially from one driver thread.
+
+    With MEMO_ENABLED False this is ``build()``, uncached."""
+    if not MEMO_ENABLED:
+        return build()
+    mkey = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        corpus_fingerprint(sf_dir, table),
+        family,
+        *key,
+    )
+    hit = _MEMO_FRAMES.get(mkey)
+    if hit is None:
+        before = _persistent_rdd_ids(spark)
+        value = build()
+        hit = _MEMO_FRAMES[mkey] = (value, _persistent_rdd_ids(spark) - before)
+        while len(_MEMO_FRAMES) > _MEMO_FRAMES_MAX:
+            _old, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
+            unpersist_tracked(spark, old_ids - protected_rdd_ids())
+    return hit[0]
+
+
 # --------------------------------------------------- persisted index store
 #
-# The cross-SESSION tier of the memo below (VERDICT r11 item 1): the five
-# corpus-level artifacts (minhash + simhash64 signature tables, LSH
-# candidate pairs, the semantic near-dup certificate, the residual IVF-PQ
+# The cross-SESSION tier of the session memo above (VERDICT r11 item 1):
+# the five corpus-level artifacts (minhash + simhash64 signature tables,
+# LSH candidate pairs, the semantic near-dup certificate, the residual IVF-PQ
 # index frames, trained tokenizer state) are exactly what a production
 # pipeline persists once per corpus snapshot and every consumer — and
 # every LATER SESSION — reads back. Each artifact family is a
@@ -334,9 +395,10 @@ INDEX_STORE_ROOT = os.environ.get(
 #: see the real build plan, not a parquet scan of the artifact)
 INDEX_STORE_ENABLED = os.environ.get("SPARK_GRAFT_INDEX_STORE", "1") != "0"
 
-#: versions retained per artifact family — STRICTLY above the in-session
-#: memo cap (24), so a frame still referenced by the session memo can
-#: never have its files vacuumed out from under it by later publishes
+#: versions retained per artifact family — STRICTLY above the session
+#: memo cap (_MEMO_FRAMES_MAX), so a frame still referenced by the
+#: session memo can never have its files vacuumed out from under it by
+#: later publishes (tests/test_memo_frames.py pins the inequality)
 _INDEX_KEEP_VERSIONS = 32
 
 #: engine-source fingerprint memo: builder module path -> md5 over the
@@ -431,51 +493,6 @@ def index_store_publish(spark: SparkSession, tag: str, key: str, df: DataFrame) 
         return None
 
 
-#: FIFO-capped memo store for corpus-level materialized frames — the
-#: persisted-index pattern (a production pipeline builds signatures /
-#: certificates ONCE per corpus snapshot and every consumer reads the
-#: table; the per-query registry shape would otherwise recompute the
-#: shared subtree per query). Keyed by (session app id, sf_dir, corpus
-#: content fingerprint, builder tag, extra policy constants) so a
-#: regenerated corpus, a new session, or a monkeypatched policy can
-#: never hit a stale frame. Values are (frame, pinned rdd ids) so
-#: eviction can release the checkpoint blocks, not just the reference.
-_MEMO_FRAMES: dict[tuple, tuple] = {}
-_MEMO_FRAMES_MAX = 24
-
-#: plan-audit escape hatch: when False, every memo site (this function
-#: AND the family-specific caches in similarity/unigram) builds the pure
-#: un-checkpointed frame so the plan nets and tools/dump_plans.py audit
-#: the REAL build plan — a checkpoint scan would hide the band self-join
-#: or signature aggregation the audits exist to inspect.
-MEMO_ENABLED = True
-
-
-#: pin providers: callables returning the persistent-RDD ids currently
-#: owned by a live cache entry (the family caches in unigram/similarity
-#: register here at import). Any post-publish "free the build window"
-#: unpersist must subtract this union — a builder that nests another
-#: memoized build would otherwise free blocks a LIVE cache entry still
-#: references (ADVICE r12: unigram's cleanup had no protected set).
-_PIN_PROVIDERS: list = []
-
-
-def register_pin_provider(fn) -> None:
-    _PIN_PROVIDERS.append(fn)
-
-
-def protected_rdd_ids() -> set:
-    out: set = set()
-    for _f, ids in _MEMO_FRAMES.values():
-        out |= set(ids)
-    for fn in _PIN_PROVIDERS:
-        try:
-            out |= set(fn())
-        except Exception:
-            pass
-    return out
-
-
 def memo_checkpoint(
     spark: SparkSession,
     sf_dir: str,
@@ -487,58 +504,18 @@ def memo_checkpoint(
     """Materialize ``build()`` once per (corpus snapshot, tag, policy)
     and reuse it across queries AND sessions. Three tiers:
 
-    1. in-session memo (dict hit, zero cost);
+    1. the session memo (dict hit, zero cost);
     2. the persisted index store — a SnapshotTable version tagged with
        the full content key (corpus fingerprint + policy + engine code
        fingerprint), so a FRESH SESSION reads the artifact from disk
        instead of rebuilding it (VERDICT r11 item 1: this is the real
        persisted-index-table pattern, not a session-RAM stand-in);
     3. build + publish (one pass: the parquet write IS the
-       materialization; the disk read replaces the localCheckpoint).
-
-    FIFO-capped so long test sessions over many tmp corpora don't pin
-    unbounded executor memory; eviction unpersists any checkpoint blocks
-    tracked at build time (disk-backed hits pin none)."""
-    if not MEMO_ENABLED:
-        return build()
-    fp = corpus_fingerprint(sf_dir, table)
-    key = (spark.sparkContext.applicationId, sf_dir, fp, tag, *extra_key)
-    hit = _MEMO_FRAMES.get(key)
-    if hit is None:
-        import inspect
-
-        try:
-            mod_file = inspect.getsourcefile(build)
-        except TypeError:
-            mod_file = None
-        skey = _index_key(sf_dir, table, tag, extra_key, mod_file)
-        df = index_store_lookup(spark, tag, skey)
-        if df is None:
-            ids_before = _persistent_rdd_ids(spark)
-            built = build()
-            df = index_store_publish(spark, tag, skey, built)
-            if df is not None:
-                # the disk read replaces every frame the build pinned —
-                # free the build's internal checkpoints NOW instead of at
-                # session end, EXCEPT ids owned by a live cache entry in
-                # ANY family cache (a builder may nest another memoized
-                # build whose miss cached a checkpoint inside this window;
-                # freeing that would leave a live entry with dead blocks)
-                unpersist_tracked(
-                    spark,
-                    (_persistent_rdd_ids(spark) - ids_before)
-                    - protected_rdd_ids(),
-                )
-                hit = (df, frozenset())
-            else:
-                hit = checkpoint_tracked(built)
-        else:
-            hit = (df, frozenset())
-        while len(_MEMO_FRAMES) >= _MEMO_FRAMES_MAX:
-            _old_df, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
-            unpersist_tracked(spark, old_ids)
-        _MEMO_FRAMES[key] = hit
-    return hit[0]
+       materialization; the disk read replaces the localCheckpoint, and
+       the build's own checkpoints are freed at once). When the store is
+       off or the publish fails, the build is localCheckpointed and the
+       memo entry owns its pins until eviction."""
+    return _memo_store(spark, sf_dir, table, tag, extra_key, build, None)
 
 
 # ----------------------------------------- incremental store maintenance
@@ -713,54 +690,50 @@ def memo_checkpoint_rowwise(
     ``build_full()`` builds over the whole corpus (the fallback);
     ``build_batch(docs)`` builds the same rows over an arbitrary
     (sub)frame of the table — both must emit identical schemas."""
+    return _memo_store(spark, sf_dir, table, tag, extra_key, build_full, build_batch)
+
+
+def _memo_store(spark, sf_dir, table, tag, extra_key, build, build_batch):
+    """The store tier of memo_checkpoint{,_rowwise} on top of the session
+    memo; ``build_batch`` None means the family has no append path. The
+    store functions are called through the module globals, so a wrapper
+    installed on this module sees every lookup and publish."""
     if not MEMO_ENABLED:
-        return build_full()
-    fp = corpus_fingerprint(sf_dir, table)
-    key = (spark.sparkContext.applicationId, sf_dir, fp, tag, *extra_key)
-    hit = _MEMO_FRAMES.get(key)
-    if hit is None:
+        return build()
+
+    def stored():
         import inspect
 
         try:
-            mod_file = inspect.getsourcefile(build_batch)
+            mod_file = inspect.getsourcefile(build_batch or build)
         except TypeError:
             mod_file = None
         skey = _index_key(sf_dir, table, tag, extra_key, mod_file)
         policy_fp = _policy_fingerprint(tag, extra_key, mod_file)
         df = index_store_lookup(spark, tag, skey)
-        if df is None and INDEX_STORE_ENABLED:
+        if df is None and build_batch is not None and INDEX_STORE_ENABLED:
             df = _try_incremental_publish(
                 spark, sf_dir, table, tag, skey, policy_fp, build_batch
             )
+        if df is not None:
+            return df
+        before = _persistent_rdd_ids(spark)
+        built = build()
+        df = index_store_publish(spark, tag, skey, built)
         if df is None:
-            ids_before = _persistent_rdd_ids(spark)
-            built = build_full()
-            df = index_store_publish(spark, tag, skey, built)
-            if df is not None:
-                _lineage_write(
-                    tag,
-                    skey,
-                    {
-                        "skey": skey,
-                        "parent_skey": None,
-                        "policy_fp": policy_fp,
-                        "file_stats": [
-                            list(t) for t in corpus_file_stats(sf_dir, table)
-                        ],
-                    },
-                )
-                unpersist_tracked(
-                    spark,
-                    (_persistent_rdd_ids(spark) - ids_before)
-                    - protected_rdd_ids(),
-                )
-                hit = (df, frozenset())
-            else:
-                hit = checkpoint_tracked(built)
-        else:
-            hit = (df, frozenset())
-        while len(_MEMO_FRAMES) >= _MEMO_FRAMES_MAX:
-            _old_df, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
-            unpersist_tracked(spark, old_ids)
-        _MEMO_FRAMES[key] = hit
-    return hit[0]
+            return built.localCheckpoint()
+        if build_batch is not None:
+            _lineage_write(
+                tag,
+                skey,
+                {
+                    "skey": skey,
+                    "parent_skey": None,
+                    "policy_fp": policy_fp,
+                    "file_stats": [list(t) for t in corpus_file_stats(sf_dir, table)],
+                },
+            )
+        unpersist_since(spark, before)
+        return df
+
+    return session_memo(spark, sf_dir, table, tag, extra_key, stored)

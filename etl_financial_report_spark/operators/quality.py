@@ -1516,33 +1516,6 @@ def text_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qc_sweep_frame(spark, _qc_scored(spark, sf_dir), memo_sf_dir=sf_dir)
 
 
-#: session-scoped memo of the sweep's (held-out slice, 9-row decile
-#: bars) pair, keyed per (session, corpus snapshot, decile policy) —
-#: trained-state intermediates like the IVF coarse centroids
-#: (similarity._IVF_CENTS_CACHE): the bars are the candidate operating
-#: points SELECTED from the persisted margins, and EIGHT registered
-#: queries (sweep, gate bar, calibration, keep manifest, corpus build,
-#: drop-reason matrix, gate-drift matrix, dedup funnel, data card,
-#: calibrated budget) each re-ran the banded-rank machinery per
-#: construction (optimization r15 — measured ~15-25 construction jobs
-#: per consumer). The sweep CELLS pass and the gate selection stay
-#: per-query work; only the slice pin and the rank probe memoize.
-_QC_BARS_CACHE: dict[tuple, tuple] = {}
-_QC_BARS_MAX = 4
-
-
-def _qc_bars_cache_pins():
-    out: set = set()
-    for _pair, ids in _QC_BARS_CACHE.values():
-        out |= set(ids)
-    return out
-
-
-from .. import io as _io_pins_q  # noqa: E402  (registration, not a cycle)
-
-_io_pins_q.register_pin_provider(_qc_bars_cache_pins)
-
-
 def qc_sweep_frame(
     spark: SparkSession, scored: DataFrame, memo_sf_dir: str | None = None
 ) -> DataFrame:
@@ -1551,23 +1524,34 @@ def qc_sweep_frame(
     margins; the streaming corpus build runs it over margins scored from
     landed state at merge time. ``memo_sf_dir`` (r15): when the caller's
     scored frame is the per-corpus persisted one, the held-out slice and
-    the 9-row decile-bar table come from the session memo above; an
-    ad-hoc scored frame (streaming merge state) passes None and builds
-    fresh."""
+    the 9-row decile-bar table come from the session memo (io.session_memo),
+    keyed per (session, corpus snapshot, decile policy): the sweep, gate
+    bar, calibration, keep manifest, corpus build, drop-reason and
+    gate-drift matrices, dedup funnel, data card and calibrated budget
+    each re-ran the banded-rank machinery per construction (optimization
+    r15 — ~15-25 construction jobs per consumer). The sweep CELLS pass
+    stays per-query work. An ad-hoc scored frame (streaming merge state)
+    passes None and builds fresh."""
     from .. import io as _io
 
-    key = None
-    if memo_sf_dir is not None and _io.MEMO_ENABLED:
-        key = (
-            spark.sparkContext.applicationId,
+    if memo_sf_dir is None:
+        ev, bars = _qc_bars(spark, scored)
+    else:
+        ev, bars = _io.session_memo(
+            spark,
             memo_sf_dir,
-            _io.corpus_fingerprint(memo_sf_dir, "documents"),
+            "documents",
+            "qc_bars",
             tuple(QC_SWEEP_DECILES),
+            lambda: _qc_bars(spark, scored),
         )
-        hit = _QC_BARS_CACHE.get(key)
-        if hit is not None:
-            ev, bars = hit[0]
-            return _qc_sweep_cells(spark, ev, bars)
+    return _qc_sweep_cells(spark, ev, bars)
+
+
+def _qc_bars(spark: SparkSession, scored: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(held-out slice, 9-row decile bars), both localCheckpointed: the
+    bars are the candidate operating points SELECTED from the scored
+    margins via the banded-rank machinery."""
     ev = (
         scored
         .where("held_out")
@@ -1658,14 +1642,7 @@ def qc_sweep_frame(
         # downstream plan (optimization r14)
         .localCheckpoint()
     )
-    if key is not None:
-        # ev and bars were both checkpointed above; attribute their
-        # blocks to the cache entry so eviction can free them
-        ids = frozenset()
-        _QC_BARS_CACHE[key] = ((ev, bars), ids)
-        while len(_QC_BARS_CACHE) > _QC_BARS_MAX:
-            _QC_BARS_CACHE.pop(next(iter(_QC_BARS_CACHE)))
-    return _qc_sweep_cells(spark, ev, bars)
+    return ev, bars
 
 
 def _qc_sweep_cells(spark: SparkSession, ev: DataFrame, bars: DataFrame) -> DataFrame:

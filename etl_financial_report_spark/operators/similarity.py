@@ -591,6 +591,12 @@ def agg_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final merge is a JVM partial-aggregable groupBy over 64 fixed sum
     # columns. Output is bit-identical: integer sums are order-free.
     d = _modal_dim(spark, sf_dir)
+    if d == 0:
+        # no vectors (or only empty ones): there are no per-dim columns
+        # to generate and no rows to sum, so skip the Arrow pass
+        return spark.createDataFrame(
+            [], "label int, n_vectors long, centroid_sums string"
+        )
 
     def partials(batches):
         import numpy as np
@@ -1687,35 +1693,18 @@ def _update_centroids(qv: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-
-#: session-scoped memo of the ONE deterministic coarse-quantizer round
-#: (cid, c_qe, c_nsq) — seven registered queries (ivfpq topk, both
-#: recall evals, nprobe sweep, kmeans train, cluster-balanced sample,
-#: cluster term profile) plus the residual-index build train the
-#: IDENTICAL K-row table from the identical seeds; each used to rebuild
-#: it per query construction: one full assign pass over the corpus, the
-#: per-dim sums aggregate, and a localCheckpoint job, times seven
-#: (optimization r15, VERDICT r14 item 8). Values are (frame, pinned rdd
-#: ids) so eviction can free the checkpoint blocks.
-_IVF_CENTS_CACHE: dict[tuple, tuple] = {}
-_IVF_CENTS_MAX = 4
-
-
-def _ivf_cents_cache_pins():
-    out: set = set()
-    for _f, ids in _IVF_CENTS_CACHE.values():
-        out |= set(ids)
-    return out
-
-
 def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared post-seed-round coarse centroids (cid, c_qe, c_nsq):
     ``_update_centroids(qv, _assign_cells(qv, seeds))`` memoized per
-    (session, corpus snapshot, N_CELLS). Deliberately NOT persisted to
-    the index store: the residual index already persists its copy, and
-    this round adds no new cross-run artifact families — the memo is a
-    session-RAM localCheckpoint exactly like the per-query pin it
-    replaces, just shared."""
+    (session, corpus snapshot, N_CELLS). Seven registered queries (ivfpq
+    topk, both recall evals, nprobe sweep, kmeans train, cluster-balanced
+    sample, cluster term profile) plus the residual-index build train the
+    IDENTICAL K-row table from the identical seeds; each used to rebuild
+    it per query construction: one full assign pass, the per-dim sums
+    aggregate and a localCheckpoint job (optimization r15). Deliberately
+    NOT persisted to the index store: the residual index already persists
+    its copy — the memo is a session-RAM localCheckpoint exactly like the
+    per-query pin it replaces, just shared."""
     from .. import io as _io
 
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
@@ -1727,44 +1716,9 @@ def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     built = _update_centroids(qv, _assign_cells(qv, seeds))
     if not _io.MEMO_ENABLED:  # plan-audit escape hatch: real build plan
         return built
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _io.corpus_fingerprint(sf_dir, "embeddings"),
-        N_CELLS,
+    return _io.session_memo(
+        spark, sf_dir, "embeddings", "ivf_cents", (N_CELLS,), built.localCheckpoint
     )
-    hit = _IVF_CENTS_CACHE.get(key)
-    if hit is None:
-        hit = _io.checkpoint_tracked(built)
-        while len(_IVF_CENTS_CACHE) >= _IVF_CENTS_MAX:
-            _old, old_ids = _IVF_CENTS_CACHE.pop(next(iter(_IVF_CENTS_CACHE)))
-            _io.unpersist_tracked(spark, old_ids)
-        _IVF_CENTS_CACHE[key] = hit
-    return hit[0]
-
-
-#: session-scoped memo of the plain-PQ training pair (subs, book) — six
-#: registered queries (pq train/topk/recall, ivfpq topk, both ivfpq
-#: recall evals) called _pq_train per construction, each paying the
-#: sliced-projection checkpoint, the seed assignment window, the per-dim
-#: sums aggregate and the codebook checkpoint (optimization r15, same
-#: rationale as _IVF_CENTS_CACHE; the residual codebooks already ride
-#: the persisted residual index, raw-subvector training did not).
-_PQ_TRAIN_CACHE: dict[tuple, tuple] = {}
-_PQ_TRAIN_MAX = 4
-
-
-def _pq_train_cache_pins():
-    out: set = set()
-    for _pair, ids in _PQ_TRAIN_CACHE.values():
-        out |= set(ids)
-    return out
-
-
-from .. import io as _io_pins  # noqa: E402  (registration, not a cycle)
-
-_io_pins.register_pin_provider(_ivf_cents_cache_pins)
-_io_pins.register_pin_provider(_pq_train_cache_pins)
 
 
 @register(
@@ -2217,31 +2171,18 @@ def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     )
     from .. import io as _io
 
-    if not _io.MEMO_ENABLED:  # plan-audit escape hatch
+    def train():
         subs = subs_pure.localCheckpoint()
-        return subs, _pq_train_subs(subs)
-    # session memo (optimization r15): six registered queries re-ran this
-    # training per construction — see _PQ_TRAIN_CACHE
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _io.corpus_fingerprint(sf_dir, "embeddings"),
-        PQ_M,
-        PQ_K,
-        PQ_SUBDIM,
+        return subs, _pq_train_subs(subs)  # checkpoints the K-bounded book
+
+    # session memo (optimization r15): six registered queries (pq train/
+    # topk/recall, ivfpq topk, both ivfpq recall evals) re-ran the sliced-
+    # projection checkpoint, the seed assignment window, the per-dim sums
+    # aggregate and the codebook checkpoint per construction; the residual
+    # codebooks already ride the persisted residual index, these did not
+    return _io.session_memo(
+        spark, sf_dir, "embeddings", "pq_train", (PQ_M, PQ_K, PQ_SUBDIM), train
     )
-    hit = _PQ_TRAIN_CACHE.get(key)
-    if hit is None:
-        ids_before = _io._persistent_rdd_ids(spark)
-        subs = subs_pure.localCheckpoint()
-        book = _pq_train_subs(subs)  # checkpoints the K-bounded book
-        ids = _io._persistent_rdd_ids(spark) - ids_before
-        hit = ((subs, book), frozenset(ids))
-        while len(_PQ_TRAIN_CACHE) >= _PQ_TRAIN_MAX:
-            _old, old_ids = _PQ_TRAIN_CACHE.pop(next(iter(_PQ_TRAIN_CACHE)))
-            _io.unpersist_tracked(spark, old_ids)
-        _PQ_TRAIN_CACHE[key] = hit
-    return hit[0]
 
 
 def _pq_train_subs(subs: DataFrame) -> DataFrame:
@@ -2555,72 +2496,52 @@ def _sub_structs_of(col_name: str) -> F.Column:
     )
 
 
-#: memoized query-independent residual IVF-PQ index per (session,
-#: corpus snapshot): coarse centroids, integer-quantized centroids,
-#: corpus cell assignment, residual PQ codebooks + codes, and the
-#: (coarse cell x residual code) cross-dot table. Four registered
-#: queries train against the same corpus; a production system persists
-#: this as the FAISS index file.
-_RESIDUAL_INDEX_CACHE: dict[tuple, tuple] = {}  # key -> (index dict, rdd ids)
-_RESIDUAL_INDEX_MAX = 4
-
-
-def _residual_cache_pins():
-    """Persistent-RDD ids owned by live index entries — an io pin
-    provider so no post-publish cleanup elsewhere frees blocks a live
-    entry here still references (ADVICE r12)."""
-    out: set = set()
-    for _idx, ids in _RESIDUAL_INDEX_CACHE.values():
-        out |= set(ids)
-    return out
-
-
-from .. import io as _io_reg  # noqa: E402  (registration, not a cycle)
-
-_io_reg.register_pin_provider(_residual_cache_pins)
+#: the six frames of the query-independent residual IVF-PQ index: coarse
+#: centroids, integer-quantized centroids, corpus cell assignment,
+#: residual PQ codebooks + codes, and the (coarse cell x residual code)
+#: cross-dot table. Four registered queries train against the same
+#: corpus; a production system persists this as the FAISS index file.
+_IDX_PARTS = ("cents", "cq", "assign", "rbook", "rcodes", "crd")
 
 
 def _residual_index(spark: SparkSession, sf_dir: str) -> dict:
+    """The residual index, memoized per (session, corpus snapshot) and
+    persisted to the index store: a fresh session reads the six frames
+    from disk instead of re-running train/assign/encode (VERDICT r11
+    item 1). On full publish success the disk-backed reads REPLACE the
+    build's checkpoints (their blocks free at once); a partial publish
+    keeps the checkpoint-backed index for this session and the next
+    session rebuilds."""
     from .. import io as _io
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _io.corpus_fingerprint(sf_dir, "embeddings"),
-        N_CELLS,
-        PQ_M,
-        PQ_K,
-    )
-    skey = _io._index_key(
-        sf_dir, "embeddings", "residual_index", (N_CELLS, PQ_M, PQ_K), __file__
-    )
-    _IDX_PARTS = ("cents", "cq", "assign", "rbook", "rcodes", "crd")
     if not _io.MEMO_ENABLED:  # plan-audit escape hatch: build, don't cache
-        key = None
-    elif (hit := _RESIDUAL_INDEX_CACHE.get(key)) is not None:
-        return hit[0]
-    elif key is not None:
-        # persisted-index hit: a fresh session reads the six index frames
-        # (the FAISS index file of this engine) from the snapshot store
-        # instead of re-running train/assign/encode (VERDICT r11 item 1)
+        return _residual_index_build(spark, sf_dir)
+    geometry = (N_CELLS, PQ_M, PQ_K)
+
+    def stored():
+        skey = _io._index_key(sf_dir, "embeddings", "residual_index", geometry, __file__)
         loaded = {
-            n: _io.index_store_lookup(spark, f"residual_{n}", skey)
-            for n in _IDX_PARTS
+            n: _io.index_store_lookup(spark, f"residual_{n}", skey) for n in _IDX_PARTS
         }
         if all(v is not None for v in loaded.values()):
-            entry = (loaded, frozenset())
-            while len(_RESIDUAL_INDEX_CACHE) >= _RESIDUAL_INDEX_MAX:
-                _old, old_ids = _RESIDUAL_INDEX_CACHE.pop(
-                    next(iter(_RESIDUAL_INDEX_CACHE))
-                )
-                _io.unpersist_tracked(spark, old_ids)
-            _RESIDUAL_INDEX_CACHE[key] = entry
             return loaded
-    # snapshot-diff the persistent RDDs around the whole build: every
-    # localCheckpoint below (the six index frames plus the rsubs
-    # intermediate) is attributed to this entry, so eviction can free
-    # ALL its blocks (io.checkpoint_tracked doc)
-    ids_before = _io._persistent_rdd_ids(spark)
+        before = _io._persistent_rdd_ids(spark)
+        idx = _residual_index_build(spark, sf_dir)
+        pub = {
+            n: _io.index_store_publish(spark, f"residual_{n}", skey, idx[n])
+            for n in _IDX_PARTS
+        }
+        if not all(v is not None for v in pub.values()):
+            return idx
+        _io.unpersist_since(spark, before)
+        return pub
+
+    return _io.session_memo(
+        spark, sf_dir, "embeddings", "residual_index", geometry, stored
+    )
+
+
+def _residual_index_build(spark: SparkSession, sf_dir: str) -> dict:
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     seeds = qv.where((F.col("vec_id") < N_CELLS) & (F.col("nsq") > 0)).select(
         F.col("vec_id").alias("cid"),
@@ -2677,7 +2598,7 @@ def _residual_index(spark: SparkSession, sf_dir: str) -> dict:
         .select("cell", "m", "rcell", dot_q(F.col("cs"), F.col("c_qe")).alias("crdot"))
         .localCheckpoint()
     )
-    idx = {
+    return {
         "cents": cents,
         "cq": cq,
         "assign": assign,
@@ -2685,29 +2606,6 @@ def _residual_index(spark: SparkSession, sf_dir: str) -> dict:
         "rcodes": rcodes,
         "crd": crd,
     }
-    if key is not None:
-        build_ids = _io._persistent_rdd_ids(spark) - ids_before
-        # publish the six frames; on full success the disk-backed reads
-        # REPLACE the checkpoints (and their blocks free immediately) —
-        # a partial publish keeps the checkpoint-backed index for this
-        # session and the next session rebuilds
-        pub = {
-            n: _io.index_store_publish(spark, f"residual_{n}", skey, idx[n])
-            for n in _IDX_PARTS
-        }
-        if all(v is not None for v in pub.values()):
-            _io.unpersist_tracked(spark, build_ids - _io.protected_rdd_ids())
-            entry = (pub, frozenset())
-            idx = pub
-        else:
-            entry = (idx, build_ids)
-        while len(_RESIDUAL_INDEX_CACHE) >= _RESIDUAL_INDEX_MAX:
-            _old, old_ids = _RESIDUAL_INDEX_CACHE.pop(
-                next(iter(_RESIDUAL_INDEX_CACHE))
-            )
-            _io.unpersist_tracked(spark, old_ids)
-        _RESIDUAL_INDEX_CACHE[key] = entry
-    return idx
 
 
 def _ivf_residual_scored(

@@ -339,53 +339,24 @@ def unigram_train_collected(
     return vocab2, unigram_segment(words, vocab2, max_piece)
 
 
-#: memoized default-geometry trained state per (session, corpus
-#: snapshot): four registered queries (encode, round-trip, fertility,
-#: packing) consume the SAME trained tokenizer — the persisted-artifact
-#: pattern (a real pipeline trains once and ships vocab + segmentations;
-#: re-running seed/segment/prune per query was registry-shape overhead).
-#: Geometry rides the key, so a monkeypatched cap can never hit a stale
-#: state. FIFO-capped like io.memo_checkpoint.
-_TRAINED_CACHE: dict[tuple, tuple] = {}
-_TRAINED_CACHE_MAX = 8
-
-
-def _trained_cache_pins():
-    """Persistent-RDD ids owned by live trainer entries — registered as
-    an io pin provider so no family's post-publish cleanup can free a
-    checkpoint this cache still references (ADVICE r12)."""
-    out: set = set()
-    for entry in _TRAINED_CACHE.values():
-        out |= set(entry[2])
-    return out
-
-
-from .. import io as _io_reg  # noqa: E402  (registration, not a cycle)
-
-_io_reg.register_pin_provider(_trained_cache_pins)
-
-
 def unigram_corpus_trained(spark: SparkSession, sf_dir: str):
     """(vocab2 dict, seg frame) under the default training geometry over
-    the documents table, memoized per (session, corpus snapshot); the
-    seg frame is localCheckpoint-pinned so every consumer reuses one
+    the documents table, memoized per (session, corpus snapshot) and
+    persisted to the index store: four registered queries (encode,
+    round-trip, fertility, packing) consume the SAME trained tokenizer —
+    the persisted-artifact pattern (a real pipeline trains once and ships
+    vocab + segmentations). Geometry rides the key, so a monkeypatched
+    cap can never hit a stale state. When the store is off the seg frame
+    is localCheckpoint-pinned so every consumer reuses one
     materialization."""
     from .. import io as _io
 
     if not _io.MEMO_ENABLED:  # plan-audit escape hatch (io.MEMO_ENABLED doc)
         words = unigram_words(load_table(spark, sf_dir, "documents"))
         return unigram_train_collected(words)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _io.corpus_fingerprint(sf_dir, "documents"),
-        UNIGRAM_MAX_PIECE,
-        UNIGRAM_SEED_K,
-        UNIGRAM_KEEP_K,
-    )
-    hit = _TRAINED_CACHE.get(key)
-    if hit is None:
-        geometry = (UNIGRAM_MAX_PIECE, UNIGRAM_SEED_K, UNIGRAM_KEEP_K)
+    geometry = (UNIGRAM_MAX_PIECE, UNIGRAM_SEED_K, UNIGRAM_KEEP_K)
+
+    def stored():
         skey = _io._index_key(sf_dir, "documents", "unigram_trained", geometry, __file__)
         vocab_df = _io.index_store_lookup(spark, "unigram_vocab", skey)
         seg_df = _io.index_store_lookup(spark, "unigram_seg", skey)
@@ -395,35 +366,23 @@ def unigram_corpus_trained(spark: SparkSession, sf_dir: str):
             # seed/segment/prune EM chain. The vocab collect is
             # UNIGRAM_KEEP_K + alphabet bounded — the same vocabulary-
             # bounded collect the trainer itself makes, never corpus rows.
-            vocab2 = {r["piece"]: r["score"] for r in vocab_df.collect()}
-            hit = (vocab2, seg_df, frozenset())
-        else:
-            ids_before = _io._persistent_rdd_ids(spark)
-            words = unigram_words(load_table(spark, sf_dir, "documents"))
-            vocab2, seg = unigram_train_collected(words)
-            vdf = spark.createDataFrame(
-                sorted(vocab2.items()), "piece string, score long"
-            )
-            _io.index_store_publish(spark, "unigram_vocab", skey, vdf)
-            disk_seg = _io.index_store_publish(spark, "unigram_seg", skey, seg)
-            if disk_seg is not None:
-                # the disk read replaces the trainer's pins (the words
-                # checkpoint inside unigram_train_collected) — free them,
-                # minus any id a live cache entry elsewhere still owns
-                _io.unpersist_tracked(
-                    spark,
-                    (_io._persistent_rdd_ids(spark) - ids_before)
-                    - _io.protected_rdd_ids(),
-                )
-                hit = (vocab2, disk_seg, frozenset())
-            else:
-                ck, ids = _io.checkpoint_tracked(seg)
-                hit = (vocab2, ck, ids)
-        while len(_TRAINED_CACHE) >= _TRAINED_CACHE_MAX:
-            old = _TRAINED_CACHE.pop(next(iter(_TRAINED_CACHE)))
-            _io.unpersist_tracked(spark, old[2])
-        _TRAINED_CACHE[key] = hit
-    return hit[0], hit[1]
+            return {r["piece"]: r["score"] for r in vocab_df.collect()}, seg_df
+        before = _io._persistent_rdd_ids(spark)
+        words = unigram_words(load_table(spark, sf_dir, "documents"))
+        vocab2, seg = unigram_train_collected(words)
+        vdf = spark.createDataFrame(sorted(vocab2.items()), "piece string, score long")
+        _io.index_store_publish(spark, "unigram_vocab", skey, vdf)
+        disk_seg = _io.index_store_publish(spark, "unigram_seg", skey, seg)
+        if disk_seg is None:
+            return vocab2, seg.localCheckpoint()
+        # the disk read replaces the trainer's pins (the words checkpoint
+        # inside unigram_train_collected)
+        _io.unpersist_since(spark, before)
+        return vocab2, disk_seg
+
+    return _io.session_memo(
+        spark, sf_dir, "documents", "unigram_trained", geometry, stored
+    )
 
 
 # --------------------------------------------------------------- SQL twin

@@ -28,3 +28,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def fresh_memo():
+    """An empty session memo for the test (io.session_memo's one dict);
+    the entries it held before come back afterwards."""
+    import etl_financial_report_spark.io as IO
+
+    saved = dict(IO._MEMO_FRAMES)
+    IO._MEMO_FRAMES.clear()
+    yield IO._MEMO_FRAMES
+    IO._MEMO_FRAMES.clear()
+    IO._MEMO_FRAMES.update(saved)

@@ -60,7 +60,7 @@ def test_table_metadata_recurses_partitioned_layout(spark, tmp_path):
     assert table_size_bytes(str(tmp_path), "documents") > 0
 
 
-def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch):
+def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch, fresh_memo):
     """tools/index_store_report.py: pure-metadata report over the store
     layout — runs without a Spark session, prints one line per family
     plus a TOTAL, and honors --root/--json."""
@@ -73,21 +73,15 @@ def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(IO, "INDEX_STORE_ROOT", str(tmp_path / "store"))
     monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", True)
-    saved = dict(IO._MEMO_FRAMES)
-    IO._MEMO_FRAMES.clear()
-    try:
-        IO.memo_checkpoint(
-            spark,
-            "/root/testdata/sf0.001",
-            "documents",
-            "t_report",
-            lambda: load_table(spark, "/root/testdata/sf0.001", "documents")
-            .limit(7)
-            .select("doc_id"),
-        )
-    finally:
-        IO._MEMO_FRAMES.clear()
-        IO._MEMO_FRAMES.update(saved)
+    IO.memo_checkpoint(
+        spark,
+        "/root/testdata/sf0.001",
+        "documents",
+        "t_report",
+        lambda: load_table(spark, "/root/testdata/sf0.001", "documents")
+        .limit(7)
+        .select("doc_id"),
+    )
     out_json = str(tmp_path / "report.json")
     proc = subprocess.run(
         [

@@ -27,14 +27,10 @@ def _rows(df):
 
 
 @pytest.fixture()
-def tmp_store(tmp_path, monkeypatch):
+def tmp_store(tmp_path, monkeypatch, fresh_memo):
     monkeypatch.setattr(IO, "INDEX_STORE_ROOT", str(tmp_path / "store"))
     monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", True)
-    saved = dict(IO._MEMO_FRAMES)
-    IO._MEMO_FRAMES.clear()
-    yield str(tmp_path / "store")
-    IO._MEMO_FRAMES.clear()
-    IO._MEMO_FRAMES.update(saved)
+    return str(tmp_path / "store")
 
 
 def test_fresh_session_reads_disk_not_rebuild(spark, tmp_store):
@@ -103,11 +99,9 @@ def test_store_disabled_falls_back_to_checkpoint(spark, tmp_store, monkeypatch):
 def test_unigram_trained_state_round_trips_fresh_session(spark, tmp_store, monkeypatch):
     from etl_financial_report_spark.operators import unigram as U
 
-    U._TRAINED_CACHE.clear()
     vocab1, seg1 = U.unigram_corpus_trained(spark, SF)
     want = _rows(seg1.select("tok", "n_pieces"))
-    # fresh session: RAM caches gone, trainer forbidden
-    U._TRAINED_CACHE.clear()
+    # fresh session: the session memo is gone, trainer forbidden
     IO._MEMO_FRAMES.clear()
 
     def boom(*a, **k):
@@ -117,16 +111,14 @@ def test_unigram_trained_state_round_trips_fresh_session(spark, tmp_store, monke
     vocab2, seg2 = U.unigram_corpus_trained(spark, SF)
     assert vocab2 == vocab1
     assert _rows(seg2.select("tok", "n_pieces")) == want
-    U._TRAINED_CACHE.clear()
 
 
 def test_residual_index_round_trips_fresh_session(spark, tmp_store, monkeypatch):
     from etl_financial_report_spark.operators import similarity as S
 
-    S._RESIDUAL_INDEX_CACHE.clear()
     idx1 = S._residual_index(spark, SF)
     want = _rows(idx1["rcodes"])
-    S._RESIDUAL_INDEX_CACHE.clear()
+    IO._MEMO_FRAMES.clear()
 
     def boom(*a, **k):
         raise AssertionError("trainer must not run on a persisted-index hit")
@@ -137,7 +129,6 @@ def test_residual_index_round_trips_fresh_session(spark, tmp_store, monkeypatch)
     idx2 = S._residual_index(spark, SF)
     assert set(idx2) == set(idx1)
     assert _rows(idx2["rcodes"]) == want
-    S._RESIDUAL_INDEX_CACHE.clear()
 
 
 def test_publish_frees_build_internal_checkpoints(spark, tmp_store):

@@ -55,14 +55,10 @@ def _write_batch(spark, corpus_dir, name, rows):
 
 
 @pytest.fixture()
-def store(monkeypatch, tmp_path):
+def store(monkeypatch, tmp_path, fresh_memo):
     monkeypatch.setattr(IO, "INDEX_STORE_ROOT", str(tmp_path / "store"))
     monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", True)
-    saved = dict(IO._MEMO_FRAMES)
-    IO._MEMO_FRAMES.clear()
-    yield str(tmp_path / "store")
-    IO._MEMO_FRAMES.clear()
-    IO._MEMO_FRAMES.update(saved)
+    return str(tmp_path / "store")
 
 
 def _sig_set(df):

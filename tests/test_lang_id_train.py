@@ -41,13 +41,8 @@ _SEP = [
 
 
 @pytest.fixture()
-def no_store(monkeypatch):
+def no_store(monkeypatch, fresh_memo):
     monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", False)
-    saved = dict(IO._MEMO_FRAMES)
-    IO._MEMO_FRAMES.clear()
-    yield
-    IO._MEMO_FRAMES.clear()
-    IO._MEMO_FRAMES.update(saved)
 
 
 def test_held_out_docs_contribute_no_gradient(spark, tmp_path, no_store):
@@ -103,30 +98,18 @@ def test_separable_corpus_learned_and_beats_lexicon(spark, tmp_path, no_store):
     assert lh < lt, "markers cover none of this vocabulary"
 
 
-def test_weights_ride_the_index_store(spark, tmp_path, monkeypatch):
+def test_weights_ride_the_index_store(spark, tmp_path, monkeypatch, fresh_memo):
     monkeypatch.setattr(IO, "INDEX_STORE_ROOT", str(tmp_path / "store"))
     monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", True)
-    saved = dict(IO._MEMO_FRAMES)
-    IO._MEMO_FRAMES.clear()
-    try:
-        want = sorted(
-            tuple(r)
-            for r in T.text_lang_id_train(spark, SF).collect()
-        )
-        IO._MEMO_FRAMES.clear()  # "fresh session"
+    want = sorted(tuple(r) for r in T.text_lang_id_train(spark, SF).collect())
+    IO._MEMO_FRAMES.clear()  # "fresh session"
 
-        def boom(*a, **k):
-            raise AssertionError("trainer must not run on a store hit")
+    def boom(*a, **k):
+        raise AssertionError("trainer must not run on a store hit")
 
-        monkeypatch.setattr(T, "_lid_weights_build", boom)
-        got = sorted(
-            tuple(r)
-            for r in T.text_lang_id_train(spark, SF).collect()
-        )
-        assert got == want
-    finally:
-        IO._MEMO_FRAMES.clear()
-        IO._MEMO_FRAMES.update(saved)
+    monkeypatch.setattr(T, "_lid_weights_build", boom)
+    got = sorted(tuple(r) for r in T.text_lang_id_train(spark, SF).collect())
+    assert got == want
 
 
 def test_chargram_features_disjoint_ranges(spark, tmp_path, no_store):

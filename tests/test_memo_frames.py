@@ -100,47 +100,103 @@ def test_memo_eviction_unpersists_checkpoint_blocks(spark, tmp_path):
     """ADVICE r11: FIFO eviction must FREE the evicted frame's
     checkpoint blocks (rdd unpersist), not just drop the dict
     reference — verified against the JVM's persistent-RDD registry."""
-    from etl_financial_report_spark.io import (
-        _persistent_rdd_ids,
-        checkpoint_tracked,
-        unpersist_tracked,
-    )
+    from etl_financial_report_spark.io import _persistent_rdd_ids, unpersist_tracked
 
     df = load_table(spark, SF, "documents").where(F.col("doc_id") < 5)
-    ck, ids = checkpoint_tracked(df)
+    before = _persistent_rdd_ids(spark)
+    ck = df.localCheckpoint()
+    ids = _persistent_rdd_ids(spark) - before
     assert ids, "localCheckpoint should pin at least one RDD"
-    assert ids <= _persistent_rdd_ids(spark)
     assert ck.count() == 5
     unpersist_tracked(spark, ids)
     assert not (ids & _persistent_rdd_ids(spark))
 
 
-def test_memo_frames_cap_evicts_and_frees(spark, tmp_path):
+def test_memo_frames_cap_evicts_and_frees(spark, tmp_path, fresh_memo, monkeypatch):
     """Filling the memo past its FIFO cap unpersists the oldest entry's
     blocks end-to-end through memo_checkpoint itself (store disabled so
     the localCheckpoint path — the one that pins blocks — is the one
-    under test; disk-backed hits pin nothing by construction)."""
+    under test; disk-backed hits pin nothing by construction). The entry
+    owns the builder's INTERNAL checkpoint as well as the final one, so
+    once every entry is evicted no new pinned RDD remains."""
     base = load_table(spark, SF, "documents").where(F.col("doc_id") < 3)
-    old_max = IO._MEMO_FRAMES_MAX
-    old_store = IO.INDEX_STORE_ENABLED
-    IO.INDEX_STORE_ENABLED = False
-    saved = dict(IO._MEMO_FRAMES)
+    monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", False)
+    monkeypatch.setattr(IO, "_MEMO_FRAMES_MAX", 2)
+    src = str(tmp_path)
+    base.coalesce(1).write.parquet(f"{src}/documents.parquet")
+    before = IO._persistent_rdd_ids(spark)
+
+    def build():
+        inner = base.select("doc_id").localCheckpoint()  # builder-internal pin
+        return inner.where(F.col("doc_id") >= 0)
+
+    first = IO.memo_checkpoint(spark, src, "documents", "t0", build)
+    assert first.count() == 3
+    first_ids = next(iter(IO._MEMO_FRAMES.values()))[1]
+    assert len(first_ids) >= 2, "internal and final checkpoint both owned"
+    assert first_ids <= IO._persistent_rdd_ids(spark)
+    IO.memo_checkpoint(spark, src, "documents", "t1", build)
+    IO.memo_checkpoint(spark, src, "documents", "t2", build)
+    # t0 evicted: every checkpoint its build made is gone from the registry
+    assert not (first_ids & IO._persistent_rdd_ids(spark))
+    # evict t1 and t2 behind two entries that pin nothing
+    for i in range(2):
+        IO.session_memo(spark, src, "documents", "filler", (i,), lambda: None)
+    assert IO._persistent_rdd_ids(spark) - before == frozenset()
+
+
+def _family_key(family):
+    return next(k for k in IO._MEMO_FRAMES if k[3] == family)
+
+
+def _evict_oldest(spark, monkeypatch, n):
+    """Insert one entry that pins nothing with the cap one below the new
+    size, so FIFO eviction drops exactly the oldest entry."""
+    monkeypatch.setattr(IO, "_MEMO_FRAMES_MAX", len(IO._MEMO_FRAMES))
+    IO.session_memo(spark, SF, "embeddings", "filler", (n,), lambda: None)
+
+
+def test_nested_entry_pins_survive_either_eviction(spark, fresh_memo, monkeypatch):
+    """Store off: the residual index build nests the _ivf_cents memo
+    miss, and idx["cents"] IS that entry's checkpoint. Both entries own
+    it, so evicting either one first leaves the other collectable — a
+    localCheckpoint cannot recompute — and frees only what no live entry
+    still reads."""
+    from etl_financial_report_spark.operators import similarity as S
+
+    monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", False)
+
+    # the nested centroid entry goes first (plain FIFO order)
+    idx = S._residual_index(spark, SF)
+    want = {n: _rows(df) for n, df in idx.items()}
+    ivf_ids = IO._MEMO_FRAMES[_family_key("ivf_cents")][1]
+    assert ivf_ids and ivf_ids <= IO._MEMO_FRAMES[_family_key("residual_index")][1]
+    _evict_oldest(spark, monkeypatch, 0)
+    assert not any(k[3] == "ivf_cents" for k in IO._MEMO_FRAMES)
+    assert ivf_ids <= IO._persistent_rdd_ids(spark)
+    assert {n: _rows(df) for n, df in idx.items()} == want
+
+    # the residual entry goes first: the centroid entry keeps its blocks
     IO._MEMO_FRAMES.clear()
-    IO._MEMO_FRAMES_MAX = 2
-    try:
-        src = str(tmp_path)
-        base.coalesce(1).write.parquet(f"{src}/documents.parquet")
-        first = IO.memo_checkpoint(
-            spark, src, "documents", "t0", lambda: base.select("doc_id")
-        )
-        first_ids = next(iter(IO._MEMO_FRAMES.values()))[1]
-        assert first_ids & IO._persistent_rdd_ids(spark)
-        IO.memo_checkpoint(spark, src, "documents", "t1", lambda: base.select("doc_id"))
-        IO.memo_checkpoint(spark, src, "documents", "t2", lambda: base.select("doc_id"))
-        # t0 evicted: its checkpoint blocks are gone from the registry
-        assert not (first_ids & IO._persistent_rdd_ids(spark))
-    finally:
-        IO._MEMO_FRAMES_MAX = old_max
-        IO.INDEX_STORE_ENABLED = old_store
-        IO._MEMO_FRAMES.clear()
-        IO._MEMO_FRAMES.update(saved)
+    idx = S._residual_index(spark, SF)
+    res_key = _family_key("residual_index")
+    res_entry = IO._MEMO_FRAMES.pop(res_key)
+    rest = dict(IO._MEMO_FRAMES)
+    IO._MEMO_FRAMES.clear()
+    IO._MEMO_FRAMES[res_key] = res_entry
+    IO._MEMO_FRAMES.update(rest)
+    ivf_ids = IO._MEMO_FRAMES[_family_key("ivf_cents")][1]
+    _evict_oldest(spark, monkeypatch, 1)
+    assert res_key not in IO._MEMO_FRAMES
+    live = IO._persistent_rdd_ids(spark)
+    assert ivf_ids <= live
+    assert not ((res_entry[1] - ivf_ids) & live), "residual-only pins freed"
+    cents = S._ivf_cents(spark, SF)
+    assert cents is idx["cents"]
+    assert _rows(cents) == want["cents"]
+
+
+def test_index_store_keeps_more_versions_than_the_memo_holds():
+    """A frame the session memo still references must never have its
+    store files vacuumed by later publishes of the same family."""
+    assert IO._INDEX_KEEP_VERSIONS > IO._MEMO_FRAMES_MAX

@@ -155,13 +155,12 @@ def test_redaction_removes_every_digit(spark, sf_dir):
     assert rows.where(F.col("n_redactions") >= 1).count() == rows.count()
 
 
-def test_quality_classifier_learns_separable_gate(spark, tmp_path):
+def test_quality_classifier_learns_separable_gate(spark, tmp_path, fresh_memo):
     """r12 trained quality classifier: on a corpus where the weak label
     is cleanly determined by doc shape, the perceptron must classify the
     HELD-OUT slice (doc_id % QC_EVAL_MOD == 0, which contributed no
     gradient) essentially perfectly, and the scored frame must flag
     exactly that slice as held out."""
-    import etl_financial_report_spark.io as IO
     from etl_financial_report_spark.operators.quality import (
         QC_EVAL_MOD,
         text_quality_classifier,
@@ -180,25 +179,20 @@ def test_quality_classifier_learns_separable_gate(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    saved = dict(IO._MEMO_FRAMES)
-    try:
-        out = {r.doc_id: r for r in text_quality_classifier(spark, str(tmp_path)).collect()}
-        assert len(out) == 60
-        for d, r in out.items():
-            assert r.held_out == (d % QC_EVAL_MOD == 0)
-            assert r.weak_label == (1 if d % 2 == 0 else -1)
-        held = [r for r in out.values() if r.held_out]
-        assert held and all(
-            r.predicted_keep == (r.weak_label == 1) for r in held
-        ), "held-out slice must be separated on a separable corpus"
-        ev = text_quality_classifier_eval(spark, str(tmp_path)).collect()
-        assert sum(r.n for r in ev) == len(held)
-        diag = {(r.actual_keep, r.predicted_keep): r for r in ev}
-        assert diag[(True, True)].cell_ppm == 1_000_000
-        assert diag[(False, False)].cell_ppm == 1_000_000
-    finally:
-        IO._MEMO_FRAMES.clear()
-        IO._MEMO_FRAMES.update(saved)
+    out = {r.doc_id: r for r in text_quality_classifier(spark, str(tmp_path)).collect()}
+    assert len(out) == 60
+    for d, r in out.items():
+        assert r.held_out == (d % QC_EVAL_MOD == 0)
+        assert r.weak_label == (1 if d % 2 == 0 else -1)
+    held = [r for r in out.values() if r.held_out]
+    assert held and all(
+        r.predicted_keep == (r.weak_label == 1) for r in held
+    ), "held-out slice must be separated on a separable corpus"
+    ev = text_quality_classifier_eval(spark, str(tmp_path)).collect()
+    assert sum(r.n for r in ev) == len(held)
+    diag = {(r.actual_keep, r.predicted_keep): r for r in ev}
+    assert diag[(True, True)].cell_ppm == 1_000_000
+    assert diag[(False, False)].cell_ppm == 1_000_000
 
 
 def test_quality_threshold_sweep_monotone(spark, sf_dir):
@@ -222,3 +216,25 @@ def test_quality_threshold_sweep_monotone(spark, sf_dir):
         assert (a.recall_ppm or 0) >= (b.recall_ppm or 0)
     # keep_ppm is exactly rank arithmetic on the decile bars
     assert all(r.keep_ppm <= 1_000_000 for r in rows)
+
+
+def test_qc_bars_eviction_frees_slice_and_bars(spark, sf_dir, fresh_memo, monkeypatch):
+    """ADVICE r15: the sweep's memoized (held-out slice, decile bars)
+    entry owns both localCheckpoints, so evicting it frees their blocks
+    instead of leaking them."""
+    import etl_financial_report_spark.io as IO
+    from etl_financial_report_spark.operators.quality import _qc_scored, qc_sweep_frame
+
+    monkeypatch.setattr(IO, "INDEX_STORE_ENABLED", False)
+    qc_sweep_frame(spark, _qc_scored(spark, sf_dir), memo_sf_dir=sf_dir).collect()
+    key = next(k for k in IO._MEMO_FRAMES if k[3] == "qc_bars")
+    (ev, bars), ids = IO._MEMO_FRAMES[key]
+    pinned = {
+        df._jdf.queryExecution().analyzed().rdd().id() for df in (ev, bars)
+    }
+    assert len(pinned) == 2 and pinned <= ids <= IO._persistent_rdd_ids(spark)
+    # one entry that pins nothing, with the cap at one, evicts the rest
+    monkeypatch.setattr(IO, "_MEMO_FRAMES_MAX", 1)
+    IO.session_memo(spark, sf_dir, "documents", "filler", (), lambda: None)
+    assert key not in IO._MEMO_FRAMES
+    assert not (ids & IO._persistent_rdd_ids(spark))

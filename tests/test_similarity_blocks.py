@@ -2,13 +2,16 @@
 must produce the identical pair set (the grid changes which task computes a
 pair, never whether it is computed). B is derived from the corpus row count
 (parquet footer) + cluster parallelism by default — these tests pin both
-the invariance and the derivation's two constraints."""
+the invariance and the derivation's two constraints. The last test pins
+the per-label centroid on an empty embeddings table (modal dimension 0)."""
 
 import math
 
+from etl_financial_report_spark.io import load_table
 from etl_financial_report_spark.operators.similarity import (
     COSINE_BLOCK_TARGET_ROWS,
     _derive_n_blocks,
+    agg_embedding_centroid,
     cosine_pairs,
 )
 
@@ -147,3 +150,15 @@ def test_mrl_funnel_dominates_raw_prefix_ranking(spark):
         for r in q["sim_mrl_prefix_recall"].fn(spark, "/root/testdata/sf0.01").collect()
     }
     assert f.recall_ppm > p[MRL_FUNNEL_DIM].recall_ppm
+
+
+def test_embedding_centroid_on_empty_embeddings(spark, tmp_path):
+    """An empty embeddings table has modal dimension 0: the centroid
+    query returns zero rows with the schema it returns on real data,
+    without generating a per-dim aggregate over no dimensions."""
+    load_table(spark, SF, "embeddings").limit(0).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    out = agg_embedding_centroid(spark, str(tmp_path))
+    assert out.collect() == []
+    assert out.dtypes == agg_embedding_centroid(spark, SF).dtypes
