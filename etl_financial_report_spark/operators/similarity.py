@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
@@ -136,6 +136,168 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", quantize(F.col("embedding")).alias("qe"))
         .withColumn("nsq", norm_sq_q(F.col("qe")))
     )
+
+
+# ------------------------------------------------ exact retrieval kernel
+#
+# One truth, many retrievers: every ANN path (LSH, IVF, SQ8, PQ, IVF-PQ)
+# is scored against the same exact top-k — vector 0 (or the query block
+# vec_id < nq) broadcast against the gated corpus, exact quantized
+# cosine, total order (cosine desc, vec_id). The helpers below are that
+# truth's one engine copy; _TRUTH_CTES and _batch_truth_ctes are its one
+# oracle copy.
+
+
+def _query_block(
+    frame: DataFrame, nq: int | None = None, cols: tuple = ("qe", "nsq")
+) -> DataFrame:
+    """The broadcast side of an exact scan: ``cols`` renamed q_<col>, of
+    vector 0 alone (``nq`` None, the single-query shape) or of the block
+    vec_id < nq keyed by q_id. Reads ``frame`` as given, so a query the
+    conformance gate dropped is simply absent."""
+    sel = [F.col(c).alias(f"q_{c}") for c in cols]
+    if nq is None:
+        return frame.where(F.col("vec_id") == 0).select(*sel)
+    return frame.where(F.col("vec_id") < nq).select(F.col("vec_id").alias("q_id"), *sel)
+
+
+def _exact_cosine() -> F.Column:
+    """Exact quantized cosine of a corpus row (qe, nsq) and its query."""
+    return cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
+
+
+def _exact_scored(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact quantized cosine of every corpus row (vec_id, qe, nsq)
+    against a broadcast :func:`_query_block`: (vec_id, cosine) for the
+    single query, (q_id, vec_id, cosine) for a block."""
+    keys = ["q_id", "vec_id"] if "q_id" in queries.columns else ["vec_id"]
+    return corpus.crossJoin(F.broadcast(queries)).select(
+        *keys, _exact_cosine().alias("cosine")
+    )
+
+
+def _per_query(score: str = "cosine") -> WindowSpec:
+    """Each query's rows in retrieval order: ``score`` desc, vec_id."""
+    return Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("vec_id"))
+
+
+def _rank_le(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """(q_id, vec_id) of each query's ``k`` best rows of ``scored``."""
+    return (
+        scored.withColumn("rk", F.row_number().over(_per_query(score)))
+        .where(F.col("rk") <= k)
+        .select("q_id", "vec_id")
+    )
+
+
+def _overlap_per_query(truth: DataFrame, retrieved: DataFrame, name: str) -> DataFrame:
+    """(q_id, ``name``): how many of each query's truth rows ``retrieved``
+    holds; a query with none is absent (callers left-join their block)."""
+    return (
+        truth.join(retrieved, ["q_id", "vec_id"])
+        .groupBy("q_id")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _recall(n_overlap: str) -> F.Column:
+    """``n_overlap`` / n_true as a double. NULL, not an ANSI
+    DIVIDE_BY_ZERO, when the truth is empty (query vector 0 failed the
+    conformance gate) — the oracles' NULL."""
+    return F.try_divide(F.col(n_overlap).cast("double"), F.col("n_true"))
+
+
+def _overlap_counts(truth: DataFrame, retrieved: DataFrame) -> DataFrame:
+    """One row (n_true, n_retrieved, n_overlap) of two vec_id lists."""
+    overlap = truth.join(retrieved, "vec_id")
+    return (
+        truth.agg(F.count(F.lit(1)).alias("n_true"))
+        .join(F.broadcast(retrieved.agg(F.count(F.lit(1)).alias("n_retrieved"))))
+        .join(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("n_overlap"))))
+    )
+
+
+def _recall_at_10(spark: SparkSession, sf_dir: str, retrieved: DataFrame) -> DataFrame:
+    """Recall@10 of one single-query retriever's top-10 against the
+    exact top-10 (sim_ann_topk): n_true, n_retrieved, n_overlap and
+    recall_at_10."""
+    truth = sim_ann_topk(spark, sf_dir).select("vec_id")
+    return _overlap_counts(truth, retrieved.select("vec_id")).select(
+        "n_true", "n_retrieved", "n_overlap", _recall("n_overlap").alias("recall_at_10")
+    )
+
+
+#: the oracle's exact single-query truth over the gated corpus: vector
+#: 0's integer dots (qdot), cosines (qcos) and top-10 (true_topk). A
+#: retriever oracle ranks its candidates' qcos rows (_cand_topk_sql)
+_TRUTH_CTES = """
+qdot AS (
+    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
+    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
+    WHERE c.vec_id <> 0
+    GROUP BY c.vec_id
+),
+qcos AS (
+    SELECT d.vec_id,
+           CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
+    FROM qdot d
+    JOIN norms n ON n.vec_id = d.vec_id
+    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
+),
+true_topk AS (
+    SELECT vec_id, cosine FROM qcos ORDER BY cosine DESC, vec_id LIMIT 10
+)"""
+
+
+def _cand_topk_sql(cand: str) -> str:
+    """The exact top-10 (vec_id, cosine) of a candidate CTE's vec_ids,
+    over _TRUTH_CTES."""
+    return f"""
+SELECT c.vec_id, s.cosine FROM {cand} c JOIN qcos s ON s.vec_id = c.vec_id
+ORDER BY s.cosine DESC, c.vec_id
+LIMIT 10"""
+
+
+def _recall_sql(retrieved: str) -> str:
+    """The oracle twin of :func:`_recall_at_10` over a ``retrieved``
+    top-10 CTE (DuckDB's x / 0 is NULL, as _recall's)."""
+    ovl = f"(SELECT COUNT(*) FROM true_topk t JOIN {retrieved} r ON t.vec_id = r.vec_id)"
+    return f"""
+SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
+       CAST((SELECT COUNT(*) FROM {retrieved}) AS BIGINT) AS n_retrieved,
+       CAST({ovl} AS BIGINT) AS n_overlap,
+       CAST({ovl} AS DOUBLE) / (SELECT COUNT(*) FROM true_topk) AS recall_at_10
+"""
+
+
+def _batch_truth_ctes(nq: int) -> str:
+    """The oracle's exact batch truth for the query block vec_id < nq:
+    the GATED query ids (qs, read from q as the engine's block is — a
+    query vector the gate drops is no query), every (query, corpus)
+    cosine (bcos) and each query's top-10 (btrue)."""
+    return f"""
+qs AS (SELECT vec_id AS qid FROM q WHERE vec_id < {nq}),
+bdots AS (
+    SELECT q.qid, e.vec_id, SUM(eq.v * e.v) AS dot
+    FROM qs q
+    JOIN ex eq ON eq.vec_id = q.qid
+    JOIN ex e ON e.i = eq.i AND e.vec_id >= {nq}
+    GROUP BY 1, 2
+),
+bcos AS (
+    SELECT d.qid, d.vec_id,
+           CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq.nsq AS DOUBLE)) * sqrt(CAST(nc.nsq AS DOUBLE))) AS cosine
+    FROM bdots d
+    JOIN norms nq ON nq.vec_id = d.qid
+    JOIN norms nc ON nc.vec_id = d.vec_id
+),
+btrue AS (
+    SELECT qid, vec_id FROM (
+        SELECT qid, vec_id,
+               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rk
+        FROM bcos
+    ) WHERE rk <= 10
+)"""
 
 
 @register(
@@ -275,19 +437,8 @@ def cosine_pairs(
     "sim_ann_topk",
     oracle=f"""
 WITH {_Q_CTE},
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+SELECT vec_id, cosine FROM true_topk
 """,
     doc=(
         "Brute-force ANN top-k: one query vector broadcast against the corpus, "
@@ -296,44 +447,31 @@ LIMIT 10
 )
 def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _quantized(spark, sf_dir)
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     return (
-        qv.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(query))
-        .select("vec_id", cos.alias("cosine"))
+        _exact_scored(qv.where(F.col("vec_id") != 0), _query_block(qv))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )
 
 
-@register(
-    "sim_ann_lsh_bucketed",
-    oracle=f"""
-WITH {_Q_CTE},
+#: the oracle's LSH candidates: the corpus vectors in vector 0's bucket
+_LSH_CAND_CTES = f"""
 buckets AS (
     SELECT vec_id, {sign_bucket_sql("embedding")} AS bucket FROM embeddings
 ),
 qb AS (SELECT bucket FROM buckets WHERE vec_id = 0),
 cand AS (
     SELECT b.vec_id FROM buckets b, qb WHERE b.bucket = qb.bucket AND b.vec_id <> 0
-),
-qdot AS (
-    SELECT c.vec_id, SUM(ex.v * qq.v) AS dot
-    FROM cand c
-    JOIN ex ON ex.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON ex.i = qq.i
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+)"""
+
+
+@register(
+    "sim_ann_lsh_bucketed",
+    oracle=f"""
+WITH {_Q_CTE},
+{_LSH_CAND_CTES},
+{_TRUTH_CTES}
+{_cand_topk_sql("cand")}
 """,
     doc=(
         "LSH-bucketed ANN (scale path): sign-bit bucket on leading coordinates "
@@ -346,14 +484,11 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _quantized(spark, sf_dir).join(
         emb.select("vec_id", sign_bucket(F.col("embedding")).alias("bucket")), "vec_id"
     )
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq"), F.col("bucket").alias("q_bucket")
-    )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
+    query = _query_block(qv, cols=("qe", "nsq", "bucket"))
     return (
         qv.where(F.col("vec_id") != 0)
         .join(F.broadcast(query), F.col("bucket") == F.col("q_bucket"))
-        .select("vec_id", cos.alias("cosine"))
+        .select("vec_id", _exact_cosine().alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )
@@ -371,8 +506,6 @@ def _ivf_probe(qv: DataFrame, cents: DataFrame) -> DataFrame:
     N_PROBE nearest cells, exact cosine only inside them, top-10. The
     centroid set is bounded (broadcast); the per-vector assignment window
     ranks K rows; the probe ranking is K rows total."""
-    from pyspark.sql import Window
-
     ccos = qv.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
@@ -392,14 +525,8 @@ def _ivf_probe(qv: DataFrame, cents: DataFrame) -> DataFrame:
         .select(F.col("cid").alias("cell"))
     )
     cand = assign.join(F.broadcast(probe), "cell").where(F.col("vec_id") != 0)
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     return (
-        qv.join(cand.select("vec_id"), "vec_id")
-        .crossJoin(F.broadcast(query))
-        .select("vec_id", cos.alias("cosine"))
+        _exact_scored(qv.join(cand.select("vec_id"), "vec_id"), _query_block(qv))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )
@@ -440,20 +567,8 @@ cand AS (
     SELECT a.vec_id FROM assign a JOIN probe p ON a.cell = p.cell
     WHERE a.vec_id <> 0
 ),
-qdot AS (
-    SELECT c.vec_id, SUM(ex.v * qq.v) AS dot
-    FROM cand c
-    JOIN ex ON ex.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON ex.i = qq.i
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+{_cand_topk_sql("cand")}
 """,
     doc=(
         "IVF ANN (scale path #2): assign every vector to its nearest of "
@@ -494,20 +609,8 @@ cand AS (
     SELECT b.vec_id FROM buckets b JOIN probes p ON b.bucket = p.pb
     WHERE b.vec_id <> 0
 ),
-qdot AS (
-    SELECT c.vec_id, SUM(ex.v * qq.v) AS dot
-    FROM cand c
-    JOIN ex ON ex.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON ex.i = qq.i
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+{_cand_topk_sql("cand")}
 """,
     doc=(
         "Multi-probe LSH ANN: probe the query's bucket AND its hamming-1 "
@@ -533,15 +636,11 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
+    corpus = qv.where(F.col("vec_id") != 0).join(
+        F.broadcast(q_bucket), F.col("bucket") == F.col("pb")
     )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     return (
-        qv.where(F.col("vec_id") != 0)
-        .join(F.broadcast(q_bucket), F.col("bucket") == F.col("pb"))
-        .crossJoin(F.broadcast(query))
-        .select("vec_id", cos.alias("cosine"))
+        _exact_scored(corpus, _query_block(qv))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )
@@ -648,19 +747,8 @@ def agg_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_topk_arrow",
     oracle=f"""
 WITH {_Q_CTE},
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+SELECT vec_id, cosine FROM true_topk
 """,
     doc=(
         "Brute-force top-k again, but the scoring stage is mapInArrow: "
@@ -680,9 +768,7 @@ def sim_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     qv = _quantized(spark, sf_dir)
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
+    query = _query_block(qv)
 
     out_schema = "vec_id bigint, cosine double"
 
@@ -733,43 +819,10 @@ def sim_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_ann_recall_eval",
     oracle=f"""
 WITH {_Q_CTE},
-qq AS (SELECT i, v FROM ex WHERE vec_id = 0),
-qn AS (SELECT nsq FROM norms WHERE vec_id = 0),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id CROSS JOIN qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-),
-buckets AS (
-    SELECT vec_id, {sign_bucket_sql("embedding")} AS bucket FROM embeddings
-),
-qb AS (SELECT bucket FROM buckets WHERE vec_id = 0),
-lsh_topk AS (
-    SELECT d.vec_id
-    FROM qdot d
-    JOIN buckets b ON b.vec_id = d.vec_id
-    JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN qn CROSS JOIN qb
-    WHERE b.bucket = qb.bucket
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-)
-SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
-       CAST((SELECT COUNT(*) FROM lsh_topk) AS BIGINT) AS n_retrieved,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN lsh_topk l ON t.vec_id = l.vec_id) AS BIGINT)
-           AS n_overlap,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN lsh_topk l ON t.vec_id = l.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10
-""",
+{_LSH_CAND_CTES},
+{_TRUTH_CTES},
+lsh_topk AS ({_cand_topk_sql("cand")})
+{_recall_sql("lsh_topk")}""",
     doc=(
         "ANN recall evaluation: recall@10 of the LSH-bucketed path against "
         "the brute-force ground truth — the ONE number that decides whether "
@@ -782,20 +835,7 @@ SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
     ),
 )
 def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    true_topk = sim_ann_topk(spark, sf_dir).select("vec_id")
-    lsh_topk = sim_ann_lsh_bucketed(spark, sf_dir).select("vec_id")
-    overlap = true_topk.join(lsh_topk, "vec_id")
-    return (
-        true_topk.agg(F.count(F.lit(1)).alias("n_true"))
-        .join(F.broadcast(lsh_topk.agg(F.count(F.lit(1)).alias("n_retrieved"))))
-        .join(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("n_overlap"))))
-        .select(
-            "n_true",
-            "n_retrieved",
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.col("n_true")).alias("recall_at_10"),
-        )
-    )
+    return _recall_at_10(spark, sf_dir, sim_ann_lsh_bucketed(spark, sf_dir))
 
 
 # ------------------------------------------------------------- batch ANN
@@ -807,26 +847,11 @@ N_QUERY_BATCH = 8  # deterministic query set: the first 8 vectors
     "sim_ann_topk_batch",
     oracle=f"""
 WITH {_Q_CTE},
-qex AS (SELECT vec_id AS q_id, i, v FROM ex WHERE vec_id < {N_QUERY_BATCH}),
-qn AS (SELECT vec_id AS q_id, nsq FROM norms WHERE vec_id < {N_QUERY_BATCH}),
-dots AS (
-    SELECT c.vec_id, qex.q_id, SUM(c.v * qex.v) AS dot
-    FROM ex c JOIN qex ON c.i = qex.i
-    WHERE c.vec_id >= {N_QUERY_BATCH}
-    GROUP BY c.vec_id, qex.q_id
-),
-scored AS (
-    SELECT d.q_id, d.vec_id,
-           CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE)))
-               AS cosine
-    FROM dots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN qn ON qn.q_id = d.q_id
-),
+{_batch_truth_ctes(N_QUERY_BATCH)},
 ranked AS (
-    SELECT q_id, vec_id, cosine,
-           row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
+    SELECT qid AS q_id, vec_id, cosine,
+           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
+    FROM bcos
 )
 SELECT q_id, rank, vec_id, cosine FROM ranked WHERE rank <= 10
 """,
@@ -841,21 +866,12 @@ SELECT q_id, rank, vec_id, cosine FROM ranked WHERE rank <= 10
     ),
 )
 def sim_ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir)
-    queries = qv.where(F.col("vec_id") < N_QUERY_BATCH).select(
-        F.col("vec_id").alias("q_id"), F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
+    scored = _exact_scored(
+        qv.where(F.col("vec_id") >= N_QUERY_BATCH), _query_block(qv, N_QUERY_BATCH)
     )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
-    scored = (
-        qv.where(F.col("vec_id") >= N_QUERY_BATCH)
-        .crossJoin(F.broadcast(queries))
-        .select("q_id", "vec_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(_per_query()))
         .where(F.col("rank") <= 10)
         .select("q_id", "rank", "vec_id", "cosine")
     )
@@ -1181,28 +1197,7 @@ SIM_EVAL_NQ = 16
     oracle=f"""
 WITH {_Q_CTE},
 {_SPLIT_BUCKET_CTES},
-qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < {SIM_EVAL_NQ}),
-bdots AS (
-    SELECT q.qid, e.vec_id, SUM(eq.v * e.v) AS dot
-    FROM qs q
-    JOIN ex eq ON eq.vec_id = q.qid
-    JOIN ex e ON e.i = eq.i AND e.vec_id >= {SIM_EVAL_NQ}
-    GROUP BY 1, 2
-),
-bcos AS (
-    SELECT d.qid, d.vec_id,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq.nsq AS DOUBLE)) * sqrt(CAST(nc.nsq AS DOUBLE))) AS cosine
-    FROM bdots d
-    JOIN norms nq ON nq.vec_id = d.qid
-    JOIN norms nc ON nc.vec_id = d.vec_id
-),
-btrue AS (
-    SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rk
-        FROM bcos
-    ) WHERE rk <= 10
-),
+{_batch_truth_ctes(SIM_EVAL_NQ)},
 blsh AS (
     SELECT qid, vec_id FROM (
         SELECT c.qid, c.vec_id,
@@ -1242,25 +1237,10 @@ FROM bper_q
     ),
 )
 def sim_ann_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir)
-    queries = qv.where(F.col("vec_id") < SIM_EVAL_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    corpus = qv.where(F.col("vec_id") >= SIM_EVAL_NQ)
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        "q_id", "vec_id", cos.alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    truth = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
-    )
+    queries = _query_block(qv, SIM_EVAL_NQ)
+    scored = _exact_scored(qv.where(F.col("vec_id") >= SIM_EVAL_NQ), queries)
+    truth = _rank_le(scored, 10)
     live = live_sign_buckets(spark, sf_dir)
     qbuckets = live.withColumnRenamed("vec_id", "q_id").where(
         F.col("q_id") < SIM_EVAL_NQ
@@ -1270,20 +1250,10 @@ def sim_ann_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qbuckets), "bucket")
         .select("q_id", "vec_id")
     )
-    lsh = (
-        scored.join(cand, ["q_id", "vec_id"])
-        .withColumn("rk", F.row_number().over(w))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
-    )
-    ovl = (
-        truth.join(lsh, ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
+    lsh = _rank_le(scored.join(cand, ["q_id", "vec_id"]), 10)
     per_q = (
         queries.select("q_id")
-        .join(ovl, "q_id", "left")
+        .join(_overlap_per_query(truth, lsh, "n_overlap"), "q_id", "left")
         .select("q_id", F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"))
     )
     return per_q.agg(
@@ -1629,8 +1599,6 @@ def _assign_cells(qv: DataFrame, cents: DataFrame) -> DataFrame:
     """Argmax-cosine cell assignment against a broadcast centroid set
     (cos desc, cid asc tie-break). The per-vector window ranks K rows —
     bounded by the centroid count, never the corpus."""
-    from pyspark.sql import Window
-
     ccos = qv.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
@@ -1843,20 +1811,8 @@ cand AS (
     SELECT a.vec_id FROM assignt a JOIN probet p ON a.cell = p.cell
     WHERE a.vec_id <> 0
 ),
-qdot AS (
-    SELECT c.vec_id, SUM(ex.v * qq.v) AS dot
-    FROM cand c
-    JOIN ex ON ex.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON ex.i = qq.i
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM qdot d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+{_cand_topk_sql("cand")}
 """,
     doc=(
         "The closed ANN loop: train -> index -> probe. Coarse-quantizer "
@@ -1933,9 +1889,7 @@ def _sq8_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("st", lambda s: s["mn"]).alias("mins"),
         F.transform("st", lambda s: s["mx"]).alias("maxs"),
     )
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
+    query = _query_block(qv)
     mins, maxs = F.col("mins"), F.col("maxs")
 
     def recon(v, i):
@@ -1996,27 +1950,8 @@ def sim_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_Q_CTE},
 {_SQ8_CTE},
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-)
-SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
-       CAST((SELECT COUNT(*) FROM sq8_topk) AS BIGINT) AS n_retrieved,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN sq8_topk s ON t.vec_id = s.vec_id) AS BIGINT)
-           AS n_overlap,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN sq8_topk s ON t.vec_id = s.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10
-""",
+{_TRUTH_CTES}
+{_recall_sql("sq8_topk")}""",
     doc=(
         "Recall@10 of the SQ8-compressed scan against the exact brute-force "
         "ground truth — the number that decides whether 4x vector "
@@ -2026,20 +1961,7 @@ SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
     ),
 )
 def sim_ann_sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    true_topk = sim_ann_topk(spark, sf_dir).select("vec_id")
-    sq8_topk = sim_ann_sq8_topk(spark, sf_dir).select("vec_id")
-    overlap = true_topk.join(sq8_topk, "vec_id")
-    return (
-        true_topk.agg(F.count(F.lit(1)).alias("n_true"))
-        .join(F.broadcast(sq8_topk.agg(F.count(F.lit(1)).alias("n_retrieved"))))
-        .join(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("n_overlap"))))
-        .select(
-            "n_true",
-            "n_retrieved",
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.col("n_true")).alias("recall_at_10"),
-        )
-    )
+    return _recall_at_10(spark, sf_dir, sim_ann_sq8_topk(spark, sf_dir))
 
 
 # --------------------------------------------- product quantization (PQ)
@@ -2127,8 +2049,6 @@ def _pq_spherical_assign(frame: DataFrame, cents: DataFrame) -> DataFrame:
     (m, cid, c_qe, c_nsq), all M subspaces in one pass — the window per
     (vec_id, m) ranks exactly K rows (m is a constructed 4-value key, the
     codebook is K-bounded), the _assign_cells shape on subspace rows."""
-    from pyspark.sql import Window
-
     cos = cosine_q(dot_q(F.col("s"), F.col("c_qe")), F.col("snsq"), F.col("c_nsq"))
     w = Window.partitionBy("vec_id", "m").orderBy(F.desc("cos"), F.asc("cid"))
     return (
@@ -2361,27 +2281,8 @@ def sim_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_Q_CTE},
 {_PQ_SCORED_SQL},
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-)
-SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
-       CAST((SELECT COUNT(*) FROM pq_topk) AS BIGINT) AS n_retrieved,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN pq_topk p ON t.vec_id = p.vec_id) AS BIGINT)
-           AS n_overlap,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN pq_topk p ON t.vec_id = p.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10
-""",
+{_TRUTH_CTES}
+{_recall_sql("pq_topk")}""",
     doc=(
         "Recall@10 of the PQ-compressed scan against exact brute-force "
         "ground truth — the compression/recall tradeoff number, same "
@@ -2392,20 +2293,7 @@ SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
     ),
 )
 def sim_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    true_topk = sim_ann_topk(spark, sf_dir).select("vec_id")
-    pq_topk = sim_ann_pq_topk(spark, sf_dir).select("vec_id")
-    overlap = true_topk.join(pq_topk, "vec_id")
-    return (
-        true_topk.agg(F.count(F.lit(1)).alias("n_true"))
-        .join(F.broadcast(pq_topk.agg(F.count(F.lit(1)).alias("n_retrieved"))))
-        .join(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("n_overlap"))))
-        .select(
-            "n_true",
-            "n_retrieved",
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.col("n_true")).alias("recall_at_10"),
-        )
-    )
+    return _recall_at_10(spark, sf_dir, sim_ann_pq_topk(spark, sf_dir))
 
 
 _IVF_ASSIGN_CTES = """
@@ -2636,8 +2524,6 @@ def _ivf_residual_scored(
     index, the persisted-FAISS-index pattern — only the probe, ADC
     dots, and scoring fan out per query. nq=1 is the original
     single-query semantics (q_id always 0)."""
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     idx = _residual_index(spark, sf_dir)
     cents, cq, assign, rbook, rcodes, crd = (
@@ -2696,12 +2582,7 @@ def _ivf_residual_scored(
             for c in ("qrdot", "cnt", "rcnsq", "crdot")
         ]
     )
-    q_block = qv.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    cellterms = cq.crossJoin(F.broadcast(q_block)).select(
+    cellterms = cq.crossJoin(F.broadcast(_query_block(qv, nq))).select(
         "q_id",
         F.col("cid").alias("cell"),
         dot_q(F.col("cq"), F.col("q_qe")).alias("qc"),
@@ -2920,20 +2801,8 @@ rpq_short AS (
     ORDER BY s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq_hat)) DESC, s.vec_id
     LIMIT {REFINE_R}
 ),
-refine_dots AS (
-    SELECT c.vec_id, SUM(e.v * qq.v) AS dot
-    FROM rpq_short c
-    JOIN ex e ON e.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON qq.i = e.i
-    GROUP BY c.vec_id
-)
-SELECT d.vec_id,
-       CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM refine_dots d
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, d.vec_id
-LIMIT 10
+{_TRUTH_CTES}
+{_cand_topk_sql("rpq_short")}
 """,
     doc=(
         "IVF-PQ with exact refine — the full production retrieval stack "
@@ -2961,10 +2830,7 @@ def _refine_from_scored(
     stage instead of running the whole residual pipeline twice. nq=1
     keeps the original TakeOrdered(R) single-query plan and returns
     (vec_id, cosine); nq>1 ranks in per-query windows over the bounded
-    candidate set and returns (q_id, vec_id, cosine) with the per-query
-    top 10."""
-    from pyspark.sql import Window
-
+    candidate set and returns each query's top-10 (q_id, vec_id)."""
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     if nq == 1:
         shortlist = (
@@ -2972,49 +2838,18 @@ def _refine_from_scored(
             .limit(REFINE_R)
             .select("vec_id")
         )
-        query = qv.where(F.col("vec_id") == 0).select(
-            F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-        )
         return (
-            qv.join(F.broadcast(shortlist), "vec_id")
-            .crossJoin(F.broadcast(query))
-            .select(
-                "vec_id",
-                cosine_q(
-                    dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq")
-                ).alias("cosine"),
-            )
+            _exact_scored(qv.join(F.broadcast(shortlist), "vec_id"), _query_block(qv))
             .orderBy(F.desc("cosine"), F.asc("vec_id"))
             .limit(10)
         )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine_pq"), F.asc("vec_id"))
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= REFINE_R)
-        .select("q_id", "vec_id")
-    )
-    q_block = qv.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    shortlist = _rank_le(scored, REFINE_R, "cosine_pq")
     exact = (
         qv.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(q_block), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_q(
-                dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq")
-            ).alias("cosine"),
-        )
+        .join(F.broadcast(_query_block(qv, nq)), "q_id")
+        .select("q_id", "vec_id", _exact_cosine().alias("cosine"))
     )
-    w10 = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(w10))
-        .where(F.col("rk") <= 10)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _rank_le(exact, 10)
 
 
 def _batch_ivfpq_ctes(nq: int) -> str:
@@ -3087,26 +2922,7 @@ def _batch_ivfpq_ctes(nq: int) -> str:
         "FROM {src} s JOIN norms qn ON qn.vec_id = s.qid{extra}"
         ") WHERE rk <= {k}"
     )
-    return f"""
-bqs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < {nq}),
-bdots AS (
-    SELECT q.qid, e.vec_id, SUM(eq.v * e.v) AS dot
-    FROM bqs q
-    JOIN ex eq ON eq.vec_id = q.qid
-    JOIN ex e ON e.i = eq.i AND e.vec_id >= {nq}
-    GROUP BY 1, 2
-),
-btrue AS (
-    SELECT qid, vec_id FROM (
-        SELECT d.qid, d.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY d.qid ORDER BY
-                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq_.nsq AS DOUBLE)) * sqrt(CAST(nc.nsq AS DOUBLE))) DESC,
-                   d.vec_id) AS rk
-        FROM bdots d
-        JOIN norms nq_ ON nq_.vec_id = d.qid
-        JOIN norms nc ON nc.vec_id = d.vec_id
-    ) WHERE rk <= 10
-),
+    return f"""{_batch_truth_ctes(nq)},
 bqcell AS (SELECT vec_id AS qid, cell FROM ivfa1 WHERE vec_id < {nq}),
 bcand AS (
     SELECT q.qid, a.vec_id FROM ivfa1 a JOIN bqcell q ON a.cell = q.cell
@@ -3159,22 +2975,11 @@ brpq_scored AS (
 ),
 bresid AS ({rank10.format(norm="rnsq_hat", src="brpq_scored", extra=" WHERE s.rnsq_hat > 0", k=10)}),
 brpq_short AS ({rank10.format(norm="rnsq_hat", src="brpq_scored", extra=" WHERE s.rnsq_hat > 0", k=REFINE_R)}),
-brefine_dots AS (
-    SELECT c.qid, c.vec_id, SUM(e.v * qq.v) AS dot
-    FROM brpq_short c
-    JOIN ex e ON e.vec_id = c.vec_id
-    JOIN ex qq ON qq.vec_id = c.qid AND qq.i = e.i
-    GROUP BY 1, 2
-),
 brefined AS (
     SELECT qid, vec_id FROM (
-        SELECT d.qid, d.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY d.qid ORDER BY
-                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-                   d.vec_id) AS rk
-        FROM brefine_dots d
-        JOIN norms n ON n.vec_id = d.vec_id
-        JOIN norms qn ON qn.vec_id = d.qid
+        SELECT c.qid, c.vec_id,
+               ROW_NUMBER() OVER (PARTITION BY c.qid ORDER BY b.cosine DESC, c.vec_id) AS rk
+        FROM brpq_short c JOIN bcos b ON b.qid = c.qid AND b.vec_id = c.vec_id
     ) WHERE rk <= 10
 ),
 bovl_plain AS (
@@ -3194,7 +2999,7 @@ bper_q AS (
            COALESCE(p.n, 0) AS o_plain,
            COALESCE(r.n, 0) AS o_resid,
            COALESCE(f.n, 0) AS o_ref
-    FROM bqs q
+    FROM qs q
     LEFT JOIN bovl_plain p ON p.qid = q.qid
     LEFT JOIN bovl_resid r ON r.qid = q.qid
     LEFT JOIN bovl_ref f ON f.qid = q.qid
@@ -3217,36 +3022,8 @@ rpq_short AS (
     ORDER BY s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq_hat)) DESC, s.vec_id
     LIMIT {REFINE_R}
 ),
-refine_dots AS (
-    SELECT c.vec_id, SUM(e.v * qq.v) AS dot
-    FROM rpq_short c
-    JOIN ex e ON e.vec_id = c.vec_id
-    JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON qq.i = e.i
-    GROUP BY c.vec_id
-),
-refined_topk AS (
-    SELECT d.vec_id
-    FROM refine_dots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-)
+{_TRUTH_CTES},
+refined_topk AS ({_cand_topk_sql("rpq_short")})
 SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
        CAST((SELECT COUNT(*) FROM true_topk t JOIN pq_topk p ON t.vec_id = p.vec_id) AS BIGINT)
            AS n_overlap_plain,
@@ -3300,15 +3077,9 @@ def sim_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_overlap_plain",
             "n_overlap_residual",
             "n_overlap_refined",
-            (F.col("n_overlap_plain").cast("double") / F.col("n_true")).alias(
-                "recall_at_10_plain"
-            ),
-            (F.col("n_overlap_residual").cast("double") / F.col("n_true")).alias(
-                "recall_at_10_residual"
-            ),
-            (F.col("n_overlap_refined").cast("double") / F.col("n_true")).alias(
-                "recall_at_10_refined"
-            ),
+            _recall("n_overlap_plain").alias("recall_at_10_plain"),
+            _recall("n_overlap_residual").alias("recall_at_10_residual"),
+            _recall("n_overlap_refined").alias("recall_at_10_refined"),
         )
     )
 
@@ -3354,26 +3125,10 @@ FROM bper_q
     ),
 )
 def sim_ann_ivfpq_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     nq = SIM_EVAL_NQ
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
-    queries = qv.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    corpus = qv.where(F.col("vec_id") >= nq)
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
-    scored_true = corpus.crossJoin(F.broadcast(queries)).select(
-        "q_id", "vec_id", cos.alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    truth = (
-        scored_true.withColumn("rk", F.row_number().over(w))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
-    )
+    queries = _query_block(qv, nq)
+    truth = _rank_le(_exact_scored(qv.where(F.col("vec_id") >= nq), queries), 10)
 
     # plain IVF-PQ: one coarse train (shared seed-round memo, r15),
     # per-query argmax cell -> candidates
@@ -3387,37 +3142,19 @@ def sim_ann_ivfpq_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
         .where(F.col("vec_id") >= nq)
         .select("q_id", "vec_id")
     )
-    wpq = Window.partitionBy("q_id").orderBy(F.desc("cosine_pq"), F.asc("vec_id"))
-    plain = (
-        _pq_scored(spark, sf_dir, candidates=cand_plain, nq=nq)
-        .withColumn("rk", F.row_number().over(wpq))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
+    plain = _rank_le(
+        _pq_scored(spark, sf_dir, candidates=cand_plain, nq=nq), 10, "cosine_pq"
     )
 
     # residual + refined share ONE residual pipeline across all queries
     scored = _ivf_residual_scored(spark, sf_dir, nq=nq)
-    resid = (
-        scored.withColumn("rk", F.row_number().over(wpq))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
-    )
-    refined = _refine_from_scored(spark, sf_dir, scored, nq=nq).select(
-        "q_id", "vec_id"
-    )
-
-    def ovl(method: DataFrame, name: str) -> DataFrame:
-        return (
-            truth.join(method, ["q_id", "vec_id"])
-            .groupBy("q_id")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
+    resid = _rank_le(scored, 10, "cosine_pq")
+    refined = _refine_from_scored(spark, sf_dir, scored, nq=nq)
     per_q = (
         queries.select("q_id")
-        .join(ovl(plain, "o_plain"), "q_id", "left")
-        .join(ovl(resid, "o_resid"), "q_id", "left")
-        .join(ovl(refined, "o_ref"), "q_id", "left")
+        .join(_overlap_per_query(truth, plain, "o_plain"), "q_id", "left")
+        .join(_overlap_per_query(truth, resid, "o_resid"), "q_id", "left")
+        .join(_overlap_per_query(truth, refined, "o_ref"), "q_id", "left")
         .select(
             "q_id",
             F.coalesce("o_plain", F.lit(0)).alias("o_plain"),
@@ -3554,8 +3291,6 @@ LEFT JOIN best ON best.b_id = b.vec_id
     ),
 )
 def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     is_batch = (F.col("vec_id") % 10) == 7
     batch = qv.where(is_batch)
@@ -3651,24 +3386,12 @@ HARD_NEG_K = 5
     "sim_hard_negative_mining",
     oracle=f"""
 WITH {_Q_CTE},
-qq AS (SELECT vec_id AS q_id, label AS q_label FROM q WHERE vec_id < {N_QUERY_BATCH}),
-qex AS (SELECT vec_id AS q_id, i, v FROM ex WHERE vec_id < {N_QUERY_BATCH}),
-qn AS (SELECT vec_id AS q_id, nsq FROM norms WHERE vec_id < {N_QUERY_BATCH}),
-dots AS (
-    SELECT c.vec_id, qex.q_id, SUM(c.v * qex.v) AS dot
-    FROM ex c JOIN qex ON c.i = qex.i
-    WHERE c.vec_id >= {N_QUERY_BATCH}
-    GROUP BY c.vec_id, qex.q_id
-),
+{_batch_truth_ctes(N_QUERY_BATCH)},
 scored AS (
-    SELECT d.q_id, qq.q_label, d.vec_id, cq.label,
-           CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE)))
-               AS cosine
-    FROM dots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN qn ON qn.q_id = d.q_id
-    JOIN qq ON qq.q_id = d.q_id
-    JOIN q cq ON cq.vec_id = d.vec_id
+    SELECT b.qid AS q_id, qq.label AS q_label, b.vec_id, cq.label, b.cosine
+    FROM bcos b
+    JOIN q qq ON qq.vec_id = b.qid
+    JOIN q cq ON cq.vec_id = b.vec_id
 ),
 negs AS (
     SELECT q_id, q_label, 'neg' AS kind,
@@ -3703,20 +3426,12 @@ FROM poss WHERE rank <= 1
     ),
 )
 def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir)
-    anchors = qv.where(F.col("vec_id") < N_QUERY_BATCH).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
+    anchors = _query_block(qv, N_QUERY_BATCH, ("label", "qe", "nsq"))
     scored = (
         qv.where(F.col("vec_id") >= N_QUERY_BATCH)
         .crossJoin(F.broadcast(anchors))
-        .select("q_id", "q_label", "vec_id", "label", cos.alias("cosine"))
+        .select("q_id", "q_label", "vec_id", "label", _exact_cosine().alias("cosine"))
     )
     w_neg = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     w_pos = Window.partitionBy("q_id").orderBy(F.asc("cosine"), F.asc("vec_id"))
@@ -3970,20 +3685,10 @@ kw AS (
     FROM documents
     WHERE len(list_filter(string_split(text, ' '), t -> t = '{HYBRID_KW}')) > 0
 ),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-)
-SELECT k.doc_id, CAST(k.n_kw AS BIGINT) AS n_kw,
-       CAST(dot AS DOUBLE)
-           / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cosine
-FROM kw k
-JOIN qdot d ON d.vec_id = k.doc_id
-JOIN norms n ON n.vec_id = d.vec_id
-CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-ORDER BY cosine DESC, k.doc_id
+{_TRUTH_CTES}
+SELECT k.doc_id, CAST(k.n_kw AS BIGINT) AS n_kw, s.cosine
+FROM kw k JOIN qcos s ON s.vec_id = k.doc_id
+ORDER BY s.cosine DESC, k.doc_id
 LIMIT 10
 """,
     doc=(
@@ -4011,16 +3716,14 @@ def sim_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_kw") > 0)
     )
     qv = _quantized(spark, sf_dir)
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
     cand = qv.where(F.col("vec_id") != 0).join(
         docs, qv.vec_id == docs.doc_id
     )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     return (
-        cand.crossJoin(F.broadcast(query))
-        .select("doc_id", F.col("n_kw").cast("long").alias("n_kw"), cos.alias("cosine"))
+        cand.crossJoin(F.broadcast(_query_block(qv)))
+        .select(
+            "doc_id", F.col("n_kw").cast("long").alias("n_kw"), _exact_cosine().alias("cosine")
+        )
         .orderBy(F.desc("cosine"), F.asc("doc_id"))
         .limit(10)
     )
@@ -4040,23 +3743,10 @@ kwtop AS (
     SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_kw DESC, doc_id) AS kw_rank
     FROM kw ORDER BY n_kw DESC, doc_id LIMIT {HYBRID_LIST_N}
 ),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN (SELECT i, v FROM ex WHERE vec_id = 0) qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-cosv AS (
-    SELECT d.vec_id,
-           CAST(dot AS DOUBLE)
-               / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) AS cos
-    FROM qdot d
-    JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-),
+{_TRUTH_CTES},
 vtop AS (
-    SELECT vec_id AS doc_id, ROW_NUMBER() OVER (ORDER BY cos DESC, vec_id) AS v_rank
-    FROM cosv ORDER BY cos DESC, vec_id LIMIT {HYBRID_LIST_N}
+    SELECT vec_id AS doc_id, ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id) AS v_rank
+    FROM qcos ORDER BY cosine DESC, vec_id LIMIT {HYBRID_LIST_N}
 ),
 fused AS (
     SELECT COALESCE(k.doc_id, v.doc_id) AS doc_id,
@@ -4091,8 +3781,6 @@ LIMIT 10
     ),
 )
 def sim_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     n_kw = F.size(F.filter(F.split("text", " "), lambda t: t == F.lit(HYBRID_KW)))
     kw = (
         load_table(spark, sf_dir, "documents")
@@ -4106,19 +3794,13 @@ def sim_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy(F.desc("n_kw"), F.asc("doc_id"))),
     ).select("doc_id", "kw_rank")
     qv = _quantized(spark, sf_dir)
-    query = qv.where(F.col("vec_id") == 0).select(
-        F.col("qe").alias("q_qe"), F.col("nsq").alias("q_nsq")
-    )
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     vlist = (
-        qv.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(query))
-        .select("vec_id", cos.alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
+        _exact_scored(qv.where(F.col("vec_id") != 0), _query_block(qv))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(HYBRID_LIST_N)
     )
     vtop = vlist.withColumn(
-        "v_rank", F.row_number().over(Window.orderBy(F.desc("cos"), F.asc("vec_id")))
+        "v_rank", F.row_number().over(Window.orderBy(F.desc("cosine"), F.asc("vec_id")))
     ).select(F.col("vec_id").alias("doc_id"), "v_rank")
     fused = kwtop.join(vtop, "doc_id", "full_outer").select(
         "doc_id",
@@ -4152,13 +3834,13 @@ def _nprobe_sweep_sql() -> str:
         f"""r{np} AS (
     SELECT qid, vec_id FROM (
         SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
+               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rk
         FROM cand WHERE cell_rank <= {np}
     ) WHERE rk <= 10
 ),
 o{np} AS (
     SELECT COALESCE(SUM(1), 0) AS n_overlap
-    FROM truth t JOIN r{np} l ON l.qid = t.qid AND l.vec_id = t.vec_id
+    FROM btrue t JOIN r{np} l ON l.qid = t.qid AND l.vec_id = t.vec_id
 )"""
         for np in IVF_NPROBE_SWEEP
     )
@@ -4173,30 +3855,9 @@ o{np} AS (
     return f"""
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
-qs AS (SELECT vec_id AS qid FROM q WHERE vec_id < {SIM_EVAL_NQ}),
+{_batch_truth_ctes(SIM_EVAL_NQ)},
 qex AS (SELECT e.vec_id AS qid, e.i, e.v FROM ex e JOIN qs ON qs.qid = e.vec_id),
 cvec AS (SELECT vec_id FROM q WHERE vec_id >= {SIM_EVAL_NQ}),
-adots AS (
-    SELECT qx.qid, e.vec_id, SUM(e.v * qx.v) AS dot
-    FROM ex e JOIN cvec c ON c.vec_id = e.vec_id
-    JOIN qex qx ON qx.i = e.i
-    GROUP BY 1, 2
-),
-acos AS (
-    SELECT d.qid, d.vec_id,
-           CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nsq AS DOUBLE)) * sqrt(CAST(nv.nsq AS DOUBLE))) AS cos
-    FROM adots d
-    JOIN norms nq ON nq.vec_id = d.qid
-    JOIN norms nv ON nv.vec_id = d.vec_id
-),
-truth AS (
-    SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rk
-        FROM acos
-    ) WHERE rk <= 10
-),
 cdots AS (
     SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
     FROM ex e JOIN cvec c ON c.vec_id = e.vec_id
@@ -4238,8 +3899,8 @@ qrank AS (
     FROM qcos
 ),
 cand AS (
-    SELECT a.qid, a.vec_id, qr.cell_rank, a.cos
-    FROM acos a
+    SELECT a.qid, a.vec_id, qr.cell_rank, a.cosine
+    FROM bcos a
     JOIN assignc s ON s.vec_id = a.vec_id
     JOIN qrank qr ON qr.qid = a.qid AND qr.cid = s.cell
 ),
@@ -4270,29 +3931,15 @@ SELECT * FROM ({rows}) ORDER BY nprobe
     ),
 )
 def sim_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)  # shared seed-round memo (r15)
-    queries = qv.where(F.col("vec_id") < SIM_EVAL_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    queries = _query_block(qv, SIM_EVAL_NQ)
     corpus = qv.where(F.col("vec_id") >= SIM_EVAL_NQ)
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     # ONE brute-force scoring pass (r15): truth AND the shared candidate
     # frame both consume it — the r14 shape re-executed the corpus x nq
     # crossJoin + per-element dot lambda for each
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        "q_id", "vec_id", cos.alias("cos")
-    ).localCheckpoint()
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    truth = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where("rk <= 10")
-        .select("q_id", "vec_id")
-    ).localCheckpoint()
+    scored = _exact_scored(corpus, queries).localCheckpoint()
+    truth = _rank_le(scored, 10).localCheckpoint()
     assignc = _assign_cells(corpus.select("vec_id", "qe", "nsq"), cents)
     qcos = cosine_q(
         dot_q(F.col("q_qe"), F.col("c_qe")), F.col("q_nsq"), F.col("c_nsq")
@@ -4315,12 +3962,7 @@ def sim_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     nq = queries.agg(F.count(F.lit(1)).alias("n_queries"))
     rows = []
     for np in IVF_NPROBE_SWEEP:
-        hit = (
-            cand.where(F.col("cell_rank") <= np)
-            .withColumn("rk", F.row_number().over(w))
-            .where("rk <= 10")
-            .select("q_id", "vec_id")
-        )
+        hit = _rank_le(cand.where(F.col("cell_rank") <= np), 10)
         ovl = truth.join(hit, ["q_id", "vec_id"]).agg(
             F.count(F.lit(1)).alias("n_overlap")
         )
@@ -4370,21 +4012,7 @@ def _mrl_prefix_sql(d: int) -> str:
     "sim_mrl_prefix_recall",
     oracle=f"""
 WITH {_Q_CTE},
-qq AS (SELECT i, v FROM ex WHERE vec_id = 0),
-qn AS (SELECT nsq FROM norms WHERE vec_id = 0),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id CROSS JOIN qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-),
+{_TRUTH_CTES},
 pref AS ({" UNION ALL ".join(_mrl_prefix_sql(d) for d in MRL_PREFIX_DIMS)})
 SELECT p.prefix_dim,
        CAST(COUNT(*) AS BIGINT) AS n_retrieved,
@@ -4421,9 +4049,7 @@ def sim_mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("pnsq", norm_sq_q(F.col("pe")))
             .where(F.col("pnsq") > 0)
         )
-        query = scored.where(F.col("vec_id") == 0).select(
-            F.col("pe").alias("q_pe"), F.col("pnsq").alias("q_pnsq")
-        )
+        query = _query_block(scored, cols=("pe", "pnsq"))
         cos = cosine_q(
             dot_q(F.col("pe"), F.col("q_pe")), F.col("pnsq"), F.col("q_pnsq")
         )
@@ -4467,21 +4093,7 @@ MRL_FUNNEL_SHORTLIST = 50
     "sim_mrl_funnel_retrieval",
     oracle=f"""
 WITH {_Q_CTE},
-qq AS (SELECT i, v FROM ex WHERE vec_id = 0),
-qn AS (SELECT nsq FROM norms WHERE vec_id = 0),
-qdot AS (
-    SELECT c.vec_id, SUM(c.v * qq.v) AS dot
-    FROM ex c JOIN qq ON c.i = qq.i
-    WHERE c.vec_id <> 0
-    GROUP BY c.vec_id
-),
-true_topk AS (
-    SELECT d.vec_id
-    FROM qdot d JOIN norms n ON n.vec_id = d.vec_id CROSS JOIN qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-),
+{_TRUTH_CTES},
 shortlist AS (
     SELECT c.vec_id,
            CAST(SUM(c.v * q.v) AS DOUBLE)
@@ -4494,16 +4106,7 @@ shortlist AS (
     ORDER BY pcos DESC, c.vec_id
     LIMIT {MRL_FUNNEL_SHORTLIST}
 ),
-reranked AS (
-    SELECT d.vec_id
-    FROM qdot d
-    JOIN shortlist s ON s.vec_id = d.vec_id
-    JOIN norms n ON n.vec_id = d.vec_id
-    CROSS JOIN qn
-    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(qn.nsq AS DOUBLE))) DESC,
-             d.vec_id
-    LIMIT 10
-)
+reranked AS ({_cand_topk_sql("shortlist")})
 SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
        CAST((SELECT COUNT(*) FROM reranked) AS BIGINT) AS n_retrieved,
        CAST((SELECT COUNT(*) FROM true_topk t JOIN reranked r ON t.vec_id = r.vec_id) AS BIGINT)
@@ -4544,12 +4147,7 @@ def sim_mrl_funnel_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pnsq", norm_sq_q(F.col("pe"))
     )
     corpus = scored.where((F.col("vec_id") != 0) & (F.col("pnsq") > 0))
-    query = scored.where(F.col("vec_id") == 0).select(
-        F.col("pe").alias("q_pe"),
-        F.col("pnsq").alias("q_pnsq"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    query = _query_block(scored, cols=("pe", "pnsq", "qe", "nsq"))
     pcos = cosine_q(dot_q(F.col("pe"), F.col("q_pe")), F.col("pnsq"), F.col("q_pnsq"))
     shortlist = (
         corpus.crossJoin(F.broadcast(query))
@@ -4557,25 +4155,18 @@ def sim_mrl_funnel_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pcos"), F.asc("vec_id"))
         .limit(MRL_FUNNEL_SHORTLIST)
     )
-    fcos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
     reranked = (
-        shortlist.select("vec_id", fcos.alias("cos"))
+        shortlist.select("vec_id", _exact_cosine().alias("cos"))
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id")
     )
     truth = sim_ann_topk(spark, sf_dir).select("vec_id")
-    overlap = truth.join(reranked, "vec_id")
-    return (
-        truth.agg(F.count(F.lit(1)).alias("n_true"))
-        .join(F.broadcast(reranked.agg(F.count(F.lit(1)).alias("n_retrieved"))))
-        .join(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("n_overlap"))))
-        .select(
-            "n_true",
-            "n_retrieved",
-            "n_overlap",
-            F.expr("n_overlap * 1000000 DIV 10").alias("recall_ppm"),
-        )
+    return _overlap_counts(truth, reranked).select(
+        "n_true",
+        "n_retrieved",
+        "n_overlap",
+        F.expr("n_overlap * 1000000 DIV 10").alias("recall_ppm"),
     )
 
 
@@ -4587,21 +4178,7 @@ def sim_mrl_funnel_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_Q_CTE},
 {_SPLIT_BUCKET_CTES},
-qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < {SIM_EVAL_NQ}),
-bdots AS (
-    SELECT q.qid, e.vec_id, SUM(eq.v * e.v) AS dot
-    FROM qs q
-    JOIN ex eq ON eq.vec_id = q.qid
-    JOIN ex e ON e.i = eq.i AND e.vec_id >= {SIM_EVAL_NQ}
-    GROUP BY 1, 2
-),
-bcos AS (
-    SELECT d.qid, d.vec_id,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq.nsq AS DOUBLE)) * sqrt(CAST(nc.nsq AS DOUBLE))) AS cosine
-    FROM bdots d
-    JOIN norms nq ON nq.vec_id = d.qid
-    JOIN norms nc ON nc.vec_id = d.vec_id
-),
+{_batch_truth_ctes(SIM_EVAL_NQ)},
 btrue1 AS (
     SELECT qid, vec_id FROM (
         SELECT qid, vec_id,
@@ -4645,20 +4222,11 @@ FROM per_q
     ),
 )
 def sim_retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     qv = _quantized(spark, sf_dir)
-    queries = qv.where(F.col("vec_id") < SIM_EVAL_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qe").alias("q_qe"),
-        F.col("nsq").alias("q_nsq"),
+    scored = _exact_scored(
+        qv.where(F.col("vec_id") >= SIM_EVAL_NQ), _query_block(qv, SIM_EVAL_NQ)
     )
-    corpus = qv.where(F.col("vec_id") >= SIM_EVAL_NQ)
-    cos = cosine_q(dot_q(F.col("qe"), F.col("q_qe")), F.col("nsq"), F.col("q_nsq"))
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        "q_id", "vec_id", cos.alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    w = _per_query()
     truth1 = (
         scored.withColumn("rk", F.row_number().over(w))
         .where("rk = 1")

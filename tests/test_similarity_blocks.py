@@ -162,3 +162,66 @@ def test_embedding_centroid_on_empty_embeddings(spark, tmp_path):
     out = agg_embedding_centroid(spark, str(tmp_path))
     assert out.collect() == []
     assert out.dtypes == agg_embedding_centroid(spark, SF).dtypes
+
+
+#: the evals whose query vectors come from the gated id range below
+#: SIM_EVAL_NQ — four single-query (vector 0) and three batch evals
+_DEGENERATE_QUERY_EVALS = (
+    "sim_ann_recall_eval",
+    "sim_ann_sq8_recall_eval",
+    "sim_ann_pq_recall_eval",
+    "sim_ann_ivfpq_recall_eval",
+    "sim_ann_batch_recall_eval",
+    "sim_ann_ivfpq_batch_recall_eval",
+    "sim_retrieval_mrr_eval",
+)
+
+
+def test_degenerate_query_vectors_match_oracles(spark, tmp_path):
+    """A query vector the conformance gate drops is no query, in the
+    engine and in the oracle alike. Vector 0 is all zeros and vector 3
+    (inside the SIM_EVAL_NQ batch block) has the wrong dimension: the
+    single-query evals report an empty truth with a NULL recall instead
+    of an ANSI DIVIDE_BY_ZERO, and the batch evals count only the
+    queries that pass the gate. (The hostile sweep appends its
+    degenerate rows above the dense id range, so it never hits this.)"""
+    import os
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_financial_report_spark import registry
+    from etl_financial_report_spark.io import TABLES
+    from etl_financial_report_spark.operators.similarity import SIM_EVAL_NQ
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from check_parity import duck_con, normalize
+
+    assert 3 < SIM_EVAL_NQ
+    # one parquet FILE like the source corpus: the oracle views read a
+    # file path, and Spark would write a directory
+    emb = pq.read_table(f"{SF}/embeddings.parquet")
+    rows = emb.to_pylist()
+    for r in rows:
+        if r["vec_id"] == 0:
+            r["embedding"] = [0.0] * len(r["embedding"])
+        elif r["vec_id"] == 3:
+            r["embedding"] = r["embedding"][:8]
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=emb.schema), tmp_path / "embeddings.parquet"
+    )
+    for name in TABLES:
+        if name != "embeddings":
+            os.symlink(f"{SF}/{name}.parquet", tmp_path / f"{name}.parquet")
+
+    con = duck_con(str(tmp_path))
+    queries = registry.all_queries()
+    for name in _DEGENERATE_QUERY_EVALS:
+        q = queries[name]
+        got = normalize(q.fn(spark, str(tmp_path)).toPandas())
+        assert got == normalize(con.sql(q.oracle).df()), name
+    single = queries["sim_ann_recall_eval"].fn(spark, str(tmp_path)).collect()[0]
+    assert (single.n_true, single.recall_at_10) == (0, None)
+    batch = queries["sim_ann_batch_recall_eval"].fn(spark, str(tmp_path)).collect()[0]
+    assert batch.n_queries == SIM_EVAL_NQ - 2
