@@ -396,10 +396,16 @@ INDEX_STORE_ROOT = os.environ.get(
 INDEX_STORE_ENABLED = os.environ.get("SPARK_GRAFT_INDEX_STORE", "1") != "0"
 
 #: versions retained per artifact family — STRICTLY above the session
-#: memo cap (_MEMO_FRAMES_MAX), so a frame still referenced by the
-#: session memo can never have its files vacuumed out from under it by
-#: later publishes (tests/test_memo_frames.py pins the inequality)
+#: memo cap (_MEMO_FRAMES_MAX), so a frame this session published and
+#: the memo still references can never have its files vacuumed out from
+#: under it by later publishes (tests/test_memo_frames.py pins the
+#: inequality)
 _INDEX_KEEP_VERSIONS = 32
+
+#: family table path -> versions this process served from a lookup. A
+#: lookup can hit a version of any age, up to the retention edge, and the
+#: memo keeps reading it, so vacuum spares these whatever their age.
+_SERVED_VERSIONS: dict[str, set[int]] = {}
 
 #: engine-source fingerprint memo: builder module path -> md5 over the
 #: builder's module file + the shared expression/schema/io layers it
@@ -467,6 +473,7 @@ def index_store_lookup(spark: SparkSession, tag: str, key: str) -> DataFrame | N
         for v in reversed(st.versions()):
             m = st._read_manifest(v)
             if m.get("tag") == key and m.get("files"):
+                _SERVED_VERSIONS.setdefault(st.path, set()).add(v)
                 return st.read(spark, v)
     except Exception:
         return None
@@ -484,10 +491,11 @@ def index_store_publish(spark: SparkSession, tag: str, key: str, df: DataFrame) 
         return None
     try:
         st = _index_table(tag)
-        st.commit_replace(df, tag=key)
-        got = index_store_lookup(spark, tag, key)
+        v = st.commit_replace(df, tag=key)
+        # None: another builder committed this key first — serve its version
+        got = st.read(spark, v) if v is not None else index_store_lookup(spark, tag, key)
         if len(st.versions()) > _INDEX_KEEP_VERSIONS:
-            st.vacuum(keep_versions=_INDEX_KEEP_VERSIONS)
+            st.vacuum(_INDEX_KEEP_VERSIONS, protect=_SERVED_VERSIONS.get(st.path, ()))
         return got
     except Exception:
         return None

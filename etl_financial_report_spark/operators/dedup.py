@@ -1402,30 +1402,25 @@ def _sim64_block_sql(j: int) -> str:
     return " + ".join(terms)
 
 
-def _sim64_nibble(i: int) -> F.Column:
-    """Nibble ``i`` (1..32) of the md5, from the four 8-hex-digit chunk
-    longs c0..c3 — pure integer shifts, no per-bit string slicing (the
-    substring/IN form re-slices the hex 64x per row; this is ~1.5x faster
-    at sf0.1)."""
-    c = (i - 1) // 8
-    shift = 4 * (7 - ((i - 1) % 8))
-    return F.shiftrightunsigned(F.col(f"c{c}"), shift).bitwiseAND(F.lit(15))
-
-
-def _sim64_block_col(j: int):
-    parts = []
+def _sim64_block_col(j: int) -> F.Column:
+    """Block ``j`` (signature bits 16j..16j+15) as ONE SQL expression:
+    bit p is the majority vote over the high bit of md5 nibble p (p < 32)
+    or the second bit of nibble p - 32, each nibble cut from the four
+    8-hex-digit chunk longs c0..c3 by integer shifts (no per-bit string
+    slicing: the substring/IN form re-slices the hex 64x per row). One
+    ``F.expr`` per block, not ~100 Column calls: every Column call is a
+    py4j round trip plus a call-site capture."""
+    terms = []
     for i in range(16):
         p = j * 16 + i
-        if p < 32:  # high bit of nibble p+1
-            bit = _sim64_nibble(p + 1) >= 8
-        else:  # second bit of nibble p-31
-            bit = _sim64_nibble(p - 31).bitwiseAND(F.lit(4)) != 0
-        s = F.sum(F.when(bit, 1).otherwise(-1))
-        parts.append(F.when(s >= 0, F.lit(2 ** (15 - i))).otherwise(F.lit(0)))
-    out = parts[0]
-    for b in parts[1:]:
-        out = out + b
-    return out
+        n = p % 32  # zero-based nibble
+        nib = f"(shiftrightunsigned(c{n // 8}, {4 * (7 - n % 8)}) & 15)"
+        bit = f"{nib} >= 8" if p < 32 else f"({nib} & 4) != 0"
+        terms.append(
+            f"CASE WHEN sum(CASE WHEN {bit} THEN 1 ELSE -1 END) >= 0 "
+            f"THEN {2 ** (15 - i)} ELSE 0 END"
+        )
+    return F.expr(" + ".join(terms))
 
 
 _SIM64_SIG_SQL = f"""
@@ -1464,7 +1459,7 @@ def _simhash64_signature_of(docs: DataFrame) -> DataFrame:
         .select("doc_id", F.md5("w").alias("mw"))
     )
     # the 128-bit md5 parses ONCE into four 32-bit chunk longs; every bit
-    # decision is then an integer shift (see _sim64_nibble)
+    # decision is then an integer shift (see _sim64_block_col)
     chunks = [
         F.conv(F.substring("mw", 1 + 8 * c, 8), 16, 10).cast("long").alias(f"c{c}")
         for c in range(4)

@@ -8,7 +8,8 @@ S14 story from "partition overwrite dance" to real snapshot semantics:
     then publishes ``_manifests/v{N}.json`` listing the COMPLETE file set
     of that version (previous files + new for append; replacement set for
     replace/merge) plus per-file row counts and column min/max stats
-    harvested from the parquet footers at commit time;
+    harvested from the parquet footers at commit time, and the committed
+    frame's schema, so a read passes it and runs no footer-inference job;
   * publication is a single atomic ``os.link`` of a temp file onto the
     version path — it either fully succeeds or fails with EEXIST, so two
     racing writers cannot both claim a version (optimistic concurrency).
@@ -161,6 +162,22 @@ def _bloom_can_match(bloom: dict | None, key) -> bool:
     )
 
 
+def _appended_schema(base: dict, batch: dict) -> dict | None:
+    """Schema of an append's manifest: the base version's columns, then
+    any column the batch adds (the base's files read NULL there). None
+    when the base manifest predates recorded schemas — its columns are
+    unknown, so reads of the new version keep inferring."""
+    if not base:
+        return batch
+    if base.get("schema") is None:
+        return None
+    fields = list(base["schema"]["fields"])
+    # names match case-insensitively, as Spark resolves them by default
+    have = {f["name"].lower() for f in fields}
+    fields += [f for f in batch["fields"] if f["name"].lower() not in have]
+    return {"type": "struct", "fields": fields}
+
+
 class SnapshotTable:
     def __init__(self, path: str, bloom_cols: tuple[str, ...] = ()):
         self.path = path
@@ -195,6 +212,17 @@ class SnapshotTable:
             with open(self._manifest_path(version)) as f:
                 self._mcache[version] = json.load(f)
         return self._mcache[version]
+
+    def _reader(self, spark: SparkSession, manifest: dict):
+        """A parquet reader given the manifest's recorded schema: no footer
+        inference job. A manifest written before schemas were recorded
+        reads by inference."""
+        schema = manifest.get("schema")
+        if schema is None:
+            return spark.read
+        from pyspark.sql.types import StructType
+
+        return spark.read.schema(StructType.fromJson(schema))
 
     # ------------------------------------------------------------- commit
 
@@ -235,7 +263,11 @@ class SnapshotTable:
         op: str,
         tag: str | None = None,
         file_meta: dict[str, dict] | None = None,
+        schema: dict | None = None,
     ) -> int:
+        """Claim ``version`` with a manifest listing ``files``. ``schema``
+        (``StructType.jsonValue()`` of the committed frame) lets every read
+        of the version skip footer inference."""
         os.makedirs(self._manifests, exist_ok=True)
         tmp = os.path.join(self._manifests, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
@@ -246,6 +278,7 @@ class SnapshotTable:
                     "files": files,
                     "tag": tag,
                     "file_meta": file_meta or {},
+                    "schema": schema,
                 },
                 f,
                 indent=1,
@@ -288,6 +321,7 @@ class SnapshotTable:
             return None
         new_files: list[str] | None = None
         new_meta: dict[str, dict] = {}
+        batch_schema = df.schema.jsonValue()
         for _ in range(_MAX_COMMIT_RETRIES):
             base = self.current_version()
             src = base_version if base_version is not None else base
@@ -305,6 +339,7 @@ class SnapshotTable:
                     "append",
                     tag=tag,
                     file_meta={**prev_meta, **new_meta},
+                    schema=_appended_schema(prev, batch_schema),
                 )
             except ConcurrentCommitError:
                 if tag is not None and tag in self.committed_tags():
@@ -338,7 +373,10 @@ class SnapshotTable:
                 files = self._write_files(df, version)
                 meta = self._meta_for(files)
             try:
-                return self._publish(version, files, "replace", tag=tag, file_meta=meta)
+                return self._publish(
+                    version, files, "replace", tag=tag, file_meta=meta,
+                    schema=df.schema.jsonValue(),
+                )
             except ConcurrentCommitError:
                 if tag is not None and tag in self.committed_tags():
                     return None  # the race winner carried our tag
@@ -365,7 +403,10 @@ class SnapshotTable:
         merged = keep.unionByName(updates)
         version = base + 1
         files = self._write_files(merged, version)
-        return self._publish(version, files, "merge", file_meta=self._meta_for(files))
+        return self._publish(
+            version, files, "merge", file_meta=self._meta_for(files),
+            schema=merged.schema.jsonValue(),
+        )
 
     def compact(
         self,
@@ -405,7 +446,7 @@ class SnapshotTable:
             return {"compacted": 0, "carried": len(m["files"]), "version": base}
         small_bytes = sum(sz for _rel, sz in small)
         n_out = max(1, (small_bytes + target_bytes - 1) // target_bytes)
-        df = spark.read.parquet(
+        df = self._reader(spark, m).parquet(
             *[os.path.join(self.path, rel) for rel, _sz in small]
         ).coalesce(int(n_out))
         version = base + 1
@@ -418,6 +459,7 @@ class SnapshotTable:
             "compact",
             tag=tag,
             file_meta={**carried_meta, **self._meta_for(new_files)},
+            schema=df.schema.jsonValue(),
         )
         return {
             "compacted": len(small),
@@ -498,18 +540,19 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"{self.path}: no committed version")
         kept = self.files(v, prune, prune_keys)
+        m = self._read_manifest(v)
         if not kept:
             # every file pruned — an empty frame with the table schema
-            # (schema from footers only; the where(false) folds the scan)
-            all_files = self._read_manifest(v)["files"]
+            # (the where(false) folds the scan)
+            all_files = m["files"]
             if not all_files:
                 raise FileNotFoundError(f"{self.path}: version {v} is empty")
             from pyspark.sql import functions as F
 
-            return spark.read.parquet(
+            return self._reader(spark, m).parquet(
                 *[os.path.join(self.path, f) for f in all_files]
             ).where(F.lit(False))
-        df = spark.read.parquet(*[os.path.join(self.path, f) for f in kept])
+        df = self._reader(spark, m).parquet(*[os.path.join(self.path, f) for f in kept])
         if prune:
             from pyspark.sql import functions as F
 
@@ -527,12 +570,15 @@ class SnapshotTable:
 
     # ------------------------------------------------------------- vacuum
 
-    def vacuum(self, keep_versions: int = 1) -> dict:
+    def vacuum(self, keep_versions: int = 1, protect=()) -> dict:
         """Drop manifests older than the newest ``keep_versions`` and
-        delete data files no retained manifest references. Bounded
-        driver-side metadata work (file LISTS, never data)."""
+        delete data files no retained manifest references. Versions in
+        ``protect`` (ones a live reader still scans) are retained whatever
+        their age. Bounded driver-side metadata work (file LISTS, never
+        data)."""
         vs = self.versions()
-        retained = vs[-keep_versions:] if keep_versions > 0 else []
+        newest = vs[-keep_versions:] if keep_versions > 0 else []
+        retained = [v for v in vs if v in newest or v in protect]
         live: set[str] = set()
         for v in retained:
             live.update(self._read_manifest(v)["files"])

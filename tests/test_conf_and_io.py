@@ -100,3 +100,24 @@ def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch, fresh_memo):
     assert "t_report" in proc.stdout and "TOTAL" in proc.stdout
     rep = json.load(open(out_json))
     assert rep["t_report"][0]["rows"] == 7
+
+
+def test_stats_reset_checkpoint_drops_the_carried_size_estimate(spark):
+    """``localCheckpoint`` carries the input's size estimate into its
+    LogicalRDD (in a contraction loop it compounds and hangs Catalyst);
+    ``stats_reset_checkpoint`` rebuilds the frame over the same rows so
+    the estimate is ``spark.sql.defaultSizeInBytes``. If the internal
+    constructor it relies on moves, the fallback returns the plain
+    checkpoint and this fails."""
+    from etl_financial_report_spark.io import stats_reset_checkpoint
+
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
+    default = parse_bytes_conf(spark.conf.get("spark.sql.defaultSizeInBytes"))
+    assert size(df) < default
+    assert size(df.localCheckpoint()) == size(df)
+    reset = stats_reset_checkpoint(df)
+    assert size(reset) == default
+    assert sorted(tuple(r) for r in reset.collect()) == [(i, 2 * i) for i in range(1000)]

@@ -190,3 +190,22 @@ def test_publish_protects_nested_memo_checkpoints(spark, tmp_store, monkeypatch)
     assert out.collect()[0]["n"] == 5
     # the nested entry's checkpoint must still be readable (not freed)
     assert inner_frame["df"].count() == 5
+
+
+def test_vacuum_spares_a_version_served_from_a_lookup(spark, tmp_store, monkeypatch):
+    """A lookup may hit the OLDEST retained version; a later publish to
+    the family vacuums past the retention edge, and must not delete the
+    files the served frame still scans."""
+    monkeypatch.setattr(IO, "_INDEX_KEEP_VERSIONS", 3)
+
+    def rows(i):
+        return spark.range(i, i + 4).selectExpr("id", f"{i} AS k")
+
+    for i in range(IO._INDEX_KEEP_VERSIONS):
+        IO.index_store_publish(spark, "t_edge", f"k{i}", rows(i))
+    served = IO.index_store_lookup(spark, "t_edge", "k0")
+    IO.index_store_publish(spark, "t_edge", "k3", rows(3))
+    IO.index_store_publish(spark, "t_edge", "k4", rows(4))
+    assert _rows(served) == [(i, 0) for i in range(4)]
+    # vacuum still runs: the unserved v1 is gone
+    assert IO._index_table("t_edge").versions() == [0, 2, 3, 4]

@@ -301,3 +301,73 @@ def test_compact_bin_packs_small_files_copy_on_write(spark, tmp_path):
     # idempotent no-op when nothing worth packing remains
     again = st.compact(spark, target_bytes=64 * 1024)
     assert again["compacted"] in (0, 2)  # the packed file may itself be small
+
+
+def _jobs_run_by(spark, fn):
+    """(fn's result, ids of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    group = f"snapshots-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store fills async
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_takes_the_manifest_schema_and_runs_no_job(spark, tmp_path):
+    """The manifest records the committed schema, so a read (latest,
+    time-travelled or fully pruned) submits no footer-inference job, and
+    its schema is the one inference over the same files gives (the file
+    source reads every column nullable either way)."""
+    import os
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    df = spark.range(6).selectExpr(  # id and the literals are non-nullable
+        "id", "CAST(id AS INT) AS i", "array(id, 1) AS a", "'x' AS s", "id / 2 AS d"
+    )
+    v = t.commit_replace(df.coalesce(2))
+    assert t._read_manifest(v)["schema"] == df.schema.jsonValue()
+    inferred = spark.read.parquet(*[os.path.join(t.path, f) for f in t.files(v)])
+    for read in (
+        lambda: t.read(spark),
+        lambda: t.read(spark, v),
+        lambda: t.read(spark, prune={"id": (100, None)}),  # every file pruned
+    ):
+        got, jobs = _jobs_run_by(spark, read)
+        assert jobs == []
+        assert got.schema == inferred.schema
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == sorted(
+        tuple(r) for r in inferred.collect()
+    )
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    """A manifest written before schemas were recorded reads by
+    inference."""
+    import json
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    v = t.commit_append(_df(spark, [(1, "a"), (2, "b")]))
+    path = t._manifest_path(v)
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    old = SnapshotTable(t.path)
+    assert sorted(tuple(r) for r in old.read(spark).collect()) == [(1, "a"), (2, "b")]
+    # an append on top of it cannot know the old columns: it keeps inferring
+    v2 = old.commit_append(_df(spark, [(3, "c")]))
+    assert old._read_manifest(v2)["schema"] is None
+    assert old.read(spark).count() == 3
+
+
+def test_append_adding_a_column_reads_nulls_for_older_files(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, [(1, "a")]))
+    t.commit_append(spark.createDataFrame([(2, "b", 0.5)], "k int, v string, w double"))
+    got = t.read(spark)
+    assert got.columns == ["k", "v", "w"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a", None), (2, "b", 0.5)]
