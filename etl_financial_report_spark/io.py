@@ -480,6 +480,13 @@ def index_store_lookup(spark: SparkSession, tag: str, key: str) -> DataFrame | N
     return None
 
 
+#: store key -> the lineage record its next publish writes into the
+#: version's manifest (set by _memo_store for row-incremental families).
+#: index_store_publish keeps its (spark, tag, key, df) signature, so a
+#: wrapper installed on this module sees every publish unchanged.
+_PUBLISH_LINEAGE: dict[str, dict] = {}
+
+
 def index_store_publish(spark: SparkSession, tag: str, key: str, df: DataFrame) -> DataFrame | None:
     """Publish ``df`` as the artifact version tagged ``key`` and return
     the DISK-BACKED read of it (the one materialization every consumer —
@@ -487,18 +494,24 @@ def index_store_publish(spark: SparkSession, tag: str, key: str, df: DataFrame) 
     Returns None when the store is off, the publish failed, or the frame
     produced zero data files (an empty artifact is cheaper to rebuild
     than to special-case schema-only reads)."""
+    lineage = _PUBLISH_LINEAGE.pop(key, None)
     if not INDEX_STORE_ENABLED:
         return None
     try:
         st = _index_table(tag)
-        v = st.commit_replace(df, tag=key)
-        # None: another builder committed this key first — serve its version
-        got = st.read(spark, v) if v is not None else index_store_lookup(spark, tag, key)
-        if len(st.versions()) > _INDEX_KEEP_VERSIONS:
-            st.vacuum(_INDEX_KEEP_VERSIONS, protect=_SERVED_VERSIONS.get(st.path, ()))
-        return got
+        return _read_committed(spark, st, tag, key, st.commit_replace(df, tag=key, lineage=lineage))
     except Exception:
         return None
+
+
+def _read_committed(spark: SparkSession, st, tag: str, key: str, version: int | None) -> DataFrame:
+    """The read of the version a commit of ``key`` just returned, then the
+    family's retention vacuum. ``version`` None: another builder committed
+    the key first, so serve its version."""
+    got = st.read(spark, version) if version is not None else index_store_lookup(spark, tag, key)
+    if len(st.versions()) > _INDEX_KEEP_VERSIONS:
+        st.vacuum(_INDEX_KEEP_VERSIONS, protect=_SERVED_VERSIONS.get(st.path, ()))
+    return got
 
 
 def memo_checkpoint(
@@ -508,7 +521,8 @@ def memo_checkpoint(
     tag: str,
     build,
     extra_key: tuple = (),
-) -> DataFrame:
+    parts: tuple = (),
+):
     """Materialize ``build()`` once per (corpus snapshot, tag, policy)
     and reuse it across queries AND sessions. Three tiers:
 
@@ -521,9 +535,16 @@ def memo_checkpoint(
     3. build + publish (one pass: the parquet write IS the
        materialization; the disk read replaces the localCheckpoint, and
        the build's own checkpoints are freed at once). When the store is
-       off or the publish fails, the build is localCheckpointed and the
-       memo entry owns its pins until eviction."""
-    return _memo_store(spark, sf_dir, table, tag, extra_key, build, None)
+       off or a publish fails, the build is localCheckpointed (unless it
+       already is a bare leaf: a checkpoint or driver rows) and the memo
+       entry owns its pins until eviction.
+
+    ``parts`` names the frames of a MULTI-PART artifact: ``build()``
+    returns a dict of them, each part is its own store family
+    ``f"{tag}_{name}"`` under the one key, and the call returns the dict.
+    The store serves only when every part hits, and the build's pins are
+    freed only when every part published."""
+    return _memo_store(spark, sf_dir, table, tag, extra_key, build, None, parts)
 
 
 # ----------------------------------------- incremental store maintenance
@@ -542,15 +563,15 @@ def memo_checkpoint(
 # re-read; commit_merge would rewrite the whole table copy-on-write,
 # which is exactly the O(corpus) cost this path exists to avoid).
 #
-# The fingerprint chain is recorded as one lineage JSON per published
-# key under <family>/_lineage/<skey>.json: the corpus file-stat set the
-# key covers, the parent key it chained from (None for a from-scratch
-# build), and a policy fingerprint (builder tag + policy constants +
-# engine code fingerprint) — a code or policy edit can never chain onto
-# a stale parent because the policy fingerprints diverge. At 100 TB the
-# lineage record holds file PATHS + footer stats (the same metadata
-# class as the snapshot manifests); a catalog's snapshot ids would
-# replace the explicit file list.
+# Each version's manifest is its only record: its ``lineage`` holds the
+# corpus file-stat set the version covers, the key it chained from (None
+# for a from-scratch build), and a policy fingerprint (builder tag +
+# policy constants + engine code fingerprint) — a code or policy edit
+# can never chain onto a stale parent because the fingerprints diverge.
+# Only retained versions are candidates, so a vacuumed parent leaves the
+# next-largest retained one, and vacuum leaves no record behind. At
+# 100 TB the record holds file PATHS + footer stats (the manifest's own
+# metadata class); a catalog's snapshot ids would replace the file list.
 #
 # Correctness precondition (the daily-ingest contract): the batch
 # files' doc keys are disjoint from the parent corpus's — the same
@@ -568,112 +589,52 @@ def _policy_fingerprint(tag: str, extra_key: tuple, mod_file: str | None) -> str
     ).hexdigest()
 
 
-def _lineage_dir(tag: str) -> str:
-    return os.path.join(INDEX_STORE_ROOT, tag, "_lineage")
-
-
-def _lineage_write(tag: str, skey: str, record: dict) -> None:
-    """Publish one lineage record, atomically (same temp+link dance as
-    the snapshot manifests); an existing record wins — records are
-    immutable per key."""
-    import json
-    import uuid
-
-    d = _lineage_dir(tag)
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"{skey}.json")
-    if os.path.exists(path):
-        return
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(record, f)
-    try:
-        os.link(tmp, path)
-    except FileExistsError:
-        pass
-    finally:
-        os.unlink(tmp)
-
-
-def _lineage_records(tag: str) -> list[dict]:
-    import json
-
-    d = _lineage_dir(tag)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in os.listdir(d):
-        if f.endswith(".json") and not f.startswith("."):
-            try:
-                with open(os.path.join(d, f)) as fh:
-                    out.append(json.load(fh))
-            except (OSError, ValueError):
-                continue
-    return out
-
-
 def _try_incremental_publish(
     spark: SparkSession,
     sf_dir: str,
     table: str,
     tag: str,
     skey: str,
-    policy_fp: str,
+    lineage: dict,
     build_batch,
 ) -> DataFrame | None:
-    """The append path: find the largest committed parent whose file set
-    is a strict subset of the current corpus's (same policy fingerprint),
-    sign ONLY the complement files, and chain the batch rows onto the
-    parent snapshot. Returns the disk-backed read of the child version,
-    or None when no parent qualifies (caller falls back to from-scratch).
-    Cost: metadata scans + one Spark job over |batch| files."""
+    """The append path: in one scan of the family's manifests, pick the
+    retained version with the largest file set that is a strict subset of
+    the current corpus's (same policy fingerprint), sign ONLY the
+    complement files, and chain the batch rows onto that version. Returns
+    the disk-backed read of the child version, or None when no version
+    qualifies (caller falls back to from-scratch). Cost: metadata scans +
+    one Spark job over |batch| files."""
     path = table_path(sf_dir, table)
     if not os.path.isdir(path):
         return None  # single-file tables can only change wholesale
-    cur_stats = corpus_file_stats(sf_dir, table)
-    cur_set = set(cur_stats)
-    best = None
-    for rec in _lineage_records(tag):
-        if rec.get("policy_fp") != policy_fp:
-            continue
-        pset = {tuple(t) for t in rec.get("file_stats", [])}
-        if pset and pset < cur_set and (
-            best is None or len(pset) > len(best[1])
-        ):
-            best = (rec, pset)
-    if best is None:
-        return None
-    rec, pset = best
+    cur_set = set(lineage["file_stats"])
     try:
         st = _index_table(tag)
-        parent_version = None
+        best = None
         for v in reversed(st.versions()):
             m = st._read_manifest(v)
-            if m.get("tag") == rec["skey"] and m.get("files"):
-                parent_version = v
-                break
-        if parent_version is None:
-            return None  # lineage record outlived its vacuumed version
-        batch_paths = [
-            os.path.join(path, rel) for (rel, _s, _n) in cur_stats
-            if (rel, _s, _n) not in pset
-        ]
+            rec = m.get("lineage") or {}
+            pset = {tuple(t) for t in rec.get("file_stats", ())}
+            if (
+                rec.get("policy_fp") == lineage["policy_fp"]
+                and m.get("files")
+                and pset < cur_set
+                and (best is None or len(pset) > len(best[2]))
+            ):
+                best = (v, m["tag"], pset)
+        if best is None:
+            return None
+        parent_version, parent_key, pset = best
+        batch_paths = [os.path.join(path, rel) for rel, _s, _n in sorted(cur_set - pset)]
         batch_rows = build_batch(spark.read.parquet(*batch_paths))
-        st.commit_append(batch_rows, tag=skey, base_version=parent_version)
-        got = index_store_lookup(spark, tag, skey)
-        if got is not None:
-            _lineage_write(
-                tag,
-                skey,
-                {
-                    "skey": skey,
-                    "parent_skey": rec["skey"],
-                    "policy_fp": policy_fp,
-                    "file_stats": [list(t) for t in cur_stats],
-                    "n_batch_files": len(batch_paths),
-                },
-            )
-        return got
+        child = st.commit_append(
+            batch_rows,
+            tag=skey,
+            base_version=parent_version,
+            lineage={**lineage, "parent": parent_key},
+        )
+        return _read_committed(spark, st, tag, skey, child)
     except Exception:
         return None
 
@@ -701,7 +662,7 @@ def memo_checkpoint_rowwise(
     return _memo_store(spark, sf_dir, table, tag, extra_key, build_full, build_batch)
 
 
-def _memo_store(spark, sf_dir, table, tag, extra_key, build, build_batch):
+def _memo_store(spark, sf_dir, table, tag, extra_key, build, build_batch, parts=()):
     """The store tier of memo_checkpoint{,_rowwise} on top of the session
     memo; ``build_batch`` None means the family has no append path. The
     store functions are called through the module globals, so a wrapper
@@ -717,31 +678,34 @@ def _memo_store(spark, sf_dir, table, tag, extra_key, build, build_batch):
         except TypeError:
             mod_file = None
         skey = _index_key(sf_dir, table, tag, extra_key, mod_file)
-        policy_fp = _policy_fingerprint(tag, extra_key, mod_file)
-        df = index_store_lookup(spark, tag, skey)
-        if df is None and build_batch is not None and INDEX_STORE_ENABLED:
-            df = _try_incremental_publish(
-                spark, sf_dir, table, tag, skey, policy_fp, build_batch
+        families = {n: f"{tag}_{n}" for n in parts} if parts else {None: tag}
+        # no short-circuit on a miss: a cold build looks every part up once
+        got = {n: index_store_lookup(spark, f, skey) for n, f in families.items()}
+        if build_batch is not None and INDEX_STORE_ENABLED and got[None] is None:
+            lineage = {
+                "policy_fp": _policy_fingerprint(tag, extra_key, mod_file),
+                "file_stats": corpus_file_stats(sf_dir, table),
+                "parent": None,
+            }
+            got[None] = _try_incremental_publish(
+                spark, sf_dir, table, tag, skey, lineage, build_batch
             )
-        if df is not None:
-            return df
+            if got[None] is None:  # the full build publishes the record
+                _PUBLISH_LINEAGE[skey] = lineage
+        if all(df is not None for df in got.values()):
+            return got if parts else got[None]
         before = _persistent_rdd_ids(spark)
         built = build()
-        df = index_store_publish(spark, tag, skey, built)
-        if df is None:
-            return built.localCheckpoint()
-        if build_batch is not None:
-            _lineage_write(
-                tag,
-                skey,
-                {
-                    "skey": skey,
-                    "parent_skey": None,
-                    "policy_fp": policy_fp,
-                    "file_stats": [list(t) for t in corpus_file_stats(sf_dir, table)],
-                },
-            )
-        unpersist_since(spark, before)
-        return df
+        frames = built if parts else {None: built}
+        got = {n: index_store_publish(spark, f, skey, frames[n]) for n, f in families.items()}
+        if all(df is not None for df in got.values()):
+            unpersist_since(spark, before)
+        else:  # pinning a bare leaf again would only cost a job
+            got = {
+                n: df if df._jdf.queryExecution().logical().children().isEmpty()
+                else df.localCheckpoint()
+                for n, df in frames.items()
+            }
+        return got if parts else got[None]
 
     return session_memo(spark, sf_dir, table, tag, extra_key, stored)

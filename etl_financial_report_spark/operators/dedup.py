@@ -193,6 +193,23 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BANDS = [(f"b{bi}", f"h{bi * BAND_SIZE}", f"h{bi * BAND_SIZE + 1}") for bi in range(N_HASHES // BAND_SIZE)]
 
+#: the oracle's LSH banding over a ``sig`` CTE: one (doc_id, band_idx,
+#: band_key) row per doc and band, band_key the exact pairing h1 * P + h2
+_BANDS_SQL = " UNION ALL ".join(
+    f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig"
+    for bi, (_, h1, h2) in enumerate(_BANDS)
+)
+
+
+def _sig_bands_ctes() -> str:
+    """The oracle's ``sig`` (signatures over the documents table) and
+    ``bands`` CTEs."""
+    return f"""sig AS ({_minhash_signature_sql()}),
+bands AS (
+    {_BANDS_SQL}
+)"""
+
+
 #: hot-bucket cap for the LSH band tables (the dedup_simhash64_hamming
 #: discipline applied to minhash banding): a power-law mega-cluster (the
 #: boilerplate page duplicated 100k times) puts its whole cluster into
@@ -328,10 +345,7 @@ def _lsh_pair_ctes(pairs_name: str = "pairs", max_bucket: int | None = None) -> 
 @register(
     "dedup_minhash_lsh_pairs",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()}
 SELECT doc_a, doc_b FROM pairs
 """,
@@ -567,10 +581,7 @@ VERIFY_JACCARD = 0.8
 @register(
     "dedup_lsh_verified",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 toks AS (
     SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents
@@ -627,10 +638,7 @@ VERIFY_CONTAINMENT = 0.9
 @register(
     "dedup_containment_verified",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 toks AS (
     SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents
@@ -687,10 +695,7 @@ EVAL_SLICE = 150
 @register(
     "dedup_lsh_recall_eval",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes(pairs_name="lshall")},
 lsh AS (
     SELECT doc_a, doc_b FROM lshall
@@ -975,10 +980,7 @@ MAX_CC_ITERATIONS = 20
 @register(
     "dedup_components",
     oracle=f"""
-WITH RECURSIVE sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH RECURSIVE {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 edges AS (
     SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1247,10 +1249,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_calibration",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 sh AS (
     SELECT doc_id, unnest({_SHINGLES_SQL}) AS w FROM documents
@@ -1751,10 +1750,7 @@ INCR_BATCH_REM = 7
 
 
 _INCR_SQL = f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 batchdocs AS (
     SELECT doc_id, text FROM documents WHERE doc_id % {INCR_BATCH_MOD} = {INCR_BATCH_REM}
 ),
@@ -1864,10 +1860,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_lsh_bucket_stats",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 occ AS (SELECT band_idx, band_key, COUNT(*) AS bucket_n FROM bands GROUP BY 1, 2)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
        CAST(MAX(bucket_n) AS BIGINT) AS max_occupancy,
@@ -2254,10 +2247,7 @@ def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_size_histogram",
     oracle=f"""
-WITH RECURSIVE sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH RECURSIVE {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 edges AS (
     SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -3594,11 +3584,6 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: a doc is "chunk-heavy" when at least half its chunks are cross-doc dups
 FUNNEL_CHUNK_NUM = 2
 
-_FUNNEL_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig"
-    for bi, (_, h1, h2) in enumerate(_BANDS)
-)
-
 from .quality import _qc_ctes as _qc_ctes_sql  # noqa: E402
 from .quality import _qc_gate_ctes as _qc_gate_ctes_sql  # noqa: E402
 
@@ -3626,7 +3611,7 @@ s2 AS (
     WHERE {FUNNEL_CHUNK_NUM} * c.n_dup < c.n_chunks
 ),
 sig AS ({_minhash_signature_sql(src="s2")}),
-bands AS ({_FUNNEL_BANDS_SQL}),
+bands AS ({_BANDS_SQL}),
 {_lsh_pair_ctes(pairs_name="cand")},
 toks3 AS (
     SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM s2
@@ -3877,10 +3862,7 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_bbit",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig" for bi, (_, h1, h2) in enumerate(_BANDS))}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 sh AS (
     SELECT doc_id, unnest({_SHINGLES_SQL}) AS w FROM documents

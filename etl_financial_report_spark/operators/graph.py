@@ -23,8 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .dedup import _BANDS, _lsh_pair_ctes, _minhash_signature_sql, dedup_minhash_lsh_pairs
-from ..functions.hashing import MINHASH_P
+from .dedup import (
+    _BANDS_SQL,
+    _lsh_pair_ctes,
+    _minhash_signature_sql,
+    _sig_bands_ctes,
+    dedup_minhash_lsh_pairs,
+)
 
 #: fixed-point scale: rank 1.0 == 1_000_000
 PR_SCALE = 1_000_000
@@ -34,13 +39,6 @@ PR_D_PCT = 85
 PR_ROUNDS = 2
 
 _BASE = PR_SCALE * (100 - PR_D_PCT) // 100  # (1-d) * scale
-
-
-def _bands_sql() -> str:
-    return " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig"
-        for bi, (_, h1, h2) in enumerate(_BANDS)
-    )
 
 
 def _iter_sql(prev: str) -> str:
@@ -57,10 +55,7 @@ def _iter_sql(prev: str) -> str:
 @register(
     "graph_pagerank",
     oracle=f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {_bands_sql()}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 edges AS (
     SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -113,7 +108,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_degree_distribution",
     oracle=f"""
 WITH sig AS ({_minhash_signature_sql()}),
-bands AS ({_bands_sql()}),
+bands AS ({_BANDS_SQL}),
 {_lsh_pair_ctes()},
 deg AS (
     SELECT node, COUNT(*) AS degree FROM (
@@ -149,7 +144,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_triangle_count",
     oracle=f"""
 WITH sig AS ({_minhash_signature_sql()}),
-bands AS ({_bands_sql()}),
+bands AS ({_BANDS_SQL}),
 {_lsh_pair_ctes()},
 tri AS (
     SELECT COUNT(*) AS n_triangles

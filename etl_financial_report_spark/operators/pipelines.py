@@ -98,9 +98,11 @@ def _synthetic_statement_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_statement_ingest",
-    oracle=f"""
+#: the statement-facts oracle prelude of pipeline_statement_ingest and
+#: pipeline_notes_enrichment: metadata pivot (gi, meta, meta2), synthetic
+#: statement lines (sl), preamble skip (numbered, joined) and the head of
+#: ``facts`` through its scaled ``nilai``; each oracle closes ``facts``
+_FACTS_PRELUDE = f"""
 WITH gi(file_id, row_no, label, value) AS (VALUES {_GI_VALUES}),
 meta AS (
     SELECT file_id,
@@ -143,7 +145,12 @@ facts AS (
     SELECT kode_emiten, nama_emiten, tahun, quartal,
            grup AS grup_laporan_keuangan, item,
            CASE WHEN kuartal_unik THEN CAST(coalesce(nilai, 0.0) AS DECIMAL(18,2))
-                ELSE CAST(coalesce(nilai, 0.0) AS DECIMAL(18,2)) * 1000000 END AS nilai
+                ELSE CAST(coalesce(nilai, 0.0) AS DECIMAL(18,2)) * 1000000 END AS nilai"""
+
+
+@register(
+    "pipeline_statement_ingest",
+    oracle=f"""{_FACTS_PRELUDE}
     FROM joined
 ),
 existing(kode_emiten, tahun, quartal, grup_laporan_keuangan) AS (
@@ -186,50 +193,7 @@ def pipeline_statement_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_notes_enrichment",
-    oracle=f"""
-WITH gi(file_id, row_no, label, value) AS (VALUES {_GI_VALUES}),
-meta AS (
-    SELECT file_id,
-        MAX(CASE WHEN lower(trim(label)) = 'kode entitas' THEN trim(value) END) AS kode_emiten,
-        MAX(CASE WHEN lower(trim(label)) = 'nama entitas' THEN trim(value) END) AS raw_nama,
-        MAX(CASE WHEN lower(trim(label)) = 'periode penyampaian laporan keuangan' THEN trim(value) END) AS periode,
-        MAX(CASE WHEN lower(trim(label)) = 'tanggal awal periode berjalan' THEN trim(value) END) AS tanggal
-    FROM gi GROUP BY file_id
-),
-meta2 AS (
-    SELECT file_id, kode_emiten,
-        CASE WHEN upper(substring(raw_nama, 1, 2)) = 'PT' THEN raw_nama
-             ELSE 'PT ' || raw_nama END AS nama_emiten,
-        CASE WHEN contains(lower(periode), 'kuartal i ') OR contains(lower(periode), 'first') THEN 1
-             WHEN contains(lower(periode), 'kuartal ii ') OR contains(lower(periode), 'second') THEN 2
-             WHEN contains(lower(periode), 'kuartal iii') OR contains(lower(periode), 'third') THEN 3
-             ELSE 4 END AS quartal,
-        CAST(substring(tanggal, 1, 4) AS INTEGER) AS tahun
-    FROM meta
-),
-sl AS (
-    SELECT 'F' || CAST(o_orderkey % 3 AS VARCHAR) AS file_id,
-           CASE o_orderstatus WHEN 'F' THEN 'Laporan Neraca'
-                              WHEN 'O' THEN 'Laporan Laba Rugi'
-                              ELSE 'Laporan Arus Kas' END AS grup,
-           o_orderkey AS row_no,
-           'item ' || CAST(o_orderkey AS VARCHAR) AS item,
-           CASE WHEN o_orderkey % 17 = 0 THEN NULL ELSE o_totalprice END AS nilai
-    FROM orders
-),
-numbered AS (
-    SELECT *, row_number() OVER (PARTITION BY file_id, grup ORDER BY row_no) AS rn FROM sl
-),
-joined AS (
-    SELECT d.*, m.kode_emiten, m.nama_emiten, m.tahun, m.quartal,
-           (m.quartal = 4) AS kuartal_unik
-    FROM (SELECT * FROM numbered WHERE rn > 3) d JOIN meta2 m USING (file_id)
-),
-facts AS (
-    SELECT kode_emiten, nama_emiten, tahun, quartal,
-           grup AS grup_laporan_keuangan, item,
-           CASE WHEN kuartal_unik THEN CAST(coalesce(nilai, 0.0) AS DECIMAL(18,2))
-                ELSE CAST(coalesce(nilai, 0.0) AS DECIMAL(18,2)) * 1000000 END AS nilai,
+    oracle=f"""{_FACTS_PRELUDE},
            CAST(NULL AS VARCHAR) AS notes
     FROM joined
 ),

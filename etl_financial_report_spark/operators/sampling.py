@@ -330,18 +330,10 @@ def sample_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_oracle() -> str:
-    from ..functions.hashing import MINHASH_P
-    from .dedup import _BANDS, _lsh_pair_ctes, _minhash_signature_sql
+    from .dedup import _lsh_pair_ctes, _sig_bands_ctes
 
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig"
-        for bi, (_, h1, h2) in enumerate(_BANDS)
-    )
     return f"""
-WITH sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {bands}
-),
+WITH {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 sp AS (
     SELECT doc_id,
@@ -790,18 +782,10 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _dedup_aware_split_oracle() -> str:
-    from ..functions.hashing import MINHASH_P
-    from .dedup import _BANDS, _lsh_pair_ctes, _minhash_signature_sql
+    from .dedup import _lsh_pair_ctes, _sig_bands_ctes
 
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band_idx, {h1} * {MINHASH_P} + {h2} AS band_key FROM sig"
-        for bi, (_, h1, h2) in enumerate(_BANDS)
-    )
     return f"""
-WITH RECURSIVE sig AS ({_minhash_signature_sql()}),
-bands AS (
-    {bands}
-),
+WITH RECURSIVE {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 edges AS (
     SELECT doc_a AS src, doc_b AS dst FROM pairs

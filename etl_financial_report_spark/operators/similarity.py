@@ -2394,38 +2394,19 @@ _IDX_PARTS = ("cents", "cq", "assign", "rbook", "rcodes", "crd")
 
 def _residual_index(spark: SparkSession, sf_dir: str) -> dict:
     """The residual index, memoized per (session, corpus snapshot) and
-    persisted to the index store: a fresh session reads the six frames
-    from disk instead of re-running train/assign/encode (VERDICT r11
-    item 1). On full publish success the disk-backed reads REPLACE the
-    build's checkpoints (their blocks free at once); a partial publish
-    keeps the checkpoint-backed index for this session and the next
-    session rebuilds."""
+    persisted to the index store as one multi-part artifact (a store
+    family per frame): a fresh session reads the six frames from disk
+    instead of re-running train/assign/encode (VERDICT r11 item 1)."""
     from .. import io as _io
 
-    if not _io.MEMO_ENABLED:  # plan-audit escape hatch: build, don't cache
-        return _residual_index_build(spark, sf_dir)
-    geometry = (N_CELLS, PQ_M, PQ_K)
-
-    def stored():
-        skey = _io._index_key(sf_dir, "embeddings", "residual_index", geometry, __file__)
-        loaded = {
-            n: _io.index_store_lookup(spark, f"residual_{n}", skey) for n in _IDX_PARTS
-        }
-        if all(v is not None for v in loaded.values()):
-            return loaded
-        before = _io._persistent_rdd_ids(spark)
-        idx = _residual_index_build(spark, sf_dir)
-        pub = {
-            n: _io.index_store_publish(spark, f"residual_{n}", skey, idx[n])
-            for n in _IDX_PARTS
-        }
-        if not all(v is not None for v in pub.values()):
-            return idx
-        _io.unpersist_since(spark, before)
-        return pub
-
-    return _io.session_memo(
-        spark, sf_dir, "embeddings", "residual_index", geometry, stored
+    return _io.memo_checkpoint(
+        spark,
+        sf_dir,
+        "embeddings",
+        "residual",
+        lambda: _residual_index_build(spark, sf_dir),
+        extra_key=(N_CELLS, PQ_M, PQ_K),
+        parts=_IDX_PARTS,
     )
 
 

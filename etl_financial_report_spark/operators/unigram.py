@@ -339,49 +339,46 @@ def unigram_train_collected(
     return vocab2, unigram_segment(words, vocab2, max_piece)
 
 
-def unigram_corpus_trained(spark: SparkSession, sf_dir: str):
-    """(vocab2 dict, seg frame) under the default training geometry over
-    the documents table, memoized per (session, corpus snapshot) and
-    persisted to the index store: four registered queries (encode,
-    round-trip, fertility, packing) consume the SAME trained tokenizer —
-    the persisted-artifact pattern (a real pipeline trains once and ships
-    vocab + segmentations). Geometry rides the key, so a monkeypatched
-    cap can never hit a stale state. When the store is off the seg frame
-    is localCheckpoint-pinned so every consumer reuses one
-    materialization."""
+def unigram_corpus_trained(spark: SparkSession, sf_dir: str) -> dict:
+    """{"vocab": (piece, score), "seg": the trained segmentation of every
+    distinct word plus its piece ids ``wid``} under the default training
+    geometry over the documents table, memoized per (session, corpus
+    snapshot) and persisted to the index store as one two-part artifact:
+    four registered queries (encode, round-trip, fertility, packing)
+    consume the SAME trained tokenizer — the persisted-artifact pattern (a
+    real pipeline trains once and ships vocab + segmentations). Piece ids
+    are dense lexicographic over the pruned vocabulary, numbered on the
+    driver from the trainer's own vocabulary-bounded dict, so no consumer
+    collects the vocabulary back. Geometry rides the key, so a
+    monkeypatched cap can never hit a stale state."""
     from .. import io as _io
 
-    if not _io.MEMO_ENABLED:  # plan-audit escape hatch (io.MEMO_ENABLED doc)
-        words = unigram_words(load_table(spark, sf_dir, "documents"))
-        return unigram_train_collected(words)
-    geometry = (UNIGRAM_MAX_PIECE, UNIGRAM_SEED_K, UNIGRAM_KEEP_K)
-
-    def stored():
-        skey = _io._index_key(sf_dir, "documents", "unigram_trained", geometry, __file__)
-        vocab_df = _io.index_store_lookup(spark, "unigram_vocab", skey)
-        seg_df = _io.index_store_lookup(spark, "unigram_seg", skey)
-        if vocab_df is not None and seg_df is not None:
-            # persisted-tokenizer hit: a fresh session ships the trained
-            # artifact from the snapshot store instead of re-running the
-            # seed/segment/prune EM chain. The vocab collect is
-            # UNIGRAM_KEEP_K + alphabet bounded — the same vocabulary-
-            # bounded collect the trainer itself makes, never corpus rows.
-            return {r["piece"]: r["score"] for r in vocab_df.collect()}, seg_df
-        before = _io._persistent_rdd_ids(spark)
+    def build():
         words = unigram_words(load_table(spark, sf_dir, "documents"))
         vocab2, seg = unigram_train_collected(words)
-        vdf = spark.createDataFrame(sorted(vocab2.items()), "piece string, score long")
-        _io.index_store_publish(spark, "unigram_vocab", skey, vdf)
-        disk_seg = _io.index_store_publish(spark, "unigram_seg", skey, seg)
-        if disk_seg is None:
-            return vocab2, seg.localCheckpoint()
-        # the disk read replaces the trainer's pins (the words checkpoint
-        # inside unigram_train_collected)
-        _io.unpersist_since(spark, before)
-        return vocab2, disk_seg
+        ids = F.create_map(
+            *[F.lit(x) for i, p in enumerate(sorted(vocab2)) for x in (p, i + 1)]
+        )
+        return {
+            "vocab": spark.createDataFrame(
+                sorted(vocab2.items()), "piece string, score long"
+            ),
+            "seg": seg.withColumn(
+                "wid",
+                F.transform(
+                    F.split("seq", " "), lambda p: F.element_at(ids, p).cast("long")
+                ),
+            ),
+        }
 
-    return _io.session_memo(
-        spark, sf_dir, "documents", "unigram_trained", geometry, stored
+    return _io.memo_checkpoint(
+        spark,
+        sf_dir,
+        "documents",
+        "unigram",
+        build,
+        extra_key=(UNIGRAM_MAX_PIECE, UNIGRAM_SEED_K, UNIGRAM_KEEP_K),
+        parts=("vocab", "seg"),
     )
 
 
@@ -604,7 +601,7 @@ FROM enc GROUP BY doc_id
 )
 def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    _vocab2, seg = unigram_corpus_trained(spark, sf_dir)
+    seg = unigram_corpus_trained(spark, sf_dir)["seg"]
     seg = F.broadcast(seg.select("tok", "n_pieces", "seq"))
     tokpos = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
@@ -651,7 +648,7 @@ FROM r2fin
     ),
 )
 def text_unigram_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _vocab2, seg = unigram_corpus_trained(spark, sf_dir)
+    seg = unigram_corpus_trained(spark, sf_dir)["seg"]
     return seg.select(
         "tok",
         F.col("n_pieces").cast("long").alias("n_pieces"),
@@ -713,7 +710,7 @@ def text_tokenizer_fertility_compare(spark: SparkSession, sf_dir: str) -> DataFr
         F.sum(F.col("n") * F.col("p")).cast("long").alias("weighted_pieces"),
         F.expr("SUM(n * p) * 1000000 DIV SUM(n)").cast("long").alias("fertility_ppm"),
     )
-    _vocab2, seg2 = unigram_corpus_trained(spark, sf_dir)
+    seg2 = unigram_corpus_trained(spark, sf_dir)["seg"]
     uni_row = seg2.select("n", F.col("n_pieces").alias("p")).agg(
         F.lit("unigram").alias("tokenizer"),
         F.count(F.lit(1)).alias("n_distinct_words"),
@@ -762,22 +759,14 @@ uni_docs AS (
 def unigram_doc_ids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_piece_tokens, ids array<long>) — the composition form
     pack_unigram_sequences consumes: every doc's token stream maps
-    through the trained per-word Viterbi segmentations, pieces get dense
-    lexicographic ids over the pruned vocabulary (driver-side enumeration
-    of the bounded vocab2 dict — the broadcast map literal again), and
-    per-doc arrays reassemble in an entity-bounded group."""
+    through the trained per-word Viterbi segmentations and their piece
+    ids (the trained artifact's ``wid``: dense lexicographic over the
+    pruned vocabulary), and per-doc arrays reassemble in an
+    entity-bounded group."""
     from .textops import MAX_SEQ_LEN
 
     docs = load_table(spark, sf_dir, "documents")
-    vocab2, seg2 = unigram_corpus_trained(spark, sf_dir)
-    idmap = {p: i + 1 for i, p in enumerate(sorted(vocab2))}
-    m = F.create_map(*[F.lit(x) for kv in sorted(idmap.items()) for x in kv])
-    wids = seg2.select(
-        "tok",
-        F.transform(
-            F.split("seq", " "), lambda p: F.element_at(m, p).cast("long")
-        ).alias("wid"),
-    )
+    wids = unigram_corpus_trained(spark, sf_dir)["seg"].select("tok", "wid")
     tokpos = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     )

@@ -264,10 +264,13 @@ class SnapshotTable:
         tag: str | None = None,
         file_meta: dict[str, dict] | None = None,
         schema: dict | None = None,
+        lineage: dict | None = None,
     ) -> int:
         """Claim ``version`` with a manifest listing ``files``. ``schema``
         (``StructType.jsonValue()`` of the committed frame) lets every read
-        of the version skip footer inference."""
+        of the version skip footer inference. ``lineage`` is the caller's
+        record of what the version covers (io's incremental index store
+        keeps its chain there), stored as given."""
         os.makedirs(self._manifests, exist_ok=True)
         tmp = os.path.join(self._manifests, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
@@ -279,6 +282,7 @@ class SnapshotTable:
                     "tag": tag,
                     "file_meta": file_meta or {},
                     "schema": schema,
+                    "lineage": lineage,
                 },
                 f,
                 indent=1,
@@ -299,6 +303,7 @@ class SnapshotTable:
         df: DataFrame,
         tag: str | None = None,
         base_version: int | None = None,
+        lineage: dict | None = None,
     ) -> int | None:
         """Append a new version, rebasing on lost version races. ``tag``
         makes the commit idempotent per tag (e.g. a content fingerprint of
@@ -340,6 +345,7 @@ class SnapshotTable:
                     tag=tag,
                     file_meta={**prev_meta, **new_meta},
                     schema=_appended_schema(prev, batch_schema),
+                    lineage=lineage,
                 )
             except ConcurrentCommitError:
                 if tag is not None and tag in self.committed_tags():
@@ -356,7 +362,9 @@ class SnapshotTable:
             if (t := self._read_manifest(v).get("tag")) is not None
         }
 
-    def commit_replace(self, df: DataFrame, tag: str | None = None) -> int | None:
+    def commit_replace(
+        self, df: DataFrame, tag: str | None = None, lineage: dict | None = None
+    ) -> int | None:
         """Replace the current snapshot. ``tag`` gives replace the same
         per-tag idempotency as commit_append (a replayed daily build that
         produced identical content no-ops instead of publishing a
@@ -375,7 +383,7 @@ class SnapshotTable:
             try:
                 return self._publish(
                     version, files, "replace", tag=tag, file_meta=meta,
-                    schema=df.schema.jsonValue(),
+                    schema=df.schema.jsonValue(), lineage=lineage,
                 )
             except ConcurrentCommitError:
                 if tag is not None and tag in self.committed_tags():

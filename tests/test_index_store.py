@@ -99,8 +99,9 @@ def test_store_disabled_falls_back_to_checkpoint(spark, tmp_store, monkeypatch):
 def test_unigram_trained_state_round_trips_fresh_session(spark, tmp_store, monkeypatch):
     from etl_financial_report_spark.operators import unigram as U
 
-    vocab1, seg1 = U.unigram_corpus_trained(spark, SF)
-    want = _rows(seg1.select("tok", "n_pieces"))
+    trained = U.unigram_corpus_trained(spark, SF)
+    want_vocab = _rows(trained["vocab"])
+    want = _rows(trained["seg"].select("tok", "n_pieces"))
     # fresh session: the session memo is gone, trainer forbidden
     IO._MEMO_FRAMES.clear()
 
@@ -108,9 +109,9 @@ def test_unigram_trained_state_round_trips_fresh_session(spark, tmp_store, monke
         raise AssertionError("trainer must not run on a persisted-state hit")
 
     monkeypatch.setattr(U, "unigram_train_collected", boom)
-    vocab2, seg2 = U.unigram_corpus_trained(spark, SF)
-    assert vocab2 == vocab1
-    assert _rows(seg2.select("tok", "n_pieces")) == want
+    trained = U.unigram_corpus_trained(spark, SF)
+    assert _rows(trained["vocab"]) == want_vocab
+    assert _rows(trained["seg"].select("tok", "n_pieces")) == want
 
 
 def test_residual_index_round_trips_fresh_session(spark, tmp_store, monkeypatch):

@@ -11,12 +11,15 @@ parent's data files BY REFERENCE. Pins:
     exactly the new files' rows, the child manifest lists the parent's
     data files verbatim (zero corpus bytes rewritten), and the newly
     written files hold exactly |batch| rows;
-  * the fingerprint chain is recorded (child -> parent skey), and a
-    THIRD ingest chains onto the second, not the first;
+  * the fingerprint chain is recorded in each version's manifest
+    (child -> parent key), and a THIRD ingest chains onto the second,
+    not the first;
   * a MODIFIED parent file breaks the subset relation -> honest full
     rebuild (lineage parent None);
   * a policy change (different extra_key -> different policy
-    fingerprint) never chains across policies.
+    fingerprint) never chains across policies;
+  * a vacuumed parent: growth chains onto the largest retained subset
+    version, or rebuilds from scratch when none is left.
 """
 
 import os
@@ -54,6 +57,15 @@ def _write_batch(spark, corpus_dir, name, rows):
     shutil.rmtree(tmp)
 
 
+def _lineage():
+    """Manifest key -> lineage record over the minhash family's retained
+    versions: each version's manifest is the one record of what it covers."""
+    st = IO._index_table("minhash_signature")
+    return {
+        m["tag"]: m["lineage"] for m in map(st._read_manifest, st.versions())
+    }
+
+
 @pytest.fixture()
 def store(monkeypatch, tmp_path, fresh_memo):
     monkeypatch.setattr(IO, "INDEX_STORE_ROOT", str(tmp_path / "store"))
@@ -75,8 +87,8 @@ def test_incremental_append_equals_rebuild_and_scales_with_batch(
     # warm the store on the 100-doc parent corpus
     parent = D._minhash_signature(spark, corpus)
     assert parent.count() == 100
-    recs = IO._lineage_records("minhash_signature")
-    assert len(recs) == 1 and recs[0]["parent_skey"] is None
+    recs = _lineage()
+    assert len(recs) == 1 and next(iter(recs.values()))["parent"] is None
 
     # a 10-doc ingest lands as one new file
     _write_batch(spark, corpus, "ingest1", _docs_rows(100, 110))
@@ -117,11 +129,12 @@ def test_incremental_append_equals_rebuild_and_scales_with_batch(
     assert sum(m["rows"] for m in new_meta.values()) == 10
 
     # the fingerprint chain is recorded
-    recs = {r["skey"]: r for r in IO._lineage_records("minhash_signature")}
+    recs = _lineage()
     assert len(recs) == 2
-    child_rec = next(r for r in recs.values() if r["parent_skey"] is not None)
-    assert child_rec["parent_skey"] in recs
-    assert child_rec["n_batch_files"] == 1
+    child_rec = next(r for r in recs.values() if r["parent"] is not None)
+    assert child_rec["parent"] in recs
+    parent_rec = recs[child_rec["parent"]]
+    assert len(child_rec["file_stats"]) - len(parent_rec["file_stats"]) == 1
 
 
 def test_third_ingest_chains_onto_second(spark, tmp_path, store, monkeypatch):
@@ -150,15 +163,12 @@ def test_third_ingest_chains_onto_second(spark, tmp_path, store, monkeypatch):
     assert seen == [5], "third ingest signs only ITS batch"
     assert got.count() == 65
     # chain: gen3 -> gen2 -> gen1 -> None
-    recs = {r["skey"]: r for r in IO._lineage_records("minhash_signature")}
+    recs = _lineage()
     assert len(recs) == 3
     chain = 0
-    k = next(
-        r["skey"] for r in recs.values()
-        if r.get("n_batch_files") == 1 and len(r["file_stats"]) == 3
-    )
-    while recs[k]["parent_skey"] is not None:
-        k = recs[k]["parent_skey"]
+    k = next(key for key, r in recs.items() if len(r["file_stats"]) == 3)
+    while recs[k]["parent"] is not None:
+        k = recs[k]["parent"]
         chain += 1
     assert chain == 2
 
@@ -222,9 +232,8 @@ def test_modified_parent_file_forces_full_rebuild(
     # spy count equals the whole current corpus)
     assert seen == [30]
     assert got.count() == 30
-    recs = IO._lineage_records("minhash_signature")
-    new_rec = [r for r in recs if len(r["file_stats"]) == 2]
-    assert len(new_rec) == 1 and new_rec[0]["parent_skey"] is None
+    new_rec = [r for r in _lineage().values() if len(r["file_stats"]) == 2]
+    assert len(new_rec) == 1 and new_rec[0]["parent"] is None
 
 
 def test_policy_change_never_chains(spark, tmp_path, store, monkeypatch):
@@ -250,3 +259,62 @@ def test_policy_change_never_chains(spark, tmp_path, store, monkeypatch):
     assert seen == [36], "policy change -> full rebuild, no chaining"
     assert got.count() == 36
     assert len(got.columns) == 1 + 4
+
+
+def test_vacuumed_chain_parent_chains_onto_a_retained_version_or_rebuilds(
+    spark, tmp_path, store, monkeypatch
+):
+    """Retention vacuums chain parents like any other version. Growth
+    chains onto the largest RETAINED subset version; with none left it
+    rebuilds from scratch. Both equal the pure build, and vacuum leaves
+    nothing in the family but the manifests and the data files."""
+    monkeypatch.setattr(IO, "_INDEX_KEEP_VERSIONS", 2)
+    corpus = str(tmp_path / "corpus")
+    real = D._minhash_signature_of
+    seen = []
+
+    def spy(docs):
+        seen.append(docs.count())
+        return real(docs)
+
+    def other_corpus(k):
+        # an unrelated corpus publishing into the same family pushes the
+        # chain's versions past the retention edge
+        other = str(tmp_path / f"other{k}")
+        _write_batch(spark, other, f"x{k}", _docs_rows(1000 + 10 * k, 1007 + 10 * k))
+        IO._MEMO_FRAMES.clear()
+        D._minhash_signature(spark, other)
+
+    def grow(name, lo, hi):
+        _write_batch(spark, corpus, name, _docs_rows(lo, hi))
+        IO._MEMO_FRAMES.clear()
+        seen.clear()
+        monkeypatch.setattr(D, "_minhash_signature_of", spy)
+        got = D._minhash_signature(spark, corpus)
+        monkeypatch.setattr(D, "_minhash_signature_of", real)
+        assert _sig_set(got) == _sig_set(real(IO.load_table(spark, corpus, "documents")))
+        return got
+
+    grow("base", 0, 40)  # v0
+    grow("ingest1", 40, 50)  # v1, chained onto v0
+    assert seen == [10]
+    other_corpus(0)  # v2: v0, the root of the chain, is vacuumed
+    st = IO._index_table("minhash_signature")
+    assert st.versions() == [1, 2]
+
+    # v1 is retained: the next ingest still signs only its own batch
+    parent_key = st._read_manifest(1)["tag"]
+    got = grow("ingest2", 50, 55)  # v3
+    assert seen == [5] and got.count() == 55
+    assert _lineage()[st._read_manifest(3)["tag"]]["parent"] == parent_key
+
+    other_corpus(1)  # v4
+    other_corpus(2)  # v5: v3, the only subset version, is vacuumed
+    assert IO._index_table("minhash_signature").versions() == [4, 5]
+    got = grow("ingest3", 55, 58)
+    assert seen == [58] and got.count() == 58  # an honest full rebuild
+    assert [r["parent"] for r in _lineage().values()] == [None, None]
+    assert sorted(os.listdir(os.path.join(store, "minhash_signature"))) == [
+        "_manifests",
+        "data",
+    ]

@@ -170,7 +170,7 @@ def test_nested_entry_pins_survive_either_eviction(spark, fresh_memo, monkeypatc
     idx = S._residual_index(spark, SF)
     want = {n: _rows(df) for n, df in idx.items()}
     ivf_ids = IO._MEMO_FRAMES[_family_key("ivf_cents")][1]
-    assert ivf_ids and ivf_ids <= IO._MEMO_FRAMES[_family_key("residual_index")][1]
+    assert ivf_ids and ivf_ids <= IO._MEMO_FRAMES[_family_key("residual")][1]
     _evict_oldest(spark, monkeypatch, 0)
     assert not any(k[3] == "ivf_cents" for k in IO._MEMO_FRAMES)
     assert ivf_ids <= IO._persistent_rdd_ids(spark)
@@ -179,7 +179,7 @@ def test_nested_entry_pins_survive_either_eviction(spark, fresh_memo, monkeypatc
     # the residual entry goes first: the centroid entry keeps its blocks
     IO._MEMO_FRAMES.clear()
     idx = S._residual_index(spark, SF)
-    res_key = _family_key("residual_index")
+    res_key = _family_key("residual")
     res_entry = IO._MEMO_FRAMES.pop(res_key)
     rest = dict(IO._MEMO_FRAMES)
     IO._MEMO_FRAMES.clear()
