@@ -20,26 +20,6 @@ from pyspark.sql import functions as F
 HI_NIBBLE = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def md5_feature(col: Column, seed: str, width: int = 12) -> Column:
-    """Seeded md5-prefix of a string column; the portable hash family
-    h_seed(x) = md5(seed || '|' || x)[:width]."""
-    return F.substring(F.md5(F.concat(F.lit(seed + "|"), col)), 1, width)
-
-
-def md5_feature_sql(expr: str, seed: str, width: int = 12) -> str:
-    return f"substr(md5('{seed}|' || {expr}), 1, {width})"
-
-
-def minhash_agg(col: Column, seed: str, width: int = 12) -> Column:
-    """MinHash component: min over the seeded hash of a token column.
-    Lexicographic min of fixed-width hex == numeric min."""
-    return F.min(md5_feature(col, seed, width))
-
-
-def minhash_agg_sql(expr: str, seed: str, width: int = 12) -> str:
-    return f"min({md5_feature_sql(expr, seed, width)})"
-
-
 # ---------------------------------------------------------------------------
 # Universal-hash MinHash family: ONE md5 per token, k affine derivations.
 #
@@ -92,15 +72,10 @@ def simhash_bit_sql(md5_expr: str, bit: int) -> str:
 BIT2_NIBBLE = ("4", "5", "6", "7", "c", "d", "e", "f")
 
 
-def simhash_bit2(md5_col: Column, pos: int) -> Column:
+def simhash_bit2_sql(md5_expr: str, pos: int) -> str:
     """+1/-1 from the second-highest bit of nibble ``pos`` (1..32) of a
-    precomputed md5 hex column — together with :func:`simhash_bit` this
+    precomputed md5 hex expression — with :func:`simhash_bit_sql` this
     yields 64 independent decisions from one 32-digit md5, so a 64-bit
     SimHash still hashes each token exactly once."""
-    nibble = F.substring(md5_col, pos, 1)
-    return F.when(nibble.isin(*BIT2_NIBBLE), 1).otherwise(-1)
-
-
-def simhash_bit2_sql(md5_expr: str, pos: int) -> str:
     b2 = ", ".join(f"'{c}'" for c in BIT2_NIBBLE)
     return f"CASE WHEN substr({md5_expr}, {pos}, 1) IN ({b2}) THEN 1 ELSE -1 END"

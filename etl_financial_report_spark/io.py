@@ -8,11 +8,15 @@ mainTesting.py:414-431 — SURVEY.md §4).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .schemas import DRIVER_TABLES
+
+log = logging.getLogger(__name__)
 
 TABLES = tuple(DRIVER_TABLES)
 
@@ -91,8 +95,27 @@ def scan_scatter(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     return max(2, par) if est_splits < par else None
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+def driver_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A frame over driver-resident ``rows`` (tuples in ``schema`` order)
+    whose analyzed plan is a ``LocalRelation`` and whose schema is the DDL
+    ``schema``, nullability included.
+
+    ``createDataFrame(list, ddl)`` goes through ``parallelize``, so its
+    frame is a Python-RDD-backed ``LogicalRDD`` and every job that reads
+    it runs Python-worker tasks. A ``pyarrow.Table`` crosses to the JVM as
+    one Arrow stream instead and lands as a local relation: building it
+    runs no job, and reading it is JVM-only (broadcast, collect and
+    sinks alike)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def table_size_bytes(sf_dir: str, name: str) -> int:
@@ -237,6 +260,9 @@ def _persistent_rdd_ids(spark: SparkSession) -> frozenset:
         return frozenset()
 
 
+_STATS_RESET_WARNED = False
+
+
 def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` plus a fresh-stats rebuild, for ITERATIVE loops.
 
@@ -254,7 +280,10 @@ def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     (zero data movement, same pinned blocks) drops the carried estimate
     back to defaultSizeInBytes, so loop-frame estimates stay bounded per
     round instead of compounding across rounds. Falls back to the plain
-    checkpoint if the (stable-in-practice) internal constructor moves."""
+    checkpoint, with a one-time warning, if the (stable-in-practice)
+    internal constructor moves: results are the same, but loop planning
+    time compounds again."""
+    global _STATS_RESET_WARNED
     ck = df.localCheckpoint()
     spark = df.sparkSession
     try:
@@ -262,7 +291,15 @@ def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
             ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
         )
         return DataFrame(jdf, spark)
-    except Exception:
+    except Exception as e:
+        if not _STATS_RESET_WARNED:
+            _STATS_RESET_WARNED = True
+            log.warning(
+                "stats_reset_checkpoint: internalCreateDataFrame unavailable (%s); "
+                "falling back to the plain localCheckpoint, whose carried size "
+                "estimate compounds across loop rounds",
+                e,
+            )
         return ck
 
 

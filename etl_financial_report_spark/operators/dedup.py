@@ -997,16 +997,20 @@ FROM walk
 GROUP BY node
 """,
     doc=(
-        "Near-dup clusters from the MinHash-LSH pair graph via graph "
-        "contraction (component id = smallest reachable doc_id): each "
-        "round hooks every live component to its min neighbor component, "
-        "compresses that component-sized pointer table by doubling, and "
-        "contracts the edge graph through it, so rounds scale with LOG "
-        "of the component count regardless of diameter or id ordering "
-        "and per-round cost shrinks with the contracted graph. Lineage "
-        "is truncated per round with localCheckpoint so 100 TB runs "
-        "don't accumulate a deep DAG. The oracle is the recursive-CTE "
-        "transitive closure of the same graph."
+        "Near-dup clusters from the MinHash-LSH pair graph (component id "
+        "= smallest reachable doc_id). One bounded collect probes the "
+        "pair graph; when it fits the driver (DRIVER_CC_MAX_EDGES), "
+        "union-find by minimum id finishes it there and the mapping "
+        "comes back as a job-free local relation. A larger graph runs "
+        "distributed contraction rounds first: each hooks every live "
+        "component to its min neighbor component, compresses that "
+        "component-sized pointer table by doubling and contracts the "
+        "edge graph through it, so rounds scale with LOG of the "
+        "component count regardless of diameter or id ordering, until "
+        "the contracted graph fits the driver. Lineage is truncated per "
+        "round with localCheckpoint so 100 TB runs don't accumulate a "
+        "deep DAG. The oracle is the recursive-CTE transitive closure of "
+        "the same graph."
     ),
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1019,6 +1023,31 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: forest halves per jump, so 2^30 covers any realistic descending chain
 MAX_CC_COMPRESS_JUMPS = 30
 
+#: largest component-edge graph finished on the driver: 2^16 edges of two
+#: ids each is a few MB of Python objects, and union-find over it is tens
+#: of milliseconds — well under the cost of one distributed round
+DRIVER_CC_MAX_EDGES = 1 << 16
+
+
+def _union_find_min(edges) -> dict:
+    """node -> smallest node id in its connected component, for every
+    node of ``edges`` (pairs of ids). Union by minimum root keeps every
+    root its set's minimum; path halving keeps finds near-constant."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
 
 def min_label_components(
     pairs: DataFrame,
@@ -1027,54 +1056,53 @@ def min_label_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
 ) -> DataFrame:
-    """Connected components of an undirected pair graph by graph
-    CONTRACTION (component id = smallest reachable node id). The r6 x100
-    smoke falsified two weaker schemes in turn: plain min-label
-    propagation needs diameter rounds (a 63-link chain of lag-rotated
-    embeddings blew the 20-round cap), and per-node pointer jumping
-    doesn't fix it because hooking stays node-local — a boundary node
-    adopts the smaller neighbor label but its component ROOT is never
-    hooked, so minima still crawl hop-by-hop (measured: 20+ rounds with
-    a 2-4x/round time blowup on the 183k-node x100 pair graph).
+    """Connected components of an undirected pair graph (component id =
+    smallest reachable node id): graph CONTRACTION on the cluster until
+    the live component-edge graph fits the driver, then union-find there.
 
-    Contraction instead works on the COMPONENT-level edge graph, which
-    shrinks every round:
+    Every round first probes the live edges with ONE bounded collect of
+    at most DRIVER_CC_MAX_EDGES + 1 rows. When the graph fits, union-find
+    by minimum id finishes it on the driver, and the result comes back
+    as driver rows (``io.driver_frame``, a job-free local relation):
+    before any distributed round that is the whole node mapping; after
+    one, it is a (component, pc) pointer table the rewrite chain joins
+    once. Only a graph above the bound runs a distributed round:
       1. each live component points at its smallest neighbor component;
       2. that pointer table (one row per component, << nodes) is
          compressed to a fixed point by pointer doubling;
-      3. the node->component mapping is rewritten through it (one
-         node-sized join per round);
+      3. the node->component mapping is rewritten through it (a lazy
+         join per round);
       4. the component edges are contracted through it (self-loops drop,
-         duplicates merge) — convergence is simply "no edges left".
+         duplicates merge).
     Descending pointer runs end in local minima, so at least half the
     live components merge away per round: rounds = O(log #components)
-    regardless of diameter or id ordering (the x100 graph converges in 5
-    rounds where node-local jumping was still churning at 20). Pointers
-    only ever decrease, so the final label is the component minimum.
-    Lineage truncates per round via localCheckpoint so 100 TB runs don't
-    accumulate a deep DAG, and per-round cost SHRINKS with the
-    contracted graph. ``nodes`` supplies the full id universe — isolated
-    nodes skip the loop and come back as their own singleton component.
-    Shared by the text pair graph (dedup_components) and the embedding
-    pair graph (dedup_semantic_keep_list)."""
-    # materialize the pair graph ONCE — the contraction loop rewrites it
-    # per round, and without this the upstream candidate pipeline would
-    # re-run per iteration (measured 3.5x slower at sf0.1)
-    from ..io import stats_reset_checkpoint
+    regardless of diameter or id ordering (Kiveris et al., SoCC 2014).
+    The r6 x100 smoke falsified the weaker schemes this replaced: plain
+    min-label propagation needs diameter rounds (a 63-link chain of
+    lag-rotated embeddings blew the 20-round cap), and per-node pointer
+    jumping let minima crawl hop by hop under adversarial id ordering.
+    Pointers only ever decrease, so the final label is the component
+    minimum. Lineage truncates per round via localCheckpoint, and the
+    per-round cost shrinks with the contracted graph. ``nodes`` supplies
+    the full id universe: isolated nodes skip the loop and come back as
+    their own singleton component. Shared by the text pair graph
+    (dedup_components) and the embedding pair graph
+    (dedup_semantic_keep_list)."""
+    # materialize the pair graph ONCE — the probe and every distributed
+    # round read it, and without this the upstream candidate pipeline
+    # would re-run per read (measured 3.5x slower at sf0.1)
+    from ..io import driver_frame, stats_reset_checkpoint
 
+    spark = pairs.sparkSession
     cedges = stats_reset_checkpoint(
         pairs.select(F.col(a_col).alias("ca"), F.col(b_col).alias("cb"))
         .where(F.col("ca") != F.col("cb"))
         .distinct()
     )
+    id_type = cedges.schema["ca"].dataType.simpleString()
     # node -> current component; only nodes with an edge ever change, so
     # the mapping covers members only and isolated nodes skip the loop
-    members = (
-        cedges.select(F.col("ca").alias(id_col))
-        .unionAll(cedges.select(F.col("cb").alias(id_col)))
-        .distinct()
-    )
-    mapping = members.select(id_col, F.col(id_col).alias("component"))
+    mapping = None
 
     def _double(t: DataFrame) -> DataFrame:
         """One pointer-doubling step pc <- pc(pc) as a LAZY plan over a
@@ -1096,9 +1124,44 @@ def min_label_components(
             )
         )
 
+    def _rewrite(mapping: DataFrame, ptr: DataFrame) -> DataFrame:
+        """The node mapping through one (c, pc) pointer table — LAZILY
+        (r15): each pointer table is a component-sized leaf, so the
+        rewrite chain composes into the final plan with no per-round
+        node-sized materialization."""
+        return mapping.join(
+            ptr.select(F.col("c").alias("component"), "pc"), "component", "left"
+        ).select(
+            id_col,
+            F.coalesce(F.col("pc"), F.col("component")).alias("component"),
+        )
+
     for _ in range(MAX_CC_ITERATIONS):
-        if cedges.isEmpty():
+        # one job at any partition count: coalesce(1) keeps CollectLimit
+        # from scaling its scan up over the partitions job by job
+        head = cedges.coalesce(1).limit(DRIVER_CC_MAX_EDGES + 1).collect()
+        if len(head) <= DRIVER_CC_MAX_EDGES:
+            roots = sorted(_union_find_min(head).items())
+            if mapping is None:
+                # the whole graph fit: the mapping IS the driver rows
+                mapping = driver_frame(
+                    spark, roots, f"{id_col} {id_type}, component {id_type}"
+                )
+                break
+            if roots:
+                ptr = driver_frame(spark, roots, f"c {id_type}, pc {id_type}")
+                mapping = _rewrite(mapping, ptr)
+            # ONE node-sized materialization for the whole loop (the
+            # isolated anti-join and the union both consume the chain)
+            mapping = mapping.localCheckpoint()
             break
+        if mapping is None:
+            mapping = (
+                cedges.select(F.col("ca").alias(id_col))
+                .unionAll(cedges.select(F.col("cb").alias(id_col)))
+                .distinct()
+                .select(id_col, F.col(id_col).alias("component"))
+            )
         # 1. hook every live component to its smallest neighbor component
         sym = cedges.unionAll(
             cedges.select(F.col("cb").alias("ca"), F.col("ca").alias("cb"))
@@ -1131,17 +1194,9 @@ def min_label_components(
             raise RuntimeError(
                 f"pointer compression did not flatten in {MAX_CC_COMPRESS_JUMPS} jumps"
             )
-        # 3. rewrite the node mapping through the compressed pointers —
-        # LAZILY (r15): each round's ptr is a checkpointed component-
-        # sized leaf, so the rewrite chain composes into the final plan
-        # and the per-round node-sized materialization job disappears
-        mapping = mapping.join(
-            ptr.select(F.col("c").alias("component"), "pc"), "component", "left"
-        ).select(
-            id_col,
-            F.coalesce(F.col("pc"), F.col("component")).alias("component"),
-        )
-        # 4. contract the component edges; the loop ends when none remain
+        # 3. rewrite the node mapping through the compressed pointers
+        mapping = _rewrite(mapping, ptr)
+        # 4. contract the component edges
         ca_m = ptr.select(F.col("c").alias("ca"), F.col("pc").alias("ca_new"))
         cb_m = ptr.select(F.col("c").alias("cb"), F.col("pc").alias("cb_new"))
         cedges = stats_reset_checkpoint(
@@ -1153,9 +1208,6 @@ def min_label_components(
         )
     else:
         raise RuntimeError(f"label propagation did not converge in {MAX_CC_ITERATIONS} rounds")
-    # ONE node-sized materialization for the whole loop (the isolated
-    # anti-join and the union both consume the rewrite chain)
-    mapping = mapping.localCheckpoint()
     isolated = nodes.join(mapping, id_col, "left_anti").select(
         id_col, F.col(id_col).alias("component")
     )

@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import driver_frame, load_table
 from ..registry import register
 from .windows import NOTE_PATTERN  # noqa: E402
 from .ingest import (
@@ -172,10 +172,11 @@ WHERE NOT EXISTS (
     ),
 )
 def pipeline_statement_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    gi = spark.createDataFrame(GI_ROWS, "file_id string, row_no int, label string, value string")
+    gi = driver_frame(spark, GI_ROWS, "file_id string, row_no int, label string, value string")
     meta = extract_metadata(gi)
     facts = statement_facts(_synthetic_statement_lines(spark, sf_dir), meta)
-    existing = spark.createDataFrame(
+    existing = driver_frame(
+        spark,
         [("BBNI", 2022, 2, "Laporan Neraca")],
         "kode_emiten string, tahun int, quartal int, grup_laporan_keuangan string",
     )
@@ -272,7 +273,7 @@ FROM (SELECT * FROM updated UNION ALL SELECT * FROM inserts)
     ),
 )
 def pipeline_notes_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    gi = spark.createDataFrame(GI_ROWS, "file_id string, row_no int, label string, value string")
+    gi = driver_frame(spark, GI_ROWS, "file_id string, row_no int, label string, value string")
     meta = extract_metadata(gi)
     facts = statement_facts(_synthetic_statement_lines(spark, sf_dir), meta).cache()
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.topk import topk_per_key
-from ..io import load_table
+from ..io import driver_frame, load_table
 from ..registry import register
 
 #: a token is "rare" when it covers < 1% of the corpus token stream —
@@ -1599,7 +1599,7 @@ def _qc_bars(spark: SparkSession, scored: DataFrame) -> tuple[DataFrame, DataFra
     # probed deciles come from QC_SWEEP_DECILES — the SAME constant the
     # oracle SQL interpolates — so editing it can never desynchronize the
     # engine twins (ADVICE r12: this side hardcoded range(1, 10))
-    ks = spark.createDataFrame([(int(k),) for k in QC_SWEEP_DECILES], "k long")
+    ks = driver_frame(spark, [(int(k),) for k in QC_SWEEP_DECILES], "k long")
     targets = ks.crossJoin(F.broadcast(stats)).select(
         "k", F.greatest(F.expr("(k * n) DIV 10"), F.lit(1)).alias("rnk")
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.finance import money9, as_double, money, net_price
-from ..io import load_table
+from ..io import driver_frame, load_table
 from ..registry import register
 
 # --------------------------------------------------------------------------
@@ -117,7 +117,7 @@ GROUP BY kw.kw
 )
 def j1_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    kw = spark.createDataFrame(_KEYWORDS, "kw string, lang string")
+    kw = driver_frame(spark, _KEYWORDS, "kw string, lang string")
     return (
         docs.join(F.broadcast(kw), (docs.lang == kw.lang) & F.col("text").contains(F.col("kw")))
         .groupBy("kw")

@@ -29,7 +29,7 @@ from ..functions.vectors import (
     sign_bucket_sql,
 )
 from ..functions.hashing import hash32, hash32_sql
-from ..io import load_table, table_row_count, table_size_bytes
+from ..io import driver_frame, load_table, table_row_count, table_size_bytes
 from ..session import parse_bytes_conf
 from ..registry import register
 
@@ -693,9 +693,7 @@ def agg_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     if d == 0:
         # no vectors (or only empty ones): there are no per-dim columns
         # to generate and no rows to sum, so skip the Arrow pass
-        return spark.createDataFrame(
-            [], "label int, n_vectors long, centroid_sums string"
-        )
+        return driver_frame(spark, [], "label int, n_vectors long, centroid_sums string")
 
     def partials(batches):
         import numpy as np
@@ -1065,18 +1063,6 @@ def _exact_groups_of(qv: DataFrame) -> DataFrame:
     once, not per consumer."""
     return qv.groupBy("qe").agg(
         F.min("vec_id").alias("rep_id"), F.count(F.lit(1)).alias("group_n")
-    )
-
-
-def exact_vector_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, rep_id, group_n): exact-duplicate collapse on the
-    quantized vector — one content-keyed shuffle (the dedup_exact shape),
-    after which every downstream stage sees DISTINCT vectors only. The
-    representative is the group-min vec_id; members re-attach via star
-    edges in the pair path."""
-    qv = _quantized(spark, sf_dir)
-    return qv.select("vec_id", "qe").join(_exact_groups_of(qv), "qe").select(
-        "vec_id", "rep_id", "group_n"
     )
 
 
@@ -1559,7 +1545,7 @@ FROM comp c JOIN sizes s ON s.component = c.component
     doc=(
         "SemDeDup end-to-end (Abbas et al. '23 shape): the collapse+"
         "split+probe pair certificate above the semantic-dup bar -> "
-        "connected components via the shared min-label propagation "
+        "connected components via the shared min_label_components "
         "(operators/dedup.py) -> a per-vector keep manifest (canonical = "
         "smallest vec_id per cluster) with cluster sizes from a "
         "two-phase groupBy+join. This is the embedding twin of "
@@ -1569,8 +1555,10 @@ FROM comp c JOIN sizes s ON s.component = c.component
         "edges, hot-bucket members through anchor probes (the skew smoke "
         "pins a 20,002-copy mega-group landing as ONE component with "
         "zero dropped rows). Compute is O(sum live-bucket^2) + O(groups "
-        "+ probes), rounds = cluster diameter; the oracle is the "
-        "recursive-CTE closure of the same thresholded pair graph."
+        "+ probes); components finish on the driver when the pair graph "
+        "fits it, after O(log #components) contraction rounds otherwise. "
+        "The oracle is the recursive-CTE closure of the same thresholded "
+        "pair graph."
     ),
 )
 def dedup_semantic_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4369,7 +4357,7 @@ def sample_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # zero conforming nonzero vectors: degrade to the empty pick list
         # exactly like the oracle's empty-pk chain (ADVICE r11 — the old
         # [0] crashed here while DuckDB returned fewer rows)
-        return spark.createDataFrame([], out_schema)
+        return driver_frame(spark, [], out_schema)
     picked = [(0, int(seed["vec_id"]), None)]
     sel_ids = {int(seed["vec_id"])}
     p_qe, p_nsq = list(seed["qe"]), int(seed["nsq"])
@@ -4413,7 +4401,7 @@ def sample_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
             mc = mc.select(
                 "vec_id", "qe", "nsq", F.greatest(F.col("mc"), newcos).alias("mc")
             )
-    return spark.createDataFrame(picked, out_schema)
+    return driver_frame(spark, picked, out_schema)
 
 
 # ------------------------------------------------- cluster-balanced sampling

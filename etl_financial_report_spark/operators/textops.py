@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.topk import topk_per_key
-from ..io import load_table
+from ..io import driver_frame, load_table
 from ..registry import register
 
 #: deterministic marker-word sets for the language-ID heuristic. With real
@@ -1008,7 +1008,8 @@ def _bpe_chain(
             # window base, so the stopped state never contains a merge
             # past the stop point; pin it as the next window's base
             for row in kept:
-                lit = spark.createDataFrame(
+                lit = driver_frame(
+                    spark,
                     [(row["l"], row["r"], row["cnt"])],
                     "l string, r string, cnt long",
                 )

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import driver_frame, load_table
 from ..registry import register
 
 UNIGRAM_MAX_WORD = 12
@@ -162,11 +162,7 @@ def _piece_scored_words(
     shuffle, bounded by the DISTINCT-word table times a constant, never
     by the corpus or the vocabulary."""
     spark = words.sparkSession
-    vdf = spark.createDataFrame(
-        sorted(vocab.items()) or [("", 0)], "piece string, pscore long"
-    )
-    if not vocab:
-        vdf = vdf.where(F.lit(False))
+    vdf = driver_frame(spark, sorted(vocab.items()), "piece string, pscore long")
     cand_arr = F.flatten(
         F.transform(
             F.sequence(F.lit(1), F.length("tok")),
@@ -360,8 +356,8 @@ def unigram_corpus_trained(spark: SparkSession, sf_dir: str) -> dict:
             *[F.lit(x) for i, p in enumerate(sorted(vocab2)) for x in (p, i + 1)]
         )
         return {
-            "vocab": spark.createDataFrame(
-                sorted(vocab2.items()), "piece string, score long"
+            "vocab": driver_frame(
+                spark, sorted(vocab2.items()), "piece string, score long"
             ),
             "seg": seg.withColumn(
                 "wid",
@@ -511,9 +507,7 @@ def unigram_train_output(
     (streaming/runtime.run_unigram_train_stream), so stream-vs-batch
     agreement is agreement of the WORD TABLES alone."""
     vocab2, seg2 = unigram_train_collected(words, max_piece, seed_k, keep_k)
-    vdf = spark.createDataFrame(
-        sorted(vocab2.items()), "piece string, vocab_score long"
-    )
+    vdf = driver_frame(spark, sorted(vocab2.items()), "piece string, vocab_score long")
     return vdf.join(unigram_usage(seg2), "piece", "left").select(
         "piece",
         F.length("piece").cast("int").alias("piece_len"),

@@ -15,8 +15,3 @@ def formatted_plan(df: DataFrame) -> str:
     spark = df.sparkSession
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)
-
-
-def count_occurrences(plan: str, node: str) -> int:
-    """How many times a physical node name appears in a formatted plan."""
-    return plan.count(node)

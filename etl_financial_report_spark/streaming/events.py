@@ -43,14 +43,6 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def streaming_tumbling_counts(spark: SparkSession, events_path: str, watermark: str = "10 minutes") -> DataFrame:
-    """The same plan on a streaming source with late-data handling."""
-    from ..schemas import EVENTS
-
-    stream = spark.readStream.schema(EVENTS).parquet(events_path).withWatermark("ts", watermark)
-    return tumbling_counts(stream)
-
-
 # ----------------------------------------------------------------- queries
 
 
@@ -131,14 +123,6 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-
-
-def dedupe_events(events: DataFrame) -> DataFrame:
-    """Exactly-once semantics on the event stream: drop repeated
-    event_ids. Batch: dropDuplicates; streaming:
-    dropDuplicatesWithinWatermark (the J3 idempotency guard as stream
-    state, SURVEY.md §2.8)."""
-    return events.dropDuplicates(["event_id"])
 
 
 @register(

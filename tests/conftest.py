@@ -1,9 +1,11 @@
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this suite lives in, never another copy of the package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Test sessions default to 8 cores (optimization r15, driver test
 # budget): at test scale (sf0.001 + synthetic frames) per-query time is

@@ -4,6 +4,7 @@ and recursive table metadata (a partitioned layout must never silently
 undercount to 0 and shrink derived plan parameters)."""
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -86,7 +87,7 @@ def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch, fresh_memo):
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/index_store_report.py",
+            str(Path(__file__).resolve().parents[1] / "tools" / "index_store_report.py"),
             "--root",
             str(tmp_path / "store"),
             "--json",
@@ -121,3 +122,41 @@ def test_stats_reset_checkpoint_drops_the_carried_size_estimate(spark):
     reset = stats_reset_checkpoint(df)
     assert size(reset) == default
     assert sorted(tuple(r) for r in reset.collect()) == [(i, 2 * i) for i in range(1000)]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [[("a", 1, None), ("b", 2, 0.5)], []],
+    ids=["rows", "empty"],
+)
+def test_driver_frame_is_a_local_relation_with_the_ddl_schema(spark, rows):
+    """Driver rows become a job-free ``LocalRelation`` (no Python RDD
+    behind the frame) whose schema is the DDL, nullability included."""
+    from pyspark.sql.types import StructType
+
+    from etl_financial_report_spark.io import driver_frame
+
+    ddl = "k string, n int NOT NULL, x double"
+    df = driver_frame(spark, rows, ddl)
+    assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    assert df.schema == StructType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_stats_reset_checkpoint_fallback_warns_once(spark, monkeypatch, caplog):
+    """When the internal constructor is missing, the plain checkpoint is
+    served (same rows) and one warning says the estimate now compounds."""
+    import etl_financial_report_spark.io as IO
+
+    def missing(*_a):
+        raise AttributeError("internalCreateDataFrame")
+
+    monkeypatch.setattr(IO, "DataFrame", missing)
+    monkeypatch.setattr(IO, "_STATS_RESET_WARNED", False)
+    df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    with caplog.at_level("WARNING", logger=IO.__name__):
+        outs = [IO.stats_reset_checkpoint(df) for _ in range(2)]
+    for out in outs:
+        assert sorted(tuple(r) for r in out.collect()) == [(i, 2 * i) for i in range(10)]
+    warned = [r for r in caplog.records if "stats_reset_checkpoint" in r.getMessage()]
+    assert len(warned) == 1

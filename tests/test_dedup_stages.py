@@ -5,6 +5,8 @@ tests prove pair-driven semantics (a non-candidate dup pair must NOT appear
 in the output even though its docs share every token); the plan pin lives
 in tests/test_plans.py::test_lsh_verified_token_join_is_pair_driven."""
 
+import pytest
+
 from etl_financial_report_spark.operators.dedup import (
     containment,
     distinct_tokens,
@@ -123,7 +125,24 @@ def test_simhash64_manku_tables_recall_equals_single_block_pigeonhole(spark):
     assert len(truth) > 0  # the corpus does contain near-dup signatures
 
 
-def test_min_label_components_long_chain_converges_logarithmically(spark, monkeypatch):
+#: DRIVER_CC_MAX_EDGES settings for the component tests: the default
+#: finishes these small graphs on the driver before any round, 4 runs
+#: distributed rounds and hands the contracted graph to the driver mid-
+#: loop, and 0 keeps every round distributed, as every graph was before
+#: the driver finish existed
+_CC_BOUNDS = [pytest.param(None, id="default"), 4, 0]
+
+
+def _with_bound(monkeypatch, bound):
+    import etl_financial_report_spark.operators.dedup as D
+
+    if bound is not None:
+        monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", bound)
+    return D
+
+
+@pytest.mark.parametrize("bound", _CC_BOUNDS)
+def test_min_label_components_long_chain_converges_logarithmically(spark, monkeypatch, bound):
     """The x100 smoke falsified the "near-dup clusters are shallow"
     assumption with a 63-link chain (lag-rotated embeddings); pin the fix
     here cheaply: graph contraction must converge a 63-link chain under a
@@ -131,8 +150,7 @@ def test_min_label_components_long_chain_converges_logarithmically(spark, monkey
     labels must be the true transitive closure plus untouched singletons."""
     from pyspark.sql import functions as F
 
-    import etl_financial_report_spark.operators.dedup as D
-
+    D = _with_bound(monkeypatch, bound)
     monkeypatch.setattr(D, "MAX_CC_ITERATIONS", 10)
     n = 64
     pairs = spark.createDataFrame(
@@ -151,7 +169,8 @@ def test_min_label_components_long_chain_converges_logarithmically(spark, monkey
     assert got[999] == 999
 
 
-def test_min_label_components_adversarial_ordering_converges(spark, monkeypatch):
+@pytest.mark.parametrize("bound", _CC_BOUNDS)
+def test_min_label_components_adversarial_ordering_converges(spark, monkeypatch, bound):
     """The scheme contraction replaced (node-local pointer jumping) was
     falsified at x100 not by chain LENGTH but by adversarial id ORDERING:
     minima crawl when hooking never reaches component roots. Pin the
@@ -161,9 +180,16 @@ def test_min_label_components_adversarial_ordering_converges(spark, monkeypatch)
     (ceil(log2(256)) = 8 plus margin; plain propagation needs ~256)."""
     from pyspark.sql import functions as F
 
-    import etl_financial_report_spark.operators.dedup as D
-
+    D = _with_bound(monkeypatch, bound)
     monkeypatch.setattr(D, "MAX_CC_ITERATIONS", 12)
+    finished = []
+    union_find = D._union_find_min
+
+    def recording(edges):
+        finished.append(list(edges))
+        return union_find(finished[-1])
+
+    monkeypatch.setattr(D, "_union_find_min", recording)
     n = 256
     # fixed LCG permutation of 0..n-1 (full period for m=2^k, c odd,
     # a ≡ 1 mod 4): deterministic, order-scrambled ids along the chain
@@ -182,6 +208,55 @@ def test_min_label_components_adversarial_ordering_converges(spark, monkeypatch)
     }
     assert len(got) == n
     assert all(got[i] == 0 for i in range(n))
+    # the driver finished the whole graph, a contracted remainder after
+    # distributed rounds, or (bound 0) only the empty graph they left
+    assert [len(e) for e in finished] == [{None: n - 1, 4: 3, 0: 0}[bound]]
+
+
+@pytest.mark.parametrize("bound", _CC_BOUNDS)
+def test_min_label_components_without_edges_is_all_singletons(spark, monkeypatch, bound):
+    """No pair survives (or none exists): every node is its own
+    component, on every path."""
+    from pyspark.sql import functions as F
+
+    D = _with_bound(monkeypatch, bound)
+    pairs = spark.createDataFrame([(5, 5)], "doc_a long, doc_b long")  # self-loop only
+    nodes = spark.range(6).select(F.col("id").alias("doc_id"))
+    out = D.min_label_components(pairs, nodes)
+    assert sorted(tuple(r) for r in out.collect()) == [(i, i) for i in range(6)]
+    assert out.schema.simpleString() == "struct<doc_id:bigint,component:bigint>"
+
+
+#: jobs dedup_components submits at sf0.001 over memoized pairs (measured)
+DEDUP_COMPONENTS_MAX_JOBS = 6
+
+
+def test_dedup_components_job_count_is_pinned(spark, sf_dir, fresh_memo):
+    """dedup_components at sf0.001 over memoized pairs: the pair-graph
+    checkpoint, ONE bounded probe that finishes the graph on the driver,
+    and the sink (6 jobs measured). With every contraction round on the
+    cluster, each round cost checkpoints plus isEmpty probes: 26 jobs
+    measured the same way. A new per-round round trip fails the cap."""
+    from etl_financial_report_spark.io import load_table
+    from etl_financial_report_spark.operators.dedup import (
+        dedup_components,
+        dedup_minhash_lsh_pairs,
+    )
+
+    sc = spark.sparkContext
+    dedup_minhash_lsh_pairs(spark, sf_dir).count()  # warm the memo
+    group = "dedup-components-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = dedup_components(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store fills async
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == load_table(spark, sf_dir, "documents").count()
+    assert len(jobs) <= DEDUP_COMPONENTS_MAX_JOBS, [
+        sc._jsc.sc().statusStore().job(j).name() for j in jobs
+    ]
 
 
 def test_funnel_semantic_certificate_reroots_on_survivors(spark, tmp_path):

@@ -20,6 +20,7 @@ constants still have their dense rows); the spikes are appended on top.
 import json
 import os
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,7 +29,7 @@ from etl_financial_report_spark import registry
 from etl_financial_report_spark.io import TABLES, load_table
 
 SRC_SF = "/root/testdata/sf0.001"
-ARTIFACT = "/root/repo/HOSTILE_SWEEP.json"
+ARTIFACT = str(Path(__file__).resolve().parents[1] / "HOSTILE_SWEEP.json")
 
 pytestmark = pytest.mark.slow
 

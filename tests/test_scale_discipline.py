@@ -15,7 +15,7 @@ from pathlib import Path
 
 import pytest
 
-PKG = Path("/root/repo/etl_financial_report_spark")
+PKG = Path(__file__).resolve().parents[1] / "etl_financial_report_spark"
 
 #: files allowed to call .collect() (documented driver-side operations)
 ALLOWED_COLLECT = {
@@ -38,6 +38,10 @@ ALLOWED_COLLECT = {
     # plus the persisted-index hit path re-collecting the stored vocab
     # table (UNIGRAM_KEEP_K + alphabet rows, same bound as the trainer)
     "operators/unigram.py": 3,
+    # min_label_components: one bounded probe per contraction round of at
+    # most DRIVER_CC_MAX_EDGES + 1 component-edge rows (a fixed constant,
+    # never corpus-scaled); a graph that fits finishes on the driver
+    "operators/dedup.py": 1,
     # _modal_dim: the embedding conformance gate's 1-ROW modal-dimension
     # collect, memoized per (sf_dir, embeddings mtime) — one tiny
     # size-histogram job per process (the io footer-cache pattern; a

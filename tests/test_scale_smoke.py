@@ -18,6 +18,7 @@ just a timing loop.
 import json
 import os
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from etl_financial_report_spark.plans import formatted_plan
 SRC_SF = "/root/testdata/sf0.1"
 REPLICAS = 10
 ID_OFFSET = 10_000_000
-ARTIFACT = "/root/repo/SCALE_SMOKE.json"
+ARTIFACT = str(Path(__file__).resolve().parents[1] / "SCALE_SMOKE.json")
 
 pytestmark = pytest.mark.slow
 

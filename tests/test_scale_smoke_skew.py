@@ -46,6 +46,7 @@ counts to the engineered cluster sizes, not just "> 0".
 import json
 import math
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,7 +55,7 @@ from etl_financial_report_spark import registry
 from etl_financial_report_spark.io import TABLES, load_table
 
 SRC_SF = "/root/testdata/sf0.1"
-ARTIFACT = "/root/repo/SCALE_SMOKE_SKEW.json"
+ARTIFACT = str(Path(__file__).resolve().parents[1] / "SCALE_SMOKE_SKEW.json")
 
 N_BASE_DOCS = 5000
 BG_REPLICAS = 20

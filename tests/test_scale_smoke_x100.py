@@ -25,6 +25,7 @@ memory config (a failed task fails the query loudly).
 import json
 import os
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,8 +38,9 @@ SRC_SF = "/root/testdata/sf0.1"
 REPLICAS = 100
 IDENTICAL = 10  # replicas 0-9 stay exact copies; 10-99 are mutated
 ID_OFFSET = 10_000_000
-ARTIFACT = "/root/repo/SCALE_SMOKE_X100.json"
-X10_ARTIFACT = "/root/repo/SCALE_SMOKE.json"
+ROOT = Path(__file__).resolve().parents[1]
+ARTIFACT = str(ROOT / "SCALE_SMOKE_X100.json")
+X10_ARTIFACT = str(ROOT / "SCALE_SMOKE.json")
 N_BASE_DOCS = 5000
 N_BASE_VECS = 2000
 
@@ -260,6 +262,26 @@ def test_components_x100(spark, sf10_dir, smoke_record):
     assert n == n_docs
     n_components = df.select("component").distinct().count()
     assert n_components <= n_docs - N_BASE_DOCS * (IDENTICAL - 1)
+
+
+def test_components_with_tiny_driver_bound_x100(spark, sf10_dir, monkeypatch):
+    """Both component graphs here fit or shrink to the driver bound, so
+    the default run finishes them on the driver; with the bound at 4
+    edges the distributed contraction rounds carry the graph almost to
+    the end. Both paths must give the same rows."""
+    import etl_financial_report_spark.operators.dedup as D
+
+    def digest(name):
+        df = registry.all_queries()[name].fn(spark, sf10_dir)
+        h = F.xxhash64(*df.columns)
+        return tuple(
+            df.agg(F.count(F.lit(1)), F.bit_xor(h), F.sum(h % 1_000_000_007)).first()
+        )
+
+    names = ("dedup_components", "dedup_semantic_keep_list")
+    want = {n: digest(n) for n in names}
+    monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", 4)
+    assert {n: digest(n) for n in names} == want
 
 
 def test_lsh_verified_x100(spark, sf10_dir, smoke_record):

@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import math
 import sys
+from pathlib import Path
 import time
 from datetime import date, datetime
 from decimal import Decimal
@@ -27,7 +28,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_financial_report_spark import registry  # noqa: E402
 from etl_financial_report_spark.io import TABLES  # noqa: E402

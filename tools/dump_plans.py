@@ -12,8 +12,9 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_financial_report_spark import io as _io  # noqa: E402
 from etl_financial_report_spark import registry  # noqa: E402
@@ -403,7 +404,7 @@ def main() -> None:
         plan = formatted_plan(q.fn(spark, args.sf_dir))
         out += [f"## {name}", "", why, "", "```", plan.rstrip(), "```", ""]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(Path(__file__).resolve().parents[1] / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} lines)")
 

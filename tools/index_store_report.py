@@ -15,8 +15,9 @@ import argparse
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_financial_report_spark import io as _io  # noqa: E402
 

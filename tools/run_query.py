@@ -9,8 +9,9 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_financial_report_spark import registry  # noqa: E402
 from etl_financial_report_spark.session import get_spark  # noqa: E402
