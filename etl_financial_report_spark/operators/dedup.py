@@ -234,16 +234,12 @@ bands AS (
 LSH_MAX_BUCKET = 4096
 
 
-def _band_keys(sig: DataFrame, max_bucket: int | None = None) -> DataFrame:
+def _band_keys(sig: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_key) rows from a minhash signature frame —
-    UNCAPPED by default (ADVICE r9: a capping default here would silently
-    lose hot-bucket detection for a caller that forgets recovery; callers
-    that want the cap go through :func:`lsh_candidate_pairs` /
-    :func:`build_corpus_dedup_index`, which pair capped members with
-    their bucket representative). Passing ``max_bucket`` drops hot
-    buckets WITHOUT recovery — only for building the live-bucket half of
-    a persisted index whose hot half is carried by
-    :func:`_hot_band_reps`."""
+    UNCAPPED (ADVICE r9: a cap here would silently lose hot-bucket
+    detection for a caller that forgets recovery; the cap lives in
+    :func:`lsh_candidate_pairs` / :func:`build_corpus_dedup_index`,
+    which pair capped members with their bucket representative)."""
     band_structs = F.array(
         *[
             F.struct(
@@ -253,17 +249,9 @@ def _band_keys(sig: DataFrame, max_bucket: int | None = None) -> DataFrame:
             for bi, (_, h1, h2) in enumerate(_BANDS)
         ]
     )
-    keys = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
+    return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
         "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key")
     )
-    if max_bucket is not None:
-        hot = (
-            keys.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .where(F.col("bucket_n") > max_bucket)
-        )
-        keys = keys.join(hot, ["band_idx", "band_key"], "left_anti")
-    return keys
 
 
 def _hot_band_reps(keys: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
@@ -291,7 +279,7 @@ def lsh_candidate_pairs(sig: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> Dat
     The hot-bucket frame has at most corpus/max_bucket rows, so both the
     anti-join and the probe join ride broadcasts — the recovery adds no
     wide exchange. Oracle twin: :func:`_lsh_pair_ctes`."""
-    keys = _band_keys(sig, max_bucket=None)
+    keys = _band_keys(sig)
     hot = _hot_band_reps(keys, max_bucket)
     live = keys.join(
         F.broadcast(hot.select("band_idx", "band_key")), ["band_idx", "band_key"], "left_anti"
@@ -312,15 +300,12 @@ def lsh_candidate_pairs(sig: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> Dat
     return self_pairs.unionByName(probes).distinct()
 
 
-def _lsh_pair_ctes(pairs_name: str = "pairs", max_bucket: int | None = None) -> str:
+def _lsh_pair_ctes(pairs_name: str = "pairs") -> str:
     """Oracle CTE chain (appended after a ``bands`` CTE) mirroring
     :func:`lsh_candidate_pairs` exactly: capped band self-join plus the
-    hot-bucket representative probes. One definition shared by every
-    LSH-pair-consuming oracle so engine and oracle agree on the capped
-    semantics at any scale. ``max_bucket`` is threaded (ADVICE r9) so a
-    call site registering a non-default cap cannot silently diverge from
-    its engine twin; None means the shared LSH_MAX_BUCKET."""
-    max_bucket = LSH_MAX_BUCKET if max_bucket is None else max_bucket
+    hot-bucket representative probes at the shared LSH_MAX_BUCKET. One
+    definition shared by every LSH-pair-consuming oracle so engine and
+    oracle agree on the capped semantics at any scale."""
     return f"""lshocc AS (
     SELECT band_idx, band_key, COUNT(*) AS bucket_n, MIN(doc_id) AS rep
     FROM bands GROUP BY 1, 2
@@ -332,12 +317,12 @@ def _lsh_pair_ctes(pairs_name: str = "pairs", max_bucket: int | None = None) -> 
         JOIN bands b ON b.band_idx = a.band_idx AND b.band_key = a.band_key
                     AND a.doc_id < b.doc_id
         JOIN lshocc o ON o.band_idx = a.band_idx AND o.band_key = a.band_key
-        WHERE o.bucket_n <= {max_bucket}
+        WHERE o.bucket_n <= {LSH_MAX_BUCKET}
         UNION ALL
         SELECT o.rep AS doc_a, b.doc_id AS doc_b
         FROM bands b
         JOIN lshocc o ON o.band_idx = b.band_idx AND o.band_key = b.band_key
-        WHERE o.bucket_n > {max_bucket} AND b.doc_id > o.rep
+        WHERE o.bucket_n > {LSH_MAX_BUCKET} AND b.doc_id > o.rep
     )
 )"""
 
@@ -1552,14 +1537,14 @@ SELECT doc_id, tbl, key FROM (
 """
 
 
-def _sim64_pair_ctes(max_bucket: int = SIM64_MAX_BUCKET) -> str:
+def _sim64_pair_ctes() -> str:
     """Oracle CTE chain (appended after ``sig`` and ``keys`` CTEs) mirroring
     the capped + recovered candidate generation of
     :func:`dedup_simhash64_hamming` exactly — the simhash twin of
     :func:`_lsh_pair_ctes` (VERDICT r10 item 2). Produces a ``cand``
     CTE of distinct (doc_a, doc_b):
 
-      * buckets <= ``max_bucket``: ordinary key self-join;
+      * buckets <= SIM64_MAX_BUCKET: ordinary key self-join;
       * hot buckets: members collapse by EXACT 64-bit signature — star
         edges (group-min, member) are hamming-0 by construction — and
         the distinct-signature group reps probe the bucket-min rep,
@@ -1573,7 +1558,7 @@ hotm AS (
     SELECT k.doc_id, k.tbl, k.key,
            {", ".join(f"s.b{j}" for j in range(N_SIM64_BLOCKS))}
     FROM keys k
-    JOIN socc o ON o.tbl = k.tbl AND o.key = k.key AND o.bucket_n > {max_bucket}
+    JOIN socc o ON o.tbl = k.tbl AND o.key = k.key AND o.bucket_n > {SIM64_MAX_BUCKET}
     JOIN sig s ON s.doc_id = k.doc_id
 ),
 sgrp AS (
@@ -1588,7 +1573,7 @@ cand AS (
         FROM keys a
         JOIN keys b ON b.tbl = a.tbl AND b.key = a.key AND a.doc_id < b.doc_id
         JOIN socc o ON o.tbl = a.tbl AND o.key = a.key
-                   AND o.bucket_n <= {max_bucket}
+                   AND o.bucket_n <= {SIM64_MAX_BUCKET}
         UNION ALL
         SELECT g.grep AS doc_a, h.doc_id AS doc_b
         FROM hotm h
@@ -1941,7 +1926,7 @@ FROM occ
 )
 def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (
-        _band_keys(_minhash_signature(spark, sf_dir), max_bucket=None)
+        _band_keys(_minhash_signature(spark, sf_dir))
         .groupBy("band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
     )
@@ -1986,7 +1971,7 @@ def build_corpus_dedup_index(
     minhash aggregation twice)."""
     if sig is None:
         sig = _minhash_signature_of(corpus)
-    keys = _band_keys(sig, max_bucket=None)
+    keys = _band_keys(sig)
     hot = _hot_band_reps(keys, max_bucket)
     return {
         "ck": (
@@ -2034,8 +2019,7 @@ def incremental_verdicts(
     # — bkeys has two consumers (self_cand, probe_cand), so an un-reused
     # batch signing would run twice
     bkeys = _band_keys(
-        _minhash_signature_of(batch) if batch_sig is None else batch_sig,
-        max_bucket=None,
+        _minhash_signature_of(batch) if batch_sig is None else batch_sig
     )
     bb = bkeys.alias("a")
     cb = index["bands"].alias("b")
@@ -2053,14 +2037,10 @@ def incremental_verdicts(
         .localCheckpoint()  # the verifier references the pair frame 3x
     )
     toks = distinct_tokens(batch).unionByName(index["toks"])
-    # sizes map-only when the index carries them (r15) — an index built
-    # by an older caller without "sizes" falls back to the toks-derived
-    # aggregate inside the verifier
-    sizes = index.get("sizes")
-    if sizes is not None:
-        sizes = batch.select(
-            "doc_id", F.size(F.array_distinct(F.split("text", " "))).alias("n")
-        ).unionByName(sizes)
+    # distinct-token sizes map-only: the index carries the corpus side
+    sizes = batch.select(
+        "doc_id", F.size(F.array_distinct(F.split("text", " "))).alias("n")
+    ).unionByName(index["sizes"])
     verified = exact_jaccard(pairs, toks, sizes).where(
         F.col("jaccard") >= VERIFY_JACCARD
     )

@@ -1197,7 +1197,62 @@ def _qc_feats(docs: DataFrame, st: DataFrame) -> DataFrame:
 #: same way (the sample_dsir_selection overflow discipline: |w| is
 #: corpus-token bounded, c is doc bounded, so c*w can cross 2^63 long
 #: before any doc is mis-scored)
-_QC_DOT = "SUM(CAST(c AS DECIMAL(20,0)) * w)"
+PERCEPTRON_DOT = "SUM(CAST(c AS DECIMAL(20,0)) * w)"
+
+
+def perceptron_margins(fb: DataFrame, w: DataFrame, by: tuple = ()) -> DataFrame:
+    """(doc_id, *by, dot): every doc's exact DECIMAL margin under a
+    broadcast weight table (*by, f, w) — the one scoring pass of training
+    and serving alike. ``by`` is () for a binary model, ("cls",) for a
+    one-vs-rest table with a weight row per (class, f)."""
+    return (
+        fb.join(F.broadcast(w), "f")
+        .groupBy("doc_id", *by)
+        .agg(F.expr(PERCEPTRON_DOT).alias("dot"))
+    )
+
+
+def perceptron_weights(
+    fb: DataFrame, labels: DataFrame, rounds: int, by: tuple = ()
+) -> DataFrame:
+    """The unrolled integer batch perceptron over an EXPLICIT feature
+    stream (doc_id, f, c) and train-label frame (doc_id, *by, y), y = +1
+    or -1 -> weight table (*by, f, w). Round 1 is closed-form (w = 0
+    misclassifies every row, y * 0 <= 0); each later round folds the
+    count-weighted labels of the rows the previous weights misclassify
+    into the table. ``by`` = ("cls",) trains one-vs-rest, one binary
+    model per class in the same passes. The quality classifier, its
+    streaming twin (which trains over LANDED per-doc features at merge
+    time, so stream-vs-batch agreement is structural) and language ID
+    all train here. ``fb`` is consumed 2x per round: callers pin it."""
+    keys = [*by, "f"]
+    mis = labels
+    w = None
+    for r in range(1, rounds + 1):
+        up = (
+            fb.join(mis, "doc_id")
+            .groupBy(*keys)
+            .agg(F.sum(F.col("c") * F.col("y")).cast("long").alias("dw"))
+        )
+        if w is None:
+            w = up.select(*keys, F.col("dw").alias("w"))
+        else:
+            w = (
+                w.select(*keys, F.col("w").alias("x"))
+                .unionByName(up.select(*keys, F.col("dw").alias("x")))
+                .groupBy(*keys)
+                .agg(F.sum("x").cast("long").alias("w"))
+            )
+        # table-bounded rows; pinning per round keeps the next round's
+        # margin pass from re-executing the whole training prefix
+        w = w.localCheckpoint()
+        if r < rounds:
+            mis = (
+                labels.join(perceptron_margins(fb, w, by), ["doc_id", *by])
+                .where(F.col("y") * F.col("dot") <= 0)
+                .select("doc_id", *by, "y")
+            )
+    return w
 
 
 def _qc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1224,48 +1279,7 @@ def _qc_weights_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reused 2x per round: pin once (NF-bucketed counts, corpus-sized)
     fb = _qc_feats(docs, st).localCheckpoint()
     tr = lab.where(~F.col("held_out")).select("doc_id", "y")
-    return _qc_weights_from(fb, tr)
-
-
-def _qc_weights_from(fb: DataFrame, tr: DataFrame) -> DataFrame:
-    """The unrolled batch-perceptron loop over an EXPLICIT feature stream
-    (doc_id, f, c) and train-label frame (doc_id, y) — shared by the
-    corpus builder above and the streaming corpus build (which trains
-    over LANDED per-doc features at merge time, so stream-vs-batch
-    agreement is structural). ``fb`` is consumed 2x per round: callers
-    pin it."""
-    mis = tr  # round 1: w = 0 misclassifies everything (y * 0 <= 0)
-    w = None
-    for r in range(1, QC_ROUNDS + 1):
-        up = (
-            fb.join(mis, "doc_id")
-            .groupBy("f")
-            .agg(F.sum(F.col("c") * F.col("y")).cast("long").alias("dw"))
-        )
-        if w is None:
-            w = up.select("f", F.col("dw").alias("w"))
-        else:
-            w = (
-                w.select("f", F.col("w").alias("x"))
-                .unionByName(up.select("f", F.col("dw").alias("x")))
-                .groupBy("f")
-                .agg(F.sum("x").cast("long").alias("w"))
-            )
-        # NF+1-bounded rows; pinning per round keeps the next round's
-        # margin pass from re-executing the whole training prefix
-        w = w.localCheckpoint()
-        if r < QC_ROUNDS:
-            m = (
-                fb.join(F.broadcast(w), "f")
-                .groupBy("doc_id")
-                .agg(F.expr(_QC_DOT).alias("dot"))
-            )
-            mis = (
-                tr.join(m, "doc_id")
-                .where(F.col("y") * F.col("dot") <= 0)
-                .select("doc_id", "y")
-            )
-    return w
+    return perceptron_weights(fb, tr, QC_ROUNDS)
 
 
 def qc_score_docs(docs: DataFrame, w: DataFrame) -> DataFrame:
@@ -1281,12 +1295,7 @@ def qc_score_docs(docs: DataFrame, w: DataFrame) -> DataFrame:
 def qc_score_frame(fb: DataFrame, lab: DataFrame, w: DataFrame) -> DataFrame:
     """Scoring over an EXPLICIT feature stream + label frame — the shape
     the streaming corpus build scores its landed features through."""
-    m = (
-        fb.join(F.broadcast(w), "f")
-        .groupBy("doc_id")
-        .agg(F.expr(_QC_DOT).alias("dot"))
-    )
-    return lab.join(m, "doc_id", "left").select(
+    return lab.join(perceptron_margins(fb, w), "doc_id", "left").select(
         "doc_id",
         "y",
         "held_out",

@@ -500,31 +500,52 @@ N_CELLS = 8  # centroids = the first N_CELLS vectors (deterministic "training")
 N_PROBE = 2  # query probes its 2 nearest cells
 
 
+def _nearest_cells(
+    frame: DataFrame, cents: DataFrame, k: int | None = 1, by: tuple = ()
+) -> DataFrame:
+    """The one nearest-centroid ranking: every row (vec_id, *by, qe, nsq)
+    against a broadcast centroid set (*by, cid, c_qe, c_nsq) joined on
+    ``by`` — () for coarse cells or ("m",) for PQ subspaces, the only
+    two keys — by exact quantized cosine; zero-norm centroids never
+    rank. Each (vec_id, *by) keeps its ``k`` best cells in (cos desc,
+    cid asc) order, every cell when ``k`` is None. k = 1 is the argmax
+    assignment (vec_id, *by, cell); otherwise rows carry their ``rank``.
+    The window ranks the centroid rows of one key — bounded by the
+    codebook, never the corpus."""
+    book = cents.select(*by, "cid", "c_qe", "c_nsq")
+    cos = cosine_q(dot_q(F.col("qe"), F.col("c_qe")), F.col("nsq"), F.col("c_nsq"))
+    # literal window keys, each a reviewed bounded key (m has PQ_M values)
+    w = Window.partitionBy("vec_id", "m") if by else Window.partitionBy("vec_id")
+    w = w.orderBy(F.desc("cos"), F.asc("cid"))
+    ranked = (
+        (
+            frame.join(F.broadcast(book), list(by))
+            if by
+            else frame.crossJoin(F.broadcast(book))
+        )
+        .where(F.col("c_nsq") > 0)
+        .select("vec_id", *by, "cid", cos.alias("cos"))
+        .withColumn("rank", F.row_number().over(w))
+    )
+    if k is not None:
+        ranked = ranked.where(F.col("rank") <= k)
+    return ranked.select(
+        "vec_id", *by, F.col("cid").alias("cell"), *(["rank"] if k != 1 else [])
+    )
+
+
 def _ivf_probe(qv: DataFrame, cents: DataFrame) -> DataFrame:
     """FAISS-style IVF probe against any centroid set (cid, c_qe, c_nsq):
     assign every vector to its argmax-cosine cell, probe the query's
-    N_PROBE nearest cells, exact cosine only inside them, top-10. The
-    centroid set is bounded (broadcast); the per-vector assignment window
-    ranks K rows; the probe ranking is K rows total."""
-    ccos = qv.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        cosine_q(dot_q(F.col("qe"), F.col("c_qe")), F.col("nsq"), F.col("c_nsq")).alias("cos"),
+    N_PROBE nearest cells, exact cosine only inside them, top-10."""
+    # one query row: a single partition already meets the ranking
+    # window's clustering, so the probe adds no shuffle stage
+    probe = _nearest_cells(qv.where(F.col("vec_id") == 0).coalesce(1), cents, N_PROBE)
+    cand = (
+        _nearest_cells(qv, cents)
+        .join(F.broadcast(probe.select("cell")), "cell")
+        .where(F.col("vec_id") != 0)
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
-    assign = (
-        ccos.withColumn("rn", F.row_number().over(w_assign))
-        .where("rn = 1")
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
-    w_probe = Window.orderBy(F.desc("cos"), F.asc("cid"))
-    probe = (
-        ccos.where(F.col("vec_id") == 0)
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= N_PROBE)
-        .select(F.col("cid").alias("cell"))
-    )
-    cand = assign.join(F.broadcast(probe), "cell").where(F.col("vec_id") != 0)
     return (
         _exact_scored(qv.join(cand.select("vec_id"), "vec_id"), _query_block(qv))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -1583,23 +1604,6 @@ def dedup_semantic_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- k-means (IVF training)
 
 
-def _assign_cells(qv: DataFrame, cents: DataFrame) -> DataFrame:
-    """Argmax-cosine cell assignment against a broadcast centroid set
-    (cos desc, cid asc tie-break). The per-vector window ranks K rows —
-    bounded by the centroid count, never the corpus."""
-    ccos = qv.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        cosine_q(dot_q(F.col("qe"), F.col("c_qe")), F.col("nsq"), F.col("c_nsq")).alias("cos"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        ccos.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
-
-
 _KMEANS_R1_CTES = f"""
 cex0 AS (SELECT vec_id AS cid, i, v AS cv FROM ex WHERE vec_id < {N_CELLS}),
 cn0 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM cex0 GROUP BY cid),
@@ -1630,46 +1634,66 @@ cn1 AS MATERIALIZED (SELECT cid, SUM(cv * cv) AS cnsq FROM cex1 GROUP BY cid)
 """
 
 
-def _update_centroids(qv: DataFrame, assign: DataFrame) -> DataFrame:
-    """Exact per-dimension int64 member sums via posexplode + groupBy —
-    64 rows of state per cell, array order restored by array_sort on the
-    (dim, sum) struct; zero-norm cells drop (cannot be assigned to)."""
-    ex = qv.join(assign, "vec_id").select("cell", F.posexplode("qe").alias("i", "v"))
-    dims = ex.groupBy("cell", "i").agg(F.sum("v").alias("s"))
+def _centroid_sums(members: DataFrame, by: tuple = ()) -> DataFrame:
+    """The one centroid update: member rows (*by, cell, qe) -> (*by, cid,
+    c_qe, c_nsq, n), the exact per-dimension int64 member sums
+    (posexplode + two-phase groupBy, 64 rows of state per cell, array
+    order restored by array_sort on the (dim, sum) struct), their
+    squared norm and the member count. Cosine is scale-invariant, so the
+    sum vector IS the mean direction — nothing is ever float-averaged.
+    Zero-norm sums stay: _nearest_cells never ranks them."""
+    keys = [*by, "cell"]
     return (
-        dims.groupBy("cell")
+        members.select(*keys, F.posexplode("qe").alias("i", "v"))
+        .groupBy(*keys, "i")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("i", "s"))), lambda x: x["s"]
-            ).alias("c_qe")
+            ).alias("c_qe"),
+            F.max("n").alias("n"),
         )
-        .withColumn("c_nsq", norm_sq_q(F.col("c_qe")))
-        .where(F.col("c_nsq") > 0)
-        .select(F.col("cell").alias("cid"), "c_qe", "c_nsq")
+        .select(
+            *by,
+            F.col("cell").alias("cid"),
+            "c_qe",
+            norm_sq_q(F.col("c_qe")).alias("c_nsq"),
+            "n",
+        )
     )
 
 
+def _lloyd_round(qv: DataFrame, cents: DataFrame) -> DataFrame:
+    """One coarse spherical Lloyd round: assign every vector to its
+    nearest cell, re-center each cell on its member sum; cells whose sum
+    has zero norm drop (they cannot be assigned to)."""
+    members = qv.join(_nearest_cells(qv, cents), "vec_id")
+    return _centroid_sums(members).where(F.col("c_nsq") > 0)
+
+
 def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared post-seed-round coarse centroids (cid, c_qe, c_nsq):
-    ``_update_centroids(qv, _assign_cells(qv, seeds))`` memoized per
-    (session, corpus snapshot, N_CELLS). Seven registered queries (ivfpq
-    topk, both recall evals, nprobe sweep, kmeans train, cluster-balanced
-    sample, cluster term profile) plus the residual-index build train the
-    IDENTICAL K-row table from the identical seeds; each used to rebuild
-    it per query construction: one full assign pass, the per-dim sums
-    aggregate and a localCheckpoint job (optimization r15). Deliberately
-    NOT persisted to the index store: the residual index already persists
-    its copy — the memo is a session-RAM localCheckpoint exactly like the
-    per-query pin it replaces, just shared."""
+    """The shared post-seed-round coarse centroids (cid, c_qe, c_nsq, n),
+    n being each cell's seed-round member count: one
+    :func:`_lloyd_round` from the first N_CELLS vectors, memoized per
+    (session, corpus snapshot, N_CELLS). Eight registered queries (ivf
+    trained, ivfpq topk, both ivfpq recall evals, nprobe sweep, kmeans
+    train, cluster-balanced sample, cluster term profile) and the
+    residual-index build train from it; each used to rebuild it per
+    query construction: one full assign pass, the per-dim sums aggregate
+    and a localCheckpoint job. Deliberately NOT persisted to the index
+    store: the residual index already persists its copy — the memo is a
+    session-RAM localCheckpoint exactly like the per-query pin it
+    replaces, just shared."""
     from .. import io as _io
 
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
-    seeds = qv.where((F.col("vec_id") < N_CELLS) & (F.col("nsq") > 0)).select(
+    seeds = qv.where(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cid"),
         F.col("qe").alias("c_qe"),
         F.col("nsq").alias("c_nsq"),
     )
-    built = _update_centroids(qv, _assign_cells(qv, seeds))
+    built = _lloyd_round(qv, seeds)
     if not _io.MEMO_ENABLED:  # plan-audit escape hatch: real build plan
         return built
     return _io.session_memo(
@@ -1747,11 +1771,10 @@ def kmeans_train_frame(
     # the inline seed assign + update; extra rounds chain the same stage
     cents = _ivf_cents(spark, sf_dir)
     for _ in range(n_rounds - 1):
-        assign = _assign_cells(qv, cents)
         # K rows per round: checkpoint truncates the per-round lineage so
         # deep trainings don't accumulate a nested-broadcast DAG
-        cents = _update_centroids(qv, assign).localCheckpoint()
-    counts = _assign_cells(qv, cents).groupBy("cell").agg(
+        cents = _lloyd_round(qv, cents).localCheckpoint()
+    counts = _nearest_cells(qv, cents).groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_members")
     )
     return (
@@ -1815,15 +1838,7 @@ cand AS (
     ),
 )
 def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qv = _quantized(spark, sf_dir)
-    seeds = (
-        qv.where((F.col("vec_id") < N_CELLS) & (F.col("nsq") > 0))
-        .select(F.col("vec_id").alias("cid"), F.col("qe").alias("c_qe"), F.col("nsq").alias("c_nsq"))
-    )
-    cents = _update_centroids(
-        qv.select("vec_id", "qe", "nsq"), _assign_cells(qv.select("vec_id", "qe", "nsq"), seeds)
-    )
-    return _ivf_probe(qv, cents)
+    return _ivf_probe(_quantized(spark, sf_dir), _ivf_cents(spark, sf_dir))
 
 
 # ------------------------------------------- scalar-quantized (SQ8) ANN
@@ -2031,51 +2046,26 @@ pq_topk AS (
 _PQ_SCORED_SQL = _pq_scored_sql_block()
 
 
-def _pq_spherical_assign(frame: DataFrame, cents: DataFrame) -> DataFrame:
-    """Argmax-quantized-cosine assignment of long-form (vec_id, m, s,
-    snsq) subvectors against a broadcast per-subspace codebook
-    (m, cid, c_qe, c_nsq), all M subspaces in one pass — the window per
-    (vec_id, m) ranks exactly K rows (m is a constructed 4-value key, the
-    codebook is K-bounded), the _assign_cells shape on subspace rows."""
-    cos = cosine_q(dot_q(F.col("s"), F.col("c_qe")), F.col("snsq"), F.col("c_nsq"))
-    w = Window.partitionBy("vec_id", "m").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        frame.join(F.broadcast(cents), "m")
-        .where(F.col("c_nsq") > 0)
-        .select("vec_id", "m", "cid", cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select("vec_id", "m", F.col("cid").alias("cell"))
-    )
-
-
 def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Train the per-subspace PQ codebooks in LONG FORM: one row per
     (vector, subspace), so every training stage runs ONCE over all M
     subspaces together (one assign window keyed (vec_id, m), one per-dim
     sums aggregate keyed (m, cell, i)) instead of M duplicated plan
     branches re-reading the corpus. Returns (subs, book): the
-    checkpointed sliced projection and the trained codebook
-    (m, cid, c_qe, c_nsq, cnt)."""
+    checkpointed sliced projection (vec_id, full_nsq, m, qe, nsq) — each
+    subvector under the vector-row names, so it ranks and sums through
+    the same kernels — and the trained codebook (m, cid, c_qe, c_nsq,
+    cnt)."""
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.slice("qe", m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("s"),
-            )
-            for m in range(PQ_M)
-        ]
-    )
     subs_pure = (
-        qv.select("vec_id", "nsq", F.explode(sub_structs).alias("g"))
+        qv.select("vec_id", "nsq", F.explode(_sub_structs_of("qe")).alias("g"))
         .select(
             "vec_id",
             F.col("nsq").alias("full_nsq"),
             F.col("g.m").alias("m"),
-            F.col("g.s").alias("s"),
+            F.col("g.s").alias("qe"),
         )
-        .withColumn("snsq", norm_sq_q(F.col("s")))
+        .withColumn("nsq", norm_sq_q(F.col("qe")))
     )
     from .. import io as _io
 
@@ -2095,34 +2085,20 @@ def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 def _pq_train_subs(subs: DataFrame) -> DataFrame:
     """One deterministic spherical Lloyd round over ANY long-form subspace
-    frame (vec_id, m, s, snsq) -> trained codebook (m, cid, c_qe, c_nsq,
-    cnt). Shared by plain PQ (raw subvectors) and residual PQ (coarse-
-    residual subvectors) so both train with bit-identical machinery."""
+    frame (vec_id, m, qe, nsq) -> checkpointed codebook (m, cid, c_qe,
+    c_nsq, cnt): the first PQ_K subvectors seed each subspace, and
+    :func:`_nearest_cells` / :func:`_centroid_sums` keyed by m assign and
+    re-center all M subspaces in one pass. Plain PQ (raw subvectors) and
+    residual PQ (coarse-residual subvectors) both train through it."""
     seeds = subs.where(F.col("vec_id") < PQ_K).select(
         "m",
         F.col("vec_id").alias("cid"),
-        F.col("s").alias("c_qe"),
-        F.col("snsq").alias("c_nsq"),
+        F.col("qe").alias("c_qe"),
+        F.col("nsq").alias("c_nsq"),
     )
-    assign0 = _pq_spherical_assign(subs, seeds)
-    sums = (
-        subs.join(assign0, ["vec_id", "m"])
-        .select("m", "cell", F.posexplode("s").alias("i", "v"))
-        .groupBy("m", "cell", "i")
-        .agg(F.sum("v").alias("cv"))
-        .groupBy("m", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))), lambda x: x["cv"]
-            ).alias("c_qe")
-        )
-        .withColumn("c_nsq", norm_sq_q(F.col("c_qe")))
-    )
-    counts = assign0.groupBy("m", "cell").agg(F.count(F.lit(1)).alias("cnt"))
+    members = subs.join(_nearest_cells(subs, seeds, 1, ("m",)), ["vec_id", "m"])
     return (
-        sums.join(counts, ["m", "cell"])
-        .select("m", F.col("cell").alias("cid"), "c_qe", "c_nsq", "cnt")
-        .localCheckpoint()
+        _centroid_sums(members, ("m",)).withColumnRenamed("n", "cnt").localCheckpoint()
     )
 
 
@@ -2185,9 +2161,9 @@ def _pq_scored(
     oracles stay bit-identical while the batch eval shares the one
     trained codebook across all queries instead of retraining."""
     subs, book = _pq_train(spark, sf_dir)
-    codes = _pq_spherical_assign(subs, book.select("m", "cid", "c_qe", "c_nsq"))
+    codes = _nearest_cells(subs, book, 1, ("m",))
     q_sub = subs.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("q_id"), "m", F.col("s").alias("q_s")
+        F.col("vec_id").alias("q_id"), "m", F.col("qe").alias("q_s")
     )
     qd = book.join(F.broadcast(q_sub), "m").select(
         "q_id",
@@ -2333,7 +2309,7 @@ SELECT vec_id, cosine_pq FROM pq_topk
 def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     cents = _ivf_cents(spark, sf_dir)  # shared seed-round memo (r15)
-    assign = _assign_cells(qv, cents)
+    assign = _nearest_cells(qv, cents)
     qcell = assign.where(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), "cell"
     )
@@ -2400,21 +2376,11 @@ def _residual_index(spark: SparkSession, sf_dir: str) -> dict:
 
 def _residual_index_build(spark: SparkSession, sf_dir: str) -> dict:
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
-    seeds = qv.where((F.col("vec_id") < N_CELLS) & (F.col("nsq") > 0)).select(
-        F.col("vec_id").alias("cid"),
-        F.col("qe").alias("c_qe"),
-        F.col("nsq").alias("c_nsq"),
-    )
-    a0 = _assign_cells(qv, seeds)
-    # the post-seed-round centroids come from the shared session memo
-    # (r15): identical frame, one build per session instead of one here
+    # the post-seed-round centroids and their seed-round member counts n
+    # come from the shared session memo: one build per session
     cents = _ivf_cents(spark, sf_dir)
-    counts0 = a0.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).withColumnRenamed(
-        "cell", "cid"
-    )
     cq = (
-        cents.join(counts0, "cid")
-        .select(
+        cents.select(
             "cid",
             F.transform(
                 "c_qe",
@@ -2426,7 +2392,7 @@ def _residual_index_build(spark: SparkSession, sf_dir: str) -> dict:
         .withColumn("cqn", norm_sq_q(F.col("cq")))
         .localCheckpoint()
     )
-    assign = _assign_cells(qv, cents).localCheckpoint()
+    assign = _nearest_cells(qv, cents).localCheckpoint()
     # exact integer residuals at vector scale
     res = (
         qv.join(assign, "vec_id")
@@ -2437,14 +2403,12 @@ def _residual_index_build(spark: SparkSession, sf_dir: str) -> dict:
     )
     rsubs = (
         res.select("vec_id", F.explode(_sub_structs_of("re")).alias("g"))
-        .select("vec_id", F.col("g.m").alias("m"), F.col("g.s").alias("s"))
-        .withColumn("snsq", norm_sq_q(F.col("s")))
+        .select("vec_id", F.col("g.m").alias("m"), F.col("g.s").alias("qe"))
+        .withColumn("nsq", norm_sq_q(F.col("qe")))
         .localCheckpoint()
     )
-    rbook = _pq_train_subs(rsubs).localCheckpoint()
-    rcodes = _pq_spherical_assign(
-        rsubs, rbook.select("m", "cid", "c_qe", "c_nsq")
-    ).localCheckpoint()
+    rbook = _pq_train_subs(rsubs)
+    rcodes = _nearest_cells(rsubs, rbook, 1, ("m",)).localCheckpoint()
     ccq_sub = cq.select("cid", F.explode(_sub_structs_of("cq")).alias("g")).select(
         F.col("cid").alias("cell"),
         F.col("g.m").alias("m"),
@@ -2499,23 +2463,10 @@ def _ivf_residual_scored(
         idx["cents"], idx["cq"], idx["assign"], idx["rbook"], idx["rcodes"], idx["crd"],
     )
 
-    # nprobe>1: candidates from the query's top-P cells (same cosine
-    # ranking expression as the assignment, so tie behavior matches)
-    ccos = qv.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        cosine_q(dot_q(F.col("qe"), F.col("c_qe")), F.col("nsq"), F.col("c_nsq")).alias(
-            "cos"
-        ),
-    )
-    # per-query probe: the window partitions by query, ranking exactly
-    # K centroid rows per query — bounded by the codebook, never the corpus
-    w_probe = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
-    qprobe = (
-        ccos.where(F.col("vec_id") < nq)
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("q_id"), F.col("cid").alias("cell"))
+    # nprobe>1: candidates from each query's top-P cells, ranked by the
+    # same kernel as the assignment, so tie behavior matches
+    qprobe = _nearest_cells(qv.where(F.col("vec_id") < nq), cents, IVF_NPROBE).select(
+        F.col("vec_id").alias("q_id"), "cell"
     )
     cand = (
         assign.join(F.broadcast(qprobe), "cell")
@@ -3102,7 +3053,7 @@ def sim_ann_ivfpq_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
     # plain IVF-PQ: one coarse train (shared seed-round memo, r15),
     # per-query argmax cell -> candidates
     cents = _ivf_cents(spark, sf_dir)
-    assign = _assign_cells(qv, cents)
+    assign = _nearest_cells(qv, cents)
     qcells = assign.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("q_id"), "cell"
     )
@@ -3586,7 +3537,7 @@ ORDER BY actual_label, predicted_label
         "(cosine is scale-invariant, so the sum vector IS the mean "
         "direction — no float averaging, same rule as "
         "sim_ann_kmeans_train); every vector assigns to its argmax-"
-        "quantized-cosine label centroid via the shared _assign_cells "
+        "quantized-cosine label centroid via the shared _nearest_cells "
         "broadcast (L rows per vector, bounded by the label count, never "
         "the corpus), and the output is the confusion matrix with "
         "per-actual-label recall cells in exact-integer ppm. The embedding "
@@ -3597,20 +3548,8 @@ ORDER BY actual_label, predicted_label
 )
 def sim_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _quantized(spark, sf_dir)
-    ex = qv.select("label", F.posexplode("qe").alias("i", "v"))
-    dims = ex.groupBy("label", "i").agg(F.sum("v").alias("s"))
-    cents = (
-        dims.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "s"))), lambda x: x["s"]
-            ).alias("c_qe")
-        )
-        .withColumn("c_nsq", norm_sq_q(F.col("c_qe")))
-        .where(F.col("c_nsq") > 0)
-        .select(F.col("label").alias("cid"), "c_qe", "c_nsq")
-    )
-    assign = _assign_cells(qv.select("vec_id", "qe", "nsq"), cents)
+    cents = _centroid_sums(qv.select(F.col("label").alias("cell"), "qe"))
+    assign = _nearest_cells(qv, cents)
     conf = (
         qv.select("vec_id", F.col("label").alias("actual_label"))
         .join(assign, "vec_id")
@@ -3909,20 +3848,9 @@ def sim_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin + per-element dot lambda for each
     scored = _exact_scored(corpus, queries).localCheckpoint()
     truth = _rank_le(scored, 10).localCheckpoint()
-    assignc = _assign_cells(corpus.select("vec_id", "qe", "nsq"), cents)
-    qcos = cosine_q(
-        dot_q(F.col("q_qe"), F.col("c_qe")), F.col("q_nsq"), F.col("c_nsq")
-    )
-    qrank = (
-        queries.crossJoin(F.broadcast(cents))
-        .select("q_id", "cid", qcos.alias("qc"))
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("qc"), F.asc("cid"))
-            ),
-        )
-        .select("q_id", F.col("cid").alias("cell"), "cell_rank")
+    assignc = _nearest_cells(corpus, cents)
+    qrank = _nearest_cells(qv.where(F.col("vec_id") < SIM_EVAL_NQ), cents, None).select(
+        F.col("vec_id").alias("q_id"), "cell", F.col("rank").alias("cell_rank")
     )
     # one shared candidate frame; each nprobe row filters + re-ranks it
     cand = (
@@ -4456,7 +4384,7 @@ def sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     cents = _ivf_cents(spark, sf_dir)  # shared seed-round memo (r15)
-    assign = _assign_cells(qv, cents)
+    assign = _nearest_cells(qv, cents)
     pop = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_n"))
     head = topk_per_key(
         assign,
@@ -4552,7 +4480,7 @@ def sim_cluster_term_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     cents = _ivf_cents(spark, sf_dir)  # shared seed-round memo (r15)
-    assign = _assign_cells(qv, cents).select(
+    assign = _nearest_cells(qv, cents).select(
         F.col("vec_id").alias("doc_id"), "cell"
     )
     toks = load_table(spark, sf_dir, "documents").select(

@@ -905,12 +905,11 @@ BPE_CHECKPOINT_EVERY = 8
 def _bpe_chain(
     words: DataFrame,
     rounds: int,
-    checkpoint_every: int = BPE_CHECKPOINT_EVERY,
     min_pair_count: int | None = None,
 ):
     """``min_pair_count`` (VERDICT r5 item 4) switches the trainer into
     the WINDOW-BATCHED eager mode a real tokenizer run uses: rounds are
-    built lazily in windows of ``checkpoint_every``, ONE collect per
+    built lazily in windows of BPE_CHECKPOINT_EVERY, ONE collect per
     window evaluates all of the window's winning pairs (amortizing the
     driver round trip — the per-action floor dominates tiny per-round
     jobs), training STOPS at the first round whose best count falls
@@ -978,7 +977,7 @@ def _bpe_chain(
 
     if min_pair_count is not None:
         spark = words.sparkSession
-        win = max(checkpoint_every, 1)
+        win = BPE_CHECKPOINT_EVERY
         merges = []
         r = 1
         while r <= rounds:
@@ -1028,7 +1027,7 @@ def _bpe_chain(
         # lineage truncation at the cadence: pin the 1-row winner (so the
         # merge table and every later round hang off a leaf, not the full
         # prefix chain) and the rewritten corpus state
-        ckpt = checkpoint_every > 0 and r % checkpoint_every == 0 and r < rounds
+        ckpt = r % BPE_CHECKPOINT_EVERY == 0 and r < rounds
         if ckpt:
             best = best.localCheckpoint()
         merges.append(_merge_row(best, r))
@@ -1809,12 +1808,6 @@ LID_ROUNDS = 3
 #: held-out slice: doc_id % LID_EVAL_MOD == 0 contributes no gradient
 LID_EVAL_MOD = 5
 
-#: DECIMAL dot product against the broadcast weight table (the
-#: quality._QC_DOT overflow discipline: c * w can cross int64 under hot
-#: buckets long before any doc is mis-scored)
-_LID_DOT = "SUM(CAST(c AS DECIMAL(20,0)) * w)"
-
-
 def _lid_lab(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
@@ -1935,14 +1928,16 @@ def _lid_feats(
 def _lid_weights_build(
     spark: SparkSession, sf_dir: str, chargrams: bool = False
 ) -> DataFrame:
-    """One-vs-rest multi-class batch perceptron over the labeled corpus —
-    the quality classifier's _qc_weights_from loop lifted to a class
-    dimension: every (doc, class) pair carries y = +1/-1, misclassified
-    pairs fold count-weighted labels into the (class, f) weight table,
-    margins stay exact integer (DECIMAL dots). The weight table is
-    <= |classes| * (LID_NF + 1) rows — always broadcast; each round is
-    one map-side join + one (class, f) aggregation over the hashed-count
-    stream, never a corpus shuffle beyond the count aggregation."""
+    """One-vs-rest multi-class batch perceptron over the labeled corpus:
+    every (doc, class) pair carries y = +1/-1 and
+    :func:`~.quality.perceptron_weights` keyed by ("cls",) trains the
+    (class, f) weight table, margins exact integer (DECIMAL dots). The
+    table is <= |classes| * (LID_NF + 1) rows — always broadcast; each
+    round is one map-side join + one (class, f) aggregation over the
+    hashed-count stream, never a corpus shuffle beyond the count
+    aggregation."""
+    from .quality import perceptron_weights
+
     docs = load_table(spark, sf_dir, "documents")
     lab = _lid_lab(docs)
     classes = docs.select(F.col("lang").alias("cls")).distinct()
@@ -1959,38 +1954,7 @@ def _lid_weights_build(
     fb = _lid_feats(
         docs, chargrams, scatter=_lid_scatter(spark, sf_dir)
     ).localCheckpoint()
-    mis = dc  # round 1: w = 0 misclassifies every (doc, class) pair
-    w = None
-    for r in range(1, LID_ROUNDS + 1):
-        up = (
-            fb.join(mis, "doc_id")
-            .groupBy("cls", "f")
-            .agg(F.sum(F.col("c") * F.col("y")).cast("long").alias("dw"))
-        )
-        if w is None:
-            w = up.select("cls", "f", F.col("dw").alias("w"))
-        else:
-            w = (
-                w.select("cls", "f", F.col("w").alias("x"))
-                .unionByName(up.select("cls", "f", F.col("dw").alias("x")))
-                .groupBy("cls", "f")
-                .agg(F.sum("x").cast("long").alias("w"))
-            )
-        # classes * (NF+1)-bounded rows; pinning per round keeps the next
-        # round's margin pass from re-executing the whole training prefix
-        w = w.localCheckpoint()
-        if r < LID_ROUNDS:
-            m = (
-                fb.join(F.broadcast(w), "f")
-                .groupBy("doc_id", "cls")
-                .agg(F.expr(_LID_DOT).alias("dot"))
-            )
-            mis = (
-                dc.join(m, ["doc_id", "cls"])
-                .where(F.col("y") * F.col("dot") <= 0)
-                .select("doc_id", "cls", "y")
-            )
-    return w
+    return perceptron_weights(fb, dc, LID_ROUNDS, ("cls",))
 
 
 def _lid_weights(
@@ -2021,17 +1985,18 @@ def _lid_scored(
     min(struct(-margin, cls)) — largest margin, smallest class on ties
     (the lexicon baseline's tie-break convention) — never a corpus-keyed
     window."""
+    from .quality import perceptron_margins
+
     docs = load_table(spark, sf_dir, "documents")
-    m = (
-        _lid_feats(docs, chargrams, scatter=_lid_scatter(spark, sf_dir))
-        .join(F.broadcast(_lid_weights(spark, sf_dir, chargrams)), "f")
-        .groupBy("doc_id", "cls")
-        .agg(F.expr(_LID_DOT).cast("long").alias("margin"))
+    m = perceptron_margins(
+        _lid_feats(docs, chargrams, scatter=_lid_scatter(spark, sf_dir)),
+        _lid_weights(spark, sf_dir, chargrams),
+        ("cls",),
     )
     best = m.groupBy("doc_id").agg(
         F.min(
             F.struct(
-                (-F.col("margin")).alias("nm"), F.col("cls").alias("cl")
+                (-F.col("dot").cast("long")).alias("nm"), F.col("cls").alias("cl")
             )
         ).alias("b")
     )

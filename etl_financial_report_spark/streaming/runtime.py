@@ -1196,7 +1196,7 @@ def run_corpus_build_stream(
         distribution — so each doc lands its bounded classifier inputs
         (shape stats + hashed-feature array) and train/score/sweep/select
         run ONCE over landed state in the merge, through the exact batch
-        helpers (_qc_weights_from / qc_score_frame / qc_sweep_frame /
+        helpers (perceptron_weights / qc_score_frame / qc_sweep_frame /
         qc_gate_bar_frame): bit-identical to the batch gate under any
         arrival order;
       * mixture gating and shard packing are deterministic functions of
@@ -1212,10 +1212,11 @@ def run_corpus_build_stream(
     from ..operators.dedup import DECONTAM_FRAC, DECONTAM_HOLDOUT, _shingles
     from ..operators.pipelines import content_key, quality_bit
     from ..operators.quality import (
+        QC_ROUNDS,
         _qc_feats,
         _qc_label_frame,
         _qc_stats_frame,
-        _qc_weights_from,
+        perceptron_weights,
         qc_gate_bar_frame,
         qc_score_frame,
         qc_sweep_frame,
@@ -1319,7 +1320,9 @@ def run_corpus_build_stream(
         .select("doc_id", F.col("g.f").alias("f"), F.col("g.c").alias("c"))
         .localCheckpoint()  # consumed 2x per training round + scoring
     )
-    w = _qc_weights_from(fb, lab.where(~F.col("held_out")).select("doc_id", "y"))
+    w = perceptron_weights(
+        fb, lab.where(~F.col("held_out")).select("doc_id", "y"), QC_ROUNDS
+    )
     scored = qc_score_frame(fb, lab, w)
     qbar = qc_gate_bar_frame(qc_sweep_frame(spark, scored)).select("qbar")
     model_pass = (

@@ -124,9 +124,9 @@ def test_residual_index_round_trips_fresh_session(spark, tmp_store, monkeypatch)
     def boom(*a, **k):
         raise AssertionError("trainer must not run on a persisted-index hit")
 
-    # the coarse-centroid update is the first training job on the build
+    # the centroid-sums kernel is the first training job on the build
     # path — a persisted hit must never reach it
-    monkeypatch.setattr(S, "_update_centroids", boom)
+    monkeypatch.setattr(S, "_centroid_sums", boom)
     idx2 = S._residual_index(spark, SF)
     assert set(idx2) == set(idx1)
     assert _rows(idx2["rcodes"]) == want

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import etl_financial_report_spark.io as IO
+from etl_financial_report_spark.operators import quality as Q
 from etl_financial_report_spark.operators import textops as T
 
 SF = "/root/testdata/sf0.001"
@@ -64,7 +65,7 @@ def test_prediction_is_argmax_with_min_class_tiebreak(spark, tmp_path, no_store)
         T._lid_feats(IO.load_table(spark, sf, "documents"))
         .join(F.broadcast(T._lid_weights(spark, sf)), "f")
         .groupBy("doc_id", "cls")
-        .agg(F.expr(T._LID_DOT).cast("long").alias("m"))
+        .agg(F.expr(Q.PERCEPTRON_DOT).cast("long").alias("m"))
         .collect()
     ):
         margins.setdefault(r["doc_id"], {})[r["cls"]] = r["m"]

@@ -119,7 +119,7 @@ def test_incremental_probe_volume_is_bounded(spark):
     bkeys = _minhash_signature_of(batch)
     from etl_financial_report_spark.operators.dedup import _band_keys
 
-    probe = _band_keys(bkeys, max_bucket=None).join(
+    probe = _band_keys(bkeys).join(
         index["hot_reps"], ["band_idx", "band_key"]
     )
     # 4 bands x 1 hot bucket each -> at most 4 probe rows, 1 after distinct

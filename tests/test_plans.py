@@ -66,7 +66,7 @@ BNLJ_SCALAR_BROADCAST_OK = {
     "sim_bucket_occupancy_stats",
     # 8-row anchor-block broadcast (sim_ann_topk_batch's shape)
     "sim_hard_negative_mining",
-    # N_CELLS(=8)-row centroid-block broadcasts (_assign_cells, the same
+    # N_CELLS(=8)-row centroid-block broadcasts (_nearest_cells, the same
     # shape as sim_ann_ivf_trained) feeding the per-cell quota
     "sample_cluster_balanced",
     # 1-row (t_tot, s_tot) profile-totals broadcast onto the 8k-row lift table
@@ -78,7 +78,7 @@ BNLJ_SCALAR_BROADCAST_OK = {
     # r13: the same 1-row totals broadcast over PREDICTED-language counts
     # (the trained lang-id scoring underneath is broadcast equi joins)
     "sample_lang_temperature_mixture",
-    # O(labels)-row centroid-block broadcast (_assign_cells, kmeans shape)
+    # O(labels)-row centroid-block broadcast (_nearest_cells, kmeans shape)
     "sim_centroid_classifier",
     # 1-row query-vector broadcast (sim_ann_topk's shape) onto the
     # keyword-filtered candidate join / the bounded modality heads

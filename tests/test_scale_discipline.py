@@ -27,7 +27,7 @@ ALLOWED_COLLECT = {
     # shard-table content fingerprint the corpus-build stream's
     # exactly-once snapshot commit tags with
     "streaming/runtime.py": 2,
-    # BPE early-stop: one collect per merge WINDOW of <= checkpoint_every
+    # BPE early-stop: one collect per merge WINDOW of BPE_CHECKPOINT_EVERY
     # 1-row best-pair aggregates — the stop decision is driver-side by
     # nature and the row count is merge-bounded, never corpus-scaled
     "operators/textops.py": 1,

@@ -35,8 +35,17 @@ from etl_financial_report_spark.io import TABLES  # noqa: E402
 from etl_financial_report_spark.session import get_spark  # noqa: E402
 
 
+#: DuckDB resource caps: at its default (80% of RAM, every core) one
+#: oracle can take the host's memory from a Spark session or test suite
+#: running beside the sweep
+DUCKDB_MEMORY_LIMIT = "3GB"
+DUCKDB_THREADS = 2
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
+    con.execute(f"SET threads = {DUCKDB_THREADS}")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
