@@ -46,13 +46,31 @@ def hash32_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
 
 
+def affine_hash(base: Column, i: int) -> Column:
+    """h_i = (A_i * base + B_i) mod P over a precomputed ``hash32`` column:
+    the one universal-hash derivation behind MinHash components, CMS
+    buckets and bloom bit positions."""
+    return (F.lit(MINHASH_A[i]) * base + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P)
+
+
+def affine_hash_sql(base_expr: str, i: int) -> str:
+    return f"({MINHASH_A[i]} * {base_expr} + {MINHASH_B[i]}) % {MINHASH_P}"
+
+
 def uminhash_agg(base: Column, i: int) -> Column:
     """MinHash component i over a precomputed ``hash32`` column."""
-    return F.min((F.lit(MINHASH_A[i]) * base + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P))
+    return F.min(affine_hash(base, i))
 
 
 def uminhash_agg_sql(base_expr: str, i: int) -> str:
-    return f"min(({MINHASH_A[i]} * {base_expr} + {MINHASH_B[i]}) % {MINHASH_P})"
+    return f"min({affine_hash_sql(base_expr, i)})"
+
+
+def exact_dup_key() -> Column:
+    """The dedup family's exact-duplicate key over the ``text`` column:
+    md5 of the lowercased, whitespace-collapsed, trimmed text (no Unicode
+    normalization — that is ``pipelines.content_key``)."""
+    return F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
 
 
 def simhash_bit(md5_col: Column, bit: int) -> Column:

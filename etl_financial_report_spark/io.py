@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import logging
 import os
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -20,7 +21,6 @@ log = logging.getLogger(__name__)
 
 TABLES = tuple(DRIVER_TABLES)
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -118,23 +118,25 @@ def driver_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
+def _data_files(path: str) -> Iterator[str]:
+    """Every data file under a table directory, recursing into partition
+    dirs (a top-level-only listing returns nothing for a partitioned
+    layout and silently shrinks derived plan parameters) and skipping
+    ``_``/``.`` metadata dirs and files, as Spark's file index does."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
 def table_size_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a table — a pure os.stat metadata read (no Spark
     job), for sizing decisions like 'is this scan too small to parallelize
     naturally'. On a cluster, catalog file statistics serve this role."""
     path = table_path(sf_dir, name)
     if os.path.isdir(path):
-        # recurse: a partitioned/nested layout must not silently undercount
-        # (a 0 here would shrink derived plan parameters with no error)
-        total = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        return total
+        return sum(os.path.getsize(f) for f in _data_files(path))
     return os.path.getsize(path)
 
 
@@ -154,17 +156,11 @@ def table_row_count(sf_dir: str, name: str) -> int:
 
         path = table_path(sf_dir, name)
         if os.path.isdir(path):
-            # recurse: partitioned layouts nest data files under key=value
-            # dirs — a top-level-only listing would return 0 and silently
-            # shrink derived plan parameters (e.g. the cosine block grid)
-            cached = 0
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                cached += sum(
-                    pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                    for f in files
-                    if f.endswith(".parquet")
-                )
+            cached = sum(
+                pq.ParquetFile(f).metadata.num_rows
+                for f in _data_files(path)
+                if f.endswith(".parquet")
+            )
         else:
             cached = pq.ParquetFile(path).metadata.num_rows
         _ROW_COUNT_CACHE[key] = cached
@@ -195,14 +191,9 @@ def _stat_tuple(path: str) -> tuple:
     if not os.path.isdir(path):
         return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
     out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            fp = os.path.join(root, f)
-            fst = os.stat(fp)
-            out.append((os.path.relpath(fp, path), fst.st_size, fst.st_mtime_ns))
+    for fp in _data_files(path):
+        fst = os.stat(fp)
+        out.append((os.path.relpath(fp, path), fst.st_size, fst.st_mtime_ns))
     return tuple(sorted(out))
 
 

@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (
     MINHASH_P,
+    affine_hash,
+    affine_hash_sql,
+    exact_dup_key,
     hash32,
     hash32_sql,
     uminhash_agg,
@@ -2672,17 +2675,20 @@ BLOOM_K = 4
 
 
 def _bloom_pos_sql(base_expr: str, j: int) -> str:
-    from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
-
-    return f"((({MINHASH_A[j]} * {base_expr} + {MINHASH_B[j]}) % {MINHASH_P}) % {BLOOM_M})"
+    return f"(({affine_hash_sql(base_expr, j)}) % {BLOOM_M})"
 
 
-def _bloom_pos(base: F.Column, j: int) -> F.Column:
-    from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
-
-    return (
-        (F.lit(MINHASH_A[j]) * base + F.lit(MINHASH_B[j])) % F.lit(MINHASH_P)
-    ) % F.lit(BLOOM_M)
+def bloom_positions(base: F.Column) -> F.Column:
+    """The BLOOM_K (j, pos) bit structs of one key: the positions a corpus
+    key sets and a probe key tests (batch operator and streaming twin)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("j"), (affine_hash(base, j) % F.lit(BLOOM_M)).alias("pos")
+            )
+            for j in range(BLOOM_K)
+        ]
+    )
 
 
 @register(
@@ -2741,18 +2747,12 @@ WHERE b.in_batch
 )
 def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    ck = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     based = docs.select(
         "doc_id",
         ((F.col("doc_id") % INCR_BATCH_MOD) == INCR_BATCH_REM).alias("in_batch"),
-        ck.alias("ck"),
+        exact_dup_key().alias("ck"),
     ).withColumn("base", F.conv(F.substring("ck", 1, 8), 16, 10).cast("long"))
-    pos_structs = F.array(
-        *[
-            F.struct(F.lit(j).alias("j"), _bloom_pos(F.col("base"), j).alias("pos"))
-            for j in range(BLOOM_K)
-        ]
-    )
+    pos_structs = bloom_positions(F.col("base"))
     filter_bits = (
         based.where(~F.col("in_batch"))
         .select(F.explode(pos_structs).alias("r"))
@@ -2859,11 +2859,10 @@ def bloom_native_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.bloom_native import build_bloom_filter_jvm, with_might_contain
 
     docs = load_table(spark, sf_dir, "documents")
-    ck = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     based = docs.select(
         "doc_id",
         ((F.col("doc_id") % INCR_BATCH_MOD) == INCR_BATCH_REM).alias("in_batch"),
-        ck.alias("ck"),
+        exact_dup_key().alias("ck"),
     ).withColumn("h", F.xxhash64("ck"))
     corpus = based.where(~F.col("in_batch"))
     flt = build_bloom_filter_jvm(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import exact_dup_key
 from ..functions.topk import topk_per_key
 from ..io import driver_frame, load_table
 from ..registry import register
@@ -995,11 +996,10 @@ def pipeline_quality_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         & mean_wl.between(GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN)
         & (n_stop >= GOPHER_MIN_STOPWORDS)
     )
-    # canonical content key — the dedup family's exact-dup definition
-    ck = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     gated = docs.select(
         "doc_id",
-        ck.alias("h"),
+        # canonical content key — the dedup family's exact-dup definition
+        exact_dup_key().alias("h"),
         n.cast("long").alias("n_tokens"),
         keep.alias("quality_keep"),
     )

@@ -669,8 +669,6 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- centroid UDAF
 
-EMB_DIM = 64
-
 
 @register(
     "agg_embedding_centroid",

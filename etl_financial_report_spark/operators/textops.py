@@ -1378,15 +1378,23 @@ def _cms_bucket(base: Column, j: int, width: int) -> Column:
     """Row-j counter index: the universal-hash family (A_j*h32 + B_j) mod P
     folded onto the counter width — exact 64-bit in both engines
     (functions/hashing's MinHash constants, A < 2^20, h32 < 2^32)."""
-    from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
+    from ..functions.hashing import affine_hash
 
-    return ((F.lit(MINHASH_A[j]) * base + F.lit(MINHASH_B[j])) % F.lit(MINHASH_P)) % F.lit(width)
+    return affine_hash(base, j) % F.lit(width)
 
 
 def _cms_bucket_sql(base_expr: str, j: int, width: int) -> str:
-    from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
+    from ..functions.hashing import affine_hash_sql
 
-    return f"((({MINHASH_A[j]} * {base_expr} + {MINHASH_B[j]}) % {MINHASH_P}) % {width})"
+    return f"(({affine_hash_sql(base_expr, j)}) % {width})"
+
+
+def cms_buckets(base: Column, width: int) -> Column:
+    """The CMS_D (j, b) counter structs of one token: the counters a token
+    increments in the sketch and the counters a probe reads back."""
+    return F.array(
+        *[F.struct(F.lit(j).alias("j"), _cms_bucket(base, j, width).alias("b")) for j in range(CMS_D)]
+    )
 
 
 def _cms_oracle(width: int) -> str:
@@ -1437,16 +1445,8 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str, width: int) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("base", hash32(F.col("tok")))
     )
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"), _cms_bucket(F.col("base"), j, width).alias("b")
-            )
-            for j in range(CMS_D)
-        ]
-    )
     cms = (
-        toks.select("n", F.explode(buckets).alias("r"))
+        toks.select("n", F.explode(cms_buckets(F.col("base"), width)).alias("r"))
         .groupBy("r.j", "r.b")
         .agg(F.sum("n").alias("cnt"))
     )
@@ -1459,16 +1459,8 @@ def cms_probe_report(toks: DataFrame, cms: DataFrame, width: int) -> DataFrame:
     both surfaces emit identical report rows: the exact top-K tokens of
     ``toks`` (tok, n, base) interrogate the ``cms`` (j, b, cnt) sketch —
     row-minimum estimate, one-sided guarantee, collision error in ppm."""
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"), _cms_bucket(F.col("base"), j, width).alias("b")
-            )
-            for j in range(CMS_D)
-        ]
-    )
     top = toks.orderBy(F.desc("n"), F.asc("tok")).limit(CMS_TOP_K)
-    probes = top.select("tok", "n", F.explode(buckets).alias("r")).select(
+    probes = top.select("tok", "n", F.explode(cms_buckets(F.col("base"), width)).alias("r")).select(
         "tok", "n", F.col("r.j").alias("j"), F.col("r.b").alias("b")
     )
     est = (

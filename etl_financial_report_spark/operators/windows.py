@@ -27,8 +27,6 @@ NOTE_PATTERN = r"^(\d{1,2}|(\d{1,2}[a-z])|(\d{1,2}(?:,\d{1,2}[a-z]?)*))$"
 #: This 5-column suffix of the unique lineitem key makes every sequence
 #: window deterministic (same list in Spark and oracle SQL).
 LINE_ORDER_COLS = ["l_linenumber", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"]
-LINE_ORDER_SQL = "l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice"
-
 
 
 @register(

@@ -18,20 +18,52 @@ Scale notes (100 TB / 1000-executor shape):
 * ``applyInPandasWithState`` holds one state row per user_id — the
   at-scale pattern for custom sequential logic (same kernel as the CALK
   sectionizer: sequential within key, parallel across keys).
+
+Drain contract (every runner goes through ``_drain``):
+
+* availableNow: a run processes every file present at start, in
+  micro-batches bounded by the source's files-per-trigger option, then
+  stops; the runner returns once the query has terminated, and a failed
+  micro-batch surfaces as ``StreamingQueryException``.
+* One checkpoint per drain: each micro-batch runner passes its own
+  ``checkpoint_dir`` (a runner with two drains uses one subdirectory
+  each), and a fresh checkpoint replays every file from batch 0.
+* Idempotent sinks keyed per file: landed partials are keyed on the md5
+  of their source file (``_src_key``), never on the batch id, so a replay
+  under a fresh checkpoint, in another file order or under a changed
+  trigger config lands nothing twice.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import EVENTS
 from .events import tumbling_counts
+
+
+def _file_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | None = None,
+    max_files_per_trigger: int | None = 1,
+) -> DataFrame:
+    """Parquet file-source stream over ``path``. Without ``schema`` it is
+    the directory's footer schema (one footer read, no job);
+    ``max_files_per_trigger`` bounds each micro-batch (None: unbounded)."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
 
 
 def stream_events(
@@ -50,10 +82,48 @@ def stream_events(
     force multi-batch runs so stateful operators prove their state
     actually carries across batches.
     """
-    reader = spark.readStream.schema(EVENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(events_dir).withWatermark("ts", watermark)
+    return _file_stream(spark, events_dir, EVENTS, max_files_per_trigger).withWatermark(
+        "ts", watermark
+    )
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Run ``writer`` to completion over the files present at start."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _drain_to_memory(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Drain ``df`` into the in-memory table ``name`` and return it."""
+    _drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    return df.sparkSession.table(name)
+
+
+def _drain_batches(
+    stream: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str
+) -> None:
+    """Drain ``stream`` through ``fn(batch_df, batch_id)`` per micro-batch."""
+    _drain(stream.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint_dir))
+
+
+def _src_key(batch_id: int) -> Column:
+    """md5 of each row's source file: the partial key that is the same
+    rows whichever batch a trigger put the file in (non-file rows fall
+    back to the batch id; file streams never reach it)."""
+    return F.md5(
+        F.coalesce(F.nullif(F.input_file_name(), F.lit("")), F.lit(f"batch-{batch_id}"))
+    )
+
+
+def _src_token_counts(batch_df: DataFrame, batch_id: int) -> DataFrame:
+    """(src, tok, n): one micro-batch's space-split token counts per
+    source file."""
+    return (
+        batch_df.select(
+            _src_key(batch_id).alias("src"), F.explode(F.split("text", " ")).alias("tok")
+        )
+        .groupBy("src", "tok")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 # ------------------------------------------------------------- pipelines
@@ -63,15 +133,7 @@ def run_tumbling_stream(spark: SparkSession, events_dir: str, width: str = "1 ho
     """Tumbling-window counts as a stream, complete output mode; identical
     logical aggregation to the oracle-checked ``events_tumbling_window``."""
     agg = tumbling_counts(stream_events(spark, events_dir))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("tumbling_stream")
+    return _drain_to_memory(agg, "tumbling_stream", "complete")
 
 
 def run_session_window_stream(
@@ -94,15 +156,7 @@ def run_session_window_stream(
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("session_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("session_stream")
+    return _drain_to_memory(agg, "session_stream", "complete")
 
 
 def run_dedupe_stream(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -110,15 +164,7 @@ def run_dedupe_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     keeps one state entry per key inside the watermark horizon — the J3
     idempotent-ingest guard as bounded stream state."""
     deduped = stream_events(spark, events_dir).dropDuplicatesWithinWatermark(["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedupe_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("dedupe_stream")
+    return _drain_to_memory(deduped, "dedupe_stream", "append")
 
 
 # --------------------------------------------- custom stateful operator
@@ -139,19 +185,29 @@ USER_TOTALS_SCHEMA = T.StructType(
 )
 
 
-def _update_user_totals(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def _fold_user_totals(
+    key: tuple, prior: tuple | None, pdfs: Iterator[pd.DataFrame]
+) -> tuple[tuple, pd.DataFrame]:
+    """Fold one user's pandas chunks into its (n_events, total_value)
+    state; returns the new state and its output row. Shared by both
+    stateful APIs."""
     (user_id,) = key
-    if state.exists:
-        n, total = state.get
-    else:
-        n, total = 0, 0.0
+    n, total = prior if prior is not None else (0, 0.0)
     for pdf in pdfs:
         n += len(pdf)
         total += float(pdf["value"].sum())
-    state.update((n, round(total, 6)))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [round(total, 6)]})
+    total = round(total, 6)
+    return (n, total), pd.DataFrame(
+        {"user_id": [user_id], "n_events": [n], "total_value": [total]}
+    )
+
+
+def _update_user_totals(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    new, row = _fold_user_totals(key, state.get if state.exists else None, pdfs)
+    state.update(new)
+    yield row
 
 
 def run_user_totals_stream(
@@ -169,25 +225,15 @@ def run_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("user_totals_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("user_totals_stream")
+    return _drain_to_memory(totals, "user_totals_stream", "update")
 
 
-def run_stream_stream_join(
-    spark: SparkSession, events_dir: str, window_s: int = 300
+def _purchase_click_join(
+    spark: SparkSession, events_dir: str, window_s: int, how: str
 ) -> DataFrame:
-    """Stream-stream inner join: each purchase joined to the same user's
-    clicks in the preceding ``window_s`` seconds. Both sides carry
-    watermarks and the join condition carries the time bound, so state on
-    each side is evicted once the watermark passes the interval — the
-    streaming twin of the batch range join (operators/asof.py)."""
+    """(purchase_id, click_id, user_id, p_ts): each purchase joined
+    ``how`` to the same user's clicks in the preceding ``window_s``
+    seconds, both sides watermarked streams."""
     clicks = (
         stream_events(spark, events_dir)
         .where(F.col("event_type") == "click")
@@ -206,21 +252,25 @@ def run_stream_stream_join(
             F.col("ts").alias("p_ts"),
         )
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window_s} SECONDS")),
-    ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("ss_join_stream")
+        how,
+    ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"), "p_ts")
+
+
+def run_stream_stream_join(
+    spark: SparkSession, events_dir: str, window_s: int = 300
+) -> DataFrame:
+    """Stream-stream inner join: each purchase joined to the same user's
+    clicks in the preceding ``window_s`` seconds. Both sides carry
+    watermarks and the join condition carries the time bound, so state on
+    each side is evicted once the watermark passes the interval — the
+    streaming twin of the batch range join (operators/asof.py)."""
+    joined = _purchase_click_join(spark, events_dir, window_s, "inner").drop("p_ts")
+    return _drain_to_memory(joined, "ss_join_stream", "append")
 
 
 def run_stream_stream_left_outer(
@@ -238,40 +288,8 @@ def run_stream_stream_left_outer(
     availableNow run terminates — callers needing a complete answer batch
     over the closed prefix, which is what the test's batch twin does.
     """
-    clicks = (
-        stream_events(spark, events_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    purchases = (
-        stream_events(spark, events_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window_s} SECONDS")),
-        "leftOuter",
-    ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"), "p_ts")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_left_outer_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("ss_left_outer_stream")
+    joined = _purchase_click_join(spark, events_dir, window_s, "leftOuter")
+    return _drain_to_memory(joined, "ss_left_outer_stream", "append")
 
 
 def run_dedupe_to_parquet(
@@ -282,15 +300,12 @@ def run_dedupe_to_parquet(
     reprocesses nothing, so the sink never double-writes (the streaming
     form of the J3 idempotency guard on the WRITE side)."""
     deduped = stream_events(spark, events_dir).dropDuplicatesWithinWatermark(["event_id"])
-    q = (
+    _drain(
         deduped.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def run_sliding_stream(
@@ -301,15 +316,7 @@ def run_sliding_stream(
     from .events import sliding_counts
 
     agg = sliding_counts(stream_events(spark, events_dir), width, slide)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sliding_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("sliding_stream")
+    return _drain_to_memory(agg, "sliding_stream", "complete")
 
 
 def run_stream_static_enrichment(
@@ -331,15 +338,7 @@ def run_stream_static_enrichment(
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enrich_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("enrich_stream")
+    return _drain_to_memory(enriched, "enrich_stream", "complete")
 
 
 def run_foreach_batch_upsert(
@@ -356,19 +355,9 @@ def run_foreach_batch_upsert(
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         compact = batch_df.select("event_id", "user_id", "event_type", "value")
-        if sink.exists():
-            existing = sink.read(batch_df.sparkSession).select("event_id")
-            compact = compact.join(existing, "event_id", "left_anti")
-        compact.write.mode("append").parquet(out_dir)
+        sink.append_idempotent(compact, key_cols=["event_id"])
 
-    q = (
-        stream_events(spark, events_dir)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(stream_events(spark, events_dir), upsert, checkpoint_dir)
 
 
 def run_corpus_ingest_stream(
@@ -384,19 +373,13 @@ def run_corpus_ingest_stream(
     is the sink itself (an anti-join per batch, no in-memory key set), so
     a year-long ingest holds zero streaming state for the dedup decision.
     Returns the deduped table."""
+    from ..functions.hashing import exact_dup_key
     from ..sources.sinks import ParquetSink
 
-    schema = spark.read.parquet(docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=("source",))
-    ck = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        keyed = batch_df.withColumn("ck", ck)
+        keyed = batch_df.withColumn("ck", exact_dup_key())
         # first-doc-per-cluster via two-phase groupBy+join (min partially
         # aggregates; a window over the content hash would hold a whole
         # dup cluster in one task even within a micro-batch)
@@ -404,13 +387,7 @@ def run_corpus_ingest_stream(
         first = keyed.join(firsts, ["ck", "doc_id"])
         sink.append_idempotent(first, key_cols=["ck"])
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, docs_dir), upsert, checkpoint_dir)
     return sink.read(spark)
 
 
@@ -439,25 +416,13 @@ def run_incremental_dedup_stream(
         name: frame.localCheckpoint()
         for name, frame in build_corpus_dedup_index(corpus_docs).items()
     }
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=("verdict",))
 
     def verdict_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = incremental_verdicts(batch_df, index)
         sink.append_idempotent(out, key_cols=["doc_id"])
 
-    q = (
-        stream.writeStream.foreachBatch(verdict_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), verdict_batch, checkpoint_dir)
     return sink.read(spark)
 
 
@@ -482,25 +447,13 @@ def run_chunk_dedup_stream(
     from ..sources.sinks import ParquetSink
 
     cset = build_corpus_chunk_index(corpus_docs).localCheckpoint()
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=())
 
     def verdict_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = chunk_incremental_verdicts(batch_df, cset)
         sink.append_idempotent(out, key_cols=["doc_id"])
 
-    q = (
-        stream.writeStream.foreachBatch(verdict_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), verdict_batch, checkpoint_dir)
     return sink.read(spark)
 
 
@@ -522,18 +475,10 @@ def run_quality_classifier_stream(
     verdicts (weak_label for agreement monitoring, margin,
     predicted_keep) land through the idempotent sink keyed on doc_id, so
     a replayed batch cannot double-report. Returns the verdict table."""
-    from pyspark.sql import functions as F
-
     from ..operators.quality import _qc_weights, qc_score_docs
     from ..sources.sinks import ParquetSink
 
     w = _qc_weights(spark, corpus_sf_dir)
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=())
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -545,13 +490,7 @@ def run_quality_classifier_stream(
         )
         sink.append_idempotent(out, key_cols=["doc_id"])
 
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), score_batch, checkpoint_dir)
     return sink.read(spark)
 
 
@@ -565,8 +504,8 @@ def run_token_drift_stream(
     """Streaming twin of ``corpus_token_drift`` — the accept-a-new-crawl
     monitor as a stream: new documents arrive in per-file microbatches,
     each batch's token counts land through the idempotent sink keyed on
-    (tok, batch_id) — a replayed batch cannot double-count — and the
-    final report rates the ACCUMULATED new-slice counts against the
+    (tok, source file) — a replay under a fresh checkpoint, in any file
+    order, cannot double-count — and the final report rates the ACCUMULATED new-slice counts against the
     baseline corpus counts (materialized once, reused per batch zero
     times: the baseline only enters at report time). The rate/top-K math
     is textops.token_drift_report, the same code path as the batch query,
@@ -582,30 +521,12 @@ def run_token_drift_stream(
         .agg(F.count(F.lit(1)).alias("n_old"))
         .localCheckpoint()
     )
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=())
 
     def count_batch(batch_df: DataFrame, batch_id: int) -> None:
-        c = (
-            batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        sink.append_idempotent(c, key_cols=["tok", "batch_id"])
+        sink.append_idempotent(_src_token_counts(batch_df, batch_id), key_cols=["tok", "src"])
 
-    q = (
-        stream.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), count_batch, checkpoint_dir)
     new_cnt = sink.read(spark).groupBy("tok").agg(F.sum("n").alias("n_new"))
     cnt = (
         base_cnt.join(new_cnt, "tok", "full_outer")
@@ -643,12 +564,6 @@ def run_snapshot_ingest_stream(
 
     from ..sources.snapshots import SnapshotTable
 
-    schema = spark.read.parquet(docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(docs_dir)
-    )
     table = SnapshotTable(table_dir)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -698,13 +613,7 @@ def run_snapshot_ingest_stream(
             tag = f"content-{agg['n']}-{fp}"
             table.commit_append(batch_df, tag=tag)
 
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, docs_dir), commit_batch, checkpoint_dir)
     return table
 
 
@@ -736,18 +645,10 @@ class _UserTotalsProcessor(StatefulProcessor):
         self._state = handle.getValueState("totals", USER_STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if self._state.exists():
-            n, total = self._state.get()
-        else:
-            n, total = 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, round(total, 6)))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [round(total, 6)]}
-        )
+        prior = self._state.get() if self._state.exists() else None
+        new, row = _fold_user_totals(key, prior, rows)
+        self._state.update(new)
+        yield row
 
     def close(self) -> None:
         pass
@@ -779,15 +680,7 @@ def run_user_totals_tws(
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("user_totals_tws")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("user_totals_tws")
+    return _drain_to_memory(totals, "user_totals_tws", "update")
 
 
 def run_bloom_prefilter_stream(
@@ -809,54 +702,31 @@ def run_bloom_prefilter_stream(
     corpus ingest (bloom inserts are monotone — union of filters IS the
     filter of the union). Batch/stream agreement is pinned by
     tests/test_streaming.py."""
-    from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
-    from ..operators.dedup import BLOOM_K, BLOOM_M
+    from ..functions.hashing import exact_dup_key
+    from ..operators.dedup import BLOOM_K, bloom_positions
     from ..sources.sinks import ParquetSink
 
-    ck = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-
     def based(df: DataFrame) -> DataFrame:
-        return df.select("doc_id", ck.alias("ck")).withColumn(
+        return df.select("doc_id", exact_dup_key().alias("ck")).withColumn(
             "base", F.conv(F.substring("ck", 1, 8), 16, 10).cast("long")
-        )
-
-    def pos_structs() -> F.Column:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    (
-                        (F.lit(MINHASH_A[j]) * F.col("base") + F.lit(MINHASH_B[j]))
-                        % F.lit(MINHASH_P)
-                        % F.lit(BLOOM_M)
-                    ).alias("pos"),
-                )
-                for j in range(BLOOM_K)
-            ]
         )
 
     corpus_based = based(corpus_docs)
     filter_bits = (
-        corpus_based.select(F.explode(pos_structs()).alias("r"))
+        corpus_based.select(F.explode(bloom_positions(F.col("base"))).alias("r"))
         .select("r.j", "r.pos")
         .distinct()
         .localCheckpoint()
     )
     corpus_keys = corpus_based.select("ck").distinct().localCheckpoint()
 
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=())
 
     def verdict_batch(batch_df: DataFrame, batch_id: int) -> None:
         b = based(batch_df)
-        probes = b.select("doc_id", F.explode(pos_structs()).alias("r")).select(
-            "doc_id", "r.j", "r.pos"
-        )
+        probes = b.select(
+            "doc_id", F.explode(bloom_positions(F.col("base"))).alias("r")
+        ).select("doc_id", "r.j", "r.pos")
         hits = (
             probes.join(F.broadcast(filter_bits), ["j", "pos"])
             .groupBy("doc_id")
@@ -890,13 +760,7 @@ def run_bloom_prefilter_stream(
         )
         sink.append_idempotent(out, key_cols=["doc_id"])
 
-    q = (
-        stream.writeStream.foreachBatch(verdict_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), verdict_batch, checkpoint_dir)
     return sink.read(spark)
 
 
@@ -921,58 +785,27 @@ def run_cms_stream(
     operator's sketch counter-for-counter — the CMS merge theorem (sum
     of sketches of slices == sketch of the union) made executable — and
     that a replay under a CHANGED trigger config adds nothing."""
-    from ..operators import textops
     from ..functions.hashing import hash32
+    from ..operators.textops import CMS_W, cms_buckets
     from ..sources.sinks import ParquetSink
 
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(out_dir, partition_cols=())
 
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
         # partials keyed by SOURCE FILE, not batch id: a sketch of a file
         # is the same rows no matter which batch the trigger put it in,
-        # so replays under any trigger config dedupe exactly (non-file
-        # rows fall back to the batch id — file streams never hit it)
-        src = F.coalesce(
-            F.nullif(F.input_file_name(), F.lit("")), F.lit(f"batch-{batch_id}")
-        )
-        toks = (
-            batch_df.select(
-                F.md5(src).alias("src"),
-                F.explode(F.split("text", " ")).alias("tok"),
-            )
-            .groupBy("src", "tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("base", hash32(F.col("tok")))
-        )
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    textops._cms_bucket(F.col("base"), j, textops.CMS_W).alias("b"),
-                )
-                for j in range(textops.CMS_D)
-            ]
-        )
+        # so replays under any trigger config dedupe exactly
         partial = (
-            toks.select("src", "n", F.explode(buckets).alias("r"))
+            _src_token_counts(batch_df, batch_id)
+            .withColumn("base", hash32(F.col("tok")))
+            .select("src", "n", F.explode(cms_buckets(F.col("base"), CMS_W)).alias("r"))
             .groupBy("src", "r.j", "r.b")
             .agg(F.sum("n").alias("cnt"))
         )
         sink.append_idempotent(partial, key_cols=["j", "b", "src"])
 
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _file_stream(spark, new_docs_dir, max_files_per_trigger=max_files_per_trigger)
+    _drain_batches(stream, sketch_batch, checkpoint_dir)
     return (
         sink.read(spark)
         .groupBy("j", "b")
@@ -1008,36 +841,12 @@ def run_cms_report_stream(
     merged_sketch = run_cms_stream(
         spark, new_docs_dir, f"{out_dir}/sketch", f"{checkpoint_dir}/sketch"
     )
-
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     tok_sink = ParquetSink(f"{out_dir}/tokcnt", partition_cols=())
 
     def count_batch(batch_df: DataFrame, batch_id: int) -> None:
-        src = F.coalesce(
-            F.nullif(F.input_file_name(), F.lit("")), F.lit(f"batch-{batch_id}")
-        )
-        c = (
-            batch_df.select(
-                F.md5(src).alias("src"),
-                F.explode(F.split("text", " ")).alias("tok"),
-            )
-            .groupBy("src", "tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        tok_sink.append_idempotent(c, key_cols=["tok", "src"])
+        tok_sink.append_idempotent(_src_token_counts(batch_df, batch_id), key_cols=["tok", "src"])
 
-    q = (
-        stream.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", f"{checkpoint_dir}/tokcnt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), count_batch, f"{checkpoint_dir}/tokcnt")
     toks = (
         tok_sink.read(spark)
         .groupBy("tok")
@@ -1067,22 +876,13 @@ def run_manifest_stream(
     from ..functions.hashing import hash32
     from ..sources.sinks import ParquetSink
 
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(f"{out_dir}/partials", partition_cols=())
 
     def manifest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        src = F.coalesce(
-            F.nullif(F.input_file_name(), F.lit("")), F.lit(f"batch-{batch_id}")
-        )
         h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")
         part = (
             batch_df.select(
-                F.md5(src).alias("src"),
+                _src_key(batch_id).alias("src"),
                 (hash32(F.col("doc_id").cast("string")) % N_MANIFEST_SHARDS).alias(
                     "shard"
                 ),
@@ -1101,13 +901,7 @@ def run_manifest_stream(
         )
         sink.append_idempotent(part, key_cols=["src", "shard"])
 
-    q = (
-        stream.writeStream.foreachBatch(manifest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), manifest_batch, checkpoint_dir)
     return (
         sink.read(spark)
         .groupBy("shard")
@@ -1225,12 +1019,6 @@ def run_corpus_build_stream(
     from ..sources.sinks import ParquetSink
     from ..sources.snapshots import SnapshotTable
 
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     gate_sink = ParquetSink(f"{out_dir}/gate_rows", partition_cols=())
     bench_sink = ParquetSink(f"{out_dir}/bench_shingles", partition_cols=())
     _check_gate_sink_schema(spark, gate_sink)
@@ -1275,13 +1063,7 @@ def run_corpus_build_stream(
         )
         bench_sink.append_idempotent(bench, key_cols=["w"])
 
-    q = (
-        stream.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), gate_batch, checkpoint_dir)
 
     gate = gate_sink.read(spark)
     canon = gate.groupBy("ck").agg(F.min("doc_id").alias("canonical_id"))
@@ -1394,33 +1176,15 @@ def run_unigram_train_stream(
     from ..operators.unigram import UNIGRAM_MAX_WORD, unigram_train_output
     from ..sources.sinks import ParquetSink
 
-    schema = spark.read.parquet(new_docs_dir).schema  # one footer read, no job
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(new_docs_dir)
-    )
     sink = ParquetSink(f"{out_dir}/word_partials", partition_cols=())
 
     def word_batch(batch_df: DataFrame, batch_id: int) -> None:
-        src = F.coalesce(
-            F.nullif(F.input_file_name(), F.lit("")), F.lit(f"batch-{batch_id}")
-        )
-        part = (
-            batch_df.select(F.md5(src).alias("src"), F.explode(F.split("text", " ")).alias("tok"))
-            .where(F.length("tok").between(1, UNIGRAM_MAX_WORD))
-            .groupBy("src", "tok")
-            .agg(F.count(F.lit(1)).alias("n"))
+        part = _src_token_counts(batch_df, batch_id).where(
+            F.length("tok").between(1, UNIGRAM_MAX_WORD)
         )
         sink.append_idempotent(part, key_cols=["src", "tok"])
 
-    q = (
-        stream.writeStream.foreachBatch(word_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(_file_stream(spark, new_docs_dir), word_batch, checkpoint_dir)
     words = (
         sink.read(spark).groupBy("tok").agg(F.sum("n").cast("long").alias("n"))
     )

@@ -181,6 +181,46 @@ def test_user_totals_transform_with_state(spark, events_dir):
     )
 
 
+def test_user_totals_processor_folds_like_apply_in_pandas_with_state():
+    """The transformWithState processor and the applyInPandasWithState
+    function fold chunks through the same code: same rows, same state,
+    carried across calls (runs without the TWS runtime's protobuf)."""
+    import pandas as pd
+
+    class Value:
+        def __init__(self):
+            self.v = None
+
+        def exists(self):
+            return self.v is not None
+
+        def get(self):
+            return self.v
+
+        def update(self, v):
+            self.v = v
+
+    class Handle:
+        def getValueState(self, name, schema):
+            return Value()
+
+    class State:
+        exists, get = False, None
+
+        def update(self, v):
+            self.exists, self.get = True, v
+
+    proc, state = runtime._UserTotalsProcessor(), State()
+    proc.init(Handle())
+    for chunks in ([[1.5, 2.25], [0.125]], [[4.0]]):
+        pdfs = [pd.DataFrame({"value": c}) for c in chunks]
+        (a,) = proc.handleInputRows((7,), iter(pdfs), None)
+        (b,) = runtime._update_user_totals((7,), iter(pdfs), state)
+        assert a.to_dict("records") == b.to_dict("records")
+    assert a.to_dict("records") == [{"user_id": 7, "n_events": 4, "total_value": 7.875}]
+    assert proc._state.get() == state.get == (4, 7.875)
+
+
 def test_stream_stream_left_outer_matches_batch(spark, events_dir, tmp_path):
     """Matched rows equal the batch inner join; null-click rows appear
     exactly for purchases with no qualifying click. A left-outer stream
@@ -296,7 +336,7 @@ def test_token_drift_stream_matches_batch_operator(spark, tmp_path):
     batch corpus_token_drift on the same old/new split (the rate logic is
     literally shared — this pins that the accumulation path feeding it is
     too), and a replayed stream must not double-count (idempotent sink
-    keyed on (tok, batch_id))."""
+    keyed on (tok, source file))."""
     from etl_financial_report_spark.operators.textops import corpus_token_drift
 
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
@@ -322,7 +362,7 @@ def test_token_drift_stream_matches_batch_operator(spark, tmp_path):
     w = [tuple(r) for r in want.collect()]
     assert g == w  # ordered: same top-K movers, same rates, same ties
 
-    # replay with a fresh checkpoint: the (tok, batch_id) key dedupes
+    # replay with a fresh checkpoint: the (tok, source file) key dedupes
     got2 = runtime.run_token_drift_stream(
         spark,
         new_dir,
@@ -331,6 +371,59 @@ def test_token_drift_stream_matches_batch_operator(spark, tmp_path):
         str(tmp_path / "ckpt2"),
     )
     assert [tuple(r) for r in got2.collect()] == w
+
+
+def test_token_drift_stream_survives_a_file_landing_out_of_order(spark, tmp_path):
+    """A file that lists AHEAD of an already-landed one (the file source
+    orders by mtime) is batch 0 again under a fresh checkpoint. Per-file
+    partial keys land it once and skip the landed file, so the report
+    still equals the batch corpus_token_drift; batch-id keys would drop
+    its overlap with the landed file and count the landed file twice."""
+    import os
+
+    from etl_financial_report_spark.operators.textops import corpus_token_drift
+
+    docs = load_table(spark, SMOKE_SF_DIR, "documents")
+    new_half = (F.col("doc_id") % 2) == 1
+    new_dir = str(tmp_path / "new_docs")
+    baseline, out = docs.where(~new_half), str(tmp_path / "counts")
+
+    def data_files():
+        return {os.path.join(new_dir, f) for f in os.listdir(new_dir) if f.endswith(".parquet")}
+
+    docs.where(new_half & (F.col("doc_id") < 250)).coalesce(1).write.parquet(new_dir)
+    runtime.run_token_drift_stream(spark, new_dir, baseline, out, str(tmp_path / "ckpt"))
+    landed = data_files()
+    docs.where(new_half & (F.col("doc_id") >= 250)).coalesce(1).write.mode(
+        "append"
+    ).parquet(new_dir)
+    older = min(os.stat(f).st_mtime for f in landed) - 3600
+    for f in data_files() - landed:
+        os.utime(f, (older, older))
+
+    got = runtime.run_token_drift_stream(spark, new_dir, baseline, out, str(tmp_path / "ckpt2"))
+    want = corpus_token_drift(spark, SMOKE_SF_DIR)
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+
+def test_failing_micro_batch_surfaces_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A micro-batch that raises fails its runner with a
+    StreamingQueryException carrying the cause, and leaves no active
+    query behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from etl_financial_report_spark.sources.sinks import ParquetSink
+
+    src = str(tmp_path / "src")
+    load_table(spark, SMOKE_SF_DIR, "documents").coalesce(1).write.parquet(src)
+
+    def sink_down(self, df, key_cols=None):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(ParquetSink, "append_idempotent", sink_down)
+    with pytest.raises(StreamingQueryException, match="sink down"):
+        runtime.run_manifest_stream(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert spark.streams.active == []
 
 
 def test_bloom_prefilter_stream_matches_batch_operator(spark, tmp_path):
@@ -457,7 +550,7 @@ def test_cms_report_stream_matches_batch_report(spark, tmp_path):
     want = rows(text_cms_heavy_hitters(spark, SMOKE_SF_DIR))
     assert got == want and len(got) > 0
 
-    # lost-checkpoint replay: batch_id-keyed partial dedupe keeps both
+    # lost-checkpoint replay: per-file-keyed partial dedupe keeps both
     # the sketch and the token counters single-counted
     got2 = rows(
         runtime.run_cms_report_stream(
