@@ -121,6 +121,14 @@ def _shingles(text: F.Column, toks: F.Column) -> F.Column:
     return F.when(F.size(toks) < 3, F.array(text)).otherwise(F.array_distinct(grams))
 
 
+def _shingle_rows(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, w): one row per distinct shingle (:func:`_shingles`) of each
+    row of ``docs``, which needs ``text`` and the ``keep`` columns."""
+    return docs.select(*keep, "text", F.split("text", " ").alias("toks")).select(
+        *keep, F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w")
+    )
+
+
 _SHINGLES_SQL = """
 CASE WHEN len(string_split(text, ' ')) < 3 THEN [text]
      ELSE list_distinct(list_transform(
@@ -136,11 +144,7 @@ def _minhash_signature_of(docs: DataFrame) -> DataFrame:
     k affine minhashes (universal-hash family; one shuffle total).
     ``docs`` needs (doc_id, text) — any frame, not just the full table
     (the incremental/streaming paths sign a batch slice)."""
-    toks = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-        .select("doc_id", hash32(F.col("w")).alias("hw"))
-    )
+    toks = _shingle_rows(docs, "doc_id").select("doc_id", hash32(F.col("w")).alias("hw"))
     aggs = [uminhash_agg(F.col("hw"), i).alias(f"h{i}") for i in range(N_HASHES)]
     return toks.groupBy("doc_id").agg(*aggs)
 
@@ -425,13 +429,34 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The exact verifiers are PARAMETERIZED STAGES over an explicit candidate-pair
 # DataFrame: at scale the pair frame comes from LSH (dedup_lsh_verified), so
 # the token stream is only ever joined THROUGH candidates — never against
-# itself. The bounded doc_id<150 forms survive only as oracle demo harnesses
-# whose candidate generation is the token self-join the oracle SQL mirrors.
+# itself. The bounded doc_id < EVAL_SLICE forms survive only as oracle demo
+# harnesses whose candidate generation is the token self-join the oracle SQL
+# mirrors.
+
+#: token-jaccard near-dup bar: the verdict threshold for LSH candidates and
+#: the bounded demo's cut
+VERIFY_JACCARD = 0.8
+
+#: containment near-dup bar: the verdict threshold for LSH candidates and
+#: the bounded demo's cut
+VERIFY_CONTAINMENT = 0.9
+
+#: ground-truth jaccard bar for the recall eval — matched to the banding
+#: config's estimand (4 bands x 2 hashes surface j>=0.5 pairs w.h.p.)
+TRUTH_JACCARD = 0.5
+
+#: bounded slice (doc_id < EVAL_SLICE) of the demos and the recall eval
+#: (all-pairs ground truth is O(slice^2) by definition)
+EVAL_SLICE = 150
 
 
 def distinct_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, w): distinct whitespace tokens per document."""
     return docs.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w"))
+
+
+#: SQL twin of :func:`distinct_tokens` over the documents table
+_TOKENS_SQL = "SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents"
 
 
 def _pair_intersections(
@@ -444,7 +469,8 @@ def _pair_intersections(
     output is quadratic under stopword skew. Shuffle cost is O(|pairs| ×
     avg_tokens), the shape dedup_minhash_calibration established. Disjoint
     candidates come back with n_shared = 0 (left join), so downstream
-    verdicts cover every candidate, not just overlapping ones.
+    verdicts cover every candidate, not just overlapping ones. The oracle
+    SQL's twin is :func:`_pair_intersections_sql`.
 
     ``sizes`` (r15): an optional pre-computed (doc_id, n) frame. The
     default derives it from ``toks`` — a third execution of the token
@@ -475,6 +501,43 @@ def _pair_intersections(
     )
 
 
+def _pair_intersections_sql(pairs: str, toks: str) -> str:
+    """SQL twin of :func:`_pair_intersections`: a CTE chain ending in
+    ``pair_overlap`` = (doc_a, doc_b, n_shared, na, nb) for every row of the
+    (doc_a, doc_b) relation ``pairs``, over the (doc_id, w) relation
+    ``toks``. The same pair-driven join, and the same explicit 0 for a
+    disjoint candidate."""
+    return f"""po_sizes AS (SELECT doc_id, COUNT(*) AS n FROM {toks} GROUP BY doc_id),
+po_inter AS (
+    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
+    FROM {pairs} p
+    JOIN {toks} a ON a.doc_id = p.doc_a
+    JOIN {toks} b ON b.doc_id = p.doc_b AND b.w = a.w
+    GROUP BY p.doc_a, p.doc_b
+),
+pair_overlap AS (
+    SELECT p.doc_a, p.doc_b,
+           CAST(COALESCE(i.n_shared, 0) AS BIGINT) AS n_shared,
+           sa.n AS na, sb.n AS nb
+    FROM {pairs} p
+    JOIN po_sizes sa ON sa.doc_id = p.doc_a
+    JOIN po_sizes sb ON sb.doc_id = p.doc_b
+    LEFT JOIN po_inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+)"""
+
+
+def _jaccard() -> F.Column:
+    """Exact jaccard of a :func:`_pair_intersections` row."""
+    shared = F.col("n_shared")
+    return shared.cast("double") / (F.col("na") + F.col("nb") - shared)
+
+
+#: the SQL of :func:`_jaccard` and of the containment ratio over a
+#: ``pair_overlap`` row
+_JACCARD_SQL = "CAST(n_shared AS DOUBLE) / (na + nb - n_shared)"
+_CONTAINMENT_SQL = "CAST(n_shared AS DOUBLE) / least(na, nb)"
+
+
 def exact_jaccard(
     pairs: DataFrame, toks: DataFrame, sizes: DataFrame | None = None
 ) -> DataFrame:
@@ -484,13 +547,8 @@ def exact_jaccard(
     or any other recall stage). ``toks``: (doc_id, w) distinct tokens.
     ``sizes``: optional (doc_id, n) — see :func:`_pair_intersections`.
     Returns (doc_a, doc_b, n_shared, jaccard) for EVERY candidate pair."""
-    base = _pair_intersections(pairs, toks, sizes)
-    shared = F.col("n_shared")
-    return base.select(
-        "doc_a",
-        "doc_b",
-        "n_shared",
-        (shared.cast("double") / (F.col("na") + F.col("nb") - shared)).alias("jaccard"),
+    return _pair_intersections(pairs, toks, sizes).select(
+        "doc_a", "doc_b", "n_shared", _jaccard().alias("jaccard")
     )
 
 
@@ -510,10 +568,12 @@ def containment(pairs: DataFrame, toks: DataFrame) -> DataFrame:
     )
 
 
-def _bounded_token_pairs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _bounded_token_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Oracle-demo candidate generation: all (a < b) pairs sharing >= 1 token
-    within the bounded subset — the shape the bounded oracles mirror. Only
-    used by the doc_id<150 demo queries; the scale path is LSH candidates."""
+    within the eval slice, and that slice's distinct tokens. Only the demo
+    queries use it; the scale path is LSH candidates. SQL twin:
+    :func:`_bounded_token_pairs_sql`."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < EVAL_SLICE)
     toks = distinct_tokens(docs)
     a, b = toks.alias("a"), toks.alias("b")
     pairs = (
@@ -524,74 +584,57 @@ def _bounded_token_pairs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return pairs, toks
 
 
+def _bounded_token_pairs_sql() -> str:
+    """SQL twin of :func:`_bounded_token_pairs`: ``toks`` and ``pairs`` CTEs."""
+    return f"""toks AS ({_TOKENS_SQL} WHERE doc_id < {EVAL_SLICE}),
+pairs AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM toks a JOIN toks b ON a.w = b.w AND a.doc_id < b.doc_id
+)"""
+
+
 @register(
     "dedup_ngram_jaccard",
-    oracle="""
-WITH toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-    FROM documents WHERE doc_id < 150
-), sizes AS (
-    SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id
-), inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-    FROM toks a JOIN toks b ON a.w = b.w AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(n_shared AS DOUBLE) / (sa.n + sb.n - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n + sb.n - n_shared) >= 0.8
+    oracle=f"""
+WITH {_bounded_token_pairs_sql()},
+{_pair_intersections_sql("pairs", "toks")}
+SELECT doc_a, doc_b, {_JACCARD_SQL} AS jaccard
+FROM pair_overlap
+WHERE {_JACCARD_SQL} >= {VERIFY_JACCARD}
 """,
     doc=(
         "Exact token-set jaccard demo over a bounded corpus slice: candidate "
-        "pairs (any shared token, doc_id<150) fed through the pair-driven "
+        f"pairs (any shared token, doc_id<{EVAL_SLICE}) fed through the pair-driven "
         "exact_jaccard stage. The at-scale form is dedup_lsh_verified, where "
         "the same stage runs on LSH candidates over the full corpus."
     ),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
-    pairs, toks = _bounded_token_pairs(docs)
+    pairs, toks = _bounded_token_pairs(spark, sf_dir)
     return (
         exact_jaccard(pairs, toks)
         .select("doc_a", "doc_b", "jaccard")
-        .where(F.col("jaccard") >= 0.8)
+        .where(F.col("jaccard") >= VERIFY_JACCARD)
     )
 
 
-#: token-jaccard verdict threshold for LSH candidates (matches the bounded
-#: demo's 0.8 near-dup bar)
-VERIFY_JACCARD = 0.8
+#: the oracle's LSH candidate pairs with their exact token overlap
+#: (``pair_overlap``), shared by dedup_lsh_verified and
+#: dedup_containment_verified
+_LSH_TOKEN_OVERLAP_SQL = f"""{_sig_bands_ctes()},
+{_lsh_pair_ctes()},
+toks AS ({_TOKENS_SQL}),
+{_pair_intersections_sql("pairs", "toks")}"""
 
 
 @register(
     "dedup_lsh_verified",
     oracle=f"""
-WITH {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM pairs p
-    JOIN toks a ON a.doc_id = p.doc_a
-    JOIN toks b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-)
-SELECT p.doc_a, p.doc_b,
-       CAST(COALESCE(i.n_shared, 0) AS BIGINT) AS n_shared,
-       CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-           / (sa.n + sb.n - COALESCE(i.n_shared, 0)) AS jaccard,
-       (CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-           / (sa.n + sb.n - COALESCE(i.n_shared, 0)) >= {VERIFY_JACCARD}) AS is_dup
-FROM pairs p
-JOIN sizes sa ON sa.doc_id = p.doc_a
-JOIN sizes sb ON sb.doc_id = p.doc_b
-LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+WITH {_LSH_TOKEN_OVERLAP_SQL}
+SELECT doc_a, doc_b, n_shared,
+       {_JACCARD_SQL} AS jaccard,
+       ({_JACCARD_SQL} >= {VERIFY_JACCARD}) AS is_dup
+FROM pair_overlap
 """,
     doc=(
         "The end-to-end scale dedup path: MinHash-LSH candidate generation "
@@ -619,36 +662,15 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: containment verdict bar for LSH candidates (the bounded demo's 0.9)
-VERIFY_CONTAINMENT = 0.9
-
-
 @register(
     "dedup_containment_verified",
     oracle=f"""
-WITH {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM pairs p
-    JOIN toks a ON a.doc_id = p.doc_a
-    JOIN toks b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-)
-SELECT p.doc_a, p.doc_b,
-       CAST(COALESCE(i.n_shared, 0) AS BIGINT) AS n_shared,
-       CAST(COALESCE(i.n_shared, 0) AS DOUBLE) / least(sa.n, sb.n) AS containment,
-       (sa.n < sb.n) AS smaller_is_a,
-       (CAST(COALESCE(i.n_shared, 0) AS DOUBLE) / least(sa.n, sb.n)
-           >= {VERIFY_CONTAINMENT}) AS is_dup
-FROM pairs p
-JOIN sizes sa ON sa.doc_id = p.doc_a
-JOIN sizes sb ON sb.doc_id = p.doc_b
-LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+WITH {_LSH_TOKEN_OVERLAP_SQL}
+SELECT doc_a, doc_b, n_shared,
+       {_CONTAINMENT_SQL} AS containment,
+       (na < nb) AS smaller_is_a,
+       ({_CONTAINMENT_SQL} >= {VERIFY_CONTAINMENT}) AS is_dup
+FROM pair_overlap
 """,
     doc=(
         "Containment verdicts for LSH candidates over the FULL corpus — the "
@@ -672,12 +694,40 @@ def dedup_containment_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: ground-truth jaccard bar for the recall eval — matched to the banding
-#: config's estimand (4 bands x 2 hashes surface j>=0.5 pairs w.h.p.)
-TRUTH_JACCARD = 0.5
+def _truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b): every pair of the eval slice whose exact shingle
+    jaccard is >= TRUTH_JACCARD — the all-pairs ground truth of
+    dedup_lsh_recall_eval and dedup_banding_sweep, scored by the
+    pair-driven stage over shingle rows. SQL twin: :func:`_banding_truth_sql`."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < EVAL_SLICE)
+    sh = _shingle_rows(docs, "doc_id")
+    ids = sh.select("doc_id").distinct()
+    allp = (
+        ids.alias("a")
+        .join(ids.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    )
+    return (
+        exact_jaccard(allp, sh)
+        .where(F.col("jaccard") >= TRUTH_JACCARD)
+        .select("doc_a", "doc_b")
+    )
 
-#: bounded eval slice (all-pairs ground truth is O(slice^2) by definition)
-EVAL_SLICE = 150
+
+def _banding_truth_sql() -> str:
+    """SQL twin of :func:`_truth_pairs`: a CTE chain ending in ``truth``,
+    shared by the dedup_lsh_recall_eval and dedup_banding_sweep oracles."""
+    return f"""sh AS (
+    SELECT doc_id, unnest({_SHINGLES_SQL}) AS w
+    FROM documents WHERE doc_id < {EVAL_SLICE}
+),
+ids AS (SELECT DISTINCT doc_id FROM sh),
+allp AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM ids a JOIN ids b ON a.doc_id < b.doc_id
+),
+{_pair_intersections_sql("allp", "sh")},
+truth AS (SELECT doc_a, doc_b FROM pair_overlap WHERE {_JACCARD_SQL} >= {TRUTH_JACCARD})"""
 
 
 @register(
@@ -689,31 +739,7 @@ lsh AS (
     SELECT doc_a, doc_b FROM lshall
     WHERE doc_a < {EVAL_SLICE} AND doc_b < {EVAL_SLICE}
 ),
-sh AS (
-    SELECT doc_id, unnest({_SHINGLES_SQL}) AS w
-    FROM documents WHERE doc_id < {EVAL_SLICE}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-allp AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM sizes a JOIN sizes b ON a.doc_id < b.doc_id
-),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM allp p
-    JOIN sh a ON a.doc_id = p.doc_a
-    JOIN sh b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-),
-truth AS (
-    SELECT p.doc_a, p.doc_b
-    FROM allp p
-    JOIN sizes sa ON sa.doc_id = p.doc_a
-    JOIN sizes sb ON sb.doc_id = p.doc_b
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-    WHERE CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-          / (sa.n + sb.n - COALESCE(i.n_shared, 0)) >= {TRUTH_JACCARD}
-),
+{_banding_truth_sql()},
 hit AS (SELECT t.doc_a, t.doc_b FROM truth t JOIN lsh l ON l.doc_a = t.doc_a AND l.doc_b = t.doc_b)
 SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
        CAST((SELECT COUNT(*) FROM lsh) AS BIGINT) AS n_candidates,
@@ -734,22 +760,7 @@ SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
     ),
 )
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < EVAL_SLICE)
-    sh = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
-    ids = sh.select("doc_id").distinct()
-    allp = (
-        ids.alias("a")
-        .join(ids.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    truth = (
-        exact_jaccard(allp, sh)
-        .where(F.col("jaccard") >= TRUTH_JACCARD)
-        .select("doc_a", "doc_b")
-    )
+    truth = _truth_pairs(spark, sf_dir)
     lsh = dedup_minhash_lsh_pairs(spark, sf_dir).where(
         (F.col("doc_a") < EVAL_SLICE) & (F.col("doc_b") < EVAL_SLICE)
     )
@@ -817,10 +828,7 @@ FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id
 )
 def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        docs.select("doc_id", "source", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", "source", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
+    sh = _shingle_rows(docs, "doc_id", "source")
     bench = sh.where(F.col("source") == DECONTAM_HOLDOUT).select("w").distinct()
     corpus = sh.where(F.col("source") != DECONTAM_HOLDOUT).select("doc_id", "w")
     sizes = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
@@ -964,11 +972,11 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MAX_CC_ITERATIONS = 20
 
-
-@register(
-    "dedup_components",
-    oracle=f"""
-WITH RECURSIVE {_sig_bands_ctes()},
+#: the oracle's near-dup components: a WITH RECURSIVE head ending in
+#: ``comp`` (doc_id, component = smallest reachable doc_id), the
+#: transitive closure of the LSH pair graph that dedup_components,
+#: dedup_cluster_size_histogram and sample_dedup_aware_split read
+_COMPONENTS_SQL = f"""WITH RECURSIVE {_sig_bands_ctes()},
 {_lsh_pair_ctes()},
 edges AS (
     SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -979,10 +987,18 @@ walk(node, reach) AS (
     SELECT doc_id, doc_id FROM documents
     UNION
     SELECT e.src, w.reach FROM edges e JOIN walk w ON w.node = e.dst
-)
-SELECT node AS doc_id, CAST(MIN(reach) AS BIGINT) AS component
-FROM walk
-GROUP BY node
+),
+comp AS (
+    SELECT node AS doc_id, CAST(MIN(reach) AS BIGINT) AS component
+    FROM walk GROUP BY node
+)"""
+
+
+@register(
+    "dedup_components",
+    oracle=f"""
+{_COMPONENTS_SQL}
+SELECT doc_id, component FROM comp
 """,
     doc=(
         "Near-dup clusters from the MinHash-LSH pair graph (component id "
@@ -1247,24 +1263,12 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_containment",
-    oracle="""
-WITH toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-    FROM documents WHERE doc_id < 150
-), sizes AS (
-    SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id
-), inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-    FROM toks a JOIN toks b ON a.w = b.w AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(n_shared AS DOUBLE) / least(sa.n, sb.n) AS containment,
-       (sa.n < sb.n) AS smaller_is_a
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_shared AS DOUBLE) / least(sa.n, sb.n) >= 0.9
+    oracle=f"""
+WITH {_bounded_token_pairs_sql()},
+{_pair_intersections_sql("pairs", "toks")}
+SELECT doc_a, doc_b, {_CONTAINMENT_SQL} AS containment, (na < nb) AS smaller_is_a
+FROM pair_overlap
+WHERE {_CONTAINMENT_SQL} >= {VERIFY_CONTAINMENT}
 """,
     doc=(
         "Asymmetric containment dedup demo: |A∩B| / min(|A|,|B|) via the "
@@ -1277,42 +1281,60 @@ WHERE CAST(n_shared AS DOUBLE) / least(sa.n, sb.n) >= 0.9
     ),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
-    pairs, toks = _bounded_token_pairs(docs)
+    pairs, toks = _bounded_token_pairs(spark, sf_dir)
     return (
         containment(pairs, toks)
         .select("doc_a", "doc_b", "containment", "smaller_is_a")
-        .where(F.col("containment") >= 0.9)
+        .where(F.col("containment") >= VERIFY_CONTAINMENT)
     )
+
+
+def _signature_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every LSH candidate pair's exact shingle overlap (the
+    :func:`_pair_intersections` row) joined to both minhash signatures
+    (``sa.h*``, ``sb.h*``) with their agreement count ``n_agree`` — the
+    estimator next to its estimand, shared by dedup_minhash_calibration
+    and dedup_minhash_bbit. SQL twin: :func:`_signature_overlap_sql`."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup_minhash_lsh_pairs(spark, sf_dir)  # memoized checkpoint
+    sig = _minhash_signature(spark, sf_dir)
+    sa, sb = sig.alias("sa"), sig.alias("sb")
+    n_agree = sum(
+        F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
+        for i in range(N_HASHES)
+    )
+    return (
+        _pair_intersections(pairs, _shingle_rows(docs, "doc_id"))
+        .join(sa, F.col("sa.doc_id") == F.col("doc_a"))
+        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
+        .withColumn("n_agree", n_agree)
+    )
+
+
+def _signature_overlap_sql() -> str:
+    """SQL twin of :func:`_signature_overlap`: a CTE chain ending in
+    ``agree``, the ``pair_overlap`` row with both signatures (``ah*``,
+    ``bh*``) and ``n_agree``."""
+    return f"""{_sig_bands_ctes()},
+{_lsh_pair_ctes()},
+sh AS (SELECT doc_id, unnest({_SHINGLES_SQL}) AS w FROM documents),
+{_pair_intersections_sql("pairs", "sh")},
+agree AS (
+    SELECT o.*,
+           {", ".join(f"sa.h{i} AS ah{i}, sb.h{i} AS bh{i}" for i in range(N_HASHES))},
+           ({" + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES))}) AS n_agree
+    FROM pair_overlap o
+    JOIN sig sa ON sa.doc_id = o.doc_a
+    JOIN sig sb ON sb.doc_id = o.doc_b
+)"""
 
 
 @register(
     "dedup_minhash_calibration",
     oracle=f"""
-WITH {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-sh AS (
-    SELECT doc_id, unnest({_SHINGLES_SQL}) AS w FROM documents
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM pairs p
-    JOIN sh a ON a.doc_id = p.doc_a
-    JOIN sh b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-)
-SELECT p.doc_a, p.doc_b,
-       ({" + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES))}) AS n_agree,
-       CAST(COALESCE(i.n_shared, 0) AS BIGINT) AS n_shared,
-       CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-           / (za.n + zb.n - COALESCE(i.n_shared, 0)) AS exact_jaccard
-FROM pairs p
-JOIN sig sa ON sa.doc_id = p.doc_a
-JOIN sig sb ON sb.doc_id = p.doc_b
-JOIN sizes za ON za.doc_id = p.doc_a
-JOIN sizes zb ON zb.doc_id = p.doc_b
-LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+WITH {_signature_overlap_sql()}
+SELECT doc_a, doc_b, n_agree, n_shared, {_JACCARD_SQL} AS exact_jaccard
+FROM agree
 """,
     doc=(
         "MinHash estimator calibration: for every LSH candidate pair, the "
@@ -1326,46 +1348,8 @@ LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
     ),
 )
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup_minhash_lsh_pairs(spark, sf_dir)  # memoized checkpoint
-    sig = _minhash_signature(spark, sf_dir)
-    sh = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.alias("a")
-    b_sh = sh.alias("b")
-    inter = (
-        pairs.join(a_sh, F.col("a.doc_id") == F.col("doc_a"))
-        .join(b_sh, (F.col("b.doc_id") == F.col("doc_b")) & (F.col("b.w") == F.col("a.w")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sig.alias("sa")
-    sb = sig.alias("sb")
-    za = sizes.alias("za")
-    zb = sizes.alias("zb")
-    n_agree = sum(
-        F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    )
-    shared = F.coalesce(F.col("n_shared"), F.lit(0))
-    return (
-        pairs.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .join(za, F.col("za.doc_id") == F.col("doc_a"))
-        .join(zb, F.col("zb.doc_id") == F.col("doc_b"))
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_agree.alias("n_agree"),
-            shared.cast("long").alias("n_shared"),
-            (shared.cast("double") / (F.col("za.n") + F.col("zb.n") - shared)).alias(
-                "exact_jaccard"
-            ),
-        )
+    return _signature_overlap(spark, sf_dir).select(
+        "doc_a", "doc_b", "n_agree", "n_shared", _jaccard().alias("exact_jaccard")
     )
 
 
@@ -1492,11 +1476,7 @@ def _simhash64_signature_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash64_signature_of(docs: DataFrame) -> DataFrame:
     """Signatures over ANY (doc_id, text) frame — the full table or a
     newly ingested batch slice (the incremental store path)."""
-    sh = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-        .select("doc_id", F.md5("w").alias("mw"))
-    )
+    sh = _shingle_rows(docs, "doc_id").select("doc_id", F.md5("w").alias("mw"))
     # the 128-bit md5 parses ONCE into four 32-bit chunk longs; every bit
     # decision is then an integer shift (see _sim64_block_col)
     chunks = [
@@ -1523,6 +1503,27 @@ def _simhash64_signature_of(docs: DataFrame) -> DataFrame:
 )
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash64_signature(spark, sf_dir)
+
+
+def _sim64_keys(sig: DataFrame) -> DataFrame:
+    """(doc_id, tbl, key): one row per signature and Manku table. The
+    20x-exploded frame carries ONLY these three columns: at 1e9 docs that
+    is 20e9 narrow rows through the shuffle; the 4 signature ints re-join
+    onto the (tiny after distinct) pair frame instead of riding every
+    candidate row. SQL twin: ``_SIM64_KEYS_SQL``."""
+    sub = _sim64_subblock_cols()
+    key_structs = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("tbl"),
+                ((sub[i] * 2048 + sub[j]) * 2048 + sub[k]).alias("key"),
+            )
+            for t, (i, j, k) in enumerate(SIM64_KEY_COMBOS)
+        ]
+    )
+    return sig.select("doc_id", F.explode(key_structs).alias("g")).select(
+        "doc_id", F.col("g.tbl").alias("tbl"), F.col("g.key").alias("key")
+    )
 
 
 _SIM64_KEYS_SQL = f"""
@@ -1636,23 +1637,7 @@ def dedup_simhash64_hamming(
     spark: SparkSession, sf_dir: str, max_bucket: int | None = SIM64_MAX_BUCKET
 ) -> DataFrame:
     sig = _simhash64_signature(spark, sf_dir)  # memoized localCheckpoint
-    sub = _sim64_subblock_cols()
-    key_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                ((sub[i] * 2048 + sub[j]) * 2048 + sub[k]).alias("key"),
-            )
-            for t, (i, j, k) in enumerate(SIM64_KEY_COMBOS)
-        ]
-    )
-    # the 20x-exploded frame carries ONLY (doc_id, tbl, key): at 1e9 docs
-    # that is 20e9 narrow rows through the shuffle; the 4 signature ints
-    # re-join onto the (tiny after distinct) pair frame instead of riding
-    # every candidate row
-    keys = sig.select("doc_id", F.explode(key_structs).alias("g")).select(
-        "doc_id", F.col("g.tbl").alias("tbl"), F.col("g.key").alias("key")
-    )
+    keys = _sim64_keys(sig)
     sigcols = [f"b{j}" for j in range(N_SIM64_BLOCKS)]
     if max_bucket is not None:
         # two-phase hot-key cap: groupBy partial-aggregates the hot key
@@ -1762,20 +1747,8 @@ def simhash64_bucket_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(table, key) occupancy of the Manku candidate tables — the frame
     ``dedup_simhash64_bucket_stats`` aggregates and the scale smoke asserts
     on directly."""
-    sig = _simhash64_signature(spark, sf_dir)
-    sub = _sim64_subblock_cols()
-    key_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                ((sub[i] * 2048 + sub[j]) * 2048 + sub[k]).alias("key"),
-            )
-            for t, (i, j, k) in enumerate(SIM64_KEY_COMBOS)
-        ]
-    )
     return (
-        sig.select(F.explode(key_structs).alias("g"))
-        .select("g.tbl", "g.key")
+        _sim64_keys(_simhash64_signature(spark, sf_dir))
         .groupBy("tbl", "key")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
     )
@@ -1824,26 +1797,9 @@ cand AS (
         WHERE o.bucket_n > {LSH_MAX_BUCKET}
     )
 ),
-toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM cand p
-    JOIN toks a ON a.doc_id = p.doc_a
-    JOIN toks b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY 1, 2
-),
-verified AS (
-    SELECT p.doc_a, p.doc_b,
-           CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-               / (sa.n + sb.n - COALESCE(i.n_shared, 0)) AS jaccard
-    FROM cand p
-    JOIN sizes sa ON sa.doc_id = p.doc_a
-    JOIN sizes sb ON sb.doc_id = p.doc_b
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-),
+toks AS ({_TOKENS_SQL}),
+{_pair_intersections_sql("cand", "toks")},
+verified AS (SELECT doc_a, doc_b, {_JACCARD_SQL} AS jaccard FROM pair_overlap),
 best AS (
     SELECT doc_a, doc_b AS near_match_id, jaccard FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_a
@@ -2140,37 +2096,6 @@ def pipeline_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
 BANDING_CONFIGS = ((1, 8), (2, 4), (4, 2), (8, 1))
 
 
-def _banding_truth_sql() -> str:
-    """Ground-truth CTE block shared with dedup_lsh_recall_eval: exact
-    shingle-jaccard >= TRUTH_JACCARD over the bounded all-pairs slice."""
-    return f"""
-sh AS (
-    SELECT doc_id, unnest({_SHINGLES_SQL}) AS w
-    FROM documents WHERE doc_id < {EVAL_SLICE}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-allp AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM sizes a JOIN sizes b ON a.doc_id < b.doc_id
-),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM allp p
-    JOIN sh a ON a.doc_id = p.doc_a
-    JOIN sh b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-),
-truth AS (
-    SELECT p.doc_a, p.doc_b
-    FROM allp p
-    JOIN sizes sa ON sa.doc_id = p.doc_a
-    JOIN sizes sb ON sb.doc_id = p.doc_b
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-    WHERE CAST(COALESCE(i.n_shared, 0) AS DOUBLE)
-          / (sa.n + sb.n - COALESCE(i.n_shared, 0)) >= {TRUTH_JACCARD}
-)"""
-
-
 def _banding_hit_sql(n_bands: int, rows: int) -> str:
     bands = []
     for bi in range(n_bands):
@@ -2216,22 +2141,7 @@ agg AS (
     ),
 )
 def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < EVAL_SLICE)
-    sh = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
-    ids = sh.select("doc_id").distinct()
-    allp = (
-        ids.alias("a")
-        .join(ids.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    truth = (
-        exact_jaccard(allp, sh)
-        .where(F.col("jaccard") >= TRUTH_JACCARD)
-        .select("doc_a", "doc_b")
-    )
+    truth = _truth_pairs(spark, sf_dir)
     sig = _minhash_signature(spark, sf_dir).where(F.col("doc_id") < EVAL_SLICE)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"ah{i}") for i in range(N_HASHES)]
@@ -2282,22 +2192,7 @@ def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_size_histogram",
     oracle=f"""
-WITH RECURSIVE {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM pairs
-    UNION ALL
-    SELECT doc_b, doc_a FROM pairs
-),
-walk(node, reach) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.src, w.reach FROM edges e JOIN walk w ON w.node = e.dst
-),
-comp AS (
-    SELECT node AS doc_id, CAST(MIN(reach) AS BIGINT) AS component
-    FROM walk GROUP BY node
-),
+{_COMPONENTS_SQL},
 sizes AS (SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component)
 SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
        COUNT(*) AS n_clusters,
@@ -3893,33 +3788,14 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_bbit",
     oracle=f"""
-WITH {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-sh AS (
-    SELECT doc_id, unnest({_SHINGLES_SQL}) AS w FROM documents
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-    SELECT p.doc_a, p.doc_b, COUNT(*) AS n_shared
-    FROM pairs p
-    JOIN sh a ON a.doc_id = p.doc_a
-    JOIN sh b ON b.doc_id = p.doc_b AND b.w = a.w
-    GROUP BY p.doc_a, p.doc_b
-),
+WITH {_signature_overlap_sql()},
 scored AS (
-    SELECT p.doc_a, p.doc_b,
+    SELECT doc_a, doc_b,
            ({" + ".join(
-               f"CASE WHEN sa.h{i} % 2 = sb.h{i} % 2 THEN 1 ELSE 0 END"
+               f"CASE WHEN ah{i} % 2 = bh{i} % 2 THEN 1 ELSE 0 END"
                for i in range(N_HASHES))}) AS n_bit_match,
-           ({" + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES))}) AS n_agree,
-           CAST(COALESCE(i.n_shared, 0) AS BIGINT) AS n_shared,
-           za.n + zb.n - COALESCE(i.n_shared, 0) AS n_union
-    FROM pairs p
-    JOIN sig sa ON sa.doc_id = p.doc_a
-    JOIN sig sb ON sb.doc_id = p.doc_b
-    JOIN sizes za ON za.doc_id = p.doc_a
-    JOIN sizes zb ON zb.doc_id = p.doc_b
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+           n_agree, n_shared, na + nb - n_shared AS n_union
+    FROM agree
 )
 SELECT doc_a, doc_b,
        CAST(n_bit_match AS BIGINT) AS n_bit_match,
@@ -3948,25 +3824,6 @@ FROM scored
     ),
 )
 def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup_minhash_lsh_pairs(spark, sf_dir)  # memoized checkpoint
-    sig = _minhash_signature(spark, sf_dir)
-    sh = (
-        docs.select("doc_id", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.alias("a")
-    b_sh = sh.alias("b")
-    inter = (
-        pairs.join(a_sh, F.col("a.doc_id") == F.col("doc_a"))
-        .join(b_sh, (F.col("b.doc_id") == F.col("doc_b")) & (F.col("b.w") == F.col("a.w")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
-    za, zb = sizes.alias("za"), sizes.alias("zb")
-
     def low_bit(side: str, i: int) -> F.Column:
         # signatures are numeric (affine universal hashes): b=1 IS h % 2
         return F.col(f"{side}.h{i}") % 2
@@ -3975,25 +3832,13 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(low_bit("sa", i) == low_bit("sb", i), 1).otherwise(0)
         for i in range(N_HASHES)
     )
-    n_agree = sum(
-        F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    )
-    shared = F.coalesce(F.col("n_shared"), F.lit(0))
-    base = (
-        pairs.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .join(za, F.col("za.doc_id") == F.col("doc_a"))
-        .join(zb, F.col("zb.doc_id") == F.col("doc_b"))
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_bit_match.cast("long").alias("n_bit_match"),
-            n_agree.cast("long").alias("n_agree"),
-            shared.cast("long").alias("n_shared"),
-            (F.col("za.n") + F.col("zb.n") - shared).cast("long").alias("n_union"),
-        )
+    base = _signature_overlap(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        n_bit_match.cast("long").alias("n_bit_match"),
+        F.col("n_agree").cast("long").alias("n_agree"),
+        "n_shared",
+        (F.col("na") + F.col("nb") - F.col("n_shared")).cast("long").alias("n_union"),
     )
     return base.select(
         "doc_a",

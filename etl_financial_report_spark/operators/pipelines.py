@@ -494,7 +494,7 @@ LEFT JOIN model m ON m.doc_id = v.doc_id
     ),
 )
 def pipeline_keep_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import DECONTAM_FRAC, DECONTAM_HOLDOUT, _shingles
+    from .dedup import DECONTAM_FRAC, DECONTAM_HOLDOUT, _shingle_rows
     from .quality import _qc_scored, qc_gate_bar
 
     docs = load_table(spark, sf_dir, "documents")
@@ -512,10 +512,7 @@ def pipeline_keep_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") == F.col("canonical_id")).alias("is_canonical"),
         "passes_quality",
     )
-    sh = (
-        docs.select("doc_id", "source", "text", F.split("text", " ").alias("toks"))
-        .select("doc_id", "source", F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-    )
+    sh = _shingle_rows(docs, "doc_id", "source")
     bench = sh.where(F.col("source") == DECONTAM_HOLDOUT).select("w").distinct()
     corpus = sh.where(F.col("source") != DECONTAM_HOLDOUT).select("doc_id", "w")
     # ONE pass over the corpus gram stream (r15, guide §2.4): n_grams and

@@ -782,25 +782,10 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _dedup_aware_split_oracle() -> str:
-    from .dedup import _lsh_pair_ctes, _sig_bands_ctes
+    from .dedup import _COMPONENTS_SQL
 
     return f"""
-WITH RECURSIVE {_sig_bands_ctes()},
-{_lsh_pair_ctes()},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM pairs
-    UNION ALL
-    SELECT doc_b, doc_a FROM pairs
-),
-walk(node, reach) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.src, w.reach FROM edges e JOIN walk w ON w.node = e.dst
-),
-comp AS (
-    SELECT node AS doc_id, CAST(MIN(reach) AS BIGINT) AS component
-    FROM walk GROUP BY node
-)
+{_COMPONENTS_SQL}
 SELECT doc_id, component,
        CASE WHEN {hash32_sql("CAST(component AS VARCHAR)")} % 1000 < {_TRAIN_MAX} THEN 'train'
             WHEN {hash32_sql("CAST(component AS VARCHAR)")} % 1000 < {_VAL_MAX} THEN 'val'

@@ -1003,7 +1003,7 @@ def run_corpus_build_stream(
     publishes nothing new and readers time-travel across daily builds.
     Pinned row-for-row against pipeline_corpus_build after replay in
     tests/test_streaming.py."""
-    from ..operators.dedup import DECONTAM_FRAC, DECONTAM_HOLDOUT, _shingles
+    from ..operators.dedup import DECONTAM_FRAC, DECONTAM_HOLDOUT, _shingle_rows, _shingles
     from ..operators.pipelines import content_key, quality_bit
     from ..operators.quality import (
         QC_ROUNDS,
@@ -1056,11 +1056,7 @@ def run_corpus_build_stream(
             .withColumn("_gate_schema_v", F.lit(GATE_SINK_SCHEMA_VERSION))
         )
         gate_sink.append_idempotent(rows, key_cols=["doc_id"])
-        bench = (
-            docs.where(F.col("source") == DECONTAM_HOLDOUT)
-            .select(F.explode(_shingles(F.col("text"), F.col("toks"))).alias("w"))
-            .distinct()
-        )
+        bench = _shingle_rows(docs.where(F.col("source") == DECONTAM_HOLDOUT)).distinct()
         bench_sink.append_idempotent(bench, key_cols=["w"])
 
     _drain_batches(_file_stream(spark, new_docs_dir), gate_batch, checkpoint_dir)

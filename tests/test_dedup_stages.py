@@ -3,19 +3,23 @@ must be computed THROUGH an explicit candidate-pair frame — never via a
 token self-join (the quadratic-under-stopword-skew shape). The behavioral
 tests prove pair-driven semantics (a non-candidate dup pair must NOT appear
 in the output even though its docs share every token); the plan pin lives
-in tests/test_plans.py::test_lsh_verified_token_join_is_pair_driven."""
+in tests/test_plans.py::test_verifier_token_join_is_pair_driven."""
 
 import pytest
 
 from etl_financial_report_spark.operators.dedup import (
+    _CONTAINMENT_SQL,
+    _JACCARD_SQL,
+    _pair_intersections_sql,
+    _shingle_rows,
     containment,
     distinct_tokens,
     exact_jaccard,
 )
 
 
-def _toks(spark):
-    docs = spark.createDataFrame(
+def _docs(spark):
+    return spark.createDataFrame(
         [
             (1, "a b c d"),
             (2, "a b c e"),
@@ -25,7 +29,10 @@ def _toks(spark):
         ],
         ["doc_id", "text"],
     )
-    return distinct_tokens(docs)
+
+
+def _toks(spark):
+    return distinct_tokens(_docs(spark))
 
 
 def test_exact_jaccard_is_pair_driven(spark):
@@ -52,6 +59,48 @@ def test_containment_is_pair_driven(spark):
     assert out[(1, 5)].containment == 1.0
     assert out[(1, 5)].smaller_is_a is False  # |A|=4 > |B|=2
     assert out[(2, 4)].containment == 0.0
+
+
+@pytest.mark.parametrize(
+    "rows,shared",
+    [
+        ("tokens", {(1, 2): 3, (1, 4): 0, (1, 5): 2, (2, 5): 2}),
+        # doc 5 ("a b") is under 3 tokens: its one shingle is its whole text
+        ("shingles", {(1, 2): 1, (1, 4): 0, (1, 5): 0, (2, 5): 0}),
+    ],
+    ids=["tokens", "shingles"],
+)
+def test_sql_pair_overlap_matches_the_engine_stage(spark, rows, shared):
+    """The oracle's overlap kernel (_pair_intersections_sql, run in DuckDB)
+    equals exact_jaccard and containment on the cases the registry's
+    parity data never reaches: a disjoint candidate (n_shared = 0 through
+    the LEFT JOIN), a contained one, and a doc under 3 tokens fed through
+    shingle rows."""
+    import os
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from check_parity import normalize
+
+    docs = _docs(spark)
+    toks = distinct_tokens(docs) if rows == "tokens" else _shingle_rows(docs, "doc_id")
+    pairs = spark.createDataFrame(list(shared), ["doc_a", "doc_b"])
+    engine = exact_jaccard(pairs, toks).join(
+        containment(pairs, toks).drop("n_shared"), ["doc_a", "doc_b"]
+    )
+    con = duckdb.connect()
+    con.register("pairs", pairs.toPandas())
+    con.register("toks", toks.toPandas())
+    oracle = con.sql(f"""
+WITH {_pair_intersections_sql("pairs", "toks")}
+SELECT doc_a, doc_b, n_shared, {_JACCARD_SQL} AS jaccard,
+       {_CONTAINMENT_SQL} AS containment, (na < nb) AS smaller_is_a
+FROM pair_overlap
+""").df()
+    assert {(r.doc_a, r.doc_b): r.n_shared for r in oracle.itertuples()} == shared
+    assert normalize(oracle) == normalize(engine.toPandas())
 
 
 def test_simhash64_bucket_cap_prunes_hot_buckets(spark):

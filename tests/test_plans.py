@@ -321,14 +321,23 @@ def test_cosine_family_constructs_without_driver_jobs(spark, name):
         assert "BroadcastExchange" in plan
 
 
-def test_lsh_verified_token_join_is_pair_driven(spark):
-    """dedup_lsh_verified's exact-jaccard stage must join the token stream
-    THROUGH the LSH candidate-pair frame: every join keyed on the token
-    column must also carry a doc-id key. A bare (w = w) join is the
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_lsh_verified",
+        "dedup_containment_verified",
+        "dedup_minhash_calibration",
+        "dedup_minhash_bbit",
+    ],
+)
+def test_verifier_token_join_is_pair_driven(spark, name):
+    """An LSH verifier's overlap stage must join the token (or shingle)
+    stream THROUGH the LSH candidate-pair frame: every join keyed on the
+    token column must also carry a doc-id key. A bare (w = w) join is the
     quadratic token self-join that melts under stopword skew at 100 TB."""
     import re
 
-    plan = plan_of(spark, "dedup_lsh_verified")
+    plan = plan_of(spark, name)
     token_joins = 0
     for side in ("Left", "Right"):
         for m in re.finditer(rf"{side} keys \[\d+\]: \[([^\]]*)\]", plan):
