@@ -258,10 +258,16 @@ ORDER BY s.cosine DESC, c.vec_id
 LIMIT 10"""
 
 
+def _overlap_sql(retrieved: str) -> str:
+    """The scalar subquery counting a ``retrieved`` top-10 CTE's rows
+    in true_topk (_TRUTH_CTES)."""
+    return f"(SELECT COUNT(*) FROM true_topk t JOIN {retrieved} r ON t.vec_id = r.vec_id)"
+
+
 def _recall_sql(retrieved: str) -> str:
     """The oracle twin of :func:`_recall_at_10` over a ``retrieved``
     top-10 CTE (DuckDB's x / 0 is NULL, as _recall's)."""
-    ovl = f"(SELECT COUNT(*) FROM true_topk t JOIN {retrieved} r ON t.vec_id = r.vec_id)"
+    ovl = _overlap_sql(retrieved)
     return f"""
 SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
        CAST((SELECT COUNT(*) FROM {retrieved}) AS BIGINT) AS n_retrieved,
@@ -298,6 +304,16 @@ btrue AS (
         FROM bcos
     ) WHERE rk <= 10
 )"""
+
+
+def _overlap_per_query_sql(retrieved: str, name: str) -> str:
+    """The oracle twin of :func:`_overlap_per_query`: (qid, ``name``),
+    how many of each query's btrue rows the (qid, vec_id) CTE
+    ``retrieved`` holds; a query with none is absent."""
+    return f"""
+    SELECT t.qid, COUNT(*) AS {name}
+    FROM btrue t JOIN {retrieved} r ON r.qid = t.qid AND r.vec_id = t.vec_id
+    GROUP BY t.qid"""
 
 
 @register(
@@ -511,7 +527,7 @@ def _nearest_cells(
     cid asc) order, every cell when ``k`` is None. k = 1 is the argmax
     assignment (vec_id, *by, cell); otherwise rows carry their ``rank``.
     The window ranks the centroid rows of one key — bounded by the
-    codebook, never the corpus."""
+    codebook, never the corpus. SQL twin: :func:`_nearest_cells_sql`."""
     book = cents.select(*by, "cid", "c_qe", "c_nsq")
     cos = cosine_q(dot_q(F.col("qe"), F.col("c_qe")), F.col("nsq"), F.col("c_nsq"))
     # literal window keys, each a reviewed bounded key (m has PQ_M values)
@@ -534,18 +550,158 @@ def _nearest_cells(
     )
 
 
+def _book_dots_sql(src: str, book: str, where: str = "") -> str:
+    """(vec_id, cid, dot): the exact integer dot of every row of the
+    long-form stream ``src`` (vec_id, i, v), filtered by ``where``, with
+    every entry of the long-form codebook ``book`` (cid, i, cv)."""
+    pred = f" WHERE {where}" if where else ""
+    return f"""
+        SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
+        FROM {src} e JOIN {book} x ON x.i = e.i{pred} GROUP BY 1, 2"""
+
+
+def _codebook_sql(name: str, body: str) -> str:
+    """The long-form codebook CTE ``name`` (cid, i, cv) selected by
+    ``body``, and its squared norms {name}_nsq (cid, cnsq)."""
+    return f"""{name} AS MATERIALIZED ({body}),
+{name}_nsq AS MATERIALIZED (SELECT cid, SUM(cv * cv) AS cnsq FROM {name} GROUP BY cid)"""
+
+
+def _nearest_cells_sql(
+    book: str, src: str = "ex", norms: str = "norms", k: int | None = 1, where: str = ""
+) -> str:
+    """The SQL twin of :func:`_nearest_cells`: every row of the stream
+    ``src`` (vec_id, i, v) with squared norms ``norms`` (vec_id, nsq),
+    filtered by ``where``, against the codebook ``book`` (_codebook_sql)
+    by exact quantized cosine; zero-norm centroids never rank. Each
+    vec_id keeps its ``k`` best cells in (cos desc, cid asc) order,
+    every cell when ``k`` is None: (vec_id, cell) for k = 1, otherwise
+    (vec_id, cell, rank)."""
+    keep = "" if k is None else f" WHERE rank <= {k}"
+    return f"""
+    SELECT vec_id, cid AS cell{"" if k == 1 else ", rank"} FROM (
+        SELECT d.vec_id, d.cid,
+               ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
+                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC,
+                   d.cid) AS rank
+        FROM ({_book_dots_sql(src, book, where)}) d
+        JOIN {norms} n ON n.vec_id = d.vec_id
+        JOIN {book}_nsq c ON c.cid = d.cid
+        WHERE c.cnsq > 0
+    ){keep}"""
+
+
+def _probe(
+    qv: DataFrame, cents: DataFrame, assign: DataFrame, nprobe: int, nq: int = 1
+) -> DataFrame:
+    """(q_id, vec_id) IVF candidates: the corpus rows (vec_id >= nq) of
+    the cell ``assign``ment (vec_id, cell) that lie in one of the
+    ``nprobe`` cells of ``cents`` nearest each query (vec_id < nq)."""
+    # the query rows sit on one partition, which already meets the
+    # ranking window's clustering, so the probe adds no shuffle stage
+    probe = _nearest_cells(qv.where(F.col("vec_id") < nq).coalesce(1), cents, nprobe)
+    return (
+        assign.join(
+            F.broadcast(probe.select(F.col("vec_id").alias("q_id"), "cell")), "cell"
+        )
+        .where(F.col("vec_id") >= nq)
+        .select("q_id", "vec_id")
+    )
+
+
+def _probe_sql(assign: str, book: str, nprobe: int, nq: int = 1) -> str:
+    """The SQL twin of :func:`_probe`: (qid, vec_id) over the assignment
+    CTE ``assign`` (vec_id, cell) and the codebook ``book``."""
+    return f"""
+    SELECT p.vec_id AS qid, a.vec_id
+    FROM {assign} a
+    JOIN ({_nearest_cells_sql(book, k=nprobe, where=f"e.vec_id < {nq}")}) p ON p.cell = a.cell
+    WHERE a.vec_id >= {nq}"""
+
+
+def _centroid_sums(members: DataFrame, by: tuple = ()) -> DataFrame:
+    """The one centroid update: member rows (*by, cell, qe) -> (*by, cid,
+    c_qe, c_nsq, n), the exact per-dimension int64 member sums
+    (posexplode + two-phase groupBy, 64 rows of state per cell, array
+    order restored by array_sort on the (dim, sum) struct), their
+    squared norm and the member count. Cosine is scale-invariant, so the
+    sum vector IS the mean direction — nothing is ever float-averaged.
+    Zero-norm sums stay: _nearest_cells never ranks them. SQL twin:
+    :func:`_centroid_sums_sql`."""
+    keys = [*by, "cell"]
+    return (
+        members.select(*keys, F.posexplode("qe").alias("i", "v"))
+        .groupBy(*keys, "i")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "s"))), lambda x: x["s"]
+            ).alias("c_qe"),
+            F.max("n").alias("n"),
+        )
+        .select(
+            *by,
+            F.col("cell").alias("cid"),
+            "c_qe",
+            norm_sq_q(F.col("c_qe")).alias("c_nsq"),
+            "n",
+        )
+    )
+
+
+def _centroid_sums_sql(name: str, src: str, members: str) -> str:
+    """The SQL twin of :func:`_centroid_sums`: the codebook ``name`` of
+    the integer member sums of the stream ``src`` (vec_id, i, v) grouped
+    by the ``members`` cells (vec_id, cell), and the member counts
+    {name}_cnt (cid, cnt)."""
+    return f"""{_codebook_sql(name, f'''
+    SELECT a.cell AS cid, e.i, CAST(SUM(e.v) AS BIGINT) AS cv
+    FROM {src} e JOIN {members} a ON a.vec_id = e.vec_id GROUP BY 1, 2''')},
+{name}_cnt AS (SELECT cell AS cid, COUNT(*) AS cnt FROM {members} GROUP BY cell)"""
+
+
+def _book_csv_sql(book: str) -> str:
+    """(cid, centroid_sum): each codebook entry's sum vector as exact
+    int64 text, comma-joined in dimension order (csv_longs' twin)."""
+    return f"""SELECT cid, string_agg(CAST(cv AS VARCHAR), ',' ORDER BY i) AS centroid_sum
+    FROM {book} GROUP BY cid"""
+
+
+def _lloyd_round(qv: DataFrame, cents: DataFrame) -> DataFrame:
+    """One coarse spherical Lloyd round: assign every vector to its
+    nearest cell, re-center each cell on its member sum; cells whose sum
+    has zero norm drop (they cannot be assigned to). SQL twin:
+    :func:`_lloyd_round_sql`."""
+    members = qv.join(_nearest_cells(qv, cents), "vec_id")
+    return _centroid_sums(members).where(F.col("c_nsq") > 0)
+
+
+def _lloyd_round_sql(
+    p: str, src: str = "ex", norms: str = "norms", k: int = N_CELLS
+) -> str:
+    """The SQL twin of :func:`_lloyd_round`, its CTEs named {p}*: the
+    seed codebook {p}b0 of the stream's first ``k`` vectors, the seed
+    assignment {p}a0 and the re-centered codebook {p}b1 with its member
+    counts {p}b1_cnt. Zero-norm sums stay in {p}b1; the nearest-cell
+    ranking never ranks them."""
+    seeds = f"SELECT vec_id AS cid, i, v AS cv FROM {src} WHERE vec_id < {k}"
+    return f"""{_codebook_sql(f"{p}b0", seeds)},
+{p}a0 AS MATERIALIZED ({_nearest_cells_sql(f"{p}b0", src, norms)}),
+{_centroid_sums_sql(f"{p}b1", src, f"{p}a0")}"""
+
+
+#: the oracle's coarse k-means round over the gated corpus (c_b0 seeds,
+#: c_a0 seed assignment, c_b1 trained cells) and the trained assignment
+_KMEANS_R1_CTES = _lloyd_round_sql("c_")
+_IVF_ASSIGN_CTES = f"ivfa1 AS MATERIALIZED ({_nearest_cells_sql('c_b1')})"
+
+
 def _ivf_probe(qv: DataFrame, cents: DataFrame) -> DataFrame:
     """FAISS-style IVF probe against any centroid set (cid, c_qe, c_nsq):
     assign every vector to its argmax-cosine cell, probe the query's
     N_PROBE nearest cells, exact cosine only inside them, top-10."""
-    # one query row: a single partition already meets the ranking
-    # window's clustering, so the probe adds no shuffle stage
-    probe = _nearest_cells(qv.where(F.col("vec_id") == 0).coalesce(1), cents, N_PROBE)
-    cand = (
-        _nearest_cells(qv, cents)
-        .join(F.broadcast(probe.select("cell")), "cell")
-        .where(F.col("vec_id") != 0)
-    )
+    cand = _probe(qv, cents, _nearest_cells(qv, cents), N_PROBE)
     return (
         _exact_scored(qv.join(cand.select("vec_id"), "vec_id"), _query_block(qv))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -553,43 +709,20 @@ def _ivf_probe(qv: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def _ivf_probe_sql(assign: str, book: str) -> str:
+    """The SQL twin of :func:`_ivf_probe` over an assignment CTE and its
+    codebook: the exact top-10 of the probed cells."""
+    return f"""cand AS ({_probe_sql(assign, book, N_PROBE)}),
+{_TRUTH_CTES}
+{_cand_topk_sql("cand")}"""
+
+
 @register(
     "sim_ann_ivf",
     oracle=f"""
 WITH {_Q_CTE},
-cents AS (SELECT vec_id AS cid, qe FROM q WHERE vec_id < {N_CELLS}),
-cex AS (
-    SELECT cid, i, qe[i] AS v FROM cents, unnest(generate_series(1, len(qe))) t(i)
-),
-cnorms AS (SELECT cid, SUM(v * v) AS nsq FROM cex GROUP BY cid),
-cdots AS (
-    SELECT ex.vec_id, cex.cid, SUM(ex.v * cex.v) AS dot
-    FROM ex JOIN cex ON ex.i = cex.i
-    GROUP BY 1, 2
-),
-ccos AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(cn.nsq AS DOUBLE))) AS cos
-    FROM cdots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cnorms cn ON cn.cid = d.cid
-),
-assign AS (
-    SELECT vec_id, cid AS cell
-    FROM (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn FROM ccos)
-    WHERE rn = 1
-),
-probe AS (
-    SELECT cid AS cell
-    FROM (SELECT cid, row_number() OVER (ORDER BY cos DESC, cid) AS rn FROM ccos WHERE vec_id = 0)
-    WHERE rn <= {N_PROBE}
-),
-cand AS (
-    SELECT a.vec_id FROM assign a JOIN probe p ON a.cell = p.cell
-    WHERE a.vec_id <> 0
-),
-{_TRUTH_CTES}
-{_cand_topk_sql("cand")}
+{_KMEANS_R1_CTES},
+{_ivf_probe_sql("c_a0", "c_b0")}
 """,
     doc=(
         "IVF ANN (scale path #2): assign every vector to its nearest of "
@@ -1212,11 +1345,7 @@ blsh AS (
         JOIN live bc ON bc.vec_id = c.vec_id AND bc.bucket = bq.bucket
     ) WHERE rk <= 10
 ),
-bovl AS (
-    SELECT t.qid, COUNT(*) AS n_overlap
-    FROM btrue t JOIN blsh l ON l.qid = t.qid AND l.vec_id = t.vec_id
-    GROUP BY t.qid
-),
+bovl AS ({_overlap_per_query_sql("blsh", "n_overlap")}),
 bper_q AS (
     SELECT q.qid, COALESCE(o.n_overlap, 0) AS n_overlap
     FROM qs q LEFT JOIN bovl o ON o.qid = q.qid
@@ -1602,74 +1731,6 @@ def dedup_semantic_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- k-means (IVF training)
 
 
-_KMEANS_R1_CTES = f"""
-cex0 AS (SELECT vec_id AS cid, i, v AS cv FROM ex WHERE vec_id < {N_CELLS}),
-cn0 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM cex0 GROUP BY cid),
-dots0 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex e JOIN cex0 x ON x.i = e.i GROUP BY 1, 2
-),
-cos0 AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) AS cos
-    FROM dots0 d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cn0 c ON c.cid = d.cid
-    WHERE c.cnsq > 0
-),
-assign0 AS MATERIALIZED (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rk
-        FROM cos0
-    ) WHERE rk = 1
-),
-cex1 AS MATERIALIZED (
-    SELECT a.cell AS cid, e.i, CAST(SUM(e.v) AS BIGINT) AS cv
-    FROM ex e JOIN assign0 a ON a.vec_id = e.vec_id GROUP BY 1, 2
-),
-cn1 AS MATERIALIZED (SELECT cid, SUM(cv * cv) AS cnsq FROM cex1 GROUP BY cid)
-"""
-
-
-def _centroid_sums(members: DataFrame, by: tuple = ()) -> DataFrame:
-    """The one centroid update: member rows (*by, cell, qe) -> (*by, cid,
-    c_qe, c_nsq, n), the exact per-dimension int64 member sums
-    (posexplode + two-phase groupBy, 64 rows of state per cell, array
-    order restored by array_sort on the (dim, sum) struct), their
-    squared norm and the member count. Cosine is scale-invariant, so the
-    sum vector IS the mean direction — nothing is ever float-averaged.
-    Zero-norm sums stay: _nearest_cells never ranks them."""
-    keys = [*by, "cell"]
-    return (
-        members.select(*keys, F.posexplode("qe").alias("i", "v"))
-        .groupBy(*keys, "i")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .groupBy(*keys)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "s"))), lambda x: x["s"]
-            ).alias("c_qe"),
-            F.max("n").alias("n"),
-        )
-        .select(
-            *by,
-            F.col("cell").alias("cid"),
-            "c_qe",
-            norm_sq_q(F.col("c_qe")).alias("c_nsq"),
-            "n",
-        )
-    )
-
-
-def _lloyd_round(qv: DataFrame, cents: DataFrame) -> DataFrame:
-    """One coarse spherical Lloyd round: assign every vector to its
-    nearest cell, re-center each cell on its member sum; cells whose sum
-    has zero norm drop (they cannot be assigned to)."""
-    members = qv.join(_nearest_cells(qv, cents), "vec_id")
-    return _centroid_sums(members).where(F.col("c_nsq") > 0)
-
-
 def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared post-seed-round coarse centroids (cid, c_qe, c_nsq, n),
     n being each cell's seed-round member count: one
@@ -1704,31 +1765,13 @@ def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
-dots1 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex e JOIN cex1 x ON x.i = e.i GROUP BY 1, 2
-),
-cos1 AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) AS cos
-    FROM dots1 d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cn1 c ON c.cid = d.cid
-    WHERE c.cnsq > 0
-),
-assign1 AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rk
-        FROM cos1
-    ) WHERE rk = 1
-),
-counts AS (SELECT cell, COUNT(*) AS n_members FROM assign1 GROUP BY 1),
-carr AS (SELECT cid AS cell, string_agg(CAST(cv AS VARCHAR), ',' ORDER BY i) AS centroid_sum FROM cex1 GROUP BY cid)
-SELECT c.cell,
+{_IVF_ASSIGN_CTES},
+counts AS (SELECT cell, COUNT(*) AS n_members FROM ivfa1 GROUP BY 1),
+carr AS ({_book_csv_sql("c_b1")})
+SELECT c.cid AS cell,
        CAST(COALESCE(t.n_members, 0) AS BIGINT) AS n_members,
        c.centroid_sum
-FROM carr c LEFT JOIN counts t ON t.cell = c.cell
+FROM carr c LEFT JOIN counts t ON t.cell = c.cid
 """,
     doc=(
         "Spherical k-means training for the IVF index — ONE full Lloyd "
@@ -1791,37 +1834,8 @@ def kmeans_train_frame(
     oracle=f"""
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
-tdots AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex e JOIN cex1 x ON x.i = e.i GROUP BY 1, 2
-),
-tcos AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) AS cos
-    FROM tdots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cn1 c ON c.cid = d.cid
-    WHERE c.cnsq > 0
-),
-assignt AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        FROM tcos
-    ) WHERE rn = 1
-),
-probet AS (
-    SELECT cid AS cell FROM (
-        SELECT cid, ROW_NUMBER() OVER (ORDER BY cos DESC, cid) AS rn
-        FROM tcos WHERE vec_id = 0
-    ) WHERE rn <= {N_PROBE}
-),
-cand AS (
-    SELECT a.vec_id FROM assignt a JOIN probet p ON a.cell = p.cell
-    WHERE a.vec_id <> 0
-),
-{_TRUTH_CTES}
-{_cand_topk_sql("cand")}
+{_IVF_ASSIGN_CTES},
+{_ivf_probe_sql("ivfa1", "c_b1")}
 """,
     doc=(
         "The closed ANN loop: train -> index -> probe. Coarse-quantizer "
@@ -1976,72 +1990,165 @@ PQ_SUBDIM = 16
 PQ_K = 8
 
 
-def _pq_sub_sql(m: int) -> str:
-    """Per-subspace CTE block: slice, norms, seed codebook, one spherical
-    Lloyd round (assign by quantized cosine, update = exact int sums),
-    encode against the trained codebook, and the query-side ADC dots."""
+def _slice_sql(src: str, m: int) -> str:
+    """Subspace ``m`` of the long-form stream ``src`` (vec_id, i, v),
+    its dimensions renumbered from 1."""
     lo, hi = m * PQ_SUBDIM, (m + 1) * PQ_SUBDIM
-    argmax = (
-        "SELECT vec_id, cid AS cell FROM ("
-        "SELECT d.vec_id, d.cid, ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY "
-        "CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC, d.cid) AS rk "
-        "FROM {dots} d JOIN n{m} n ON n.vec_id = d.vec_id JOIN {cn} c ON c.cid = d.cid "
-        "WHERE c.cnsq > 0) WHERE rk = 1"
-    )
-    return f"""
-ex{m} AS (SELECT vec_id, i - {lo} AS i, v FROM ex WHERE i > {lo} AND i <= {hi}),
-n{m} AS (SELECT vec_id, SUM(v * v) AS nsq FROM ex{m} GROUP BY vec_id),
-cx{m}0 AS (SELECT vec_id AS cid, i, v AS cv FROM ex{m} WHERE vec_id < {PQ_K}),
-cn{m}0 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM cx{m}0 GROUP BY cid),
-d{m}0 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex{m} e JOIN cx{m}0 x ON x.i = e.i GROUP BY 1, 2
-),
-a{m}0 AS ({argmax.format(dots=f"d{m}0", cn=f"cn{m}0", m=m)}),
-cx{m}1 AS (
-    SELECT a.cell AS cid, e.i, CAST(SUM(e.v) AS BIGINT) AS cv
-    FROM ex{m} e JOIN a{m}0 a ON a.vec_id = e.vec_id GROUP BY 1, 2
-),
-cn{m}1 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM cx{m}1 GROUP BY cid),
-cc{m} AS (SELECT cell AS cid, COUNT(*) AS cnt FROM a{m}0 GROUP BY cell),
-d{m}1 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex{m} e JOIN cx{m}1 x ON x.i = e.i GROUP BY 1, 2
-),
-code{m} AS ({argmax.format(dots=f"d{m}1", cn=f"cn{m}1", m=m)}),
-qd{m} AS (
-    SELECT x.cid, SUM(qq.v * x.cv) AS qdot
-    FROM (SELECT i, v FROM ex{m} WHERE vec_id = 0) qq
-    JOIN cx{m}1 x ON x.i = qq.i GROUP BY x.cid
-)"""
+    return f"SELECT vec_id, i - {lo} AS i, v FROM {src} WHERE i > {lo} AND i <= {hi}"
 
 
-def _pq_scored_sql_block(cand_join: str = "") -> str:
-    """The shared PQ train/encode/score CTE block; ``cand_join`` injects
-    an extra candidate-pruning join into the scoring stage (IVF-PQ)."""
+def _pq_sub_sql(m: int, src: str, p: str, nq: int) -> str:
+    """One subspace of a PQ index trained on the stream ``src`` (the raw
+    ``ex`` or the residual ``rex``), its CTEs named {p}{m}_*: the slice
+    e with its norms en, one Lloyd round (_lloyd_round_sql: b0, a0, b1,
+    b1_cnt), the codes and the ADC lookup table qd — the raw query
+    subvectors' (vec_id < nq) dots with the trained codebook."""
+    s = f"{p}{m}_"
     return f"""
-{", ".join(_pq_sub_sql(m) for m in range(PQ_M))},
-pq_scored AS (
-    SELECT code0.vec_id,
-           ({" + ".join(f"CAST(qd{m}.qdot AS DOUBLE) / cc{m}.cnt" for m in range(PQ_M))}) AS adot,
-           ({" + ".join(f"CAST(cn{m}1.cnsq AS DOUBLE) / (cc{m}.cnt * cc{m}.cnt)" for m in range(PQ_M))}) AS rnsq
-    FROM code0
-    {" ".join(f"JOIN code{m} ON code{m}.vec_id = code0.vec_id" for m in range(1, PQ_M))}
-    {" ".join(f"JOIN qd{m} ON qd{m}.cid = code{m}.cell JOIN cc{m} ON cc{m}.cid = code{m}.cell JOIN cn{m}1 ON cn{m}1.cid = code{m}.cell" for m in range(PQ_M))}
-    {cand_join}
-    WHERE code0.vec_id <> 0
-),
-pq_topk AS (
-    SELECT s.vec_id,
-           s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq)) AS cosine_pq
-    FROM pq_scored s
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    ORDER BY cosine_pq DESC, s.vec_id
-    LIMIT 10
-)"""
+{s}e AS ({_slice_sql(src, m)}),
+{s}en AS (SELECT vec_id, SUM(v * v) AS nsq FROM {s}e GROUP BY vec_id),
+{_lloyd_round_sql(s, f"{s}e", f"{s}en", PQ_K)},
+{s}code AS ({_nearest_cells_sql(f"{s}b1", f"{s}e", f"{s}en")}),
+{s}qd AS ({_book_dots_sql(f"({_slice_sql('ex', m)})", f"{s}b1", f"e.vec_id < {nq}")})"""
+
+
+def _adc_scored_sql(p: str, nq: int, cand: str = "", residual: bool = False) -> str:
+    """The SQL twin of the ADC scoring (:func:`_pivot_m` +
+    :func:`_adc_fold`) over the {p}{m}_* subspace chains: (qid, vec_id,
+    adot, rnsq) of each query (vec_id < nq) and corpus row (vec_id >=
+    nq), restricted to the (qid, vec_id) CTE ``cand`` if given. The
+    per-subspace terms add left to right in m; ``residual`` starts from
+    the coarse-cell terms (qc, cqnt_nsq) and adds the 2 crd / cnt cross
+    term."""
+    s = [f"{p}{m}_" for m in range(PQ_M)]
+    code, qd = f"{s[0]}code", f"{s[0]}qd"
+    adot = [f"CAST({x}qd.dot AS DOUBLE) / {x}b1_cnt.cnt" for x in s]
+    rnsq = [f"CAST({x}b1_nsq.cnsq AS DOUBLE) / ({x}b1_cnt.cnt * {x}b1_cnt.cnt)" for x in s]
+    joins = [f"JOIN {x}code ON {x}code.vec_id = {code}.vec_id" for x in s[1:]]
+    joins += [
+        f"JOIN {x}qd ON {x}qd.cid = {x}code.cell AND {x}qd.vec_id = {qd}.vec_id" for x in s[1:]
+    ]
+    joins += [f"JOIN {x}b1_{t} ON {x}b1_{t}.cid = {x}code.cell" for x in s for t in ("cnt", "nsq")]
+    if residual:
+        adot = ["CAST(qc.dot AS DOUBLE)", *adot]
+        rnsq = ["CAST(cqnt_nsq.cnsq AS DOUBLE)"] + [
+            f"(2 * CAST({x}crd.dot AS DOUBLE) / {x}b1_cnt.cnt + {r})" for x, r in zip(s, rnsq)
+        ]
+        joins += [
+            f"JOIN ivfa1 a ON a.vec_id = {code}.vec_id",
+            f"JOIN qc ON qc.cid = a.cell AND qc.vec_id = {qd}.vec_id",
+            "JOIN cqnt_nsq ON cqnt_nsq.cid = a.cell",
+        ] + [f"JOIN {x}crd ON {x}crd.cid = {x}code.cell AND {x}crd.vec_id = a.cell" for x in s]
+    if cand:
+        joins.append(f"JOIN {cand} c ON c.vec_id = {code}.vec_id AND c.qid = {qd}.vec_id")
+    sep = "\n    "
+    return f"""
+    SELECT {qd}.vec_id AS qid, {code}.vec_id,
+           ({" + ".join(adot)}) AS adot,
+           ({" + ".join(rnsq)}) AS rnsq
+    FROM {code}
+    JOIN {qd} ON {qd}.cid = {code}.cell
+    {sep.join(joins)}
+    WHERE {code}.vec_id >= {nq}"""
+
+
+def _adc_topk_sql(scored: str, k: int) -> str:
+    """(qid, vec_id, cosine_pq): each query's ``k`` best rows of an
+    ADC-scored CTE (_adc_scored_sql) in (cosine_pq desc, vec_id) order;
+    a zero reconstruction norm never ranks."""
+    return f"""
+    SELECT qid, vec_id, cosine_pq FROM (
+        SELECT qid, vec_id, cosine_pq,
+               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine_pq DESC, vec_id) AS rk
+        FROM (
+            SELECT s.qid, s.vec_id,
+                   s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq)) AS cosine_pq
+            FROM {scored} s JOIN norms qn ON qn.vec_id = s.qid
+            WHERE s.rnsq > 0
+        )
+    ) WHERE rk <= {k}"""
+
+
+def _pq_scored_sql_block(nq: int = 1, probe: bool = False) -> str:
+    """The SQL twin of :func:`_pq_scored`: the raw-subvector PQ index
+    (_pq_sub_sql), the ADC scores pq_scored of each query (vec_id < nq)
+    and each query's top 10 pq_topk. ``probe`` scores only the corpus
+    rows of each query's nearest trained cell (pcand, the IVF-PQ
+    composition; needs _IVF_ASSIGN_CTES)."""
+    cand = f"pcand AS ({_probe_sql('ivfa1', 'c_b1', 1, nq)}),\n" if probe else ""
+    return f"""{", ".join(_pq_sub_sql(m, "ex", "p", nq) for m in range(PQ_M))},
+{cand}pq_scored AS ({_adc_scored_sql("p", nq, "pcand" if probe else "")}),
+pq_topk AS ({_adc_topk_sql("pq_scored", 10)})"""
 
 
 _PQ_SCORED_SQL = _pq_scored_sql_block()
+
+
+def _subspace_rows(frame: DataFrame, col: str, keep: tuple, name: str = "qe") -> DataFrame:
+    """(*keep, m, ``name``): one row per fixed subspace slice of the
+    64-dim quantized array ``col`` — the long form (raw or residual
+    vectors, their queries and the quantized coarse centroids) every
+    PQ codebook, code and ADC dot is keyed by."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(m).alias("m"),
+                F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("s"),
+            )
+            for m in range(PQ_M)
+        ]
+    )
+    return frame.select(*keep, F.explode(subs).alias("g")).select(
+        *keep, F.col("g.m").alias("m"), F.col("g.s").alias(name)
+    )
+
+
+def _query_book_dots(book: DataFrame, q_sub: DataFrame) -> DataFrame:
+    """The ADC lookup table (q_id, m, cell, qdot, cnt, cnsq): every query
+    subvector (q_id, m, q_s) dotted exactly with each entry of its
+    subspace's codebook (m, cid, c_qe, c_nsq, cnt), beside the entry's
+    member count and squared norm."""
+    return book.join(F.broadcast(q_sub), "m").select(
+        "q_id",
+        "m",
+        F.col("cid").alias("cell"),
+        dot_q(F.col("c_qe"), F.col("q_s")).alias("qdot"),
+        "cnt",
+        F.col("c_nsq").alias("cnsq"),
+    )
+
+
+def _pivot_m(contrib: DataFrame, keys: list, cols: tuple) -> DataFrame:
+    """One row per ``keys`` with each per-subspace column c of
+    ``contrib`` pivoted to fixed columns c0..c{PQ_M-1}, so the ADC fold
+    adds them in m order (float addition commutes but does NOT
+    associate — a SUM aggregate would be partitioning-dependent)."""
+    return contrib.groupBy(*keys).agg(
+        *[
+            F.max(F.when(F.col("m") == m, F.col(c))).alias(f"{c}{m}")
+            for m in range(PQ_M)
+            for c in cols
+        ]
+    )
+
+
+def _adc_fold(
+    adot: F.Column | None = None, rnsq: F.Column | None = None, cross: bool = False
+) -> tuple[F.Column, F.Column]:
+    """The fixed-order ADC sums over pivoted subspace columns: the query
+    dot adds qdot_m / cnt_m and the reconstruction norm cnsq_m / cnt_m^2
+    (plus 2 crdot_m / cnt_m when ``cross``) left to right in m, after
+    the starting terms ``adot`` / ``rnsq`` if given. SQL twin:
+    :func:`_adc_scored_sql`."""
+    for m in range(PQ_M):
+        cnt = F.col(f"cnt{m}")
+        a = F.col(f"qdot{m}").cast("double") / cnt
+        r = F.col(f"cnsq{m}").cast("double") / (cnt * cnt)
+        if cross:
+            r = 2 * F.col(f"crdot{m}").cast("double") / cnt + r
+        adot = a if adot is None else adot + a
+        rnsq = r if rnsq is None else rnsq + r
+    return adot, rnsq
 
 
 def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -2055,16 +2162,9 @@ def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     the same kernels — and the trained codebook (m, cid, c_qe, c_nsq,
     cnt)."""
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
-    subs_pure = (
-        qv.select("vec_id", "nsq", F.explode(_sub_structs_of("qe")).alias("g"))
-        .select(
-            "vec_id",
-            F.col("nsq").alias("full_nsq"),
-            F.col("g.m").alias("m"),
-            F.col("g.s").alias("qe"),
-        )
-        .withColumn("nsq", norm_sq_q(F.col("qe")))
-    )
+    subs_pure = _subspace_rows(
+        qv.withColumnRenamed("nsq", "full_nsq"), "qe", ("vec_id", "full_nsq")
+    ).withColumn("nsq", norm_sq_q(F.col("qe")))
     from .. import io as _io
 
     def train():
@@ -2104,11 +2204,10 @@ def _pq_train_subs(subs: DataFrame) -> DataFrame:
     "sim_ann_pq_train",
     oracle=f"""
 WITH {_Q_CTE},
-{", ".join(_pq_sub_sql(m) for m in range(PQ_M))}
+{", ".join(_pq_sub_sql(m, "ex", "p", 1) for m in range(PQ_M))}
 {" UNION ALL ".join(
     f"SELECT {m} AS m, s.cid AS cell, CAST(c.cnt AS BIGINT) AS n_members, s.centroid_sum "
-    f"FROM (SELECT cid, string_agg(CAST(cv AS VARCHAR), ',' ORDER BY i) AS centroid_sum FROM cx{m}1 GROUP BY cid) s "
-    f"JOIN cc{m} c ON c.cid = s.cid"
+    f"FROM ({_book_csv_sql(f'p{m}_b1')}) s JOIN p{m}_b1_cnt c ON c.cid = s.cid"
     for m in range(PQ_M))}
 """,
     doc=(
@@ -2163,31 +2262,9 @@ def _pq_scored(
     q_sub = subs.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("q_id"), "m", F.col("qe").alias("q_s")
     )
-    qd = book.join(F.broadcast(q_sub), "m").select(
-        "q_id",
-        "m",
-        F.col("cid").alias("cell"),
-        dot_q(F.col("c_qe"), F.col("q_s")).alias("qdot"),
-        "cnt",
-        F.col("c_nsq").alias("cnsq"),
-    )
-    # per-(q, vec, m) ADC components pivot to fixed columns so the final
-    # double combination keeps the oracle's exact left-to-right m order
-    # (float addition commutes but does NOT associate — a SUM aggregate
-    # would be partitioning-dependent)
-    contrib = codes.join(qd, ["m", "cell"])
-    out = contrib.groupBy("q_id", "vec_id").agg(
-        *[
-            F.max(F.when(F.col("m") == m, F.col(c))).alias(f"{c}{m}")
-            for m in range(PQ_M)
-            for c in ("qdot", "cnt", "cnsq")
-        ]
-    )
-    adot = F.col("qdot0").cast("double") / F.col("cnt0")
-    rnsq = F.col("cnsq0").cast("double") / (F.col("cnt0") * F.col("cnt0"))
-    for m in range(1, PQ_M):
-        adot = adot + F.col(f"qdot{m}").cast("double") / F.col(f"cnt{m}")
-        rnsq = rnsq + F.col(f"cnsq{m}").cast("double") / (F.col(f"cnt{m}") * F.col(f"cnt{m}"))
+    contrib = codes.join(_query_book_dots(book, q_sub), ["m", "cell"])
+    out = _pivot_m(contrib, ["q_id", "vec_id"], ("qdot", "cnt", "cnsq"))
+    adot, rnsq = _adc_fold()
     q_nsq = subs.where((F.col("vec_id") < nq) & (F.col("m") == 0)).select(
         F.col("vec_id").alias("q_id"), F.col("full_nsq").alias("q_nsq")
     )
@@ -2258,36 +2335,13 @@ def sim_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_at_10(spark, sf_dir, sim_ann_pq_topk(spark, sf_dir))
 
 
-_IVF_ASSIGN_CTES = """
-ivfd1 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex e JOIN cex1 x ON x.i = e.i GROUP BY 1, 2
-),
-ivfa1 AS MATERIALIZED (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT d.vec_id, d.cid,
-               ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC, d.cid) AS rk
-        FROM ivfd1 d
-        JOIN norms n ON n.vec_id = d.vec_id
-        JOIN cn1 c ON c.cid = d.cid
-        WHERE c.cnsq > 0
-    ) WHERE rk = 1
-),
-qcell AS (SELECT cell AS cid FROM ivfa1 WHERE vec_id = 0),
-cand AS (
-    SELECT a.vec_id FROM ivfa1 a JOIN qcell q ON a.cell = q.cid
-    WHERE a.vec_id <> 0
-)"""
-
-
 @register(
     "sim_ann_ivfpq_topk",
     oracle=f"""
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
 {_IVF_ASSIGN_CTES},
-{_pq_scored_sql_block("JOIN cand ON cand.vec_id = code0.vec_id")}
+{_pq_scored_sql_block(probe=True)}
 SELECT vec_id, cosine_pq FROM pq_topk
 """,
     doc=(
@@ -2307,15 +2361,7 @@ SELECT vec_id, cosine_pq FROM pq_topk
 def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _quantized(spark, sf_dir).select("vec_id", "qe", "nsq")
     cents = _ivf_cents(spark, sf_dir)  # shared seed-round memo (r15)
-    assign = _nearest_cells(qv, cents)
-    qcell = assign.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    cand = (
-        assign.join(F.broadcast(qcell), "cell")
-        .where(F.col("vec_id") != 0)
-        .select("q_id", "vec_id")
-    )
+    cand = _probe(qv, cents, _nearest_cells(qv, cents), 1)
     return (
         _pq_scored(spark, sf_dir, candidates=cand)
         .drop("q_id")
@@ -2331,19 +2377,11 @@ def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: query-centroid cosine, not just the argmax cell
 IVF_NPROBE = 2
 
-
-def _sub_structs_of(col_name: str) -> F.Column:
-    """The M fixed subspace slices of a 64-dim quantized array as an
-    explodable struct array (shared by raw-vector and residual PQ)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.slice(col_name, m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("s"),
-            )
-            for m in range(PQ_M)
-        ]
-    )
+#: exact-refine shortlist size: the ADC pass ranks candidates by code
+#: distance, the top REFINE_R re-rank with their ORIGINAL vectors (FAISS
+#: IndexRefineFlat). Index storage is unchanged — the originals live in
+#: the corpus table regardless; a query reads exactly R of them
+REFINE_R = 50
 
 
 #: the six frames of the query-independent residual IVF-PQ index: coarse
@@ -2400,20 +2438,15 @@ def _residual_index_build(spark: SparkSession, sf_dir: str) -> dict:
         )
     )
     rsubs = (
-        res.select("vec_id", F.explode(_sub_structs_of("re")).alias("g"))
-        .select("vec_id", F.col("g.m").alias("m"), F.col("g.s").alias("qe"))
+        _subspace_rows(res, "re", ("vec_id",))
         .withColumn("nsq", norm_sq_q(F.col("qe")))
         .localCheckpoint()
     )
     rbook = _pq_train_subs(rsubs)
     rcodes = _nearest_cells(rsubs, rbook, 1, ("m",)).localCheckpoint()
-    ccq_sub = cq.select("cid", F.explode(_sub_structs_of("cq")).alias("g")).select(
-        F.col("cid").alias("cell"),
-        F.col("g.m").alias("m"),
-        F.col("g.s").alias("cs"),
-    )
     crd = (
-        ccq_sub.join(rbook.select("m", F.col("cid").alias("rcell"), "c_qe"), "m")
+        _subspace_rows(cq.withColumnRenamed("cid", "cell"), "cq", ("cell",), "cs")
+        .join(rbook.select("m", F.col("cid").alias("rcell"), "c_qe"), "m")
         .select("cell", "m", "rcell", dot_q(F.col("cs"), F.col("c_qe")).alias("crdot"))
         .localCheckpoint()
     )
@@ -2463,29 +2496,14 @@ def _ivf_residual_scored(
 
     # nprobe>1: candidates from each query's top-P cells, ranked by the
     # same kernel as the assignment, so tie behavior matches
-    qprobe = _nearest_cells(qv.where(F.col("vec_id") < nq), cents, IVF_NPROBE).select(
-        F.col("vec_id").alias("q_id"), "cell"
+    cand = _probe(qv, cents, assign, IVF_NPROBE, nq)
+    q_sub = _subspace_rows(
+        qv.where(F.col("vec_id") < nq).withColumnRenamed("vec_id", "q_id"),
+        "qe",
+        ("q_id",),
+        "q_s",
     )
-    cand = (
-        assign.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") >= nq)
-        .select("q_id", "vec_id")
-    )
-
-    q_sub = (
-        qv.where(F.col("vec_id") < nq)
-        .select(F.col("vec_id").alias("q_id"), F.explode(_sub_structs_of("qe")).alias("g"))
-        .select("q_id", F.col("g.m").alias("m"), F.col("g.s").alias("q_s"))
-    )
-    qrd = rbook.join(F.broadcast(q_sub), "m").select(
-        "q_id",
-        "m",
-        F.col("cid").alias("rcell"),
-        dot_q(F.col("c_qe"), F.col("q_s")).alias("qrdot"),
-        "cnt",
-        F.col("c_nsq").alias("rcnsq"),
-    )
-
+    qrd = _query_book_dots(rbook, q_sub).withColumnRenamed("cell", "rcell")
     contrib = (
         rcodes.withColumnRenamed("cell", "rcell")
         .join(cand, "vec_id")
@@ -2493,13 +2511,7 @@ def _ivf_residual_scored(
         .join(qrd, ["q_id", "m", "rcell"])
         .join(crd, ["cell", "m", "rcell"])
     )
-    out = contrib.groupBy("q_id", "vec_id", "cell").agg(
-        *[
-            F.max(F.when(F.col("m") == m, F.col(c))).alias(f"{c}{m}")
-            for m in range(PQ_M)
-            for c in ("qrdot", "cnt", "rcnsq", "crdot")
-        ]
-    )
+    out = _pivot_m(contrib, ["q_id", "vec_id", "cell"], ("qdot", "cnt", "cnsq", "crdot"))
     cellterms = cq.crossJoin(F.broadcast(_query_block(qv, nq))).select(
         "q_id",
         F.col("cid").alias("cell"),
@@ -2508,14 +2520,7 @@ def _ivf_residual_scored(
         "q_nsq",
     )
     out = out.join(F.broadcast(cellterms), ["q_id", "cell"])
-    adot = F.col("qc").cast("double")
-    rn = F.col("cqn").cast("double")
-    for m in range(PQ_M):
-        adot = adot + F.col(f"qrdot{m}").cast("double") / F.col(f"cnt{m}")
-        rn = rn + (
-            2 * F.col(f"crdot{m}").cast("double") / F.col(f"cnt{m}")
-            + F.col(f"rcnsq{m}").cast("double") / (F.col(f"cnt{m}") * F.col(f"cnt{m}"))
-        )
+    adot, rn = _adc_fold(F.col("qc").cast("double"), F.col("cqn").cast("double"), cross=True)
     return (
         out.withColumn("adot", adot)
         .withColumn("rnsq_hat", rn)
@@ -2531,133 +2536,36 @@ def _ivf_residual_scored(
     )
 
 
-def _rpq_sub_sql(m: int) -> str:
-    """Residual twin of _pq_sub_sql: one subspace's residual slice, seed
-    codebook, one spherical Lloyd round, encode, query-side ADC dot, and
-    the (coarse cell x residual code) cross-dot table."""
-    lo, hi = m * PQ_SUBDIM, (m + 1) * PQ_SUBDIM
-    argmax = (
-        "SELECT vec_id, cid AS cell FROM ("
-        "SELECT d.vec_id, d.cid, ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY "
-        "CAST(d.dot AS DOUBLE) / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC, d.cid) AS rk "
-        f"FROM {{dots}} d JOIN rn{m} n ON n.vec_id = d.vec_id JOIN {{cn}} c ON c.cid = d.cid "
-        "WHERE c.cnsq > 0) WHERE rk = 1"
-    )
-    return f"""
-rex{m} AS (SELECT vec_id, i - {lo} AS i, rv AS v FROM rex WHERE i > {lo} AND i <= {hi}),
-rn{m} AS (SELECT vec_id, SUM(v * v) AS nsq FROM rex{m} GROUP BY vec_id),
-rcx{m}0 AS (SELECT vec_id AS cid, i, v AS cv FROM rex{m} WHERE vec_id < {PQ_K}),
-rcn{m}0 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM rcx{m}0 GROUP BY cid),
-rd{m}0 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM rex{m} e JOIN rcx{m}0 x ON x.i = e.i GROUP BY 1, 2
-),
-ra{m}0 AS ({argmax.format(dots=f"rd{m}0", cn=f"rcn{m}0")}),
-rcx{m}1 AS (
-    SELECT a.cell AS cid, e.i, CAST(SUM(e.v) AS BIGINT) AS cv
-    FROM rex{m} e JOIN ra{m}0 a ON a.vec_id = e.vec_id GROUP BY 1, 2
-),
-rcn{m}1 AS (SELECT cid, SUM(cv * cv) AS cnsq FROM rcx{m}1 GROUP BY cid),
-rcc{m} AS (SELECT cell AS cid, COUNT(*) AS cnt FROM ra{m}0 GROUP BY cell),
-rd{m}1 AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM rex{m} e JOIN rcx{m}1 x ON x.i = e.i GROUP BY 1, 2
-),
-rcode{m} AS ({argmax.format(dots=f"rd{m}1", cn=f"rcn{m}1")}),
-qrd{m} AS (
-    SELECT x.cid, SUM(qq.v * x.cv) AS qdot
-    FROM (SELECT i - {lo} AS i, v FROM ex WHERE vec_id = 0 AND i > {lo} AND i <= {hi}) qq
-    JOIN rcx{m}1 x ON x.i = qq.i GROUP BY x.cid
-),
-crd{m} AS (
-    SELECT cq.cid AS ccell, x.cid AS rcell, SUM(cq.qv * x.cv) AS cdot
-    FROM (SELECT cid, i - {lo} AS i, qv FROM cqnt WHERE i > {lo} AND i <= {hi}) cq
-    JOIN rcx{m}1 x ON x.i = cq.i
-    GROUP BY 1, 2
-)"""
-
-
-def _residual_ivfpq_ctes() -> str:
-    """The full residual-composition CTE chain (after _Q_CTE +
-    _KMEANS_R1_CTES + _IVF_ASSIGN_CTES): quantized coarse centroids,
-    nprobe candidate set, residual stream, per-subspace residual PQ, and
-    the fixed-order ADC scoring — the SAME decomposition the Spark side
-    computes, term for term."""
-    adot = " + ".join(
-        f"CAST(qrd{m}.qdot AS DOUBLE) / rcc{m}.cnt" for m in range(PQ_M)
-    )
-    rnsq = " + ".join(
-        f"(2 * CAST(crd{m}.cdot AS DOUBLE) / rcc{m}.cnt"
-        f" + CAST(rcn{m}1.cnsq AS DOUBLE) / (rcc{m}.cnt * rcc{m}.cnt))"
+def _residual_ivfpq_ctes(nq: int = 1) -> str:
+    """The SQL twin of :func:`_ivf_residual_scored` (after _Q_CTE +
+    _KMEANS_R1_CTES + _IVF_ASSIGN_CTES): the integer-quantized coarse
+    centroids cqnt, the query-to-cqnt dots qc, the nprobe candidates
+    rcand, the residual stream rex, the residual PQ index (_pq_sub_sql
+    over rex) with its (coarse cell x residual code) cross-dots
+    r{m}_crd, the ADC scores rpq_scored, and each query's top 10
+    (rpq_topk) and refine shortlist (rpq_short) — the SAME
+    decomposition the Spark side computes, term for term."""
+    cqv = "(SELECT cid AS vec_id, i, cv AS v FROM cqnt)"
+    crd = ",\n".join(
+        f"r{m}_crd AS ({_book_dots_sql(f'({_slice_sql(cqv, m)})', f'r{m}_b1')})"
         for m in range(PQ_M)
     )
-    joins = " ".join(
-        f"JOIN qrd{m} ON qrd{m}.cid = rcode{m}.cell "
-        f"JOIN rcc{m} ON rcc{m}.cid = rcode{m}.cell "
-        f"JOIN rcn{m}1 ON rcn{m}1.cid = rcode{m}.cell "
-        f"JOIN crd{m} ON crd{m}.rcell = rcode{m}.cell AND crd{m}.ccell = a.cell"
-        for m in range(PQ_M)
-    )
-    code_joins = " ".join(
-        f"JOIN rcode{m} ON rcode{m}.vec_id = rcode0.vec_id" for m in range(1, PQ_M)
-    )
-    return f"""
-ccnt0 AS (SELECT cell AS cid, COUNT(*) AS n FROM assign0 GROUP BY cell),
-cqnt AS MATERIALIZED (
-    SELECT x.cid, x.i,
-           CAST(floor(CAST(2 * x.cv + c.n AS DOUBLE) / (2 * c.n)) AS BIGINT) AS qv
-    FROM cex1 x JOIN ccnt0 c ON c.cid = x.cid
-),
-cqn AS (SELECT cid, SUM(qv * qv) AS cqn FROM cqnt GROUP BY cid),
-qcdot AS (
-    SELECT x.cid, SUM(qq.v * x.qv) AS qc
-    FROM (SELECT i, v FROM ex WHERE vec_id = 0) qq
-    JOIN cqnt x ON x.i = qq.i GROUP BY x.cid
-),
-rqprobe AS (
-    SELECT cid AS cell FROM (
-        SELECT d.cid,
-               ROW_NUMBER() OVER (ORDER BY
-                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC,
-                   d.cid) AS rk
-        FROM ivfd1 d
-        JOIN cn1 c ON c.cid = d.cid
-        CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-        WHERE d.vec_id = 0 AND c.cnsq > 0
-    ) WHERE rk <= {IVF_NPROBE}
-),
-rcand AS (
-    SELECT a.vec_id FROM ivfa1 a JOIN rqprobe p ON a.cell = p.cell
-    WHERE a.vec_id <> 0
-),
+    return f"""{_codebook_sql("cqnt", '''
+    SELECT x.cid, x.i, floor(CAST(2 * x.cv + c.cnt AS DOUBLE) / (2 * c.cnt))::BIGINT AS cv
+    FROM c_b1 x JOIN c_b1_cnt c ON c.cid = x.cid''')},
+qc AS ({_book_dots_sql("ex", "cqnt", f"e.vec_id < {nq}")}),
+rcand AS ({_probe_sql("ivfa1", "c_b1", IVF_NPROBE, nq)}),
 rex AS MATERIALIZED (
-    SELECT e.vec_id, e.i, e.v - x.qv AS rv
+    SELECT e.vec_id, e.i, e.v - x.cv AS v
     FROM ex e
     JOIN ivfa1 a ON a.vec_id = e.vec_id
     JOIN cqnt x ON x.cid = a.cell AND x.i = e.i
 ),
-{", ".join(_rpq_sub_sql(m) for m in range(PQ_M))},
-rpq_scored AS (
-    SELECT rcode0.vec_id,
-           (CAST(qcdot.qc AS DOUBLE) + {adot}) AS adot,
-           (CAST(cqn.cqn AS DOUBLE) + {rnsq}) AS rnsq_hat
-    FROM rcode0
-    {code_joins}
-    JOIN ivfa1 a ON a.vec_id = rcode0.vec_id
-    JOIN rcand rc ON rc.vec_id = rcode0.vec_id
-    JOIN qcdot ON qcdot.cid = a.cell
-    JOIN cqn ON cqn.cid = a.cell
-    {joins}
-),
-rpq_topk AS (
-    SELECT s.vec_id,
-           s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq_hat)) AS cosine_pq
-    FROM rpq_scored s
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    WHERE s.rnsq_hat > 0
-    ORDER BY cosine_pq DESC, s.vec_id
-    LIMIT 10
-)"""
+{", ".join(_pq_sub_sql(m, "rex", "r", nq) for m in range(PQ_M))},
+{crd},
+rpq_scored AS ({_adc_scored_sql("r", nq, "rcand", residual=True)}),
+rpq_topk AS ({_adc_topk_sql("rpq_scored", 10)}),
+rpq_short AS ({_adc_topk_sql("rpq_scored", REFINE_R)})"""
 
 
 _RPQ_CTES = _residual_ivfpq_ctes()
@@ -2697,13 +2605,6 @@ def sim_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: exact-refine shortlist size: the ADC pass ranks candidates by code
-#: distance, the top REFINE_R re-rank with their ORIGINAL vectors (FAISS
-#: IndexRefineFlat). Index storage is unchanged — the originals live in
-#: the corpus table regardless; a query reads exactly R of them
-REFINE_R = 50
-
-
 @register(
     "sim_ann_ivfpq_refine_topk",
     oracle=f"""
@@ -2711,14 +2612,6 @@ WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
 {_IVF_ASSIGN_CTES},
 {_RPQ_CTES},
-rpq_short AS (
-    SELECT s.vec_id
-    FROM rpq_scored s
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    WHERE s.rnsq_hat > 0
-    ORDER BY s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq_hat)) DESC, s.vec_id
-    LIMIT {REFINE_R}
-),
 {_TRUTH_CTES}
 {_cand_topk_sql("rpq_short")}
 """,
@@ -2771,147 +2664,25 @@ def _refine_from_scored(
 
 
 def _batch_ivfpq_ctes(nq: int) -> str:
-    """Batch (qid-dimensioned) twins of the per-query scoring CTEs,
-    layered ON TOP of the shared single-query chains (_KMEANS_R1_CTES /
-    _pq_scored_sql_block / _RPQ_CTES): every training CTE — coarse cells,
-    quantized centroids, plain and residual codebooks, codes, crd cross-
-    dots — is reused verbatim (trained ONCE, query-independent), and only
-    the query-side dots, probes, candidate sets, and rankings gain a qid
-    column. Queries are vec_id < nq, corpus vec_id >= nq (the
-    sim_ann_batch_recall_eval convention)."""
-    P = IVF_NPROBE
-    bqd = ",\n".join(
-        f"""bqd{m} AS (
-    SELECT qq.vec_id AS qid, x.cid, SUM(qq.v * x.cv) AS qdot
-    FROM (SELECT vec_id, i, v FROM ex{m} WHERE vec_id < {nq}) qq
-    JOIN cx{m}1 x ON x.i = qq.i GROUP BY 1, 2
-)"""
-        for m in range(PQ_M)
-    )
-    bqrd = ",\n".join(
-        f"""bqrd{m} AS (
-    SELECT qq.vec_id AS qid, x.cid, SUM(qq.v * x.cv) AS qdot
-    FROM (SELECT vec_id, i - {m * PQ_SUBDIM} AS i, v FROM ex
-          WHERE vec_id < {nq} AND i > {m * PQ_SUBDIM} AND i <= {(m + 1) * PQ_SUBDIM}) qq
-    JOIN rcx{m}1 x ON x.i = qq.i GROUP BY 1, 2
-)"""
-        for m in range(PQ_M)
-    )
-    plain_adot = " + ".join(
-        f"CAST(bqd{m}.qdot AS DOUBLE) / cc{m}.cnt" for m in range(PQ_M)
-    )
-    plain_rnsq = " + ".join(
-        f"CAST(cn{m}1.cnsq AS DOUBLE) / (cc{m}.cnt * cc{m}.cnt)" for m in range(PQ_M)
-    )
-    plain_joins = " ".join(
-        f"JOIN code{m} ON code{m}.vec_id = code0.vec_id" for m in range(1, PQ_M)
-    ) + " JOIN bqd0 ON bqd0.cid = code0.cell " + " ".join(
-        f"JOIN bqd{m} ON bqd{m}.cid = code{m}.cell AND bqd{m}.qid = bqd0.qid"
-        for m in range(1, PQ_M)
-    ) + " " + " ".join(
-        f"JOIN cc{m} ON cc{m}.cid = code{m}.cell JOIN cn{m}1 ON cn{m}1.cid = code{m}.cell"
-        for m in range(PQ_M)
-    )
-    res_adot = " + ".join(
-        f"CAST(bqrd{m}.qdot AS DOUBLE) / rcc{m}.cnt" for m in range(PQ_M)
-    )
-    res_rnsq = " + ".join(
-        f"(2 * CAST(crd{m}.cdot AS DOUBLE) / rcc{m}.cnt"
-        f" + CAST(rcn{m}1.cnsq AS DOUBLE) / (rcc{m}.cnt * rcc{m}.cnt))"
-        for m in range(PQ_M)
-    )
-    res_code_joins = " ".join(
-        f"JOIN rcode{m} ON rcode{m}.vec_id = rcode0.vec_id" for m in range(1, PQ_M)
-    ) + " JOIN bqrd0 ON bqrd0.cid = rcode0.cell " + " ".join(
-        f"JOIN bqrd{m} ON bqrd{m}.cid = rcode{m}.cell AND bqrd{m}.qid = bqrd0.qid"
-        for m in range(1, PQ_M)
-    )
-    # the crd joins reference alias a (ivfa1) — they must come after it
-    res_tail_joins = " ".join(
-        f"JOIN rcc{m} ON rcc{m}.cid = rcode{m}.cell "
-        f"JOIN rcn{m}1 ON rcn{m}1.cid = rcode{m}.cell "
-        f"JOIN crd{m} ON crd{m}.rcell = rcode{m}.cell AND crd{m}.ccell = a.cell"
-        for m in range(PQ_M)
-    )
-    rank10 = (
-        "SELECT qid, vec_id FROM ("
-        "SELECT s.qid, s.vec_id, ROW_NUMBER() OVER (PARTITION BY s.qid ORDER BY "
-        "s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.{norm})) DESC, s.vec_id) AS rk "
-        "FROM {src} s JOIN norms qn ON qn.vec_id = s.qid{extra}"
-        ") WHERE rk <= {k}"
-    )
+    """The batch recall layer over the nq-query plain and residual
+    chains (_pq_scored_sql_block(nq, probe=True) and
+    _residual_ivfpq_ctes(nq), every index trained ONCE, query-
+    independent): the batch truth, each query's refined top 10 (its
+    rpq_short shortlist re-ranked by exact cosine) and the per-query
+    overlaps of all three compositions, bper_q. Queries are vec_id <
+    nq, corpus vec_id >= nq (the sim_ann_batch_recall_eval
+    convention)."""
     return f"""{_batch_truth_ctes(nq)},
-bqcell AS (SELECT vec_id AS qid, cell FROM ivfa1 WHERE vec_id < {nq}),
-bcand AS (
-    SELECT q.qid, a.vec_id FROM ivfa1 a JOIN bqcell q ON a.cell = q.cell
-    WHERE a.vec_id >= {nq}
-),
-{bqd},
-bpq_scored AS (
-    SELECT bqd0.qid, code0.vec_id,
-           ({plain_adot}) AS adot,
-           ({plain_rnsq}) AS rnsq
-    FROM code0
-    {plain_joins}
-    JOIN bcand ON bcand.vec_id = code0.vec_id AND bcand.qid = bqd0.qid
-    WHERE code0.vec_id >= {nq}
-),
-bplain AS ({rank10.format(norm="rnsq", src="bpq_scored", extra="", k=10)}),
-bqcdot AS (
-    SELECT qq.vec_id AS qid, x.cid, SUM(qq.v * x.qv) AS qc
-    FROM (SELECT vec_id, i, v FROM ex WHERE vec_id < {nq}) qq
-    JOIN cqnt x ON x.i = qq.i GROUP BY 1, 2
-),
-brqprobe AS (
-    SELECT qid, cid AS cell FROM (
-        SELECT d.vec_id AS qid, d.cid,
-               ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-                   CAST(d.dot AS DOUBLE) / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) DESC,
-                   d.cid) AS rk
-        FROM ivfd1 d
-        JOIN cn1 c ON c.cid = d.cid
-        JOIN norms qn ON qn.vec_id = d.vec_id
-        WHERE d.vec_id < {nq} AND c.cnsq > 0
-    ) WHERE rk <= {P}
-),
-brcand AS (
-    SELECT p.qid, a.vec_id FROM ivfa1 a JOIN brqprobe p ON a.cell = p.cell
-    WHERE a.vec_id >= {nq}
-),
-{bqrd},
-brpq_scored AS (
-    SELECT bqrd0.qid, rcode0.vec_id,
-           (CAST(bqcdot.qc AS DOUBLE) + {res_adot}) AS adot,
-           (CAST(cqn.cqn AS DOUBLE) + {res_rnsq}) AS rnsq_hat
-    FROM rcode0
-    {res_code_joins}
-    JOIN ivfa1 a ON a.vec_id = rcode0.vec_id
-    JOIN brcand rc ON rc.vec_id = rcode0.vec_id AND rc.qid = bqrd0.qid
-    JOIN bqcdot ON bqcdot.cid = a.cell AND bqcdot.qid = bqrd0.qid
-    JOIN cqn ON cqn.cid = a.cell
-    {res_tail_joins}
-),
-bresid AS ({rank10.format(norm="rnsq_hat", src="brpq_scored", extra=" WHERE s.rnsq_hat > 0", k=10)}),
-brpq_short AS ({rank10.format(norm="rnsq_hat", src="brpq_scored", extra=" WHERE s.rnsq_hat > 0", k=REFINE_R)}),
 brefined AS (
     SELECT qid, vec_id FROM (
         SELECT c.qid, c.vec_id,
                ROW_NUMBER() OVER (PARTITION BY c.qid ORDER BY b.cosine DESC, c.vec_id) AS rk
-        FROM brpq_short c JOIN bcos b ON b.qid = c.qid AND b.vec_id = c.vec_id
+        FROM rpq_short c JOIN bcos b ON b.qid = c.qid AND b.vec_id = c.vec_id
     ) WHERE rk <= 10
 ),
-bovl_plain AS (
-    SELECT t.qid, COUNT(*) AS n FROM btrue t
-    JOIN bplain l ON l.qid = t.qid AND l.vec_id = t.vec_id GROUP BY t.qid
-),
-bovl_resid AS (
-    SELECT t.qid, COUNT(*) AS n FROM btrue t
-    JOIN bresid l ON l.qid = t.qid AND l.vec_id = t.vec_id GROUP BY t.qid
-),
-bovl_ref AS (
-    SELECT t.qid, COUNT(*) AS n FROM btrue t
-    JOIN brefined l ON l.qid = t.qid AND l.vec_id = t.vec_id GROUP BY t.qid
-),
+bovl_plain AS ({_overlap_per_query_sql("pq_topk", "n")}),
+bovl_resid AS ({_overlap_per_query_sql("rpq_topk", "n")}),
+bovl_ref AS ({_overlap_per_query_sql("brefined", "n")}),
 bper_q AS (
     SELECT q.qid,
            COALESCE(p.n, 0) AS o_plain,
@@ -2930,31 +2701,20 @@ bper_q AS (
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
 {_IVF_ASSIGN_CTES},
-{_pq_scored_sql_block("JOIN cand ON cand.vec_id = code0.vec_id")},
+{_pq_scored_sql_block(probe=True)},
 {_RPQ_CTES},
-rpq_short AS (
-    SELECT s.vec_id
-    FROM rpq_scored s
-    CROSS JOIN (SELECT nsq FROM norms WHERE vec_id = 0) qn
-    WHERE s.rnsq_hat > 0
-    ORDER BY s.adot / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(s.rnsq_hat)) DESC, s.vec_id
-    LIMIT {REFINE_R}
-),
 {_TRUTH_CTES},
 refined_topk AS ({_cand_topk_sql("rpq_short")})
 SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN pq_topk p ON t.vec_id = p.vec_id) AS BIGINT)
-           AS n_overlap_plain,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN rpq_topk p ON t.vec_id = p.vec_id) AS BIGINT)
-           AS n_overlap_residual,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN refined_topk p ON t.vec_id = p.vec_id) AS BIGINT)
-           AS n_overlap_refined,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN pq_topk p ON t.vec_id = p.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10_plain,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN rpq_topk p ON t.vec_id = p.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10_residual,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN refined_topk p ON t.vec_id = p.vec_id) AS DOUBLE)
-           / (SELECT COUNT(*) FROM true_topk) AS recall_at_10_refined
+       CAST({_overlap_sql("pq_topk")} AS BIGINT) AS n_overlap_plain,
+       CAST({_overlap_sql("rpq_topk")} AS BIGINT) AS n_overlap_residual,
+       CAST({_overlap_sql("refined_topk")} AS BIGINT) AS n_overlap_refined,
+       CAST({_overlap_sql("pq_topk")} AS DOUBLE) / (SELECT COUNT(*) FROM true_topk)
+           AS recall_at_10_plain,
+       CAST({_overlap_sql("rpq_topk")} AS DOUBLE) / (SELECT COUNT(*) FROM true_topk)
+           AS recall_at_10_residual,
+       CAST({_overlap_sql("refined_topk")} AS DOUBLE) / (SELECT COUNT(*) FROM true_topk)
+           AS recall_at_10_refined
 """,
     doc=(
         "Recall@10 of ALL THREE IVF-PQ compositions against exact "
@@ -3008,8 +2768,8 @@ def sim_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
 {_IVF_ASSIGN_CTES},
-{_PQ_SCORED_SQL},
-{_RPQ_CTES},
+{_pq_scored_sql_block(SIM_EVAL_NQ, probe=True)},
+{_residual_ivfpq_ctes(SIM_EVAL_NQ)},
 {_batch_ivfpq_ctes(SIM_EVAL_NQ)}
 SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
        CAST(COUNT(*) * 10 AS BIGINT) AS n_true,
@@ -3035,8 +2795,8 @@ FROM bper_q
         "Every index trains ONCE for all queries — the coarse quantizer, "
         "plain and residual codebooks, codes, and cell cross-dots are "
         "the query-independent CTE chains reused verbatim; only probes, "
-        "query-side ADC dots, and rankings fan out per query (qid-"
-        "dimensioned twins in _batch_ivfpq_ctes). One residual pipeline "
+        "query-side ADC dots, and rankings fan out per query (the same "
+        "chains the single-query oracles run at nq = 1). One residual pipeline "
         "feeds both the unrefined ranking and the refine stage. "
         "tests/test_similarity_blocks.py asserts refined >= plain on the "
         "batch mean."
@@ -3051,15 +2811,7 @@ def sim_ann_ivfpq_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
     # plain IVF-PQ: one coarse train (shared seed-round memo, r15),
     # per-query argmax cell -> candidates
     cents = _ivf_cents(spark, sf_dir)
-    assign = _nearest_cells(qv, cents)
-    qcells = assign.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    cand_plain = (
-        assign.join(F.broadcast(qcells), "cell")
-        .where(F.col("vec_id") >= nq)
-        .select("q_id", "vec_id")
-    )
+    cand_plain = _probe(qv, cents, _nearest_cells(qv, cents), 1, nq)
     plain = _rank_le(
         _pq_scored(spark, sf_dir, candidates=cand_plain, nq=nq), 10, "cosine_pq"
     )
@@ -3490,33 +3242,10 @@ def sim_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_centroid_classifier",
     oracle=f"""
 WITH {_Q_CTE},
-cl AS (
-    SELECT q.label AS cid, e.i, CAST(SUM(e.v) AS BIGINT) AS cv
-    FROM ex e JOIN q ON q.vec_id = e.vec_id GROUP BY 1, 2
-),
-cn AS (SELECT cid, SUM(cv * cv) AS cnsq FROM cl GROUP BY cid),
-dots AS (
-    SELECT e.vec_id, c.cid, SUM(e.v * c.cv) AS dot
-    FROM ex e JOIN cl c ON c.i = e.i GROUP BY 1, 2
-),
-cosv AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(c.cnsq AS DOUBLE))) AS cos
-    FROM dots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cn c ON c.cid = d.cid
-    WHERE c.cnsq > 0
-),
-assign AS (
-    SELECT vec_id, cid AS predicted FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rk
-        FROM cosv
-    ) WHERE rk = 1
-),
+{_centroid_sums_sql("cl", "ex", "(SELECT vec_id, label AS cell FROM q)")},
+assign AS ({_nearest_cells_sql("cl")}),
 conf AS (
-    SELECT q.label AS actual_label, a.predicted AS predicted_label, COUNT(*) AS n
+    SELECT q.label AS actual_label, a.cell AS predicted_label, COUNT(*) AS n
     FROM q JOIN assign a ON a.vec_id = q.vec_id GROUP BY 1, 2
 ),
 tot AS (SELECT actual_label, SUM(n) AS actual_total FROM conf GROUP BY 1)
@@ -3744,10 +3473,7 @@ def _nprobe_sweep_sql() -> str:
         FROM cand WHERE cell_rank <= {np}
     ) WHERE rk <= 10
 ),
-o{np} AS (
-    SELECT COALESCE(SUM(1), 0) AS n_overlap
-    FROM btrue t JOIN r{np} l ON l.qid = t.qid AND l.vec_id = t.vec_id
-)"""
+o{np} AS (SELECT COALESCE(SUM(n), 0) AS n_overlap FROM ({_overlap_per_query_sql(f"r{np}", "n")}))"""
         for np in IVF_NPROBE_SWEEP
     )
     rows = "\nUNION ALL\n".join(
@@ -3761,54 +3487,14 @@ o{np} AS (
     return f"""
 WITH {_Q_CTE},
 {_KMEANS_R1_CTES},
+{_IVF_ASSIGN_CTES},
 {_batch_truth_ctes(SIM_EVAL_NQ)},
-qex AS (SELECT e.vec_id AS qid, e.i, e.v FROM ex e JOIN qs ON qs.qid = e.vec_id),
-cvec AS (SELECT vec_id FROM q WHERE vec_id >= {SIM_EVAL_NQ}),
-cdots AS (
-    SELECT e.vec_id, x.cid, SUM(e.v * x.cv) AS dot
-    FROM ex e JOIN cvec c ON c.vec_id = e.vec_id
-    JOIN cex1 x ON x.i = e.i
-    GROUP BY 1, 2
-),
-ccos AS (
-    SELECT d.vec_id, d.cid,
-           CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(cn.cnsq AS DOUBLE))) AS cos
-    FROM cdots d
-    JOIN norms n ON n.vec_id = d.vec_id
-    JOIN cn1 cn ON cn.cid = d.cid
-    WHERE cn.cnsq > 0
-),
-assignc AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rk
-        FROM ccos
-    ) WHERE rk = 1
-),
-qdots AS (
-    SELECT qx.qid, x.cid, SUM(qx.v * x.cv) AS dot
-    FROM qex qx JOIN cex1 x ON x.i = qx.i GROUP BY 1, 2
-),
-qcos AS (
-    SELECT d.qid, d.cid,
-           CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n.nsq AS DOUBLE)) * sqrt(CAST(cn.cnsq AS DOUBLE))) AS cos
-    FROM qdots d
-    JOIN norms n ON n.vec_id = d.qid
-    JOIN cn1 cn ON cn.cid = d.cid
-    WHERE cn.cnsq > 0
-),
-qrank AS (
-    SELECT qid, cid,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS cell_rank
-    FROM qcos
-),
+qrank AS ({_nearest_cells_sql("c_b1", k=None, where=f"e.vec_id < {SIM_EVAL_NQ}")}),
 cand AS (
-    SELECT a.qid, a.vec_id, qr.cell_rank, a.cosine
+    SELECT a.qid, a.vec_id, qr.rank AS cell_rank, a.cosine
     FROM bcos a
-    JOIN assignc s ON s.vec_id = a.vec_id
-    JOIN qrank qr ON qr.qid = a.qid AND qr.cid = s.cell
+    JOIN ivfa1 s ON s.vec_id = a.vec_id
+    JOIN qrank qr ON qr.vec_id = a.qid AND qr.cell = s.cell
 ),
 {per_np}
 SELECT * FROM ({rows}) ORDER BY nprobe
@@ -4004,10 +3690,8 @@ shortlist AS (
 reranked AS ({_cand_topk_sql("shortlist")})
 SELECT CAST((SELECT COUNT(*) FROM true_topk) AS BIGINT) AS n_true,
        CAST((SELECT COUNT(*) FROM reranked) AS BIGINT) AS n_retrieved,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN reranked r ON t.vec_id = r.vec_id) AS BIGINT)
-           AS n_overlap,
-       CAST((SELECT COUNT(*) FROM true_topk t JOIN reranked r ON t.vec_id = r.vec_id) * 1000000
-            // 10 AS BIGINT) AS recall_ppm
+       CAST({_overlap_sql("reranked")} AS BIGINT) AS n_overlap,
+       CAST({_overlap_sql("reranked")} * 1000000 // 10 AS BIGINT) AS recall_ppm
 """,
     doc=(
         "Matryoshka FUNNEL retrieval (the MRL paper's adaptive-retrieval "

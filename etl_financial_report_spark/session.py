@@ -45,15 +45,10 @@ _RUNTIME_CONF = {
     # deep multi-scan plans (sim_ann_ivfpq_recall_eval 5.7 -> 7.2 s:
     # every re-scan of a sub-MB table becomes a flood of tiny tasks
     # through ~50 AQE stages). Suite-net negative; the default stays.
-    # parameterised for per-cluster sizing and for the skew-smoke A/B
-    # (optimization r15, VERDICT r14 item 7): SPARK_GRAFT_PREFER_SMJ=true
-    # restores the SMJ-preferring planner; the local default stays false
-    # (SHJ when the per-partition build fits — AQE skew split still
-    # applies to SHJ, and the build side is guarded by the planner's
-    # size conditions; see OPTIMIZATION_r15.md for the measured skew run)
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
+    # SHJ when the per-partition build fits: AQE's skew split still
+    # applies to SHJ, and the planner's size conditions guard the build
+    # side (OPTIMIZATION_r15.md §11 has the measured skew run)
+    "spark.sql.join.preferSortMergeJoin": "false",
     # At 100 TB this is sized per-cluster; locally ~cores avoids both
     # over-splitting tiny data and starving big shuffles.
     "spark.sql.shuffle.partitions": None,  # filled from cpu count below

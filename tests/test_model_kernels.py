@@ -1,11 +1,12 @@
 """The trained-model kernels every caller shares: nearest-centroid
-ranking (operators/similarity._nearest_cells), centroid sums
-(_centroid_sums) and the integer batch perceptron
-(operators/quality.perceptron_weights). Pins, on hand-built frames:
+ranking (operators/similarity._nearest_cells, and its oracle twin
+_nearest_cells_sql run in DuckDB), centroid sums (_centroid_sums) and
+the integer batch perceptron (operators/quality.perceptron_weights).
+Pins, on hand-built frames:
 
   * ties between identical centroids go to the lower cid, unkeyed and
     keyed by subspace; k > 1 ranks in (cos desc, cid asc) order; a
-    zero-norm centroid never ranks;
+    zero-norm centroid never ranks — the same in the engine and the SQL;
   * centroid sums are the exact per-dimension member sums with their
     squared norm and member count, per key, zero-norm sums kept;
   * the perceptron, binary and one-vs-rest, equals a pure-Python integer
@@ -15,6 +16,8 @@ ranking (operators/similarity._nearest_cells), centroid sums
 import random
 from collections import defaultdict
 
+import duckdb
+import pandas as pd
 import pytest
 
 from etl_financial_report_spark.operators import quality as Q
@@ -43,23 +46,40 @@ _BOOK = [(0, [0, 0]), (5, [1, 0]), (3, [4, 0]), (1, [0, 1])]
 _VECS = [(10, [2, 0]), (11, [0, 3]), (12, [1, 1])]
 
 
-def test_nearest_cell_tie_goes_to_lower_cid(spark):
-    got = {
-        r["vec_id"]: r["cell"]
-        for r in S._nearest_cells(_vecs(spark, _VECS), _book(spark, _BOOK)).collect()
-    }
-    assert got == {10: 3, 11: 1, 12: 1}
+def _long_form(rows, key):
+    return pd.DataFrame(
+        [(r[0], i, x) for r in rows for i, x in enumerate(r[1], 1)], columns=[key, "i", "v"]
+    )
 
 
-def test_nearest_cells_rank_cos_desc_then_cid(spark):
-    out = S._nearest_cells(_vecs(spark, _VECS), _book(spark, _BOOK), None).collect()
+def _nearest(spark, impl, k=1):
+    """_VECS ranked against _BOOK by the engine kernel or, in DuckDB, by
+    its SQL twin over the long-form (id, i, value) rows of both."""
+    if impl == "engine":
+        out = S._nearest_cells(_vecs(spark, _VECS), _book(spark, _BOOK), k)
+        return [tuple(r) for r in out.collect()]
+    con = duckdb.connect()
+    con.register("ex", _long_form(_VECS, "vec_id"))
+    con.register("book_rows", _long_form(_BOOK, "cid"))
+    return con.sql(f"""
+WITH {S._codebook_sql("bk", "SELECT cid, i, v AS cv FROM book_rows")},
+norms AS (SELECT vec_id, SUM(v * v) AS nsq FROM ex GROUP BY vec_id)
+{S._nearest_cells_sql("bk", k=k)}""").fetchall()
+
+
+@pytest.mark.parametrize("impl", ["engine", "sql"])
+def test_nearest_cell_tie_goes_to_lower_cid(spark, impl):
+    assert dict(_nearest(spark, impl)) == {10: 3, 11: 1, 12: 1}
+
+
+@pytest.mark.parametrize("impl", ["engine", "sql"])
+def test_nearest_cells_rank_cos_desc_then_cid(spark, impl):
     ranked = defaultdict(list)
-    for r in sorted(out, key=lambda r: (r["vec_id"], r["rank"])):
-        ranked[r["vec_id"]].append(r["cell"])
+    for vec_id, cell, _rank in sorted(_nearest(spark, impl, None), key=lambda r: (r[0], r[2])):
+        ranked[vec_id].append(cell)
     # the zero-norm cid 0 never ranks
     assert dict(ranked) == {10: [3, 5, 1], 11: [1, 3, 5], 12: [1, 3, 5]}
-    top2 = S._nearest_cells(_vecs(spark, _VECS), _book(spark, _BOOK), 2)
-    assert sorted(tuple(r) for r in top2.collect()) == [
+    assert sorted(_nearest(spark, impl, 2)) == [
         (10, 3, 1), (10, 5, 2), (11, 1, 1), (11, 3, 2), (12, 1, 1), (12, 3, 2),
     ]
 

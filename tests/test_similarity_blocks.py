@@ -164,9 +164,17 @@ def test_embedding_centroid_on_empty_embeddings(spark, tmp_path):
     assert out.dtypes == agg_embedding_centroid(spark, SF).dtypes
 
 
-#: the evals whose query vectors come from the gated id range below
-#: SIM_EVAL_NQ — four single-query (vector 0) and three batch evals
-_DEGENERATE_QUERY_EVALS = (
+#: the queries whose query vectors come from the gated id range below
+#: SIM_EVAL_NQ — the single-query (vector 0) IVF/PQ retrievers and
+#: evals, and the batch evals
+_DEGENERATE_QUERY_OPS = (
+    "sim_ann_ivf",
+    "sim_ann_ivf_trained",
+    "sim_ann_pq_topk",
+    "sim_ann_ivfpq_topk",
+    "sim_ann_ivfpq_residual_topk",
+    "sim_ann_ivfpq_refine_topk",
+    "sim_ann_ivf_nprobe_sweep",
     "sim_ann_recall_eval",
     "sim_ann_sq8_recall_eval",
     "sim_ann_pq_recall_eval",
@@ -181,9 +189,10 @@ def test_degenerate_query_vectors_match_oracles(spark, tmp_path):
     """A query vector the conformance gate drops is no query, in the
     engine and in the oracle alike. Vector 0 is all zeros and vector 3
     (inside the SIM_EVAL_NQ batch block) has the wrong dimension: the
-    single-query evals report an empty truth with a NULL recall instead
-    of an ANSI DIVIDE_BY_ZERO, and the batch evals count only the
-    queries that pass the gate. (The hostile sweep appends its
+    single-query retrievers return no rows, the single-query evals
+    report an empty truth with a NULL recall instead of an ANSI
+    DIVIDE_BY_ZERO, and the batch evals count only the queries that
+    pass the gate. (The hostile sweep appends its
     degenerate rows above the dense id range, so it never hits this.)"""
     import os
     import sys
@@ -217,7 +226,7 @@ def test_degenerate_query_vectors_match_oracles(spark, tmp_path):
 
     con = duck_con(str(tmp_path))
     queries = registry.all_queries()
-    for name in _DEGENERATE_QUERY_EVALS:
+    for name in _DEGENERATE_QUERY_OPS:
         q = queries[name]
         got = normalize(q.fn(spark, str(tmp_path)).toPandas())
         assert got == normalize(con.sql(q.oracle).df()), name
